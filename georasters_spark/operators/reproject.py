@@ -10,12 +10,15 @@ exercises WGS84 <-> cylindrical-equal-area (tests/test_georasters.py:
 
 The warp is an inverse-projection *gather*, exactly like resize: build
 the target grid (spark.range × spark.range), compute each target cell
-center's source (row, col) with JVM trig Column expressions, equi-join
-the source pixel table. Resampling = nearest (the reference default);
-bilinear and average (block-mean) variants below mirror the reference
-resampling-mode dict (georasters.py:592-606).
-No UDF anywhere — the whole plan is Catalyst-visible, so the join
-strategy/pruning come free.
+center's source (row, col), equi-join the source pixel table.
+Resampling = nearest (the reference default); bilinear and average
+(block-mean) variants below mirror the reference resampling-mode dict
+(georasters.py:592-606). The specialized WGS84 -> CEA / WebMercator /
+sinusoidal plans keep their few JVM trig Columns; every other
+projection (the Krüger TM, conic, Helmert datum and ellipsoidal
+Mercator series, and every reproject_any chain) runs as its numpy twin
+in one Arrow pass (``_project``), with the DuckDB SQL twins as the
+independent check.
 
 Engine-stable gather rule (the DuckDB-oracle contract): the fractional
 source index u = (lat − y0)/cy is quantized to 1e-4 cell units BEFORE
@@ -34,6 +37,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -141,14 +145,22 @@ def gather_from_tiles(tgt: DataFrame, images: DataFrame,
             raise ValueError(
                 "gather_from_tiles: duplicate image rows share tile keys; "
                 "resolve duplicates (e.g. union_mosaic) first")
+        odd = (right["h"] != t_h) | (right["w"] != t_w)
+        if odd.any():
+            # targets are keyed to tiles by the probed (t_h, t_w); a tile
+            # of another shape would silently miss or misplace gathers
+            bad = right[odd].iloc[0]
+            raise ValueError(
+                f"gather_from_tiles: tile ({bad.tile_row}, {bad.tile_col}) "
+                f"is {bad.h}x{bad.w}, expected uniform {t_h}x{t_w} tiles")
         rows = left["row"].to_numpy(np.int64)
         colsv = left["col"].to_numpy(np.int64)
         # one sort by composite tile key, then a contiguous slice per
         # tile (r7): the per-tile full-length masks cost O(B²·M) over a
         # B×B superblock — the sort is O(M log M) once.  Floor division
         # matches the block keying, so out-of-range rows fall in gaps
-        # no tile key hits; the residual bounds check guards ragged
-        # tile shapes exactly like the mask version did.
+        # no tile key hits, and every row in a tile's slice lies inside
+        # that (uniform) tile.
         tkey = (rows // t_h) * (np.int64(1) << 32) + (colsv // t_w)
         order = np.argsort(tkey, kind="stable")
         ks = tkey[order]
@@ -160,16 +172,11 @@ def gather_from_tiles(tgt: DataFrame, images: DataFrame,
                 continue
             idx = order[lo:hi]
             ndv = float(t.ndv)
-            arr = _codec.decode_tile(bytes(t.bytes), t.fmt,
-                                     int(t.w), int(t.h), ndv)
-            li = rows[idx] - int(t.tile_row) * arr.shape[0]
-            lj = colsv[idx] - int(t.tile_col) * arr.shape[1]
-            ok = ((li >= 0) & (li < arr.shape[0])
-                  & (lj >= 0) & (lj < arr.shape[1]))
-            if ok.any():
-                v = arr[li[ok], lj[ok]].astype(np.float64)
-                v[v == ndv] = np.nan
-                vals[idx[ok]] = v
+            arr = _codec.decode_tile(bytes(t.bytes), t.fmt, t_w, t_h, ndv)
+            v = arr[rows[idx] - int(t.tile_row) * t_h,
+                    colsv[idx] - int(t.tile_col) * t_w].astype(np.float64)
+            v[v == ndv] = np.nan
+            vals[idx] = v
         out["value"] = pd.array(vals, dtype="Float64")  # NaN -> NULL
         return out
 
@@ -1594,8 +1601,11 @@ def _kernel_gather_spline(px: DataFrame, target: DataFrame, u, v,
         "wgt",
     )
     j = corners.join(px.select("row", "col", "value"), ["row", "col"])
+    # + 0.0 turns a -0.0 residue into +0.0 (x + 0.0 == x otherwise), the
+    # same normalization as the DuckDB oracle's ROUND(...) + 0.0
     return j.groupBy("trow", "tcol").agg(
-        F.round(F.sum(F.col("wgt") * F.col("value")), 6).alias("value"),
+        (F.round(F.sum(F.col("wgt") * F.col("value")), 6) + F.lit(0.0))
+        .alias("value"),
         F.count(F.lit(1)).cast("long").alias("n_contrib"),
     )
 
@@ -1938,10 +1948,11 @@ def cea_lanczos_numpy_oracle(
 # with an accuracy of a few nanometers" §3 / the classic Krüger 1912
 # series). Truncation error at 4th order is sub-millimeter inside a UTM
 # zone. The reference reaches these CRSs through GDAL
-# (georasters.py:559-667); here both directions are closed-form series:
-# forward in numpy (driver-side target-bounds + test oracles), inverse
-# as pure JVM Column trig (sin/cos/sinh/cosh/asin/atan2 — whole-stage
-# codegen, no UDF), so the warp stays an inverse-projection gather.
+# (georasters.py:559-667); here both directions are closed-form series
+# in numpy: the forward gives the driver-side target bounds, the inverse
+# runs in one Arrow pass over the target lattice (_project), so the warp
+# stays an inverse-projection gather. tm_inverse_sql is the independent
+# DuckDB check.
 # ---------------------------------------------------------------------------
 
 _WGS84_A = 6378137.0
@@ -2007,7 +2018,7 @@ def tm_forward_np(lon, lat, lon0: float, k0: float = _UTM_K0,
 def tm_inverse_np(E, N, lon0: float, k0: float = _UTM_K0,
                   fe: float = _UTM_FE, fn: float = 0.0, f: float = _WGS84_F,
                   a: float = _WGS84_A):
-    """Ellipsoidal transverse-Mercator inverse (numpy test oracle):
+    """Ellipsoidal transverse-Mercator inverse (numpy):
     (E, N) meters -> (lon, lat) degrees."""
     n, A, _, beta, delta = _tm_series(f, a)
     xi = (np.asarray(N, dtype=np.float64) - fn) / (k0 * A)
@@ -2025,44 +2036,19 @@ def tm_inverse_np(E, N, lon0: float, k0: float = _UTM_K0,
     return np.degrees(lam) + lon0, np.degrees(phi)
 
 
-def tm_inverse_cols(E, N, lon0: float, k0: float = _UTM_K0,
-                    fe: float = _UTM_FE, fn: float = 0.0, f: float = _WGS84_F,
-                    a: float = _WGS84_A):
-    """The same inverse as pyspark Column expressions: (E, N) Columns ->
-    (lon, lat) Columns in degrees. Every term is built in the SAME
-    order as tm_inverse_np / tm_inverse_sql so all three agree to
-    engine-trig ulps (the gather quantization absorbs those)."""
-    n, A, _, beta, delta = _tm_series(f, a)
-    xi = (N - F.lit(fn)) / F.lit(k0 * A)
-    eta = (E - F.lit(fe)) / F.lit(k0 * A)
-    xip = xi
-    etap = eta
-    for j, b in enumerate(beta, 1):
-        xip = xip - F.lit(b) * F.sin(F.lit(float(2 * j)) * xi) * F.cosh(F.lit(float(2 * j)) * eta)
-        etap = etap - F.lit(b) * F.cos(F.lit(float(2 * j)) * xi) * F.sinh(F.lit(float(2 * j)) * eta)
-    chi = F.asin(F.sin(xip) / F.cosh(etap))
-    phi = chi
-    for j, d in enumerate(delta, 1):
-        phi = phi + F.lit(d) * F.sin(F.lit(float(2 * j)) * chi)
-    lam = F.atan2(F.sinh(etap), F.cos(xip))
-    lon = lam * F.lit(180.0) / F.lit(math.pi) + F.lit(lon0)
-    lat = phi * F.lit(180.0) / F.lit(math.pi)
-    return lon, lat
-
-
 def tm_inverse_sql(e_expr: str, n_expr: str, lon0: float, k0: float = _UTM_K0,
                    fe: float = _UTM_FE, fn: float = 0.0,
                    f: float = _WGS84_F,
                    a: float = _WGS84_A) -> tuple[str, str, str]:
     """DuckDB SQL for the same inverse, emitted term-for-term in the
-    tm_inverse_cols order. Returns (cte_sql, lon_col, lat_col): a CTE
+    tm_inverse_np order. Returns (cte_sql, lon_col, lat_col): a CTE
     chain computing lon/lat from columns e_expr/n_expr of table `tgt`
     (intermediate CTEs carry trow/tcol through)."""
     n, A, _, beta, delta = _tm_series(f, a)
 
     # DuckDB has no sinh/cosh — spell them with exp. The downstream
     # gather quantizes u before floor, so the ulp-level difference vs
-    # JVM Math.sinh/cosh is absorbed like every other trig difference.
+    # numpy's sinh/cosh is absorbed like every other trig difference.
     def cosh_s(y: str) -> str:
         return f"((exp({y}) + exp(-({y}))) / 2.0)"
 
@@ -2136,37 +2122,13 @@ def wgs84_to_utm_grid(
     bbox_lonlat=None,
 ) -> DataFrame:
     """Warp onto a UTM target grid (nearest): same inverse-gather shape
-    as CEA/WebMercator with the Krüger-series inverse as JVM Columns.
-    bbox_lonlat windows the target to the zone (see _utm_target_bounds)."""
-    spark = px.sparkSession
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    lon0 = utm_lon0(zone)
-    fn = 10000000.0 if south else 0.0
-    E0, N0b, E1, N1b = _utm_target_bounds(src_origin, src_cellsize, src_shape, lon0, fn,
-                                          bbox_lonlat=bbox_lonlat)
-    tcx = (E1 - E0) / tw
-    tcy = (N0b - N1b) / th  # negative: row 0 = max northing (north-up)
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    em = F.lit(E0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    # N1b = MAX northing; tcy < 0, so row 0 sits at the top (north-up)
-    nm = F.lit(N1b) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lon, lat = tm_inverse_cols(em, nm, lon0, fn=fn)
-    srow = F.floor(F.round((lat - F.lit(y0g)) / F.lit(cy), _Q)).cast("long")
-    scol = F.floor(F.round((lon - F.lit(x0g)) / F.lit(cx), _Q)).cast("long")
-    tgt = target.select(
-        "trow", "tcol", em.alias("em"), nm.alias("nm"),
-        srow.alias("row"), scol.alias("col"),
-    )
-    return tgt.join(px.select("row", "col", "value"), ["row", "col"], "left").select(
-        "trow", "tcol", "em", "nm", "value"
-    )
+    as CEA/WebMercator, with the Krüger-series inverse (tm_inverse_np)
+    run in one Arrow pass. bbox_lonlat windows the target to the zone
+    (see _utm_target_bounds)."""
+    ll = _utm_lonlat(px.sparkSession, src_origin, src_cellsize, src_shape,
+                     out_shape, zone, south, bbox_lonlat)
+    return _nearest_join(px, ll, "_lon", "_lat", src_origin, src_cellsize,
+                         ("em", "nm"))
 
 
 def wgs84_to_utm_grid_bilinear(
@@ -2180,23 +2142,26 @@ def wgs84_to_utm_grid_bilinear(
     bbox_lonlat=None,
 ) -> DataFrame:
     """UTM warp with bilinear resampling via the CRS-agnostic kernel."""
-    spark = px.sparkSession
+    ll = _utm_lonlat(px.sparkSession, src_origin, src_cellsize, src_shape,
+                     out_shape, zone, south, bbox_lonlat)
+    return _bilinear_from_lonlat(px, ll, F.col("_lon"), F.col("_lat"),
+                                 src_origin, src_cellsize)
+
+
+def _utm_lonlat(spark, src_origin, src_cellsize, src_shape, out_shape,
+                zone: int, south: bool, bbox_lonlat) -> DataFrame:
+    """The UTM target lattice (trow, tcol, em, nm) with each center's
+    lon/lat (_lon, _lat) from tm_inverse_np."""
     th, tw = out_shape
     lon0 = utm_lon0(zone)
     fn = 10000000.0 if south else 0.0
     E0, N0b, E1, N1b = _utm_target_bounds(src_origin, src_cellsize, src_shape, lon0, fn,
                                           bbox_lonlat=bbox_lonlat)
     tcx = (E1 - E0) / tw
-    tcy = (N0b - N1b) / th
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    em = F.lit(E0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    nm = F.lit(N1b) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lon, lat = tm_inverse_cols(em, nm, lon0, fn=fn)
-    return _bilinear_from_lonlat(px, target, lon, lat, src_origin, src_cellsize)
+    tcy = (N0b - N1b) / th  # negative: row 0 = max northing (north-up)
+    return _project(_lattice(spark, out_shape, E0, N1b, tcx, tcy, ("em", "nm")),
+                    lambda x, y: tm_inverse_np(x, y, lon0, fn=fn),
+                    "em", "nm", out=("_lon", "_lat"))
 
 
 def utm_numpy_oracle(
@@ -2363,8 +2328,9 @@ def sinusoidal_numpy_oracle(
 # Professional Paper 1395, "Map Projections: A Working Manual").
 # Both inverses are NON-iterative: AEA converts authalic latitude with
 # the sin(2kβ) series, LCC converts conformal latitude with the
-# sin(2kχ) series — so the whole warp stays the same pure-Column
-# inverse-gather as CEA/WebMercator/UTM (reference reproject role:
+# sin(2kχ) series — so the whole warp stays the same inverse-gather as
+# CEA/WebMercator/UTM, its inverse run as numpy in one Arrow pass and
+# checked by the DuckDB SQL twin (reference reproject role:
 # georasters.py:559-667; these CRSs are what GDAL users actually name
 # for regional equal-area / conformal work).
 # ---------------------------------------------------------------------------
@@ -2472,7 +2438,7 @@ def conic_forward_np(lon, lat, P: dict):
 
 
 def conic_inverse_np(x, y, P: dict):
-    """Inverse projection (numpy differential oracle), meters -> degrees."""
+    """Inverse projection (numpy), meters -> degrees, for either conic."""
     n, a, sgn = P["n"], P["a"], P["sgn"]
     xr = np.asarray(x, dtype=np.float64) - P["fe"]
     yr = P["rho0"] - (np.asarray(y, dtype=np.float64) - P["fn"])
@@ -2491,35 +2457,9 @@ def conic_inverse_np(x, y, P: dict):
     return np.degrees(theta / n) + P["lon0"], np.degrees(phi)
 
 
-def conic_inverse_cols(xm, ym, P: dict):
-    """The same inverse as pyspark Columns, term-for-term in the
-    conic_inverse_np / conic_inverse_sql order."""
-    n, a, sgn = P["n"], P["a"], P["sgn"]
-    xr = xm - F.lit(P["fe"])
-    yr = F.lit(P["rho0"]) - (ym - F.lit(P["fn"]))
-    rho = F.lit(sgn) * F.sqrt(xr * xr + yr * yr)
-    theta = F.atan2(F.lit(sgn) * xr, F.lit(sgn) * yr)
-    if P["kind"] == "aea":
-        q = (F.lit(P["C"]) - F.pow(rho * F.lit(n) / F.lit(a), F.lit(2.0))) / F.lit(n)
-        beta = F.asin(F.least(F.greatest(q / F.lit(P["qp"]), F.lit(-1.0)), F.lit(1.0)))
-        phi = (beta + F.lit(P["A2"]) * F.sin(F.lit(2.0) * beta)
-               + F.lit(P["A4"]) * F.sin(F.lit(4.0) * beta)
-               + F.lit(P["A6"]) * F.sin(F.lit(6.0) * beta))
-    else:
-        t = F.pow(rho / F.lit(a * P["Fc"]), F.lit(1.0 / n))
-        chi = F.lit(math.pi / 2.0) - F.lit(2.0) * F.atan(t)
-        phi = (chi + F.lit(P["B2"]) * F.sin(F.lit(2.0) * chi)
-               + F.lit(P["B4"]) * F.sin(F.lit(4.0) * chi)
-               + F.lit(P["B6"]) * F.sin(F.lit(6.0) * chi)
-               + F.lit(P["B8"]) * F.sin(F.lit(8.0) * chi))
-    lon = theta / F.lit(n) * F.lit(180.0) / F.lit(math.pi) + F.lit(P["lon0"])
-    lat = phi * F.lit(180.0) / F.lit(math.pi)
-    return lon, lat
-
-
 def conic_inverse_sql(x_expr: str, y_expr: str, P: dict) -> tuple[str, str, str]:
     """DuckDB SQL for the same inverse (gate oracle), emitted
-    term-for-term in the conic_inverse_cols order. Returns
+    term-for-term in the conic_inverse_np order. Returns
     (cte_sql, lon_col, lat_col); the CTE chain reads columns
     x_expr/y_expr of table `tgt` and carries trow/tcol/xm/ym through."""
     n, a, sgn = P["n"], P["a"], P["sgn"]
@@ -2583,42 +2523,26 @@ def wgs84_to_conic_grid(
     bbox_lonlat=None,
     resampling: str = "nearest",
 ) -> DataFrame:
-    """Warp onto an Albers/LCC target grid — identical inverse-gather
-    plan to CEA/UTM: target cells are a range×range cross join, the
-    inverse is pure Column trig, the gather is one equi-join against
-    the pixel table (broadcast when small, hash otherwise — Catalyst's
-    call). nearest or bilinear."""
-    spark = px.sparkSession
+    """Warp onto an Albers/LCC target grid — the same inverse-gather
+    plan as CEA/UTM: target cells are a range×range cross join, the
+    inverse (conic_inverse_np) runs in one Arrow pass, the gather is one
+    equi-join against the pixel table (broadcast when small, hash
+    otherwise — Catalyst's call). nearest or bilinear."""
     th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
     X0, Y0b, X1, Y1b = _conic_bounds(src_origin, src_cellsize, src_shape, P,
                                      bbox_lonlat=bbox_lonlat)
+    if resampling not in ("nearest", "bilinear"):
+        raise NotImplementedError("conic targets support nearest/bilinear")
     tcx = (X1 - X0) / tw
     tcy = (Y0b - Y1b) / th  # negative: row 0 = max northing
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y1b) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lon, lat = conic_inverse_cols(xm, ym, P)
+    tgt = _project(_lattice(px.sparkSession, out_shape, X0, Y1b, tcx, tcy),
+                   lambda x, y: conic_inverse_np(x, y, P),
+                   "xm", "ym", out=("_lon", "_lat"))
     if resampling == "bilinear":
-        tgt = target.select("trow", "tcol", xm.alias("xm"), ym.alias("ym"))
-        lon2, lat2 = conic_inverse_cols(F.col("xm"), F.col("ym"), P)
-        return _bilinear_from_lonlat(px, tgt, lon2, lat2, src_origin, src_cellsize)
-    if resampling != "nearest":
-        raise NotImplementedError("conic targets support nearest/bilinear")
-    srow = F.floor(F.round((lat - F.lit(y0g)) / F.lit(cy), _Q)).cast("long")
-    scol = F.floor(F.round((lon - F.lit(x0g)) / F.lit(cx), _Q)).cast("long")
-    tgt = target.select(
-        "trow", "tcol", xm.alias("xm"), ym.alias("ym"),
-        srow.alias("row"), scol.alias("col"),
-    )
-    return tgt.join(px.select("row", "col", "value"), ["row", "col"], "left").select(
-        "trow", "tcol", "xm", "ym", "value"
-    )
+        return _bilinear_from_lonlat(px, tgt, F.col("_lon"), F.col("_lat"),
+                                     src_origin, src_cellsize)
+    return _nearest_join(px, tgt, "_lon", "_lat", src_origin, src_cellsize,
+                         ("xm", "ym"))
 
 
 def conic_numpy_oracle(full: np.ndarray, ndv: float, src_origin, src_cellsize,
@@ -2678,22 +2602,22 @@ def conic_params_of(token: str) -> dict:
 # this engine supports has closed-form forward AND inverse transforms,
 # so a general warp is the composition
 #     target cell center --inverse(dst)--> lon/lat --forward(src)--> x,y
-# evaluated as pure JVM Columns, followed by the same quantized affine
-# gather as everywhere else. No new machinery — just a registry of
-# (forward, inverse) pairs in all three dialects (numpy / Column).
+# evaluated by the numpy twins in one Arrow pass (_project), followed by
+# the same quantized affine gather as everywhere else. Each projection
+# has one engine implementation (numpy) and one independent check (the
+# DuckDB SQL twins the gate oracles use).
 # ---------------------------------------------------------------------------
 
 _D2R = math.pi / 180.0
 
 
 def crs_funcs(token: str) -> dict:
-    """(fwd_np, inv_np, fwd_cols, inv_cols) for a parse_crs token.
+    """(fwd_np, inv_np) for a parse_crs token.
     fwd: (lon, lat) degrees -> (x, y) CRS units; inv: the reverse.
     wgs84 is the identity (x=lon, y=lat)."""
     if token == "wgs84":
         ident = lambda a, b: (a, b)  # noqa: E731
-        return {"fwd_np": ident, "inv_np": ident,
-                "fwd_cols": ident, "inv_cols": ident}
+        return {"fwd_np": ident, "inv_np": ident}
     if token == "cea":
         k = 1.0  # standard parallel 0 (EPSG:6933-style lat_ts=0 form)
 
@@ -2705,17 +2629,7 @@ def crs_funcs(token: str) -> dict:
             return (np.asarray(x, np.float64) / (R * k) / _D2R,
                     np.arcsin(np.clip(np.asarray(y, np.float64) * k / R, -1, 1)) / _D2R)
 
-        def fwd_cols(lon, lat):
-            return (F.lit(R * k) * lon * F.lit(_D2R),
-                    F.lit(R / k) * F.sin(lat * F.lit(_D2R)))
-
-        def inv_cols(x, y):
-            return (x / F.lit(R * k) / F.lit(_D2R),
-                    F.asin(F.least(F.greatest(y * F.lit(k / R), F.lit(-1.0)),
-                                   F.lit(1.0))) / F.lit(_D2R))
-
-        return {"fwd_np": fwd_np, "inv_np": inv_np,
-                "fwd_cols": fwd_cols, "inv_cols": inv_cols}
+        return {"fwd_np": fwd_np, "inv_np": inv_np}
     if token == "webmerc":
 
         def fwd_np(lon, lat):
@@ -2727,18 +2641,7 @@ def crs_funcs(token: str) -> dict:
             return (np.asarray(x, np.float64) / R / _D2R,
                     np.arctan(np.sinh(np.asarray(y, np.float64) / R)) / _D2R)
 
-        def fwd_cols(lon, lat):
-            s = F.sin(lat * F.lit(_D2R))
-            # atanh spelled via log for engine parity
-            return (F.lit(R) * lon * F.lit(_D2R),
-                    F.lit(R) * F.lit(0.5) * F.log((F.lit(1.0) + s) / (F.lit(1.0) - s)))
-
-        def inv_cols(x, y):
-            return (x / F.lit(R) / F.lit(_D2R),
-                    F.atan(F.sinh(y / F.lit(R))) / F.lit(_D2R))
-
-        return {"fwd_np": fwd_np, "inv_np": inv_np,
-                "fwd_cols": fwd_cols, "inv_cols": inv_cols}
+        return {"fwd_np": fwd_np, "inv_np": inv_np}
     if token == "sinu":
 
         def fwd_np(lon, lat):
@@ -2749,16 +2652,7 @@ def crs_funcs(token: str) -> dict:
             phi = np.asarray(y, np.float64) / R
             return (np.asarray(x, np.float64) / (R * np.cos(phi)) / _D2R, phi / _D2R)
 
-        def fwd_cols(lon, lat):
-            phi = lat * F.lit(_D2R)
-            return (F.lit(R) * lon * F.lit(_D2R) * F.cos(phi), F.lit(R) * phi)
-
-        def inv_cols(x, y):
-            phi = y / F.lit(R)
-            return (x / (F.lit(R) * F.cos(phi)) / F.lit(_D2R), phi / F.lit(_D2R))
-
-        return {"fwd_np": fwd_np, "inv_np": inv_np,
-                "fwd_cols": fwd_cols, "inv_cols": inv_cols}
+        return {"fwd_np": fwd_np, "inv_np": inv_np}
     if token.startswith("utm:"):
         zone = int(token[4:-1])
         south = token.endswith("s")
@@ -2771,14 +2665,7 @@ def crs_funcs(token: str) -> dict:
         def inv_np(x, y):
             return tm_inverse_np(x, y, lon0, fn=fn)
 
-        def fwd_cols(lon, lat):
-            return tm_forward_cols(lon, lat, lon0, fn=fn)
-
-        def inv_cols(x, y):
-            return tm_inverse_cols(x, y, lon0, fn=fn)
-
-        return {"fwd_np": fwd_np, "inv_np": inv_np,
-                "fwd_cols": fwd_cols, "inv_cols": inv_cols}
+        return {"fwd_np": fwd_np, "inv_np": inv_np}
     if token.startswith(("aea:", "lcc:")):
         P = conic_params_of(token)
 
@@ -2788,18 +2675,9 @@ def crs_funcs(token: str) -> dict:
         def inv_np(x, y):
             return conic_inverse_np(x, y, P)
 
-        def fwd_cols(lon, lat):
-            return conic_forward_cols(lon, lat, P)
-
-        def inv_cols(x, y):
-            return conic_inverse_cols(x, y, P)
-
-        return {"fwd_np": fwd_np, "inv_np": inv_np,
-                "fwd_cols": fwd_cols, "inv_cols": inv_cols}
+        return {"fwd_np": fwd_np, "inv_np": inv_np}
     if token == "merc3395":
-        return {"fwd_np": merc3395_forward_np, "inv_np": merc3395_inverse_np,
-                "fwd_cols": merc3395_forward_cols,
-                "inv_cols": merc3395_inverse_cols}
+        return {"fwd_np": merc3395_forward_np, "inv_np": merc3395_inverse_np}
     if token.startswith("tmd:"):
         # transverse Mercator with a natural origin on a custom
         # ellipsoid + datum (EPSG:27700-class): Helmert shift composed
@@ -2816,16 +2694,7 @@ def crs_funcs(token: str) -> dict:
             lo, la = tm_inverse_np(E, N, lon0, k0, fe, fn_eff, f_, a_)
             return datum_to_wgs84_np(lo, la, P)
 
-        def fwd_cols(lon, lat):
-            lo, la = wgs84_to_datum_cols(lon, lat, P)
-            return tm_forward_cols(lo, la, lon0, k0, fe, fn_eff, f_, a_)
-
-        def inv_cols(E, N):
-            lo, la = tm_inverse_cols(E, N, lon0, k0, fe, fn_eff, f_, a_)
-            return datum_to_wgs84_cols(lo, la, P)
-
-        return {"fwd_np": fwd_np, "inv_np": inv_np,
-                "fwd_cols": fwd_cols, "inv_cols": inv_cols}
+        return {"fwd_np": fwd_np, "inv_np": inv_np}
     if token.startswith("geog:"):
         # geographic CRS on another datum: the CRS's (x, y) ARE datum
         # lon/lat degrees; fwd/inv are the Helmert datum shifts
@@ -2837,65 +2706,68 @@ def crs_funcs(token: str) -> dict:
         def inv_np(x, y):
             return datum_to_wgs84_np(x, y, P)
 
-        def fwd_cols(lon, lat):
-            return wgs84_to_datum_cols(lon, lat, P)
-
-        def inv_cols(x, y):
-            return datum_to_wgs84_cols(x, y, P)
-
-        return {"fwd_np": fwd_np, "inv_np": inv_np,
-                "fwd_cols": fwd_cols, "inv_cols": inv_cols}
+        return {"fwd_np": fwd_np, "inv_np": inv_np}
     raise NotImplementedError(f"no transform functions for CRS token {token!r}")
 
 
-def tm_forward_cols(lon, lat, lon0: float, k0: float = _UTM_K0,
-                    fe: float = _UTM_FE, fn: float = 0.0, f: float = _WGS84_F,
-                    a: float = _WGS84_A):
-    """Krüger-series transverse-Mercator FORWARD as pyspark Columns —
-    term-for-term the tm_forward_np order (atanh spelled via log)."""
-    n, A, alpha, _, _ = _tm_series(f, a)
-    es = 2.0 * math.sqrt(n) / (1.0 + n)
-    lam = (lon - F.lit(lon0)) * F.lit(_D2R)
-    sphi = F.sin(lat * F.lit(_D2R))
+def _project(df: DataFrame, fn, x: str, y: str,
+             out: tuple[str, str] = ("_sx", "_sy")) -> DataFrame:
+    """``df`` plus two double columns ``out`` = ``fn(df[x], df[y])``,
+    where ``fn`` is a numpy transform (a ``*_np`` twin, or a composition
+    of them).  One Arrow-batched pandas UDF runs the whole chain, so the
+    plan holds a single Python-eval node however long the series math.
+    Quantization stays a Spark Column downstream: Spark's and DuckDB's
+    ROUND round halves up, ``np.round`` rounds them to even.  Non-finite
+    results (a point outside a projection's domain) come back NULL, so
+    they gather nothing instead of flooring onto row 0 / col 0."""
 
-    def atanh_c(x):
-        return F.lit(0.5) * F.log((F.lit(1.0) + x) / (F.lit(1.0) - x))
+    def project_batch(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
+        with np.errstate(all="ignore"):
+            ox, oy = fn(xs.to_numpy(np.float64), ys.to_numpy(np.float64))
+        return pd.DataFrame({
+            k: pd.array(np.where(np.isfinite(v), v, np.nan), dtype="Float64")
+            for k, v in (("x", np.asarray(ox, np.float64)),
+                         ("y", np.asarray(oy, np.float64)))})
 
-    t = F.sinh(atanh_c(sphi) - F.lit(es) * atanh_c(F.lit(es) * sphi))
-    xip = F.atan2(t, F.cos(lam))
-    etap = atanh_c(F.sin(lam) / F.sqrt(F.lit(1.0) + t * t))
-    xi = xip
-    eta = etap
-    for j, a in enumerate(alpha, 1):
-        xi = xi + F.lit(a) * F.sin(F.lit(float(2 * j)) * xip) * F.cosh(F.lit(float(2 * j)) * etap)
-        eta = eta + F.lit(a) * F.cos(F.lit(float(2 * j)) * xip) * F.sinh(F.lit(float(2 * j)) * etap)
-    return F.lit(fe) + F.lit(k0 * A) * eta, F.lit(fn) + F.lit(k0 * A) * xi
+    # the UDF in its own select, read back by field. Marked
+    # nondeterministic so Catalyst neither collapses that select nor
+    # pushes a later filter below it: either would copy the UDF and
+    # run the chain twice.
+    udf = F.pandas_udf(project_batch, "x double, y double").asNondeterministic()
+    return df.select(*df.columns, udf(x, y).alias("_p")).select(
+        *df.columns, F.col("_p.x").alias(out[0]), F.col("_p.y").alias(out[1]))
 
 
-def conic_forward_cols(lon, lat, P: dict):
-    """Albers / LCC FORWARD as pyspark Columns — term-for-term the
-    conic_forward_np order."""
-    n, a = P["n"], P["a"]
-    e = math.sqrt(P["e2"])
-    lam = (lon - F.lit(P["lon0"])) * F.lit(_D2R)
-    phi = lat * F.lit(_D2R)
-    theta = F.lit(n) * lam
-    s = F.sin(phi)
-    if P["kind"] == "aea":
-        q = F.lit(1.0 - P["e2"]) * (
-            s / (F.lit(1.0) - F.lit(P["e2"]) * s * s)
-            - F.lit(1.0 / (2.0 * e))
-            * F.log((F.lit(1.0) - F.lit(e) * s) / (F.lit(1.0) + F.lit(e) * s))
-        )
-        rho = F.lit(a) * F.sqrt(F.greatest(F.lit(P["C"]) - F.lit(n) * q, F.lit(0.0))) / F.lit(n)
-    else:
-        t = F.tan(F.lit(math.pi / 4.0) - phi / F.lit(2.0)) / F.pow(
-            (F.lit(1.0) - F.lit(e) * s) / (F.lit(1.0) + F.lit(e) * s), F.lit(e / 2.0)
-        )
-        rho = F.lit(a * P["Fc"]) * F.pow(t, F.lit(n))
-    x = F.lit(P["fe"]) + rho * F.sin(theta)
-    y = F.lit(P["fn"]) + F.lit(P["rho0"]) - rho * F.cos(theta)
-    return x, y
+def _lattice(spark, out_shape: tuple[int, int], x0: float, y_top: float,
+             tcx: float, tcy: float, names=("xm", "ym")) -> DataFrame:
+    """The target grid, one row per cell: (trow, tcol) and the cell
+    center in target units; row 0 sits at ``y_top`` (tcy < 0 is
+    north-up)."""
+    th, tw = out_shape
+    return (
+        spark.range(th).select(F.col("id").alias("trow"))
+        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
+        .select("trow", "tcol",
+                (F.lit(x0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)).alias(names[0]),
+                (F.lit(y_top) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)).alias(names[1]))
+    )
+
+
+def _nearest_join(px: DataFrame, tgt: DataFrame, sx: str, sy: str,
+                  src_origin: tuple[float, float],
+                  src_cellsize: tuple[float, float],
+                  carry: tuple[str, str]) -> DataFrame:
+    """Nearest gather of the projected lattice ``tgt`` (source-unit
+    coordinates in columns sx/sy): the quantized floor-stable source
+    index, left-joined against the pixel table."""
+    x0g, y0g = src_origin
+    cx, cy = src_cellsize
+    srow = F.floor(F.round((F.col(sy) - F.lit(y0g)) / F.lit(cy), _Q)).cast("long")
+    scol = F.floor(F.round((F.col(sx) - F.lit(x0g)) / F.lit(cx), _Q)).cast("long")
+    return tgt.select(
+        "trow", "tcol", *carry, srow.alias("row"), scol.alias("col"),
+    ).join(px.select("row", "col", "value"), ["row", "col"], "left").select(
+        "trow", "tcol", *carry, "value")
 
 
 def any_bounds(src_crs, dst_crs, src_origin, src_cellsize, src_shape,
@@ -2963,7 +2835,6 @@ def reproject_any(
     aggregates average | sum | min | max | count | mode (source
     centers forward-project into target cells; one grouped
     aggregate — only non-empty cells are emitted, like GDAL)."""
-    spark = px.sparkSession
     src = parse_crs(src_crs)
     dst = parse_crs(dst_crs)
     sfn = crs_funcs(src)
@@ -2975,85 +2846,51 @@ def reproject_any(
                                   src_shape, bbox_lonlat, n_samples)
     tcx = (X1 - X0) / tw
     tcy = (Y0b - Y1b) / th  # negative: row 0 at max y
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y1b) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lon, lat = dfn["inv_cols"](xm, ym)
-    sx, sy = sfn["fwd_cols"](lon, lat)
-    if resampling == "bilinear":
-        tgt = target.select("trow", "tcol", xm.alias("xm"), ym.alias("ym"))
-        xm2 = F.col("xm")
-        ym2 = F.col("ym")
-        lon2, lat2 = dfn["inv_cols"](xm2, ym2)
-        sx2, sy2 = sfn["fwd_cols"](lon2, lat2)
-        return _bilinear_from_lonlat(px, tgt, sx2, sy2, src_origin, src_cellsize)
     kern = {"cubic": "catmull", "cubicspline": "bspline",
             "lanczos": "lanczos"}.get(resampling)
-    if kern is not None:
-        # stage each transform into materialized columns: the series
-        # projections (Krüger/conic/Helmert) reference lon/lat dozens
-        # of times, and inlining the composed expression tree blows up
-        # multiplicatively (janino 64KB codegen failure + slow
-        # interpreted eval). Projecting per stage keeps each codegen
-        # unit linear; CollapseProject keeps non-cheap multiply-
-        # referenced exprs staged.
-        tgt0 = target.select("trow", "tcol", xm.alias("xm"), ym.alias("ym"))
-        lon2, lat2 = dfn["inv_cols"](F.col("xm"), F.col("ym"))
-        tgt1 = tgt0.select("trow", "tcol",
-                           lon2.alias("_lon"), lat2.alias("_lat"))
-        sx2, sy2 = sfn["fwd_cols"](F.col("_lon"), F.col("_lat"))
-        tgt2 = tgt1.select("trow", "tcol",
-                           sx2.alias("_sx"), sy2.alias("_sy"))
-        u = F.round((F.col("_sy") - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
-        v = F.round((F.col("_sx") - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)
-        tgt3 = tgt2.select("trow", "tcol", u.alias("_u"), v.alias("_v"))
-        return _kernel_gather(px, tgt3, F.col("_u"), F.col("_v"), kern)
     agg = {"average": "mean", "sum": "sum", "min": "min", "max": "max",
            "count": "count", "mode": "mode", "rms": "rms", "med": "med",
            "q1": "q1", "q3": "q3"}.get(resampling)
     if agg is not None:
         # forward-bucket path: every valid SOURCE cell center maps
         # src units -> lon/lat -> dst units and bins into its target
-        # cell; scan + one grouped aggregate, map-side partials.
-        # Same staged projections as above to bound codegen size.
+        # cell; scan + one grouped aggregate, map-side partials
         xc = F.lit(x0g) + (F.col("col") + F.lit(0.5)) * F.lit(cx)
         yc = F.lit(y0g) + (F.col("row") + F.lit(0.5)) * F.lit(cy)
-        b0 = px.select("value", xc.alias("_xc"), yc.alias("_yc"))
-        lon_s, lat_s = sfn["inv_cols"](F.col("_xc"), F.col("_yc"))
-        b1 = b0.select("value", lon_s.alias("_lon"), lat_s.alias("_lat"))
-        Xs, Ys = dfn["fwd_cols"](F.col("_lon"), F.col("_lat"))
-        b2 = b1.select("value", Xs.alias("_X"), Ys.alias("_Y"))
-        trow_b = F.floor(
-            F.round((F.col("_Y") - F.lit(Y1b)) / F.lit(tcy), _Q)).cast("long")
-        tcol_b = F.floor(
-            F.round((F.col("_X") - F.lit(X0)) / F.lit(tcx), _Q)).cast("long")
-        binned = b2.select(
-            trow_b.alias("trow"), tcol_b.alias("tcol"), "value"
+        binned = _project(
+            px.select("value", xc.alias("_xc"), yc.alias("_yc")),
+            lambda x, y: dfn["fwd_np"](*sfn["inv_np"](x, y)),
+            "_xc", "_yc", out=("_X", "_Y"),
+        ).select(
+            F.floor(F.round((F.col("_Y") - F.lit(Y1b)) / F.lit(tcy), _Q))
+            .cast("long").alias("trow"),
+            F.floor(F.round((F.col("_X") - F.lit(X0)) / F.lit(tcx), _Q))
+            .cast("long").alias("tcol"),
+            "value",
         ).filter(
             (F.col("trow") >= 0) & (F.col("trow") < th)
             & (F.col("tcol") >= 0) & (F.col("tcol") < tw)
         )
         return _bucket_agg(binned, agg)
-    if resampling != "nearest":
+    if resampling not in ("nearest", "bilinear") and kern is None:
         raise NotImplementedError(
             f"resampling {resampling!r} not supported (have nearest/bilinear/"
             "cubic/cubicspline/lanczos/average/sum/min/max/count/mode/"
             "rms/med/q1/q3 — the FULL gdalwarp -r enum, "
             "georasters.py:592-606)")
-    srow = F.floor(F.round((sy - F.lit(y0g)) / F.lit(cy), _Q)).cast("long")
-    scol = F.floor(F.round((sx - F.lit(x0g)) / F.lit(cx), _Q)).cast("long")
-    tgt = target.select(
-        "trow", "tcol", xm.alias("xm"), ym.alias("ym"),
-        srow.alias("row"), scol.alias("col"),
-    )
-    return tgt.join(px.select("row", "col", "value"), ["row", "col"], "left").select(
-        "trow", "tcol", "xm", "ym", "value"
-    )
+    # inverse gather: target cell center -> lon/lat -> source units
+    tgt = _project(_lattice(px.sparkSession, out_shape, X0, Y1b, tcx, tcy),
+                   lambda x, y: sfn["fwd_np"](*dfn["inv_np"](x, y)),
+                   "xm", "ym")
+    if resampling == "bilinear":
+        return _bilinear_from_lonlat(px, tgt, F.col("_sx"), F.col("_sy"),
+                                     src_origin, src_cellsize)
+    if kern is not None:
+        u = F.round((F.col("_sy") - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
+        v = F.round((F.col("_sx") - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)
+        return _kernel_gather(px, tgt, u, v, kern)
+    return _nearest_join(px, tgt, "_sx", "_sy", src_origin, src_cellsize,
+                         ("xm", "ym"))
 
 
 def reproject_any_numpy_oracle(full: np.ndarray, ndv: float, src_crs, dst_crs,
@@ -3221,8 +3058,8 @@ def reproject_any_average_numpy_oracle(full: np.ndarray, ndv: float, src_crs,
 # the token "geog:a:f:dx:dy:dz:rx:ry:rz:ds" (ellipsoid semi-major a,
 # flattening f, 7-param position-vector Helmert to WGS84: meters,
 # arcseconds, ppm).  Pipeline, closed form end to end (no iteration —
-# Bowring's one-step inverse — so Spark Columns and DuckDB SQL compute
-# the identical operation sequence):
+# Bowring's one-step inverse — so numpy and DuckDB SQL compute the
+# identical operation sequence):
 #
 #   datum lon/lat --(geodetic->XYZ on datum ellipsoid)-->
 #   --(Helmert to WGS84)--> --(Bowring XYZ->geodetic on WGS84)--> lon/lat
@@ -3330,54 +3167,10 @@ def wgs84_to_datum_np(lon, lat, P):
     return _xyz_to_geodetic_np(X, Y, Z, P["a"], P["b"], P["e2"], P["ep2"])
 
 
-def _geodetic_to_xyz_cols(lon, lat, a, e2):
-    phi = lat * F.lit(_D2R)
-    lam = lon * F.lit(_D2R)
-    sp, cp = F.sin(phi), F.cos(phi)
-    n = F.lit(a) / F.sqrt(F.lit(1.0) - F.lit(e2) * sp * sp)
-    return n * cp * F.cos(lam), n * cp * F.sin(lam), n * F.lit(1.0 - e2) * sp
-
-
-def _xyz_to_geodetic_cols(X, Y, Z, a, b, e2, ep2):
-    p = F.sqrt(X * X + Y * Y)
-    th = F.atan2(Z * F.lit(a), p * F.lit(b))
-    st, ct = F.sin(th), F.cos(th)
-    phi = F.atan2(Z + F.lit(ep2 * b) * st * st * st,
-                  p - F.lit(e2 * a) * ct * ct * ct)
-    lam = F.atan2(Y, X)
-    return lam / F.lit(_D2R), phi / F.lit(_D2R)
-
-
-def _helmert_cols(X, Y, Z, P, inverse: bool):
-    s = -1.0 if inverse else 1.0
-    m = 1.0 + s * (P["m"] - 1.0)
-    rx, ry, rz = s * P["rx"], s * P["ry"], s * P["rz"]
-    dx, dy, dz = s * P["dx"], s * P["dy"], s * P["dz"]
-    return (
-        F.lit(dx) + F.lit(m) * (X - F.lit(rz) * Y + F.lit(ry) * Z),
-        F.lit(dy) + F.lit(m) * (F.lit(rz) * X + Y - F.lit(rx) * Z),
-        F.lit(dz) + F.lit(m) * (F.lit(-ry) * X + F.lit(rx) * Y + Z),
-    )
-
-
-def datum_to_wgs84_cols(lon, lat, P):
-    X, Y, Z = _geodetic_to_xyz_cols(lon, lat, P["a"], P["e2"])
-    X, Y, Z = _helmert_cols(X, Y, Z, P, inverse=False)
-    W = _WGS84_ELL
-    return _xyz_to_geodetic_cols(X, Y, Z, W["a"], W["b"], W["e2"], W["ep2"])
-
-
-def wgs84_to_datum_cols(lon, lat, P):
-    W = _WGS84_ELL
-    X, Y, Z = _geodetic_to_xyz_cols(lon, lat, W["a"], W["e2"])
-    X, Y, Z = _helmert_cols(X, Y, Z, P, inverse=True)
-    return _xyz_to_geodetic_cols(X, Y, Z, P["a"], P["b"], P["e2"], P["ep2"])
-
-
 def datum_to_wgs84_sql(lon: str, lat: str, P) -> tuple[str, str]:
-    """(lon_sql, lat_sql) — mirrors datum_to_wgs84_cols operation for
+    """(lon_sql, lat_sql) — mirrors datum_to_wgs84_np operation for
     operation (same literals via dlit, same multiply pairing) so DuckDB
-    reproduces the Column pipeline to the gather quantization."""
+    reproduces the engine pipeline to the gather quantization."""
     d2r = dlit(_D2R)
     phi = f"({lat} * {d2r})"
     lam = f"({lon} * {d2r})"
@@ -3750,26 +3543,8 @@ def merc3395_inverse_np(x, y):
     return lam / _D2R, phi / _D2R
 
 
-def merc3395_forward_cols(lon, lat):
-    lam = lon * F.lit(_D2R)
-    sphi = F.sin(lat * F.lit(_D2R))
-    atanh = lambda v: F.lit(0.5) * F.log((F.lit(1.0) + v) / (F.lit(1.0) - v))  # noqa: E731
-    q = atanh(sphi) - F.lit(_E_WGS84) * atanh(F.lit(_E_WGS84) * sphi)
-    return F.lit(_WGS84_A) * lam, F.lit(_WGS84_A) * q
-
-
-def merc3395_inverse_cols(x, y):
-    _n, _A, _a, _b, delta = _tm_series()
-    lam = x / F.lit(_WGS84_A)
-    chi = F.atan(F.sinh(y / F.lit(_WGS84_A)))
-    phi = chi
-    for j, d in enumerate(delta, 1):
-        phi = phi + F.lit(d) * F.sin(F.lit(float(2 * j)) * chi)
-    return lam / F.lit(_D2R), phi / F.lit(_D2R)
-
-
 def merc3395_inverse_sql(x_expr: str, y_expr: str) -> tuple[str, str]:
-    """(lon_sql, lat_sql) mirroring merc3395_inverse_cols term for term
+    """(lon_sql, lat_sql) mirroring merc3395_inverse_np term for term
     (sinh spelled with exp for DuckDB, like tm_inverse_sql)."""
     _n, _A, _a, _b, delta = _tm_series()
     Al = dlit(_WGS84_A)

@@ -862,7 +862,8 @@ def q_resize_cubic_spline(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics; neither does skimage).  EXACT oracle: the prefilter is
     linear, so DuckDB re-derives it from per-line basis-response
     literal weights (spline_filter_matrix) and mirrors the basis
-    evaluation term for term; doubles rounded to 6 dp both sides."""
+    evaluation term for term; doubles rounded to 6 dp both sides, then
+    + 0.0 on both sides so a -0.0 residue compares as +0.0."""
     from .operators import reproject as RP
 
     spec = SPECF
@@ -924,7 +925,7 @@ corners AS (
          ({w_row}) * ({w_col}) AS wgt
   FROM f CROSS JOIN (VALUES {values}) o(a, b))
 SELECT corners.trow, corners.tcol,
-       ROUND(SUM(corners.wgt * coef.value), 6) AS value,
+       ROUND(SUM(corners.wgt * coef.value), 6) + 0.0 AS value,
        CAST(COUNT(*) AS BIGINT) AS n_contrib
 FROM corners JOIN coef USING (row, col)
 GROUP BY 1, 2"""
@@ -1310,8 +1311,8 @@ def _q_conic(gate: str):
         )
 
     q.__doc__ = (
-        f"Conic warp gate ({gate}): ellipsoidal Snyder inverse as pure "
-        "JVM Columns; DuckDB re-derives the series term-for-term.")
+        f"Conic warp gate ({gate}): ellipsoidal Snyder inverse as numpy "
+        "in one Arrow pass; DuckDB re-derives the series term-for-term.")
     return q
 
 
@@ -1369,8 +1370,8 @@ def q_reproject_merc3395(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE (ellipsoidal) Mercator target — EPSG:3395 World Mercator,
     ~34 km south of the spherical pseudo-Mercator at lat 52: isometric-
     latitude forward, conformal-latitude + Krüger delta-series inverse,
-    all closed-form Column trig; DuckDB re-derives the inverse term for
-    term."""
+    all closed form, run as numpy in one Arrow pass; DuckDB re-derives
+    the inverse term for term."""
     from .operators import reproject as RP
 
     spec = SPEC

@@ -1,7 +1,11 @@
 """SparkSession factory tuned for the local[N] sandbox.
 
-On a real cluster the same settings apply except master/memory, which
-spark-submit supplies; AQE + adaptive coalescing + skew-join stay on.
+Sizing follows the machine: local[cores] over the cores this process
+may use, and a driver heap derived from physical memory (both
+overridable through the environment, see ``default_cores`` and
+``default_driver_mem``). On a real cluster the same settings apply
+except master/memory, which spark-submit supplies; AQE + adaptive
+coalescing + skew-join stay on.
 """
 
 from __future__ import annotations
@@ -11,6 +15,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_mem(cores: int) -> str:
+    """``SPARK_DRIVER_MEM`` if set, else a third of physical memory left
+    after 512 MiB per core for the Python workers (at least 1 GiB)."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    with open("/proc/meminfo") as f:
+        total_kb = int(next(ln for ln in f if ln.startswith("MemTotal")).split()[1])
+    return f"{max(1024, (total_kb // 1024 - 512 * cores) // 3)}m"
+
+
 def get_spark(
     app_name: str = "georasters_spark",
     cores: int | None = None,
@@ -18,7 +37,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     b = (
@@ -31,7 +50,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_mem(cores))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
     )

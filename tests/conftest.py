@@ -1,15 +1,16 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @pytest.fixture(scope="session")
 def spark():
     from georasters_spark.session import get_spark
 
-    s = get_spark(app_name="pytest", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="pytest")
     yield s
     s.stop()
 

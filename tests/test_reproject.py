@@ -313,10 +313,10 @@ def test_tm_series_three_independent_oracles():
 
 
 def test_utm_warp_matches_numpy(spark, images_t1):
-    """Spark UTM nearest warp (JVM Column series inverse) == the numpy
-    differential oracle cell-for-cell (quantized gather), zone window
-    over lon [0,6] x lat [36,54]; bilinear variant within quantization
-    wiggle. South-hemisphere false northing checked via zone 31S."""
+    """Spark UTM nearest warp (numpy series inverse in one Arrow pass)
+    == the numpy differential oracle cell-for-cell (quantized gather),
+    zone window over lon [0,6] x lat [36,54]; bilinear variant within
+    quantization wiggle. South-hemisphere false northing checked via zone 31S."""
     spec = synth.T1
     out_shape = (64, 32)
     bbox = (0.0, 36.0, 6.0, 54.0)
@@ -492,9 +492,9 @@ def test_conic_formulary_invariants():
 
 
 def test_conic_warp_matches_numpy(spark, images_t1):
-    """Spark Albers/LCC nearest warps (pure-Column series inverse) ==
-    the independent numpy oracle cell-for-cell; proj4 forms parse;
-    bilinear runs through the CRS-agnostic kernel; antimeridian-
+    """Spark Albers/LCC nearest warps (numpy series inverse in one Arrow
+    pass) == the independent numpy oracle cell-for-cell; proj4 forms
+    parse; bilinear runs through the CRS-agnostic kernel; antimeridian-
     spanning sources refuse loudly."""
     import pytest
 
@@ -556,9 +556,9 @@ def test_conic_warp_matches_numpy(spark, images_t1):
 
 
 def test_reproject_any_matches_numpy(spark, images_t1):
-    """General any-CRS→any-CRS warp (inverse(dst)∘forward(src) as pure
-    Columns) == the independent numpy oracle cell-for-cell, across
-    projected sources and cross-projected combos."""
+    """General any-CRS→any-CRS warp (inverse(dst)∘forward(src) as numpy
+    in one Arrow pass) == the independent numpy oracle cell-for-cell,
+    across projected sources and cross-projected combos."""
     spec = synth.T1
     px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
     full = synth.stitched_array(spec).astype(np.float64)
@@ -599,26 +599,77 @@ def test_reproject_any_matches_numpy(spark, images_t1):
     assert len(bl) == 32 * 64 and bl["value"].notna().sum() > 0.5 * len(bl)
 
 
-def test_forward_cols_match_numpy(spark):
-    """Every family's Column FORWARD == its numpy forward at 1e-6 m,
-    evaluated through a real Spark plan (the composition contract of
-    reproject_any)."""
-    import pandas as pd
+def _dense_px(spark, h, w):
+    """An all-valid (row, col, value) pixel table, value = row·w + col."""
+    full = (np.arange(h)[:, None] * w + np.arange(w)[None, :]).astype(np.float64)
+    px = spark.createDataFrame(
+        [(r, c, float(full[r, c])) for r in range(h) for c in range(w)],
+        "row long, col long, value double")
+    return px, full
 
-    pts = pd.DataFrame({
-        "lon": np.linspace(-20, 25, 13) + 3.0,
-        "lat": np.linspace(28, 62, 13),
-    })
-    sdf = spark.createDataFrame(pts)
-    from pyspark.sql import functions as F
 
-    for token in ("cea", "webmerc", "sinu", "utm:33n", "aea:5070", "lcc:2154"):
-        fns = RP.crs_funcs(token)
-        xc, yc = fns["fwd_cols"](F.col("lon"), F.col("lat"))
-        got = sdf.select(xc.alias("x"), yc.alias("y")).toPandas()
-        ex, ey = fns["fwd_np"](pts.lon.to_numpy(), pts.lat.to_numpy())
-        assert np.abs(got.x.to_numpy() - ex).max() < 1e-6, token
-        assert np.abs(got.y.to_numpy() - ey).max() < 1e-6, token
+@pytest.mark.parametrize("mode", ["nearest", "bilinear", "cubic", "average"])
+def test_reproject_any_plan_has_one_python_eval(spark, mode):
+    """The composed WGS84 -> OSGB chain (Helmert shift + Krüger series)
+    is one numpy pass: the physical plan holds exactly one Arrow
+    Python-eval node, and it evaluates a single UDF (a filter pushed
+    below it, as the forward-bucket range check would be, must not
+    copy the UDF)."""
+    px, _ = _dense_px(spark, 20, 30)
+    out = RP.reproject_any(px, 4326, 27700, (-3.0, 56.0), (0.2, -0.2),
+                           (20, 30), (16, 24), resampling=mode)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(evals) == 1, plan
+    assert "BatchEvalPython" not in plan
+    assert evals[0].count("project_batch(") == 1, evals[0]
+
+
+def test_nonfinite_projection_gathers_null(spark):
+    """A target cell whose projected source coordinate is non-finite
+    gets a NULL value (never the pixel at row 0 / col 0), and a source
+    cell whose projected target coordinate is non-finite lands in no
+    bucket (never in target cell (0, 0))."""
+    h, w = 20, 30
+    px, full = _dense_px(spark, h, w)
+    # inverse gather: the lattice center (lon 93, lat 0) sits 90° off
+    # UTM 31N's central meridian, where the forward series is (inf, NaN)
+    bbox, out = (83.0, -10.0, 103.0, 10.0), (5, 5)
+    sx, sy = RP.crs_funcs("utm:31n")["fwd_np"](np.array([93.0]), np.array([0.0]))
+    assert not np.isfinite(sx[0]) and np.isnan(sy[0])
+    # a source grid over the finite images of the other centers
+    so, sc = (1.5e7, 1.7e7), (1.7e7 / w, -3.4e7 / h)
+    for mode in ("nearest", "bilinear", "cubic"):
+        got = RP.reproject_any(px, 32631, 4326, so, sc, (h, w), out,
+                               resampling=mode, bbox_lonlat=bbox).toPandas()
+        assert len(got) == 25, mode
+        centre = got[(got.trow == 2) & (got.tcol == 2)]
+        assert centre["value"].isna().all(), (mode, centre)
+        if mode == "nearest":
+            exp = RP.reproject_any_numpy_oracle(full, -1.0, 32631, 4326, so,
+                                                sc, out, bbox_lonlat=bbox)
+            grid = np.full(out, -1.0)
+            vals = got.dropna(subset=["value"])
+            grid[vals.trow.to_numpy(), vals.tcol.to_numpy()] = vals.value.to_numpy()
+            assert (grid == exp).all()
+            assert (grid != -1.0).sum() >= 12
+    # forward buckets: source column 1 sits ~1e9 m east, where the
+    # inverse series is NaN in both coordinates
+    src_origin, src_cell = (-4.995e8, 5.6e6), (1.0e9, -1000.0)
+    bbox, out = (2.0, 49.0, 4.0, 52.0), (6, 4)
+    lon, lat = RP.crs_funcs("utm:31n")["inv_np"](
+        np.array([1.0005e9]), np.array([5.5995e6]))
+    assert np.isnan(lon[0]) and np.isnan(lat[0])
+    px2, full2 = _dense_px(spark, h, 2)
+    got = RP.reproject_any(px2, 32631, 4326, src_origin, src_cell, (h, 2), out,
+                           resampling="count", bbox_lonlat=bbox).toPandas()
+    _, cnt = RP.reproject_any_average_numpy_oracle(
+        full2, -1.0, 32631, 4326, src_origin, src_cell, out, "count",
+        bbox_lonlat=bbox)
+    assert cnt[0, 0] == 0 and cnt.sum() == h
+    assert {(int(r.trow), int(r.tcol)): int(r.n_contrib)
+            for r in got.itertuples()} == {
+        (int(r), int(c)): int(cnt[r, c]) for r, c in zip(*np.nonzero(cnt))}
 
 
 class TestDatumAndWkt:
@@ -659,18 +710,6 @@ class TestDatumAndWkt:
         assert 0.0005 < abs(lo[0] + 2.0) < 0.01
         lo2, la2 = RP.datum_to_wgs84_np(lo, la, P)
         assert abs(lo2[0] + 2.0) < 1e-6 and abs(la2[0] - 53.0) < 1e-6
-
-    def test_cols_match_numpy(self, spark):
-        P = RP.datum_params(RP.parse_crs(4267))
-        import pandas as pd
-        pdf = pd.DataFrame({"lon": [-98.0, -70.5, -112.25],
-                            "lat": [39.0, 44.5, 33.125]})
-        df = spark.createDataFrame(pdf)
-        lo_c, la_c = RP.datum_to_wgs84_cols(F.col("lon"), F.col("lat"), P)
-        got = df.select(lo_c.alias("lo"), la_c.alias("la")).toPandas()
-        lo_n, la_n = RP.datum_to_wgs84_np(pdf.lon.to_numpy(), pdf.lat.to_numpy(), P)
-        assert np.abs(got.lo.to_numpy() - lo_n).max() < 1e-12
-        assert np.abs(got.la.to_numpy() - la_n).max() < 1e-12
 
     def test_wkt_geogcs_and_projcs(self):
         wkt_geo = ('GEOGCS["NAD27",DATUM["North_American_Datum_1927",'
@@ -883,32 +922,7 @@ def test_mode_matrix_any_crs(spark):
     georasters.py:592-606 warps any mode to any target). Full mode
     sweep on a UTM target; one kernel + one aggregate on each other
     family, each checked cell-for-cell vs the independent numpy
-    oracles.
-
-    Codegen is disabled for THIS test only: the 15 composed-warp
-    plans each janino-compile ~100KB of staged series math (~50 s
-    and real heap per compile — 13 min total, and enough JIT/deopt
-    pressure to OOM a late-suite shared JVM), while the VALUES being
-    checked are identical interpreted. The production codegen path
-    stays exercised by the driver gates (reproject_utm_cubic,
-    reproject_lcc_lanczos, reproject_any_average) and the per-family
-    pytest checks."""
-    conf = spark.conf
-    saved = {k: conf.get(k, None) for k in
-             ("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")}
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try:
-        _run_mode_matrix(spark)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
-
-
-def _run_mode_matrix(spark):
+    oracles."""
     h, w = 20, 30
     full = ((np.arange(h)[:, None] * 7919 + np.arange(w)[None, :]
              * 104729) % 997).astype(np.float64)
@@ -1043,6 +1057,24 @@ def test_resize_cubic_spline_vs_numpy_oracle(spark):
     for r in out:
         assert r["n_contrib"] == 16
         assert abs(r["value"] - exp[r["trow"], r["tcol"]]) < 1e-5
+
+
+def test_resize_cubic_spline_gate_matches_oracle_sign_of_zero(spark):
+    """The resize_cubic_spline gate equals its DuckDB oracle bit for bit,
+    including the sign of zero: DuckDB's ROUND keeps a -0.0 residue
+    that Spark's normalizes, so both sides add + 0.0."""
+    import duckdb
+
+    from georasters_spark import queries as Q
+
+    key = ["trow", "tcol"]
+    got = Q.q_resize_cubic_spline(spark, "").toPandas().sort_values(key)
+    exp = duckdb.sql(Q.sql_resize_cubic_spline()).df().sort_values(key)
+    assert (got[key].to_numpy() == exp[key].to_numpy()).all()
+    g = got["value"].to_numpy(np.float64)
+    e = exp["value"].to_numpy(np.float64)
+    assert (g == e).all()
+    assert (np.signbit(g) == np.signbit(e)).all()
 
 
 def test_spline_prefilter_requires_dense(spark):
@@ -1203,6 +1235,27 @@ def test_gather_from_tiles_rejects_duplicate_tile_keys(spark, images_t1):
     doubled = images_t1.unionByName(images_t1.limit(1))
     with pytest.raises(Exception, match="image rows share tile"):
         RP.wgs84_to_cea_grid(None, images=doubled, **kw).collect()
+
+
+def test_gather_from_tiles_rejects_mixed_tile_shapes(spark, images_t1):
+    """Targets key to tiles by the probed tile shape, so an images table
+    with a tile of another shape must raise, not silently miss or
+    misplace that tile's gathers."""
+    from georasters_spark.sources import codec
+
+    spec = synth.T1
+    kw = dict(src_origin=(spec.x0, spec.y0),
+              src_cellsize=(spec.cellx, spec.celly),
+              src_shape=(spec.height, spec.width), out_shape=(30, 60))
+    is_t = (F.col("tile_row") == 1) & (F.col("tile_col") == 1)
+    t = images_t1.filter(is_t).first().asDict()
+    arr = codec.decode_tile(bytes(t["bytes"]), t["fmt"], t["w"], t["h"], t["ndv"])
+    t.update(bytes=codec.encode_tile(arr[:32, :48], t["fmt"], t["ndv"]),
+             w=48, h=32)
+    mixed = images_t1.filter(~is_t).unionByName(
+        spark.createDataFrame([t], images_t1.schema))
+    with pytest.raises(Exception, match="expected uniform"):
+        RP.wgs84_to_cea_grid(None, images=mixed, **kw).collect()
 
 
 def test_reproject_quartile_aggregates_vs_numpy(spark, images_t1):
