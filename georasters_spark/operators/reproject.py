@@ -13,11 +13,13 @@ the target grid (spark.range × spark.range), compute each target cell
 center's source (row, col), equi-join the source pixel table.
 Resampling = nearest (the reference default); bilinear and average
 (block-mean) variants below mirror the reference resampling-mode dict
-(georasters.py:592-606). The specialized WGS84 -> CEA / WebMercator /
-sinusoidal plans keep their few JVM trig Columns; every other
-projection (the Krüger TM, conic, Helmert datum and ellipsoidal
-Mercator series, and every reproject_any chain) runs as its numpy twin
-in one Arrow pass (``_project``), with the DuckDB SQL twins as the
+(georasters.py:592-606). Two families keep a plan of their own with
+a few JVM trig Columns: WGS84 -> CEA (every mode, plus the tile-
+cogrouped ``images=`` paths) and WGS84 -> WebMercator nearest/bilinear
+(the XYZ tiler's lattice). Every other request goes to
+``reproject_any``, whose projections (the Krüger TM, conic, sinusoidal,
+Helmert datum and ellipsoidal Mercator series) run as numpy twins in
+one Arrow pass (``_project``), with the DuckDB SQL twins as the
 independent check.
 
 Engine-stable gather rule (the DuckDB-oracle contract): the fractional
@@ -62,17 +64,26 @@ def cea_bounds(lon0: float, lat0: float, lon1: float, lat1: float, phi_s: float 
     return x0, y0, x1, y1
 
 
+_WINDOW_BYTES = 32 << 20  # cap on one cogroup task's float64 block window
+
+
 def _superblock(n_targets, src_shape, t_h: int, t_w: int) -> int:
     """Tile superblock factor for the cogroup gathers: size each task
     for ~32k targets (per-group Python overhead dominates below ~1k
     targets/tile — measured), derived from the data shape, never from
-    the local core count.  1 when the shapes are unknown."""
+    the local core count.  1 when the shapes are unknown.  A block
+    never spans more tiles than the source has along its longer side,
+    and its dense float64 window stays within ``_WINDOW_BYTES`` (block
+    + 2 tiles a side: the kernel plans' halo is narrower than a tile
+    on each side)."""
     if n_targets is None or src_shape is None:
         return 1
-    n_tiles = max(1, -(-int(src_shape[0]) // t_h)
-                  * (-(-int(src_shape[1]) // t_w)))
-    return max(1, min(64, math.ceil(math.sqrt(
-        32768 * n_tiles / max(1, int(n_targets))))))
+    n_tr = -(-int(src_shape[0]) // t_h)
+    n_tc = -(-int(src_shape[1]) // t_w)
+    want = math.ceil(math.sqrt(32768 * max(1, n_tr * n_tc)
+                               / max(1, int(n_targets))))
+    fit = math.isqrt(_WINDOW_BYTES // (8 * t_h * t_w)) - 2
+    return max(1, min(want, max(n_tr, n_tc), fit))
 
 
 def gather_from_tiles(tgt: DataFrame, images: DataFrame,
@@ -899,11 +910,12 @@ def wgs84_to_cea_grid_average(
 
 # ---------------------------------------------------------------------------
 # user-facing dispatcher: the reference API accepts EPSG ints, proj4 and
-# WKT strings plus a resampling mode name (georasters.py:559-667). The
-# sandbox implements the closed-form projections its own test suite
-# uses (WGS84 source -> CEA / WebMercator) with nearest / bilinear /
-# average-family resampling; anything else raises a clear
-# NotImplementedError instead of a silent wrong answer.
+# WKT strings plus a resampling mode name (georasters.py:559-667). An
+# unwindowed WGS84 source warped to CEA (any mode) or WebMercator
+# (nearest/bilinear) keeps its own plan; every other request is one
+# reproject_any warp. CRSs outside parse_crs, and extents a projection
+# cannot cover, raise NotImplementedError instead of a silent wrong
+# answer.
 # ---------------------------------------------------------------------------
 
 _CRS_TOKENS = {
@@ -1005,63 +1017,52 @@ def reproject(
     """Reference-shaped entry point (georasters.py:559-667):
     reproject(px, 'EPSG:4326', 'EPSG:3857', ..., resampling='bilinear').
 
-    resampling: nearest | bilinear | average | sum | min | max | count
-    | mode (GDAL mode-name parity for the aggregate family).
-    bbox_lonlat = (lon_min, lat_min, lon_max, lat_max) windows the
-    target extent (GDAL -te analog; required for UTM targets of
-    wider-than-zone sources)."""
-    if parse_crs(src_crs) != "wgs84":
-        # projected source: the general inverse(dst)∘forward(src) warp
-        return reproject_any(px, src_crs, dst_crs, src_origin, src_cellsize,
-                             src_shape, out_shape, resampling=resampling,
-                             bbox_lonlat=bbox_lonlat)
+    resampling: nearest | bilinear | cubic | cubicspline | lanczos |
+    average | sum | min | max | count | mode | rms | med | q1 | q3 (the
+    gdalwarp -r enum).  bbox_lonlat = (lon_min, lat_min, lon_max,
+    lat_max) windows the target extent (GDAL -te analog; required for
+    UTM/TM targets of sources reaching past ±40° of the central
+    meridian, and for conic targets of antimeridian-spanning sources).
+    Nearest output is (trow, tcol, xm, ym, value), xm/ym the target
+    cell center in target CRS units."""
+    src = parse_crs(src_crs)
     dst = parse_crs(dst_crs)
-    args = (px, src_origin, src_cellsize, src_shape, out_shape)
-    # every family × the COMPLETE GDAL mode dict: the specialized
-    # single-projection plans serve nearest/bilinear (their target
-    # lattices predate reproject_any and stay byte-stable); all other
-    # modes route through reproject_any's composed warp, which carries
-    # the full kernel + aggregate matrix for any CRS pair
-    _any = lambda: reproject_any(  # noqa: E731
-        px, src_crs, dst_crs, src_origin, src_cellsize, src_shape,
-        out_shape, resampling=resampling, bbox_lonlat=bbox_lonlat)
-    if dst.startswith(("aea:", "lcc:")):
-        if resampling in ("nearest", "bilinear"):
-            P = conic_params_of(dst)
-            return wgs84_to_conic_grid(*args, P=P, bbox_lonlat=bbox_lonlat,
-                                       resampling=resampling)
-        return _any()
-    if dst.startswith("utm:"):
-        zone = int(dst[4:-1])
-        south = dst.endswith("s")
-        if resampling == "nearest":
-            return wgs84_to_utm_grid(*args, zone=zone, south=south,
-                                     bbox_lonlat=bbox_lonlat)
-        if resampling == "bilinear":
-            return wgs84_to_utm_grid_bilinear(*args, zone=zone, south=south,
-                                              bbox_lonlat=bbox_lonlat)
-        return _any()
-    if dst == "webmerc":
-        if resampling == "nearest":
-            return wgs84_to_webmercator_grid(*args)
-        if resampling == "bilinear":
-            return wgs84_to_webmercator_grid_bilinear(*args)
-        return _any()
-    if dst == "sinu":
-        if resampling == "nearest":
-            return wgs84_to_sinusoidal_grid(*args)
-        if resampling == "bilinear":
-            return wgs84_to_sinusoidal_grid_bilinear(*args)
-        return _any()
-    if dst == "wgs84":
+    if src == dst == "wgs84":
         raise NotImplementedError("identity reproject: use resize/extract")
-    if dst == "merc3395" or dst.startswith(("geog:", "tmd:")):
-        # ellipsoidal Mercator / datum'd geographic / TM-on-datum
-        # targets route through the general composed warp — they must
-        # NEVER fall through to the CEA kernel below
-        return _any()
-    if dst != "cea":
-        raise NotImplementedError(f"no warp route for CRS token {dst!r}")
+    args = (px, src_origin, src_cellsize, src_shape, out_shape)
+    # the two plans that predate reproject_any: their lattices are not
+    # any_bounds' to the last bit (WebMercator Y0 differs in the last
+    # digits), and the CEA family also has tile-cogrouped variants
+    if src == "wgs84" and bbox_lonlat is None:
+        if dst == "webmerc" and resampling == "nearest":
+            return wgs84_to_webmercator_grid(*args)
+        if dst == "webmerc" and resampling == "bilinear":
+            return wgs84_to_webmercator_grid_bilinear(*args)
+        if dst == "cea":
+            return _wgs84_to_cea(*args, resampling=resampling)
+    return reproject_any(px, src_crs, dst_crs, src_origin, src_cellsize,
+                         src_shape, out_shape, resampling=resampling,
+                         bbox_lonlat=bbox_lonlat)
+
+
+# gdalwarp aggregate mode name -> _bucket_agg ``how``
+_AGG_MODES = {"average": "mean", "sum": "sum", "min": "min", "max": "max",
+              "count": "count", "mode": "mode", "rms": "rms", "med": "med",
+              "q1": "q1", "q3": "q3"}
+
+
+def _unknown_mode(resampling: str) -> NotImplementedError:
+    return NotImplementedError(
+        f"resampling {resampling!r} not supported (have nearest/bilinear/"
+        "cubic/cubicspline/lanczos/average/sum/min/max/count/mode/"
+        "rms/med/q1/q3 — the FULL gdalwarp -r enum, "
+        "georasters.py:592-606)")
+
+
+def _wgs84_to_cea(px, src_origin, src_cellsize, src_shape, out_shape,
+                  resampling: str) -> DataFrame:
+    """The WGS84 -> CEA plan for one gdalwarp resampling mode."""
+    args = (px, src_origin, src_cellsize, src_shape, out_shape)
     if resampling == "nearest":
         return wgs84_to_cea_grid(*args)
     if resampling == "bilinear":
@@ -1072,15 +1073,9 @@ def reproject(
         return wgs84_to_cea_grid_cubic(*args, kernel="bspline")
     if resampling == "lanczos":
         return wgs84_to_cea_grid_lanczos(*args)
-    agg = {"average": "mean", "sum": "sum", "min": "min", "max": "max",
-           "count": "count", "mode": "mode", "rms": "rms", "med": "med",
-           "q1": "q1", "q3": "q3"}.get(resampling)
+    agg = _AGG_MODES.get(resampling)
     if agg is None:
-        raise NotImplementedError(
-            f"resampling {resampling!r} not supported (have nearest/bilinear/"
-            "cubic/cubicspline/lanczos/average/sum/min/max/count/mode/"
-            "rms/med/q1/q3 — the FULL gdalwarp -r enum, "
-            "georasters.py:592-606)")
+        raise _unknown_mode(resampling)
     return wgs84_to_cea_grid_average(*args, how=agg)
 
 
@@ -1949,10 +1944,11 @@ def cea_lanczos_numpy_oracle(
 # series). Truncation error at 4th order is sub-millimeter inside a UTM
 # zone. The reference reaches these CRSs through GDAL
 # (georasters.py:559-667); here both directions are closed-form series
-# in numpy: the forward gives the driver-side target bounds, the inverse
-# runs in one Arrow pass over the target lattice (_project), so the warp
-# stays an inverse-projection gather. tm_inverse_sql is the independent
-# DuckDB check.
+# in numpy that reproject_any composes (crs_funcs 'utm:'/'tmd:'): the
+# forward gives the driver-side target bounds, the inverse runs in one
+# Arrow pass over the target lattice. The series diverges past ~±40° of
+# the central meridian, so any_bounds refuses such extents.
+# tm_inverse_sql is the independent DuckDB check.
 # ---------------------------------------------------------------------------
 
 _WGS84_A = 6378137.0
@@ -2081,217 +2077,13 @@ loc0 AS (SELECT trow, tcol, em, nm,
     return cte, "lon", "lat"
 
 
-def _utm_target_bounds(src_origin, src_cellsize, src_shape, lon0: float,
-                       fn: float = 0.0, n_samples: int = 64,
-                       bbox_lonlat=None):
-    """Projected bounds of the source bbox: densely sample the bbox
-    BOUNDARY and forward-project (the TM image of a graticule rectangle
-    is not a rectangle; corner-only bounds would clip). Driver-side
-    numpy over 4·n_samples points — metadata cost. bbox_lonlat =
-    (lon_min, lat_min, lon_max, lat_max) overrides the source extent —
-    REQUIRED when the source grid is wider than the UTM zone (the
-    Krüger series diverges past ~±40° of the central meridian; a UTM
-    warp of a global raster targets one zone window, like GDAL -te)."""
-    h, w = src_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    if bbox_lonlat is not None:
-        lon_a, lat_a, lon_b, lat_b = bbox_lonlat
-    else:
-        lon_a, lon_b = x0g, x0g + w * cx
-        lat_a, lat_b = y0g + h * cy, y0g
-    if max(abs(lon_a - lon0), abs(lon_b - lon0)) > 40.0:
-        raise NotImplementedError(
-            "UTM target: source extent reaches beyond ±40° of the zone's "
-            "central meridian, where the Krüger series diverges — pass "
-            "bbox_lonlat to window the warp to the zone"
-        )
-    lons, lats = _boundary_samples(lon_a, lat_a, lon_b, lat_b, n_samples)
-    E, N = tm_forward_np(lons, lats, lon0, fn=fn)
-    return float(E.min()), float(N.min()), float(E.max()), float(N.max())
-
-
-def wgs84_to_utm_grid(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    zone: int,
-    south: bool = False,
-    bbox_lonlat=None,
-) -> DataFrame:
-    """Warp onto a UTM target grid (nearest): same inverse-gather shape
-    as CEA/WebMercator, with the Krüger-series inverse (tm_inverse_np)
-    run in one Arrow pass. bbox_lonlat windows the target to the zone
-    (see _utm_target_bounds)."""
-    ll = _utm_lonlat(px.sparkSession, src_origin, src_cellsize, src_shape,
-                     out_shape, zone, south, bbox_lonlat)
-    return _nearest_join(px, ll, "_lon", "_lat", src_origin, src_cellsize,
-                         ("em", "nm"))
-
-
-def wgs84_to_utm_grid_bilinear(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    zone: int,
-    south: bool = False,
-    bbox_lonlat=None,
-) -> DataFrame:
-    """UTM warp with bilinear resampling via the CRS-agnostic kernel."""
-    ll = _utm_lonlat(px.sparkSession, src_origin, src_cellsize, src_shape,
-                     out_shape, zone, south, bbox_lonlat)
-    return _bilinear_from_lonlat(px, ll, F.col("_lon"), F.col("_lat"),
-                                 src_origin, src_cellsize)
-
-
-def _utm_lonlat(spark, src_origin, src_cellsize, src_shape, out_shape,
-                zone: int, south: bool, bbox_lonlat) -> DataFrame:
-    """The UTM target lattice (trow, tcol, em, nm) with each center's
-    lon/lat (_lon, _lat) from tm_inverse_np."""
-    th, tw = out_shape
-    lon0 = utm_lon0(zone)
-    fn = 10000000.0 if south else 0.0
-    E0, N0b, E1, N1b = _utm_target_bounds(src_origin, src_cellsize, src_shape, lon0, fn,
-                                          bbox_lonlat=bbox_lonlat)
-    tcx = (E1 - E0) / tw
-    tcy = (N0b - N1b) / th  # negative: row 0 = max northing (north-up)
-    return _project(_lattice(spark, out_shape, E0, N1b, tcx, tcy, ("em", "nm")),
-                    lambda x, y: tm_inverse_np(x, y, lon0, fn=fn),
-                    "em", "nm", out=("_lon", "_lat"))
-
-
-def utm_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    out_shape: tuple[int, int],
-    zone: int,
-    south: bool = False,
-    bbox_lonlat=None,
-):
-    """Independent numpy nearest UTM warp (differential pytest oracle)."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    lon0 = utm_lon0(zone)
-    fn = 10000000.0 if south else 0.0
-    E0, N0b, E1, N1b = _utm_target_bounds(src_origin, src_cellsize, (h, w), lon0, fn,
-                                          bbox_lonlat=bbox_lonlat)
-    tcx = (E1 - E0) / tw
-    tcy = (N0b - N1b) / th
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    em = E0 + (tc + 0.5) * tcx
-    nm = N1b + (tr + 0.5) * tcy
-    lon, lat = tm_inverse_np(em, nm, lon0, fn=fn)
-    srow = np.floor(np.round((lat - y0g) / cy, _Q)).astype(np.int64)
-    scol = np.floor(np.round((lon - x0g) / cx, _Q)).astype(np.int64)
-    out = np.full(out_shape, ndv)
-    ok = (srow >= 0) & (srow < h) & (scol >= 0) & (scol < w)
-    out[ok] = full[srow[ok], scol[ok]]
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Sinusoidal (the MODIS land-grid projection, +proj=sinu / ESRI:54008):
 # spherical closed forms x = R·λ·cos(φ), y = R·φ; inverse φ = y/R,
-# λ = x/(R·cos φ). Equal-area; same inverse-gather shape as CEA.
+# λ = x/(R·cos φ). Equal-area; warped by reproject_any (crs_funcs
+# 'sinu'), checked by the oracle below, which spells the inverse out
+# on its own.
 # ---------------------------------------------------------------------------
-
-def _boundary_samples(lon_a: float, lat_a: float, lon_b: float, lat_b: float,
-                      n_samples: int = 64):
-    """Dense samples of a lon/lat rectangle's BOUNDARY — the shared
-    scaffolding for projected-bounds estimation (a projection's image
-    of a graticule rectangle is not a rectangle; corners under-cover)."""
-    t = np.linspace(0.0, 1.0, n_samples)
-    lons = np.concatenate([
-        lon_a + (lon_b - lon_a) * t, lon_a + (lon_b - lon_a) * t,
-        np.full_like(t, lon_a), np.full_like(t, lon_b),
-    ])
-    lats = np.concatenate([
-        np.full_like(t, lat_a), np.full_like(t, lat_b),
-        lat_a + (lat_b - lat_a) * t, lat_a + (lat_b - lat_a) * t,
-    ])
-    return lons, lats
-
-
-def _sinu_bounds(src_origin, src_cellsize, src_shape, n_samples: int = 64):
-    """Projected bounds by boundary sampling (|x| peaks at the lowest-
-    |latitude| edge, so corners alone under-cover)."""
-    h, w = src_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    lons, lats = _boundary_samples(x0g, y0g + h * cy, x0g + w * cx, y0g, n_samples)
-    X = R * np.radians(lons) * np.cos(np.radians(lats))
-    Y = R * np.radians(lats)
-    return float(X.min()), float(Y.min()), float(X.max()), float(Y.max())
-
-
-def wgs84_to_sinusoidal_grid(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-) -> DataFrame:
-    """Warp onto a sinusoidal target grid (nearest) — pure Column trig."""
-    spark = px.sparkSession
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y0b, X1, Y1b = _sinu_bounds(src_origin, src_cellsize, src_shape)
-    tcx = (X1 - X0) / tw
-    tcy = (Y0b - Y1b) / th  # negative: row 0 at max y (north-up)
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y1b) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lat = ym / F.lit(R) * F.lit(180.0) / F.lit(math.pi)
-    lon = xm / (F.lit(R) * F.cos(ym / F.lit(R))) * F.lit(180.0) / F.lit(math.pi)
-    srow = F.floor(F.round((lat - F.lit(y0g)) / F.lit(cy), _Q)).cast("long")
-    scol = F.floor(F.round((lon - F.lit(x0g)) / F.lit(cx), _Q)).cast("long")
-    tgt = target.select(
-        "trow", "tcol", xm.alias("xm"), ym.alias("ym"),
-        srow.alias("row"), scol.alias("col"),
-    )
-    return tgt.join(px.select("row", "col", "value"), ["row", "col"], "left").select(
-        "trow", "tcol", "xm", "ym", "value"
-    )
-
-
-def wgs84_to_sinusoidal_grid_bilinear(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-) -> DataFrame:
-    """Sinusoidal warp, bilinear, via the CRS-agnostic kernel."""
-    spark = px.sparkSession
-    th, tw = out_shape
-    X0, Y0b, X1, Y1b = _sinu_bounds(src_origin, src_cellsize, src_shape)
-    tcx = (X1 - X0) / tw
-    tcy = (Y0b - Y1b) / th
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y1b) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lat = ym / F.lit(R) * F.lit(180.0) / F.lit(math.pi)
-    lon = xm / (F.lit(R) * F.cos(ym / F.lit(R))) * F.lit(180.0) / F.lit(math.pi)
-    return _bilinear_from_lonlat(px, target, lon, lat, src_origin, src_cellsize)
-
 
 def sinusoidal_numpy_oracle(
     full: np.ndarray,
@@ -2305,7 +2097,7 @@ def sinusoidal_numpy_oracle(
     th, tw = out_shape
     x0g, y0g = src_origin
     cx, cy = src_cellsize
-    X0, Y0b, X1, Y1b = _sinu_bounds(src_origin, src_cellsize, (h, w))
+    X0, Y0b, X1, Y1b = any_bounds(4326, "+proj=sinu", src_origin, src_cellsize, (h, w))
     tcx = (X1 - X0) / tw
     tcy = (Y0b - Y1b) / th
     tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
@@ -2328,9 +2120,9 @@ def sinusoidal_numpy_oracle(
 # Professional Paper 1395, "Map Projections: A Working Manual").
 # Both inverses are NON-iterative: AEA converts authalic latitude with
 # the sin(2kβ) series, LCC converts conformal latitude with the
-# sin(2kχ) series — so the whole warp stays the same inverse-gather as
-# CEA/WebMercator/UTM, its inverse run as numpy in one Arrow pass and
-# checked by the DuckDB SQL twin (reference reproject role:
+# sin(2kχ) series — so the warp is reproject_any's inverse gather, the
+# inverse run as numpy in one Arrow pass and checked by the DuckDB SQL
+# twin (reference reproject role:
 # georasters.py:559-667; these CRSs are what GDAL users actually name
 # for regional equal-area / conformal work).
 # ---------------------------------------------------------------------------
@@ -2488,84 +2280,6 @@ loc0 AS (SELECT trow, tcol, xm, ym,
                 {phi} * 180.0 / pi() AS lat
          FROM c1)"""
     return cte, "lon", "lat"
-
-
-def _conic_bounds(src_origin, src_cellsize, src_shape, P: dict,
-                  bbox_lonlat=None, n_samples: int = 64):
-    """Projected bounds by dense boundary sampling (a conic image of a
-    graticule rectangle bulges on the edge nearest the cone apex, so
-    corners alone under-cover — same scaffolding as UTM/sinusoidal)."""
-    h, w = src_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    if bbox_lonlat is not None:
-        lon_a, lat_a, lon_b, lat_b = bbox_lonlat
-    else:
-        lon_a, lon_b = x0g, x0g + w * cx
-        lat_a, lat_b = y0g + h * cy, y0g
-    if max(abs(lon_a - P["lon0"]), abs(lon_b - P["lon0"])) >= 180.0:
-        raise NotImplementedError(
-            "conic target: source spans the antimeridian of the projection "
-            "center — pass bbox_lonlat to window the warp"
-        )
-    lons, lats = _boundary_samples(lon_a, lat_a, lon_b, lat_b, n_samples)
-    X, Y = conic_forward_np(lons, lats, P)
-    return float(X.min()), float(Y.min()), float(X.max()), float(Y.max())
-
-
-def wgs84_to_conic_grid(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    P: dict,
-    bbox_lonlat=None,
-    resampling: str = "nearest",
-) -> DataFrame:
-    """Warp onto an Albers/LCC target grid — the same inverse-gather
-    plan as CEA/UTM: target cells are a range×range cross join, the
-    inverse (conic_inverse_np) runs in one Arrow pass, the gather is one
-    equi-join against the pixel table (broadcast when small, hash
-    otherwise — Catalyst's call). nearest or bilinear."""
-    th, tw = out_shape
-    X0, Y0b, X1, Y1b = _conic_bounds(src_origin, src_cellsize, src_shape, P,
-                                     bbox_lonlat=bbox_lonlat)
-    if resampling not in ("nearest", "bilinear"):
-        raise NotImplementedError("conic targets support nearest/bilinear")
-    tcx = (X1 - X0) / tw
-    tcy = (Y0b - Y1b) / th  # negative: row 0 = max northing
-    tgt = _project(_lattice(px.sparkSession, out_shape, X0, Y1b, tcx, tcy),
-                   lambda x, y: conic_inverse_np(x, y, P),
-                   "xm", "ym", out=("_lon", "_lat"))
-    if resampling == "bilinear":
-        return _bilinear_from_lonlat(px, tgt, F.col("_lon"), F.col("_lat"),
-                                     src_origin, src_cellsize)
-    return _nearest_join(px, tgt, "_lon", "_lat", src_origin, src_cellsize,
-                         ("xm", "ym"))
-
-
-def conic_numpy_oracle(full: np.ndarray, ndv: float, src_origin, src_cellsize,
-                       out_shape, P: dict, bbox_lonlat=None):
-    """Independent numpy nearest conic warp (differential pytest oracle)."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y0b, X1, Y1b = _conic_bounds(src_origin, src_cellsize, (h, w), P,
-                                     bbox_lonlat=bbox_lonlat)
-    tcx = (X1 - X0) / tw
-    tcy = (Y0b - Y1b) / th
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y1b + (tr + 0.5) * tcy
-    lon, lat = conic_inverse_np(xm, ym, P)
-    srow = np.floor(np.round((lat - y0g) / cy, _Q)).astype(np.int64)
-    scol = np.floor(np.round((lon - x0g) / cx, _Q)).astype(np.int64)
-    out = np.full(out_shape, ndv)
-    ok = (srow >= 0) & (srow < h) & (scol >= 0) & (scol < w)
-    out[ok] = full[srow[ok], scol[ok]]
-    return out
 
 
 # Public EPSG parameter registry for the supported conic CRSs (all
@@ -2770,6 +2484,23 @@ def _nearest_join(px: DataFrame, tgt: DataFrame, sx: str, sy: str,
         "trow", "tcol", *carry, "value")
 
 
+def _boundary_samples(lon_a: float, lat_a: float, lon_b: float, lat_b: float,
+                      n_samples: int = 64):
+    """Dense samples of a lon/lat rectangle's BOUNDARY — the shared
+    scaffolding for projected-bounds estimation (a projection's image
+    of a graticule rectangle is not a rectangle; corners under-cover)."""
+    t = np.linspace(0.0, 1.0, n_samples)
+    lons = np.concatenate([
+        lon_a + (lon_b - lon_a) * t, lon_a + (lon_b - lon_a) * t,
+        np.full_like(t, lon_a), np.full_like(t, lon_b),
+    ])
+    lats = np.concatenate([
+        np.full_like(t, lat_a), np.full_like(t, lat_b),
+        lat_a + (lat_b - lat_a) * t, lat_a + (lat_b - lat_a) * t,
+    ])
+    return lons, lats
+
+
 def any_bounds(src_crs, dst_crs, src_origin, src_cellsize, src_shape,
                bbox_lonlat=None, n_samples: int = 64):
     """Target bounds in dst units: source boundary -> inv(src) ->
@@ -2789,6 +2520,22 @@ def any_bounds(src_crs, dst_crs, src_origin, src_cellsize, src_shape,
         lons, lats = sfn["inv_np"](xs, ys)
         lon_a, lon_b = float(np.min(lons)), float(np.max(lons))
         lat_a, lat_b = float(np.min(lats)), float(np.max(lats))
+    # extents a target projection cannot cover refuse for every mode
+    # and source CRS (a bbox window, like GDAL -te, is the way out)
+    if dst_tok.startswith(("utm:", "tmd:")):
+        lon0 = (utm_lon0(int(dst_tok[4:-1])) if dst_tok.startswith("utm:")
+                else tmd_params(dst_tok)["lon0"])
+        if max(abs(lon_a - lon0), abs(lon_b - lon0)) > 40.0:
+            raise NotImplementedError(
+                "transverse Mercator target: the extent reaches beyond ±40° "
+                "of the central meridian, where the Krüger series diverges "
+                "— pass bbox_lonlat to window the warp")
+    if dst_tok.startswith(("aea:", "lcc:")):
+        lon0 = conic_params_of(dst_tok)["lon0"]
+        if max(abs(lon_a - lon0), abs(lon_b - lon0)) >= 180.0:
+            raise NotImplementedError(
+                "conic target: the extent spans the antimeridian of the "
+                "projection center — pass bbox_lonlat to window the warp")
     if dst_tok == "webmerc":
         # same ±85.05112878 clip as the specialized webmerc plans, so a
         # pole-reaching source gives the Mercator square — not
@@ -2848,9 +2595,7 @@ def reproject_any(
     tcy = (Y0b - Y1b) / th  # negative: row 0 at max y
     kern = {"cubic": "catmull", "cubicspline": "bspline",
             "lanczos": "lanczos"}.get(resampling)
-    agg = {"average": "mean", "sum": "sum", "min": "min", "max": "max",
-           "count": "count", "mode": "mode", "rms": "rms", "med": "med",
-           "q1": "q1", "q3": "q3"}.get(resampling)
+    agg = _AGG_MODES.get(resampling)
     if agg is not None:
         # forward-bucket path: every valid SOURCE cell center maps
         # src units -> lon/lat -> dst units and bins into its target
@@ -2873,11 +2618,7 @@ def reproject_any(
         )
         return _bucket_agg(binned, agg)
     if resampling not in ("nearest", "bilinear") and kern is None:
-        raise NotImplementedError(
-            f"resampling {resampling!r} not supported (have nearest/bilinear/"
-            "cubic/cubicspline/lanczos/average/sum/min/max/count/mode/"
-            "rms/med/q1/q3 — the FULL gdalwarp -r enum, "
-            "georasters.py:592-606)")
+        raise _unknown_mode(resampling)
     # inverse gather: target cell center -> lon/lat -> source units
     tgt = _project(_lattice(px.sparkSession, out_shape, X0, Y1b, tcx, tcy),
                    lambda x, y: sfn["fwd_np"](*dfn["inv_np"](x, y)),

@@ -1191,9 +1191,9 @@ def sql_reproject() -> str:
 
 
 # UTM gate: zone-31 window warp; DuckDB recomputes the full Krüger-
-# series inverse (tm_inverse_sql emits it term-for-term in the Spark
-# Column order), so the gate hash-checks the whole transverse-Mercator
-# math, not just the gather.
+# series inverse (tm_inverse_sql emits it term-for-term in the
+# tm_inverse_np order), so the gate hash-checks the whole transverse-
+# Mercator math, not just the gather.
 _UTM_GATE = {"zone": 31, "bbox": (0.0, 36.0, 6.0, 54.0), "out": (64, 32)}
 
 
@@ -1203,13 +1203,12 @@ def q_reproject_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = SPEC
     p = _UTM_GATE
     px = _px(spark, SPEC).select("row", "col", F.col("value").cast("long").alias("value"))
-    return RP.wgs84_to_utm_grid(
-        px,
+    return RP.reproject(
+        px, 4326, 32600 + p["zone"],
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),
         out_shape=p["out"],
-        zone=p["zone"],
         bbox_lonlat=p["bbox"],
     )
 
@@ -1221,10 +1220,9 @@ def sql_reproject_utm() -> str:
     spec = SPEC
     p = _UTM_GATE
     lon0 = RP.utm_lon0(p["zone"])
-    E0, N0b, E1, N1b = RP._utm_target_bounds(
-        (spec.x0, spec.y0), (spec.cellx, spec.celly),
-        (spec.height, spec.width), lon0, 0.0, bbox_lonlat=p["bbox"],
-    )
+    E0, N0b, E1, N1b = RP.any_bounds(
+        4326, 32600 + p["zone"], (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        (spec.height, spec.width), p["bbox"])
     th, tw = p["out"]
     tcx = (E1 - E0) / tw
     tcy = (N0b - N1b) / th
@@ -1241,7 +1239,7 @@ loc AS (
          CAST(FLOOR(ROUND(({lat_col} - {dlit(spec.y0)}) / {dlit(spec.celly)}, {RP._Q})) AS BIGINT) AS row,
          CAST(FLOOR(ROUND(({lon_col} - {dlit(spec.x0)}) / {dlit(spec.cellx)}, {RP._Q})) AS BIGINT) AS col
   FROM loc0)
-SELECT loc.trow, loc.tcol, loc.em AS em, loc.nm AS nm, px.value
+SELECT loc.trow, loc.tcol, loc.em AS xm, loc.nm AS ym, px.value
 FROM loc LEFT JOIN px ON px.row = loc.row AND px.col = loc.col"""
 
 
@@ -1251,8 +1249,8 @@ def q_reproject_sinu(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = SPEC
     px = _px(spark, SPEC).select("row", "col", F.col("value").cast("long").alias("value"))
-    return RP.wgs84_to_sinusoidal_grid(
-        px,
+    return RP.reproject(
+        px, 4326, "+proj=sinu",
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),
@@ -1265,9 +1263,9 @@ def sql_reproject_sinu() -> str:
     from .operators.reproject import dlit
 
     spec = SPEC
-    X0, Y0b, X1, Y1b = RP._sinu_bounds(
-        (spec.x0, spec.y0), (spec.cellx, spec.celly), (spec.height, spec.width)
-    )
+    X0, Y0b, X1, Y1b = RP.any_bounds(
+        4326, "+proj=sinu", (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        (spec.height, spec.width))
     th, tw = 90, 180
     tcx = (X1 - X0) / tw
     tcy = (Y0b - Y1b) / th
@@ -1324,10 +1322,9 @@ def _sql_conic(gate: str):
         spec = SPEC
         crs, bbox, out_shape = _CONIC_GATES[gate]
         P = RP.conic_params_of(RP.parse_crs(crs))
-        X0, Y0b, X1, Y1b = RP._conic_bounds(
-            (spec.x0, spec.y0), (spec.cellx, spec.celly),
-            (spec.height, spec.width), P, bbox_lonlat=bbox,
-        )
+        X0, Y0b, X1, Y1b = RP.any_bounds(
+            4326, crs, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+            (spec.height, spec.width), bbox)
         th, tw = out_shape
         tcx = (X1 - X0) / tw
         tcy = (Y0b - Y1b) / th

@@ -314,7 +314,7 @@ def test_tm_series_three_independent_oracles():
 
 def test_utm_warp_matches_numpy(spark, images_t1):
     """Spark UTM nearest warp (numpy series inverse in one Arrow pass)
-    == the numpy differential oracle cell-for-cell (quantized gather),
+    == the reproject_any numpy oracle cell-for-cell (quantized gather),
     zone window over lon [0,6] x lat [36,54]; bilinear variant within
     quantization wiggle. South-hemisphere false northing checked via zone 31S."""
     spec = synth.T1
@@ -328,9 +328,9 @@ def test_utm_warp_matches_numpy(spark, images_t1):
         resampling="nearest", bbox_lonlat=bbox,
     ).toPandas()
     full = synth.stitched_array(spec).astype(np.float64)
-    exp = RP.utm_numpy_oracle(
-        full, spec.ndv, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-        out_shape, zone=31, bbox_lonlat=bbox,
+    exp = RP.reproject_any_numpy_oracle(
+        full, spec.ndv, 4326, 32631, (spec.x0, spec.y0),
+        (spec.cellx, spec.celly), out_shape, bbox_lonlat=bbox,
     )
     grid = np.full(out_shape, spec.ndv)
     vals = got.dropna(subset=["value"])
@@ -345,15 +345,15 @@ def test_utm_warp_matches_numpy(spark, images_t1):
         (spec.height, spec.width), (32, 32),
         resampling="nearest", bbox_lonlat=bbox_s,
     ).toPandas()
-    exp_s = RP.utm_numpy_oracle(
-        full, spec.ndv, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-        (32, 32), zone=56, south=True, bbox_lonlat=bbox_s,
+    exp_s = RP.reproject_any_numpy_oracle(
+        full, spec.ndv, 4326, "+proj=utm +zone=56 +south", (spec.x0, spec.y0),
+        (spec.cellx, spec.celly), (32, 32), bbox_lonlat=bbox_s,
     )
     grid_s = np.full((32, 32), spec.ndv)
     vs = got_s.dropna(subset=["value"])
     grid_s[vs.trow.to_numpy(), vs.tcol.to_numpy()] = vs.value.to_numpy()
     assert (grid_s != exp_s).sum() == 0
-    assert (got_s["nm"] > 4_000_000).all()  # false northing applied
+    assert (got_s["ym"] > 4_000_000).all()  # false northing applied
 
     # bilinear through the dispatcher runs and covers the window
     bl = RP.reproject(
@@ -493,7 +493,7 @@ def test_conic_formulary_invariants():
 
 def test_conic_warp_matches_numpy(spark, images_t1):
     """Spark Albers/LCC nearest warps (numpy series inverse in one Arrow
-    pass) == the independent numpy oracle cell-for-cell; proj4 forms
+    pass) == the reproject_any numpy oracle cell-for-cell; proj4 forms
     parse; bilinear runs through the CRS-agnostic kernel; antimeridian-
     spanning sources refuse loudly."""
     import pytest
@@ -510,16 +510,15 @@ def test_conic_warp_matches_numpy(spark, images_t1):
     ]
     for crs, token, bbox, out_shape in cases:
         assert RP.parse_crs(crs) == token or token.startswith(RP.parse_crs(crs)[:4])
-        P = RP.conic_params_of(RP.parse_crs(crs))
         got = RP.reproject(
             px, 4326, crs,
             (spec.x0, spec.y0), (spec.cellx, spec.celly),
             (spec.height, spec.width), out_shape,
             resampling="nearest", bbox_lonlat=bbox,
         ).toPandas()
-        exp = RP.conic_numpy_oracle(
-            full, spec.ndv, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-            out_shape, P, bbox_lonlat=bbox,
+        exp = RP.reproject_any_numpy_oracle(
+            full, spec.ndv, 4326, crs, (spec.x0, spec.y0),
+            (spec.cellx, spec.celly), out_shape, bbox_lonlat=bbox,
         )
         grid = np.full(out_shape, spec.ndv)
         vals = got.dropna(subset=["value"])
@@ -553,6 +552,50 @@ def test_conic_warp_matches_numpy(spark, images_t1):
                      (spec.cellx, spec.celly), (spec.height, spec.width),
                      (32, 64), resampling="nope",
                      bbox_lonlat=(-120.0, 25.0, -75.0, 50.0))
+
+
+def test_divergent_extents_refuse_for_every_mode(spark, images_t1):
+    """The transverse-Mercator ±40° and conic antimeridian guards sit
+    in any_bounds, so every resampling mode and every source CRS
+    refuses an extent the target projection cannot cover."""
+    spec = synth.T1
+    px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
+    grid = ((spec.x0, spec.y0), (spec.cellx, spec.celly),
+            (spec.height, spec.width), (32, 64))
+    with pytest.raises(NotImplementedError, match="central meridian"):
+        RP.reproject(px, 4326, 32631, *grid, resampling="cubic")
+    with pytest.raises(NotImplementedError, match="central meridian"):
+        RP.reproject(px, 4326, 27700, *grid)
+    with pytest.raises(NotImplementedError, match="antimeridian"):
+        RP.reproject(px, "EPSG:6933", 5070, (-2.0e7, 6.3e6),
+                     (4.0e7 / 540, -1.26e7 / 270), (spec.height, spec.width),
+                     (32, 64))
+
+
+def test_windowed_request_spans_bbox(spark, images_t1):
+    """bbox_lonlat windows the target of every family: the lattice
+    spans any_bounds over the window and the values match the numpy
+    oracle."""
+    spec = synth.T1
+    px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
+    full = synth.stitched_array(spec).astype(np.float64)
+    so, sc, sh = (spec.x0, spec.y0), (spec.cellx, spec.celly), (spec.height, spec.width)
+    bbox, out = (-60.0, -30.0, 60.0, 30.0), (24, 48)
+    for dst in (6933, 3857, "+proj=sinu"):
+        got = RP.reproject(px, 4326, dst, so, sc, sh, out,
+                           bbox_lonlat=bbox).toPandas()
+        X0, Y0, X1, Y1 = RP.any_bounds(4326, dst, so, sc, sh, bbox)
+        hx, hy = (X1 - X0) / out[1] / 2, (Y1 - Y0) / out[0] / 2
+        assert got.xm.min() == pytest.approx(X0 + hx), dst
+        assert got.xm.max() == pytest.approx(X1 - hx), dst
+        assert got.ym.min() == pytest.approx(Y0 + hy), dst
+        assert got.ym.max() == pytest.approx(Y1 - hy), dst
+        exp = RP.reproject_any_numpy_oracle(full, spec.ndv, 4326, dst, so, sc,
+                                            out, bbox_lonlat=bbox)
+        grid = np.full(out, spec.ndv)
+        vals = got.dropna(subset=["value"])
+        grid[vals.trow.to_numpy(), vals.tcol.to_numpy()] = vals.value.to_numpy()
+        assert (grid != exp).sum() == 0, dst
 
 
 def test_reproject_any_matches_numpy(spark, images_t1):
@@ -900,7 +943,7 @@ def test_dispatcher_routes_new_targets_and_never_falls_through(spark):
         [(r, c, int(full[r, c])) for r in range(h) for c in range(w)],
         "row long, col long, value long")
     org, cell = (-100.0, 40.0), (0.05, -0.05)
-    for dst in (3395, 4267, 27700):
+    for dst in (3395, 4267):
         got = (RP.reproject(px, 4326, dst, org, cell, (h, w), (8, 12),
                             bbox_lonlat=(-100.0, 39.4, -99.1, 40.0))
                .toPandas().sort_values(["trow", "tcol"]))
@@ -909,6 +952,11 @@ def test_dispatcher_routes_new_targets_and_never_falls_through(spark):
             bbox_lonlat=(-100.0, 39.4, -99.1, 40.0))
         np.testing.assert_array_equal(
             got.value.fillna(-1).to_numpy().reshape(8, 12), exp)
+    # a TM-on-datum target (OSGB, central meridian -2°) reaches the
+    # composed warp's bounds, which refuse a window 98° off its meridian
+    with pytest.raises(NotImplementedError, match="central meridian"):
+        RP.reproject(px, 4326, 27700, org, cell, (h, w), (8, 12),
+                     bbox_lonlat=(-100.0, 39.4, -99.1, 40.0))
     # since r5 the full mode dict reaches every family — an UNKNOWN
     # mode must still refuse rather than silently warp with nearest
     with pytest.raises(NotImplementedError):
@@ -1082,6 +1130,17 @@ def test_spline_prefilter_requires_dense(spark):
     px = spark.createDataFrame(rows, "row long, col long, value double")
     with pytest.raises(Exception, match="non-dense"):
         RP.spline_prefilter_px(px, (4, 5)).collect()
+
+
+def test_superblock_bounded_by_tile_span_and_window():
+    # T1 is 5 x 9 tiles of 64 px: a small target lattice must not size
+    # a block (and its dense window) past the source's tile span
+    assert RP._superblock(16, (270, 540), 64, 64) == 9
+    assert RP._superblock(32768 * 45, (270, 540), 64, 64) == 1
+    assert RP._superblock(None, (270, 540), 64, 64) == 1
+    # a huge source: the window, halo included, stays within the cap
+    b = RP._superblock(1, (10 ** 6, 10 ** 6), 64, 64)
+    assert b > 1 and ((b + 2) * 64) ** 2 * 8 <= RP._WINDOW_BYTES
 
 
 def test_gather_from_tiles_matches_pixel_join(spark, images_t1):

@@ -417,14 +417,14 @@ def test_t2_tier_round3_operators(spark):
         # UTM zone-31 window warp at T2 vs the numpy oracle
         out_shape = (128, 64)
         bbox = (0.0, 30.0, 6.0, 60.0)
-        got = RP.wgs84_to_utm_grid(
-            px, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-            (spec.height, spec.width), out_shape, zone=31, bbox_lonlat=bbox,
+        got = RP.reproject(
+            px, 4326, 32631, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+            (spec.height, spec.width), out_shape, bbox_lonlat=bbox,
         ).toPandas()
         full = synth.stitched_array(spec).astype(np.float64)
-        exp = RP.utm_numpy_oracle(
-            full, spec.ndv, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-            out_shape, zone=31, bbox_lonlat=bbox,
+        exp = RP.reproject_any_numpy_oracle(
+            full, spec.ndv, 4326, 32631, (spec.x0, spec.y0),
+            (spec.cellx, spec.celly), out_shape, bbox_lonlat=bbox,
         )
         grid = np.full(out_shape, spec.ndv)
         vals = got.dropna(subset=["value"])
