@@ -390,11 +390,13 @@ def sieve(px: DataFrame, threshold: int, connectivity: int = 4,
         else:
             probe = m.select("ra").limit(driver_edge_cap + 1).toPandas()
             mp = m.toPandas() if len(probe) <= driver_edge_cap else probe
-        n_merge = len(mp)
-        if n_merge == 0:
+        # an over-cap round fetched only the probe, so this count is
+        # capped at driver_edge_cap + 1: a lower bound, not the total
+        n_merge_capped = len(mp)
+        if n_merge_capped == 0:
             break
         terminal = False
-        if n_merge <= driver_edge_cap:
+        if n_merge_capped <= driver_edge_cap:
             # driver fast path: the merge graph is region-METADATA
             # sized (one row per merging small region); components via
             # vectorized min-label propagation + pointer jumping in
@@ -484,7 +486,7 @@ def sieve(px: DataFrame, threshold: int, connectivity: int = 4,
                             F.col("rep").alias("m_to"))
                     .filter(F.col("m_from") != F.col("m_to"))
                     .localCheckpoint(eager=True))
-        if not (n_merge <= driver_edge_cap) or not drv_ok:
+        if not (n_merge_capped <= driver_edge_cap) or not drv_ok:
             # maintain the changed-only mapping as a DataFrame: a
             # m_from is always a LIVE current id, never a previously
             # absorbed one, so remap-then-append never duplicates origs

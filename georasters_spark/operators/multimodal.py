@@ -1,14 +1,15 @@
 """Multimodal column operators: image/audio/video as opaque binary +
 typed metadata, processed by Arrow-batched UDF pipelines.
 
-The container has no image/audio codecs (no PIL/ffmpeg), so the decode
-step for REAL formats raises NotImplementedError by design; the Spark
-plumbing — schemas, batch shapes, partitioning, deterministic fake
-decode used to exercise the pipeline — is real and tested. Swapping in
-a real codec is a one-function change inside the same mapInPandas.
+Every decode goes through one from-scratch codec per format (pure
+numpy + stdlib); formats without one (webp/mp3, coded video frames)
+raise NotImplementedError by design, and a deterministic fake decode
+exercises the pipeline plumbing.
 
 fmt dispatch:
-  'raw16'/'rawf32'/'png'/'q8'  — real codecs (sources/codec.py)
+  'raw16'/'rawf32'/'png'/'q8'  — tile codecs (sources/codec.py); 'png'
+                                 is a 16-bit gray tile decoded by
+                                 sources/png.py
   'tiff'                       — REAL GeoTIFF incl. BigTIFF
                                  (sources/geotiff.py)
   'jpeg'                       — REAL JPEG: baseline gray/color
@@ -20,7 +21,9 @@ fmt dispatch:
                                  (+tRNS), Adam7 interlace;
                                  self-describing dims, color images
                                  collapse to BT.601 integer luminance
-  'wav'                        — REAL stdlib PCM16 codec (below)
+  'wav'                        — REAL RIFF/WAVE: PCM16, G.711 and IMA
+                                 ADPCM through one chunk walker
+                                 (sources/g711.py, decode_audio below)
   'mp4'                        — REAL ISO-BMFF container demux
                                  (sources/mp4.py: sample table,
                                  keyframes, payload extraction);
@@ -37,6 +40,7 @@ fmt dispatch:
 from __future__ import annotations
 
 import hashlib
+import struct
 
 import numpy as np
 import pandas as pd
@@ -46,6 +50,13 @@ from ..sources import codec
 
 REAL_FMTS = {"raw16", "rawf32", "png", "q8", "tiff", "jpeg", "pngc", "gif",
              "bmp", "qoi"}
+
+
+def _luma(rgb: np.ndarray) -> np.ndarray:
+    """BT.601 integer luminance (299r + 587g + 114b) // 1000 of the
+    first three channels (alpha, if any, ignored)."""
+    r, g, b = (rgb[..., k].astype(np.int64) for k in range(3))
+    return (299 * r + 587 * g + 114 * b) // 1000
 
 
 def decode_any(buf: bytes, fmt: str, w: int, h: int, ndv: float = -9999.0) -> np.ndarray:
@@ -61,23 +72,14 @@ def decode_any(buf: bytes, fmt: str, w: int, h: int, ndv: float = -9999.0) -> np
 
         arr = _png.decode(buf)
         if arr.ndim == 3:
-            if arr.shape[2] == 2:  # gray + alpha
-                arr = arr[..., 0]
-            else:  # RGB / RGBA
-                r = arr[..., 0].astype(np.int64)
-                g = arr[..., 1].astype(np.int64)
-                b = arr[..., 2].astype(np.int64)
-                arr = (299 * r + 587 * g + 114 * b) // 1000
+            # gray + alpha keeps gray; RGB / RGBA collapse to luminance
+            arr = arr[..., 0] if arr.shape[2] == 2 else _luma(arr)
         return arr.astype(np.float64)
     if fmt == "gif":
         # first composited frame -> BT.601 luminance (alpha ignored)
         from ..sources import gif as _gif
 
-        canvas = _gif.decode_frames(buf)[0]
-        r = canvas[..., 0].astype(np.int64)
-        g = canvas[..., 1].astype(np.int64)
-        b = canvas[..., 2].astype(np.int64)
-        return ((299 * r + 587 * g + 114 * b) // 1000).astype(np.float64)
+        return _luma(_gif.decode_frames(buf)[0]).astype(np.float64)
     if fmt == "bmp":
         from ..sources import bmp as _bmp
 
@@ -85,19 +87,13 @@ def decode_any(buf: bytes, fmt: str, w: int, h: int, ndv: float = -9999.0) -> np
         if m["palette"] is not None:
             img = m["palette"][img]
         if img.ndim == 3:
-            r = img[..., 0].astype(np.int64)
-            g = img[..., 1].astype(np.int64)
-            b = img[..., 2].astype(np.int64)
-            img = (299 * r + 587 * g + 114 * b) // 1000
+            img = _luma(img)
         return img.astype(np.float64)
     if fmt == "qoi":
         from ..sources import qoi as _qoi
 
         img, _m = _qoi.decode(buf)
-        r = img[..., 0].astype(np.int64)
-        g = img[..., 1].astype(np.int64)
-        b = img[..., 2].astype(np.int64)
-        return ((299 * r + 587 * g + 114 * b) // 1000).astype(np.float64)
+        return _luma(img).astype(np.float64)
     if fmt in REAL_FMTS:
         return np.asarray(codec.decode_tile(buf, fmt, w, h, ndv), dtype=np.float64)
     if fmt == "fake":
@@ -205,37 +201,18 @@ def band_select(images: DataFrame, band: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# audio: REAL WAV/PCM16 codec (stdlib wave/struct — no external libs),
-# shrinking the stub boundary to jpeg/webp/mp3/mp4.
+# audio: REAL WAV codecs (hand-parsed RIFF in sources/g711.py — no
+# external libs), shrinking the stub boundary to webp/mp3.
 # ---------------------------------------------------------------------------
 
 def encode_wav_pcm16(samples: np.ndarray, rate: int) -> bytes:
-    """Real RIFF/WAVE container, mono PCM16 little-endian (stdlib
-    `wave`). samples: int16-valued array."""
-    import io
-    import wave
+    """Real RIFF/WAVE container, mono PCM16 little-endian (the RIFF
+    writer in sources/g711.py). samples: int16-valued array."""
+    from ..sources import g711
 
-    bio = io.BytesIO()
-    with wave.open(bio, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(np.ascontiguousarray(samples, dtype="<i2").tobytes())
-    return bio.getvalue()
-
-
-def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
-    """Real WAV decode (stdlib `wave`): returns (int16 samples, rate).
-    Mono PCM16 only — the formats the encoder emits."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(buf), "rb") as wf:
-        if wf.getnchannels() != 1 or wf.getsampwidth() != 2:
-            raise NotImplementedError("only mono PCM16 WAV is supported")
-        rate = wf.getframerate()
-        raw = wf.readframes(wf.getnframes())
-    return np.frombuffer(raw, dtype="<i2").astype(np.int16), rate
+    fmt = struct.pack("<HHIIHH", 1, 1, rate, 2 * rate, 2, 16)
+    data = np.ascontiguousarray(samples, dtype="<i2").tobytes()
+    return g711.riff_wave((b"fmt ", fmt), (b"data", data))
 
 
 def decode_audio(buf: bytes, fmt: str) -> tuple[np.ndarray, int]:

@@ -66,7 +66,7 @@ def pixel_table(
                 if no_ndv:
                     # reference from_file rule (georasters.py:1553-1562):
                     # synthesize the numpy default fill, mask NOTHING
-                    ndv = default_ndv(getattr(t, "dtype", "int16") if hasattr(t, "dtype") else "int16")
+                    ndv = default_ndv(getattr(t, "dtype", "int16"))
                 arr = codec.decode_tile(
                     bytes(t.bytes), t.fmt, int(t.w), int(t.h), ndv
                 ).astype(np.float64)

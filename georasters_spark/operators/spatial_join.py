@@ -336,7 +336,10 @@ def zonal_stats(
     # computed in the JVM BEFORE the kernel (one long instead of the
     # image_id string + row + col through both Arrow crossings); any
     # deterministic spread key works — the two-phase aggregate's exact
-    # integer partials make the result salt-key-invariant.
+    # integer partials make the result salt-key-invariant.  The key
+    # assumes one pixel per (row, col): overlapping images in one pixel
+    # table would hash their shared cells to the same bucket, weakening
+    # the skew spread (never the result).
     if salt:
         px = px.select(
             "value", "xc", "yc",

@@ -21,8 +21,9 @@ Spark-first over the engine's images table:
   Cost per level is #tiles rows — the pyramid above the base is
   metadata-scale, never a pixel-table shuffle.
 
-Tiles are int16 grayscale PNGs through the gated ``sources.codec`` png16
-path (lossless, ndv bit-preserved), so every level is exactly
+Tiles are int16 grayscale PNGs through the gated ``sources.codec`` 'png'
+fmt, which encodes and decodes with ``sources/png.py`` (16-bit gray,
+lossless, ndv bit-preserved), so every level is exactly
 re-decodable — the ``xyz_pyramid`` driver gate checksums decoded pixels
 of BOTH levels against a DuckDB oracle that recomputes the warp and the
 overview averaging arithmetically.
@@ -409,8 +410,8 @@ def _overview_tail(tiles: DataFrame, zoom: int, min_zoom: int,
                    tile_px: int = 256, ndv: float = -9999.0) -> DataFrame:
     """Levels zoom-1 .. min_zoom from the zoom-level tiles in one
     single-task pass (use only when 4^zoom is small).  Per level the
-    reduction is exactly ``xyz_overview``'s: decode children (png16 is
-    lossless, so the freshly built int16 array IS its decode), 2x2
+    reduction is exactly ``xyz_overview``'s: decode children (the 'png'
+    tile fmt is lossless, so the freshly built int16 array IS its decode), 2x2
     valid-aware mean with round-half-up, absent children all-nodata."""
     import pandas as pd
 

@@ -35,6 +35,8 @@ import struct
 
 import numpy as np
 
+from . import g711
+
 # IMA ADPCM step-size table (89 entries) and index-adjust table — the
 # normative constants from the 1992 IMA ADPCM reference algorithm
 STEP_TABLE = np.array([
@@ -145,12 +147,9 @@ def encode_wav_adpcm(samples: np.ndarray, rate: int,
     fmt = struct.pack("<HHIIHHHH", 0x11, 1, rate,
                       rate * block_align // samples_per_block,
                       block_align, 4, 2, samples_per_block)
-    fact = struct.pack("<I", len(s))
-    riff = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"fact" + struct.pack("<I", len(fact)) + fact
-            + b"data" + struct.pack("<I", len(data)) + data
-            + (b"\x00" if len(data) & 1 else b""))
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+    return g711.riff_wave((b"fmt ", fmt),
+                          (b"fact", struct.pack("<I", len(s))),
+                          (b"data", data))
 
 
 def decode_adpcm_data(data: bytes, block_align: int,
@@ -182,39 +181,27 @@ def decode_adpcm_data(data: bytes, block_align: int,
     return np.concatenate(out) if out else np.empty(0, dtype=np.int16)
 
 
-def decode_wav_adpcm(buf: bytes) -> tuple[np.ndarray, int]:
-    """Hand-parsed RIFF/WAVE for format tag 0x11 (mono)."""
-    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-        raise ValueError("wav: not a RIFF/WAVE stream")
-    pos, n = 12, len(buf)
-    tag = rate = block_align = spb = None
-    fact = data = None
-    while pos + 8 <= n:
-        cid = buf[pos:pos + 4]
-        (clen,) = struct.unpack_from("<I", buf, pos + 4)
-        body = buf[pos + 8:pos + 8 + clen]
-        if len(body) != clen:
-            raise ValueError("wav: truncated chunk")
-        if cid == b"fmt ":
-            if clen < 20:
-                raise ValueError("wav: adpcm fmt chunk needs the extension")
-            tag, nch, rate, _br, block_align, bits, _cb, spb = struct.unpack_from(
-                "<HHIIHHHH", body, 0)
-            if tag != 0x11:
-                raise ValueError(f"wav: expected IMA ADPCM (0x11), got {tag}")
-            if nch != 1:
-                raise NotImplementedError("adpcm: mono only")
-            if bits != 4:
-                raise ValueError(f"adpcm: bits per sample must be 4, got {bits}")
-        elif cid == b"fact":
-            (fact,) = struct.unpack_from("<I", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + clen + (clen & 1)
-    if tag is None or data is None:
-        raise ValueError("wav: missing fmt or data chunk")
-    if fact is None:
+def decode_adpcm_chunks(chunks: dict[bytes, bytes]) -> tuple[np.ndarray, int]:
+    """Mono IMA ADPCM from walked RIFF chunks (g711.riff_chunks)."""
+    fmt, data = chunks[b"fmt "], chunks[b"data"]
+    if len(fmt) < 20:
+        raise ValueError("wav: adpcm fmt chunk needs the extension")
+    tag, nch, rate, _br, block_align, bits, _cb, spb = struct.unpack_from(
+        "<HHIIHHHH", fmt, 0)
+    if tag != 0x11:
+        raise ValueError(f"wav: expected IMA ADPCM (0x11), got {tag}")
+    if nch != 1:
+        raise NotImplementedError("adpcm: mono only")
+    if bits != 4:
+        raise ValueError(f"adpcm: bits per sample must be 4, got {bits}")
+    if b"fact" in chunks:
+        (fact,) = struct.unpack_from("<I", chunks[b"fact"], 0)
+    else:
         # fact is mandatory for compressed WAV; derive a ceiling if absent
-        n_blocks = len(data) // block_align
-        fact = n_blocks * spb
+        fact = len(data) // block_align * spb
     return decode_adpcm_data(data, block_align, spb, fact), rate
+
+
+def decode_wav_adpcm(buf: bytes) -> tuple[np.ndarray, int]:
+    """RIFF/WAVE with format tag 0x11 (mono)."""
+    return decode_adpcm_chunks(g711.riff_chunks(buf))

@@ -6,8 +6,9 @@ Formats (``fmt`` column):
   * ``rawf32``  — little-endian float32, row-major. Lossless.
   * ``rawf64``  — little-endian float64, row-major. Lossless (u4 and
                   doubles: every uint32 is exact in f8).
-  * ``png``     — minimal 16-bit grayscale PNG (stdlib zlib, filter 0);
-                  int16 values bit-cast to uint16. Lossless.
+  * ``png``     — 16-bit grayscale PNG through ``sources/png.py``
+                  (filter 0, zlib level 6); int16 values bit-cast to
+                  uint16. Lossless.
   * ``q8``      — 8-bit linear quantization of the tile's value range
                   (header: float64 lo, float64 hi, then h*w uint8).
                   LOSSY — used to exercise the PSNR>=40dB gate.
@@ -23,69 +24,10 @@ all per-pixel work is vectorized numpy.
 from __future__ import annotations
 
 import struct
-import zlib
 
 import numpy as np
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _chunk(tag: bytes, payload: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(payload))
-        + tag
-        + payload
-        + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
-    )
-
-
-def encode_png16(arr: np.ndarray) -> bytes:
-    """Minimal 16-bit grayscale PNG; int16 input bit-cast to uint16."""
-    a = np.ascontiguousarray(arr, dtype=np.int16).view(np.uint16)
-    h, w = a.shape
-    # PNG stores 16-bit samples big-endian; filter byte 0 per scanline.
-    be = a.astype(">u2")
-    raw = b"".join(b"\x00" + be[r].tobytes() for r in range(h))
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 0)  # grayscale
-    return (
-        _PNG_SIG
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw, 6))
-        + _chunk(b"IEND", b"")
-    )
-
-
-def decode_png16(buf: bytes) -> np.ndarray:
-    assert buf[:8] == _PNG_SIG, "not a PNG"
-    pos, w, h, idat = 8, 0, 0, b""
-    while pos < len(buf):
-        (ln,) = struct.unpack(">I", buf[pos : pos + 4])
-        tag = buf[pos + 4 : pos + 8]
-        payload = buf[pos + 8 : pos + 8 + ln]
-        if tag == b"IHDR":
-            w, h, depth, ctype = struct.unpack(">IIBB", payload[:10])
-            assert depth == 16 and ctype == 0, "only 16-bit grayscale supported"
-        elif tag == b"IDAT":
-            idat += payload
-        elif tag == b"IEND":
-            break
-        pos += 12 + ln
-    raw = zlib.decompress(idat)
-    stride = 1 + 2 * w
-    out = np.empty((h, w), dtype=np.uint16)
-    prev = np.zeros(2 * w, dtype=np.uint8)
-    for r in range(h):
-        line = np.frombuffer(raw[r * stride : (r + 1) * stride], dtype=np.uint8)
-        filt, data = line[0], line[1:].copy()
-        if filt == 0:
-            pass
-        elif filt == 2:  # Up
-            data = (data.astype(np.uint16) + prev).astype(np.uint8)
-        else:  # we only ever emit 0; 2 handled for robustness
-            raise ValueError(f"unsupported PNG filter {filt}")
-        prev = data.astype(np.uint8)
-        out[r] = data.view(">u2").astype(np.uint16)
-    return out.view(np.int16)
+from . import png
 
 
 def encode_q8(arr: np.ndarray, ndv: float) -> bytes:
@@ -128,7 +70,8 @@ def encode_tile(arr: np.ndarray, fmt: str, ndv: float) -> bytes:
     if fmt == "rawf64":
         return np.ascontiguousarray(arr, dtype="<f8").tobytes()
     if fmt == "png":
-        return encode_png16(arr)
+        a = np.ascontiguousarray(arr, dtype=np.int16)
+        return png.encode(a.view(np.uint16), filter_strategy="none")
     if fmt == "q8":
         return encode_q8(arr, ndv)
     if fmt == "tiff":
@@ -152,7 +95,12 @@ def decode_tile(buf: bytes, fmt: str, w: int, h: int, ndv: float) -> np.ndarray:
     if fmt == "rawf64":
         return np.frombuffer(buf, dtype="<f8").reshape(h, w)
     if fmt == "png":
-        return decode_png16(buf)
+        a = png.decode(buf)
+        if a.dtype != np.uint16 or a.shape != (h, w):
+            raise ValueError(
+                f"png tile: expected 16-bit gray {(h, w)}, got "
+                f"{a.dtype} {a.shape}")
+        return a.view(np.int16)
     if fmt == "q8":
         return decode_q8(buf, w, h, ndv)
     if fmt == "tiff":

@@ -5,7 +5,9 @@ ITU-T G.711 defines the two telephony companding laws ALGORITHMICALLY
 domain), so — unlike MP3's Huffman tables — they are safely
 reproducible from the spec in-sandbox. WAV carries them as format tags
 7 (mu-law) and 6 (A-law) with 8-bit samples; stdlib `wave` refuses
-non-PCM, so the RIFF container here is hand-parsed/built.
+non-PCM, so the RIFF container here is hand-parsed/built — the one
+RIFF chunk walker (`riff_chunks`) and writer (`riff_wave`) every WAV
+codec goes through.
 
 Both laws are DETERMINISTIC integer maps (16-bit -> 8-bit code ->
 16-bit), which makes decode(encode(x)) exactly re-derivable in SQL —
@@ -93,6 +95,36 @@ def alaw_decode(codes: np.ndarray) -> np.ndarray:
 _WAV_TAGS = {"pcm16": 1, "alaw": 6, "ulaw": 7}
 
 
+def riff_wave(*chunks: tuple[bytes, bytes]) -> bytes:
+    """RIFF/WAVE container from (chunk id, body) pairs, each body padded
+    to an even length (chunks are word-aligned)."""
+    riff = b"WAVE" + b"".join(
+        cid + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
+        for cid, body in chunks)
+    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+
+
+def riff_chunks(buf: bytes) -> dict[bytes, bytes]:
+    """Walk a RIFF/WAVE stream: {chunk id: body}, the last of a repeated
+    id winning. Raises on a bad header or a truncated chunk."""
+    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
+        raise ValueError("wav: not a RIFF/WAVE stream")
+    pos = 12
+    n = len(buf)
+    chunks = {}
+    while pos + 8 <= n:
+        cid = buf[pos : pos + 4]
+        (clen,) = struct.unpack_from("<I", buf, pos + 4)
+        body = buf[pos + 8 : pos + 8 + clen]
+        if len(body) != clen:
+            raise ValueError("wav: truncated chunk")
+        chunks[cid] = body
+        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
+    if b"fmt " not in chunks or b"data" not in chunks:
+        raise ValueError("wav: missing fmt or data chunk")
+    return chunks
+
+
 def encode_wav_g711(samples: np.ndarray, rate: int, law: str = "ulaw") -> bytes:
     """Mono G.711 WAV (format tag 7 mu-law / 6 A-law, 8-bit data)."""
     if law == "ulaw":
@@ -101,40 +133,20 @@ def encode_wav_g711(samples: np.ndarray, rate: int, law: str = "ulaw") -> bytes:
         data = alaw_encode(samples).tobytes()
     else:
         raise ValueError(f"g711: law must be ulaw|alaw, got {law!r}")
-    tag = _WAV_TAGS[law]
-    fmt = struct.pack("<HHIIHH", tag, 1, rate, rate, 1, 8)
-    riff = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-            + (b"\x00" if len(data) & 1 else b""))
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+    fmt = struct.pack("<HHIIHH", _WAV_TAGS[law], 1, rate, rate, 1, 8)
+    return riff_wave((b"fmt ", fmt), (b"data", data))
 
 
 def decode_wav_any(buf: bytes) -> tuple[np.ndarray, int]:
-    """Hand-parsed RIFF/WAVE: mono PCM16 (tag 1), A-law (6), mu-law (7).
-    Returns (int16 samples, rate)."""
-    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-        raise ValueError("wav: not a RIFF/WAVE stream")
-    pos = 12
-    n = len(buf)
-    tag = rate = bits = None
-    data = None
-    while pos + 8 <= n:
-        cid = buf[pos : pos + 4]
-        (clen,) = struct.unpack_from("<I", buf, pos + 4)
-        body = buf[pos + 8 : pos + 8 + clen]
-        if len(body) != clen:
-            raise ValueError("wav: truncated chunk")
-        if cid == b"fmt ":
-            if clen < 16:
-                raise ValueError("wav: short fmt chunk")
-            tag, nch, rate, _br, _ba, bits = struct.unpack_from("<HHIIHH", body, 0)
-            if nch != 1:
-                raise NotImplementedError("wav: mono only")
-        elif cid == b"data":
-            data = body
-        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if tag is None or data is None:
-        raise ValueError("wav: missing fmt or data chunk")
+    """Mono RIFF/WAVE: PCM16 (tag 1), A-law (6), mu-law (7) and IMA
+    ADPCM (0x11, sources/adpcm.py). Returns (int16 samples, rate)."""
+    chunks = riff_chunks(buf)
+    fmt, data = chunks[b"fmt "], chunks[b"data"]
+    if len(fmt) < 16:
+        raise ValueError("wav: short fmt chunk")
+    tag, nch, rate, _br, _ba, bits = struct.unpack_from("<HHIIHH", fmt, 0)
+    if nch != 1:
+        raise NotImplementedError("wav: mono only")
     if tag == 1:
         if bits != 16:
             raise NotImplementedError(f"wav: PCM with {bits} bits")
@@ -152,5 +164,5 @@ def decode_wav_any(buf: bytes) -> tuple[np.ndarray, int]:
     if tag == 0x11:
         from . import adpcm
 
-        return adpcm.decode_wav_adpcm(buf)
+        return adpcm.decode_adpcm_chunks(chunks)
     raise NotImplementedError(f"wav: format tag {tag} not supported")

@@ -2,9 +2,10 @@
 
 The reference's raster I/O delegates to GDAL, whose PNG driver reads and
 writes the full format (georasters.py:281-291 via gdal.Open handles any
-GDAL-supported raster, PNG included). The engine's tile codec so far
-carried only the minimal 16-bit gray / filter-0 subset
-(sources/codec.py:encode_png16); this module implements the real thing:
+GDAL-supported raster, PNG included). This module is the engine's one
+PNG codec: the images-table ``fmt='png'`` tiles (sources/codec.py,
+16-bit gray, filter 'none') and the media lake's ``'pngc'`` both go
+through it:
 
   decoder: chunk walk with CRC32 verification, IHDR validation against
            the legal depth x color-type matrix, multi-IDAT zlib stream,
@@ -18,12 +19,13 @@ carried only the minimal 16-bit gray / filter-0 subset
            optional Adam7 interlaced output
 
 Everything is loud: bad signature/CRC/filter byte/length raises
-ValueError("png: ..."), never a silent wrong image. Filter encode and
-the Sub-unfilter are vectorized (Sub unfiltering is a per-byte-lane
-uint8 accumulate, i.e. a prefix sum mod 256); Average/Paeth unfilter
-walk the scanline because each byte depends on the reconstructed left
-neighbor — per ROW, not per pixel table, so the Python loop is bounded
-by scanline count x width, inside one Arrow-batched task.
+ValueError("png: ..."), never a silent wrong image. Filter encode is
+one whole-image numpy pass and the Sub-unfilter is vectorized (a
+per-byte-lane uint8 accumulate, i.e. a prefix sum mod 256);
+Average/Paeth unfilter walk the scanline because each byte depends on
+the reconstructed left neighbor — per ROW, not per pixel table, so the
+Python loop is bounded by scanline count x width, inside one
+Arrow-batched task.
 """
 
 from __future__ import annotations
@@ -276,55 +278,58 @@ def decode(buf: bytes, return_meta: bool = False):
 _FILTER_NAMES = {"none": 0, "sub": 1, "up": 2, "average": 3, "paeth": 4}
 
 
-def _filter_candidates(cur: np.ndarray, prev: np.ndarray, fu: int) -> list:
-    """All five filtered forms of one scanline, vectorized — the encode
-    direction predicts from ORIGINAL (unfiltered) neighbors, so there
-    is no sequential dependency."""
-    ci = cur.astype(np.int32)
-    pi = prev.astype(np.int32)
-    left = np.zeros_like(ci)
-    left[fu:] = ci[:-fu]
-    upleft = np.zeros_like(pi)
-    upleft[fu:] = pi[:-fu]
-    # Paeth predictor, vectorized
-    p = left + pi - upleft
-    pa = np.abs(p - left)
-    pb = np.abs(p - pi)
-    pc = np.abs(p - upleft)
-    pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, pi, upleft))
-    return [
-        cur,
-        ((ci - left) & 0xFF).astype(np.uint8),
-        ((ci - pi) & 0xFF).astype(np.uint8),
-        ((ci - ((left + pi) >> 1)) & 0xFF).astype(np.uint8),
-        ((ci - pred) & 0xFF).astype(np.uint8),
-    ]
-
-
 def _filter_pass(rows: np.ndarray, fu: int, strategy: str) -> bytes:
     """rows: (h, rowbytes) raw scanline bytes -> filtered stream with
-    per-row filter-type bytes."""
-    h = rows.shape[0]
-    out = bytearray()
-    prev = np.zeros(rows.shape[1], dtype=np.uint8)
-    fixed = _FILTER_NAMES.get(strategy)
-    for y in range(h):
-        cand = _filter_candidates(rows[y], prev, fu)
-        if strategy == "adaptive":
-            # libpng MSAD heuristic: minimize sum of |signed byte|
-            costs = [
-                int(np.abs(c.astype(np.int8).astype(np.int32)).sum())
-                for c in cand
-            ]
-            ft = int(np.argmin(costs))
-        elif fixed is not None:
-            ft = fixed
-        else:
-            raise ValueError(f"png: unknown filter strategy {strategy!r}")
-        out.append(ft)
-        out += cand[ft].tobytes()
-        prev = rows[y]
-    return bytes(out)
+    per-row filter-type bytes. The encode direction predicts from the
+    ORIGINAL (unfiltered) neighbors, so there is no sequential
+    dependency and the whole image filters at once: a fixed strategy
+    computes only its own filter, 'adaptive' takes the per-row argmin of
+    the libpng MSAD heuristic (sum of |signed byte|) over all five."""
+    if strategy == "adaptive":
+        kinds = range(5)
+    elif strategy in _FILTER_NAMES:
+        kinds = (_FILTER_NAMES[strategy],)
+    else:
+        raise ValueError(f"png: unknown filter strategy {strategy!r}")
+    h, rowbytes = rows.shape
+    if kinds != (0,):  # 'none' needs no neighbors
+        cur = rows.astype(np.int32)
+        up = np.zeros_like(cur)
+        up[1:] = cur[:-1]
+        left = np.zeros_like(cur)
+        left[:, fu:] = cur[:, :-fu]
+        upleft = np.zeros_like(cur)
+        upleft[:, fu:] = up[:, :-fu]
+
+    def filtered(k):
+        if k == 0:
+            return rows
+        if k == 1:
+            pred = left
+        elif k == 2:
+            pred = up
+        elif k == 3:
+            pred = (left + up) >> 1
+        else:  # Paeth
+            p = left + up - upleft
+            pa = np.abs(p - left)
+            pb = np.abs(p - up)
+            pc = np.abs(p - upleft)
+            pred = np.where((pa <= pb) & (pa <= pc), left,
+                            np.where(pb <= pc, up, upleft))
+        return ((cur - pred) & 0xFF).astype(np.uint8)
+
+    out = np.empty((h, 1 + rowbytes), dtype=np.uint8)
+    if len(kinds) == 1:
+        out[:, 0] = kinds[0]
+        out[:, 1:] = filtered(kinds[0])
+    else:
+        cand = np.stack([filtered(k) for k in kinds])
+        cost = np.abs(cand.view(np.int8).astype(np.int32)).sum(axis=2)
+        ft = cost.argmin(axis=0)
+        out[:, 0] = ft
+        out[:, 1:] = cand[ft, np.arange(h)]
+    return out.tobytes()
 
 
 def _pack_rows(samples: np.ndarray, depth: int) -> np.ndarray:
@@ -332,12 +337,8 @@ def _pack_rows(samples: np.ndarray, depth: int) -> np.ndarray:
     h, w, nch = samples.shape
     if depth == 8:
         return samples.reshape(h, w * nch).astype(np.uint8)
-    if depth == 16:
-        s = samples.reshape(h, w * nch).astype(np.uint16)
-        out = np.zeros((h, w * nch * 2), dtype=np.uint8)
-        out[:, 0::2] = s >> 8
-        out[:, 1::2] = s & 0xFF
-        return out
+    if depth == 16:  # samples are big-endian on the wire
+        return samples.reshape(h, w * nch).astype(">u2").view(np.uint8)
     # sub-byte: emit depth bits per sample MSB-first, pad row to byte
     vals = samples.reshape(h, w)  # nch == 1 at depths < 8
     nbits = w * depth

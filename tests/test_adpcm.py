@@ -99,3 +99,16 @@ def test_wav_any_dispatch_and_refusals():
     bad[data_at + 2] = 200
     with pytest.raises(ValueError, match="step index"):
         adpcm.decode_wav_adpcm(bytes(bad))
+
+
+def test_adpcm_wav_walked_once(monkeypatch):
+    """A 0x11 file read through decode_wav_any walks its RIFF chunks
+    once: the ADPCM decoder reuses the walked chunks."""
+    buf = adpcm.encode_wav_adpcm(_speechish(700), 8000, samples_per_block=65)
+    calls = []
+    walk = g711.riff_chunks
+    monkeypatch.setattr(g711, "riff_chunks",
+                        lambda b: calls.append(1) or walk(b))
+    got, rate = g711.decode_wav_any(buf)
+    assert len(calls) == 1 and rate == 8000
+    assert np.array_equal(got, adpcm.decode_wav_adpcm(buf)[0])

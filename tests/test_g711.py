@@ -96,3 +96,23 @@ def test_wav_odd_pcm16_length_raises():
            + b"data" + struct.pack("<I", len(data)) + data + b"\x00")
     with pytest.raises(ValueError, match="odd PCM16"):
         g711.decode_wav_any(hdr)
+
+
+def test_pcm16_writer_matches_stdlib_wave():
+    """encode_wav_pcm16 goes through the shared RIFF writer and emits
+    the same bytes as the stdlib `wave` module."""
+    import io
+    import wave
+
+    from georasters_spark.operators.multimodal import encode_wav_pcm16
+
+    rng = np.random.default_rng(8)
+    for n, rate in ((0, 8000), (1, 8000), (333, 16000), (1000, 44100)):
+        x = rng.integers(-32768, 32768, n).astype(np.int16)
+        bio = io.BytesIO()
+        with wave.open(bio, "wb") as wf:
+            wf.setnchannels(1)
+            wf.setsampwidth(2)
+            wf.setframerate(rate)
+            wf.writeframes(x.astype("<i2").tobytes())
+        assert encode_wav_pcm16(x, rate) == bio.getvalue()

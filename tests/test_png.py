@@ -6,6 +6,7 @@ driver reads/writes this format (georasters.py:281-291 accepts any
 gdal.Open-able file); this engine implements the codec from the public
 spec (ISO/IEC 15948) since no image library exists in-sandbox."""
 
+import hashlib
 import struct
 import zlib
 
@@ -119,15 +120,145 @@ def test_palette_and_trns():
     assert (out2[..., 3] == np.frombuffer(trns, np.uint8)[idx]).all()
 
 
-def test_minimal_codec_png_subsumed():
-    """codec.encode_png16 tiles (the images-table 'png' fmt) are
-    standard PNGs: the full decoder reads them bit-identically to
-    decode_png16."""
+def _png16_reference(t: np.ndarray) -> bytes:
+    """16-bit gray PNG built from the spec with struct + zlib: IHDR,
+    one IDAT of zlib level 6 over filter-0 big-endian scanlines, IEND."""
+    h, w = t.shape
+    be = t.view(np.uint16).astype(">u2")
+    scan = b"".join(b"\x00" + be[r].tobytes() for r in range(h))
+    return (png.SIGNATURE
+            + _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 0))
+            + _chunk(b"IDAT", zlib.compress(scan, 6))
+            + _chunk(b"IEND", b""))
+
+
+def test_codec_png_tile_matches_reference():
+    """The images-table 'png' fmt is a plain 16-bit gray PNG: the bytes
+    equal an independent struct + zlib build, negatives and ndv are
+    bit-cast through uint16 and decode back bit-identically."""
+    ndv = -9999
     rng = np.random.default_rng(3)
-    t = rng.integers(-30000, 30000, (13, 17)).astype(np.int16)
-    buf = codec.encode_png16(t)
-    assert (png.decode(buf) == t.view(np.uint16)).all()
-    assert (codec.decode_png16(buf) == t).all()
+    for h, w in [(13, 17), (1, 1), (1, 9), (8, 1), (64, 64)]:
+        t = rng.integers(-32768, 32768, (h, w)).astype(np.int16)
+        t[rng.random((h, w)) < 0.25] = ndv
+        t.flat[0] = -1
+        buf = codec.encode_tile(t, "png", ndv)
+        assert buf == _png16_reference(t)
+        back = codec.decode_tile(buf, "png", w, h, ndv)
+        assert back.dtype == np.int16 and back.shape == (h, w)
+        assert np.array_equal(back, t)
+
+
+def test_codec_png_tile_rejects_wrong_layout():
+    """decode_tile refuses a PNG that is not 16-bit gray of the row's
+    (h, w) instead of returning the wrong pixels."""
+    gray8 = png.encode(np.zeros((4, 6), dtype=np.uint8))
+    rgb16 = png.encode(np.zeros((4, 6, 3), dtype=np.uint16))
+    for buf in (gray8, rgb16):
+        with pytest.raises(ValueError, match="16-bit gray"):
+            codec.decode_tile(buf, "png", 6, 4, -9999)
+    tile = codec.encode_tile(np.zeros((4, 6), dtype=np.int16), "png", -9999)
+    with pytest.raises(ValueError, match="16-bit gray"):
+        codec.decode_tile(tile, "png", 4, 6, -9999)
+
+
+_STRATEGIES = ("none", "sub", "up", "average", "paeth", "adaptive")
+
+# SHA-256 of the encoder output over _digest_images() per (interlace,
+# strategy), and of _digest_apng(strategy): pinned from the per-scanline
+# filter loop the whole-image filter pass replaced.
+_PNG_DIGESTS = {
+    (False, "none"):
+        "d02531967f088373e11b3de2a55622e2fab0ee6171d1c7337ef6393e21573b5e",
+    (False, "sub"):
+        "ed97a63d993c84a0fd42502366820a1d4bafa71cd4f53ce8cc2e9c4ee6c269e7",
+    (False, "up"):
+        "01c6df5170b66c06aef0aafd5427c5b18c6ed91cd4706e147858f86e4b0caffe",
+    (False, "average"):
+        "17ddbfa5c1ee65690c53077f8aa30a3710475dbcc0b73fdf35a75b3458cf9147",
+    (False, "paeth"):
+        "60174125056fd5abc4ed5d00696bfe0923e8d3b2bc131384a27a29377721d2d7",
+    (False, "adaptive"):
+        "772ce4833a81054e4d9cbc493ec7e2a251d8e64f25cd37eb1d3c68509ddcedb5",
+    (True, "none"):
+        "29347c2005bdd888053833f6d6ff989d46699d353c39124b140292dbce06716c",
+    (True, "sub"):
+        "4f1d0f69623b581f7502495848559557f83039d69268e3d87c9e6e03aad45eec",
+    (True, "up"):
+        "6c9ada3505d9a147294a8bd825f1565c4004f827a66e76bcb9c3f6e51241ad4a",
+    (True, "average"):
+        "53b60f7cca4d401e96b8c4f1e599a1cd2d7c71f939b6e3d5473423c6f91f27e3",
+    (True, "paeth"):
+        "87f4dcb66856d2ee4beb0e36128be03abcfc0e642f126421de76eae9fac0b4b9",
+    (True, "adaptive"):
+        "b9a74bc1893e71c919af4a3767d7d785782d469cc20c88b46cbd4b9220edcb6d",
+}
+_APNG_DIGESTS = {
+    "none": "0e2273c22c4d0f129872003c9a47a0adf01179bc591b01e80c484fe70cf10ae3",
+    "sub": "5a03a9dafa95077fc0cf6dc1e03c8b0b1ce64b712579bb35530d813500eb6523",
+    "up": "99e09743f170dd1a5427a75af49a6c3c73ecf0d491181ae477cb0f2ffae559c8",
+    "average": "15aa17a29a35d4c439237b4d1423661d7c8a15d276509afe04e0874eca95e654",
+    "paeth": "0cc8de91a7af641e194e60f949d0ec333c85f0730d7c831815125b96922a484a",
+    "adaptive": "d9081a20c32cecc7735d9c394441d2a213fbd42e0a2467232a70abeca378af9f",
+}
+
+
+def _digest_images() -> list:
+    """Seeded encode() inputs: gray 1/2/4/8/16-bit, gray+alpha / RGB /
+    RGBA at 8 and 16 bits, palette 8- and 4-bit, each at three shapes.
+    Smooth ramps plus noise, so adaptive picks every filter type."""
+    rng = np.random.default_rng(20)
+    out = []
+    for h, w in ((23, 31), (1, 7), (6, 1)):
+        ramp = np.add.outer(np.arange(h) * 3, np.arange(w) * 5)
+
+        def smooth(nch, top):
+            base = ramp[..., None] + np.arange(nch) * 11
+            return (base + rng.integers(0, 6, (h, w, nch))) % top
+
+        for depth in (1, 2, 4):
+            out.append(dict(img=smooth(1, 1 << depth)[..., 0].astype(np.uint8),
+                            depth=depth))
+        out.append(dict(img=smooth(1, 256)[..., 0].astype(np.uint8)))
+        out.append(dict(img=(smooth(1, 65536)[..., 0] * 37 % 65536)
+                        .astype(np.uint16)))
+        for nch in (2, 3, 4):
+            out.append(dict(img=smooth(nch, 256).astype(np.uint8)))
+            out.append(dict(img=(smooth(nch, 65536) * 131 % 65536)
+                            .astype(np.uint16)))
+        pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
+        out.append(dict(img=smooth(1, 16)[..., 0].astype(np.uint8),
+                        palette=pal))
+        out.append(dict(img=smooth(1, 16)[..., 0].astype(np.uint8),
+                        palette=pal, depth=4))
+    return out
+
+
+def _digest_apng(strategy: str) -> bytes:
+    rng = np.random.default_rng(21)
+    full = rng.integers(0, 256, (19, 27, 4), dtype=np.uint8)
+    full[..., 3] = 255
+    sub = np.cumsum(rng.integers(0, 3, (7, 9, 4)), axis=1).astype(np.uint8)
+    return png.encode_apng(
+        [full, sub, full[:5, :6]], offsets=[(0, 0), (4, 3), (20, 12)],
+        delays=[(1, 10), (2, 25), (3, 100)], dispose=[0, 1, 2],
+        blend=[0, 1, 1], filter_strategy=strategy)
+
+
+@pytest.mark.parametrize("strategy", _STRATEGIES)
+@pytest.mark.parametrize("interlace", [False, True])
+def test_encode_bytes_pinned(strategy, interlace):
+    d = hashlib.sha256()
+    for kw in _digest_images():
+        d.update(png.encode(filter_strategy=strategy, interlace=interlace,
+                            **kw))
+    assert d.hexdigest() == _PNG_DIGESTS[(interlace, strategy)]
+
+
+@pytest.mark.parametrize("strategy", _STRATEGIES)
+def test_encode_apng_bytes_pinned(strategy):
+    got = hashlib.sha256(_digest_apng(strategy)).hexdigest()
+    assert got == _APNG_DIGESTS[strategy]
 
 
 def test_error_paths():
