@@ -168,8 +168,8 @@ def run_heavy_block(spark, sf_dir: str, times: dict, cal: dict, imgs,
     # r6: tile-cogrouped gather (gather_from_tiles; gate reproject_tiles
     # pins value-equivalence with the old pixel-join plan)
     _timed(times, cal, "reproject_nearest_9M" + suffix,
-           lambda: RP.wgs84_to_cea_grid(
-               None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+           lambda: RP.reproject(
+               None, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
                (spec.height, spec.width), (1024, 2048), images=imgs,
            ).filter(F.col("value").isNotNull()).count())
 
@@ -389,8 +389,8 @@ def run_sf1(spark) -> dict:
     # source tile; gate reproject_tiles pins value-equivalence)
     cal["reproject_nearest"] = _cal_quick()
     t0 = time.time()
-    RP.wgs84_to_cea_grid(
-        None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+    RP.reproject(
+        None, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
         (spec.height, spec.width), (2048, 4096), images=imgs,
     ).filter(F.col("value").isNotNull()).count()
     dt = time.time() - t0
@@ -402,8 +402,8 @@ def run_sf1(spark) -> dict:
     px = PX.pixel_table(imgs, valid_only=True).select("row", "col", "value")
     cal["reproject_joinplan"] = _cal_quick()
     t0 = time.time()
-    RP.wgs84_to_cea_grid(
-        px, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+    RP.reproject(
+        px, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
         (spec.height, spec.width), (2048, 4096),
     ).filter(F.col("value").isNotNull()).count()
     dt = time.time() - t0
@@ -417,9 +417,9 @@ def run_sf1(spark) -> dict:
     # plan (measured crossover at out_shape 3240x7200: 179 s vs 150 s).
     cal["reproject_bilinear_tiles"] = _cal_quick()
     t0 = time.time()
-    RP.wgs84_to_cea_grid_bilinear(
-        None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-        (spec.height, spec.width), (2048, 4096), images=imgs,
+    RP.reproject(
+        None, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        (spec.height, spec.width), (2048, 4096), resampling="bilinear", images=imgs,
     ).filter(F.col("value").isNotNull()).count()
     dt = time.time() - t0
     out["reproject_bilinear_tiles_sec"] = round(dt, 3)

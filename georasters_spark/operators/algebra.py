@@ -217,6 +217,23 @@ def polygonize(px: DataFrame, connectivity: int = 4, merge: str = "auto") -> Dat
     )
 
 
+# Spark byte-string suffixes (binary units, as JavaUtils.byteStringAsBytes)
+_BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
+               "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+               "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
+
+
+def _fits_broadcast(spark, n_bytes: int) -> bool:
+    """True when a table of ``n_bytes`` fits the session's broadcast
+    budget (spark.sql.autoBroadcastJoinThreshold, e.g. "10MB" or
+    "10485760b"; negative disables broadcast joins), so a forced hint
+    never exceeds what the optimizer itself would broadcast."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower()
+    num = raw.rstrip("bkmgtp")
+    limit = int(num) * _BYTE_UNITS[raw[len(num):]]
+    return 0 <= n_bytes <= limit
+
+
 def sieve(px: DataFrame, threshold: int, connectivity: int = 4,
           max_rounds: int = 64, driver_edge_cap: int = 500_000) -> DataFrame:
     """gdal_sieve: connected equal-value regions SMALLER than
@@ -335,11 +352,12 @@ def sieve(px: DataFrame, threshold: int, connectivity: int = 4,
     # checkpointed region tables are LogicalRDDs whose size statistics
     # the optimizer treats as unknown, so the m build otherwise runs
     # THREE shuffle joins over metadata-scale tables every round.  The
-    # gate derives from the counted region table (one cheap job over
-    # the checkpoint), not the local core count; past the cap the
-    # shuffle joins stay — the 100-TB path.
+    # gate estimates the counted region table's bytes (one cheap job
+    # over the checkpoint; rows x an 8-byte-per-column row) against the
+    # session's own broadcast budget, not the local core count; past
+    # the budget the shuffle joins stay — the 100-TB path.
     n_regions = S.count()
-    bcast_meta = n_regions <= 2_000_000
+    bcast_meta = _fits_broadcast(spark, n_regions * 8 * (1 + len(S.columns)))
 
     def _bm(df):
         return F.broadcast(df) if bcast_meta else df

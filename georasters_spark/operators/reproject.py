@@ -1,32 +1,34 @@
-"""Reprojection (georasters.py:559-667) — closed-form warps, Spark-first.
+"""Reprojection (georasters.py:559-667) — one warp for every CRS pair,
+Spark-first.
 
 The reference shells out to GDAL WarpedVRT; its own test suite only
 exercises WGS84 <-> cylindrical-equal-area (tests/test_georasters.py:
-315-397), both of which have closed-form transforms:
+315-397).  Every CRS this engine supports has closed-form forward and
+inverse transforms (CEA, WebMercator, sinusoidal, the Krüger TM series,
+the Snyder conics, Helmert datum shifts and the ellipsoidal Mercator),
+so ``reproject`` (an alias of ``reproject_any``) — like the
+reference's single GDAL warp call — is one plan for any pair:
 
-  CEA  forward: X = R·λ·cos(φs),        Y = R·sin(φ)/cos(φs)
-       inverse: λ = X/(R·cos(φs)),      φ = asin(Y·cos(φs)/R)
-  (λ, φ in radians; φs = standard parallel; R = 6378137)
+  target cell center --inverse(dst)--> lon/lat --forward(src)--> x, y
 
 The warp is an inverse-projection *gather*, exactly like resize: build
-the target grid (spark.range × spark.range), compute each target cell
-center's source (row, col), equi-join the source pixel table.
-Resampling = nearest (the reference default); bilinear and average
-(block-mean) variants below mirror the reference resampling-mode dict
-(georasters.py:592-606). Two families keep a plan of their own with
-a few JVM trig Columns: WGS84 -> CEA (every mode, plus the tile-
-cogrouped ``images=`` paths) and WGS84 -> WebMercator nearest/bilinear
-(the XYZ tiler's lattice). Every other request goes to
-``reproject_any``, whose projections (the Krüger TM, conic, sinusoidal,
-Helmert datum and ellipsoidal Mercator series) run as numpy twins in
-one Arrow pass (``_project``), with the DuckDB SQL twins as the
-independent check.
+the target grid (spark.range × spark.range) on the ``any_bounds``
+lattice, project each cell center into source units with the numpy
+transforms in one Arrow pass (``_project``), and gather the source
+(row, col).  nearest, bilinear, cubic, cubicspline and lanczos gather
+either by joining the pixel table or, given ``images=``, tile-cogrouped
+from the tiles table (only the target lattice shuffles); the gdalwarp
+aggregate modes forward-bucket source pixels (the reference
+resampling-mode dict, georasters.py:592-606).  The DuckDB SQL twins
+below and the numpy references in the tests are the independent
+checks.
 
 Engine-stable gather rule (the DuckDB-oracle contract): the fractional
 source index u = (lat − y0)/cy is quantized to 1e-4 cell units BEFORE
-floor — JVM Math.asin and libm asin may disagree by 1 ulp, and a bare
-floor() would flip on that measure-zero boundary set. round(u, 4) maps
-both engines' u (which agree to ~1e-10) to the same grid value, at the
+floor — numpy's, the JVM's and DuckDB's trig may disagree by 1 ulp,
+and a bare floor() would flip on that measure-zero boundary set.
+round(u, 4) maps every engine's u (which agree to ~1e-10) to the same
+grid value, at the
 cost of a ≤1e-4-cell assignment tolerance — negligible for a
 nearest-neighbor warp and identical across Spark, DuckDB and the numpy
 differential oracle. degrees() is likewise spelled out as
@@ -52,16 +54,6 @@ def dlit(x: float) -> str:
     DECIMAL (not DOUBLE) and drift 1 ulp through arithmetic; casting
     the repr STRING to DOUBLE is strtod = exact round-trip."""
     return f"CAST('{x!r}' AS DOUBLE)"
-
-
-def cea_bounds(lon0: float, lat0: float, lon1: float, lat1: float, phi_s: float = 0.0):
-    """Projected bbox of a geographic bbox (monotone transform)."""
-    k = math.cos(math.radians(phi_s))
-    x0 = R * math.radians(lon0) * k
-    x1 = R * math.radians(lon1) * k
-    y0 = R * math.sin(math.radians(lat0)) / k
-    y1 = R * math.sin(math.radians(lat1)) / k
-    return x0, y0, x1, y1
 
 
 _WINDOW_BYTES = 32 << 20  # cap on one cogroup task's float64 block window
@@ -149,7 +141,12 @@ def gather_from_tiles(tgt: DataFrame, images: DataFrame,
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         out = left[["trow", "tcol", *carry]].copy()
         vals = np.full(len(left), np.nan)
-        if len(right) and right.duplicated(["tile_row", "tile_col"]).any():
+        if not len(right):
+            # no tile reaches this block (NULL-keyed targets, whose
+            # source index is NULL, included): every gather is NULL
+            out["value"] = pd.array(vals, dtype="Float64")
+            return out
+        if right.duplicated(["tile_row", "tile_col"]).any():
             # one row per (tile_row, tile_col) is the tiles-table
             # contract; silently decoding one of them on a mosaic /
             # unioned images table would mix grids nondeterministically
@@ -211,131 +208,38 @@ def gather_from_tiles(tgt: DataFrame, images: DataFrame,
     )
 
 
-def wgs84_to_cea_grid(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-    images: DataFrame | None = None,
-) -> DataFrame:
-    """Warp a WGS84 pixel table onto a CEA target grid (nearest).
-
-    Returns (trow, tcol, xm, ym, value) — xm/ym are the target cell
-    centers in projected meters; value NULL where the source is masked
-    or out of range.
-
-    When ``images`` is given, the gather runs through
-    ``gather_from_tiles`` (tile-cogrouped, no pixel explode) instead of
-    the pixel left join — value-identical (same quantized row/col
-    exprs; pytest-pinned), but shuffling M target rows instead of
-    N+M pixel rows.  ``px`` may then be None.
-    """
-    spark = (px if px is not None else images).sparkSession
-    h, w = src_shape
+def _wgs84_tgt(dst, src_origin, src_cellsize, src_shape, out_shape) -> str:
+    """The target-lattice SELECT of the WGS84-source SQL twins: the
+    engine's any_bounds lattice, cell centers xm/ym as literal
+    arithmetic over range(th) x range(tw)."""
     th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    # target grid covers the projected source extent
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    # (lon0, lat_min, lon1, lat_max) ordering: Y0 = north edge
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th  # negative (north-up)
-    k = math.cos(math.radians(phi_s))
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y0) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    # explicit ·180/π (not F.degrees) + quantized floor: see module doc
-    lon = xm / F.lit(R * k) * F.lit(180.0) / F.lit(math.pi)
-    lat = F.asin(ym * F.lit(k / R)) * F.lit(180.0) / F.lit(math.pi)
-    srow = F.floor(F.round((lat - F.lit(y0g)) / F.lit(cy), _Q)).cast("long")
-    scol = F.floor(F.round((lon - F.lit(x0g)) / F.lit(cx), _Q)).cast("long")
-    tgt = target.select(
-        "trow",
-        "tcol",
-        xm.alias("xm"),
-        ym.alias("ym"),
-        srow.alias("row"),
-        scol.alias("col"),
-    )
-    if images is not None:
-        # xm/ym are pure functions of trow/tcol: recompute them AFTER
-        # the gather instead of carrying two doubles per row through the
-        # shuffle and both Arrow crossings (same Column expressions, so
-        # bit-identical values)
-        g = gather_from_tiles(tgt.select("trow", "tcol", "row", "col"),
-                              images, carry=(), n_targets=th * tw,
-                              src_shape=src_shape)
-        return g.select(
-            "trow", "tcol",
-            (F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)).alias("xm"),
-            (F.lit(Y0) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)).alias("ym"),
-            "value",
-        )
-    src = px.select("row", "col", "value")
-    # pre-filter the big side before its exchange (a broadcast semi-join
-    # per axis, the Bloom-filter move with an EXACT filter): the nearest
-    # gather's source set is a PRODUCT set — srow depends only on trow
-    # and scol only on tcol — so the used rows/cols are two tiny distinct
-    # sets re-derived from the same expressions over bare ranges.  A
-    # downsampling warp then shuffles ~M source pixels instead of N
-    # (93M -> 8.4M at the sf1 tier); the left join result is unchanged
-    # because dropped source rows can never match a target.
-    rows_used = (
-        spark.range(th).select(F.col("id").alias("trow"))
-        .select(F.floor(F.round(
-            (F.asin((F.lit(Y0) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy))
-                    * F.lit(k / R)) * F.lit(180.0) / F.lit(math.pi)
-             - F.lit(y0g)) / F.lit(cy), _Q)).cast("long").alias("row"))
-        .distinct())
-    cols_used = (
-        spark.range(tw).select(F.col("id").alias("tcol"))
-        .select(F.floor(F.round(
-            ((F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx))
-             / F.lit(R * k) * F.lit(180.0) / F.lit(math.pi)
-             - F.lit(x0g)) / F.lit(cx), _Q)).cast("long").alias("col"))
-        .distinct())
-    src = (src.join(F.broadcast(rows_used), "row", "left_semi")
-              .join(F.broadcast(cols_used), "col", "left_semi"))
-    # the semi-filters shrink the OPTIMIZER'S estimate of src so far
-    # that it would auto-broadcast a table that is really M rows (8.4M
-    # at the sf1 tier, unbounded at scale): pin a shuffled-hash join —
-    # both sides exchange by (row, col), no sort, no driver collect
-    src = src.hint("shuffle_hash")
-    # xm/ym are pure arithmetic over repr-round-tripped literal doubles:
-    # bit-identical across engines, so they ship UNROUNDED (rounding to
-    # 6 dp can itself straddle a decimal tie and flip the last digit)
-    return tgt.join(src, ["row", "col"], "left").select("trow", "tcol", "xm", "ym", "value")
+    X0, Y1, X1, Y0 = any_bounds(4326, dst, src_origin, src_cellsize, src_shape)
+    return f"""SELECT CAST(tr.range AS BIGINT) AS trow, CAST(tc.range AS BIGINT) AS tcol,
+         {dlit(X0)} + (tc.range + 0.5) * {dlit((X1 - X0) / tw)} AS xm,
+         {dlit(Y0)} + (tr.range + 0.5) * {dlit((Y1 - Y0) / th)} AS ym
+  FROM range({th}) tr CROSS JOIN range({tw}) tc"""
 
 
-def _cea_tgt_loc_ctes(src_origin, src_cellsize, src_shape, out_shape,
-                      phi_s: float = 0.0) -> str:
+def _cea_lonlat_sql(xm: str, ym: str) -> tuple[str, str]:
+    """Closed-form CEA inverse (standard parallel 0) in DuckDB SQL."""
+    return (f"(({xm}) / {dlit(R)} * 180.0 / pi())",
+            f"(asin(({ym}) * {dlit(1.0 / R)}) * 180.0 / pi())")
+
+
+def _cea_tgt_loc_ctes(src_origin, src_cellsize, src_shape, out_shape) -> str:
     """The shared tgt/loc CTE pair of every CEA-target oracle (the
     lattice + quantized-floor inverse) — ONE copy, composed by
     wgs84_to_cea_sql and warp_cutline_sql."""
-    h, w = src_shape
-    th, tw = out_shape
     x0g, y0g = src_origin
     cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
+    lon, lat = _cea_lonlat_sql("xm", "ym")
+    tgt = _wgs84_tgt("cea", src_origin, src_cellsize, src_shape, out_shape)
     return f"""tgt AS (
-  SELECT CAST(tr.range AS BIGINT) AS trow, CAST(tc.range AS BIGINT) AS tcol,
-         {dlit(X0)} + (tc.range + 0.5) * {dlit(tcx)} AS xm,
-         {dlit(Y0)} + (tr.range + 0.5) * {dlit(tcy)} AS ym
-  FROM range({th}) tr CROSS JOIN range({tw}) tc),
+  {tgt}),
 loc AS (
   SELECT trow, tcol, xm, ym,
-         CAST(FLOOR(ROUND((asin(ym * {dlit(k / R)}) * 180.0 / pi() - {dlit(y0g)}) / {dlit(cy)}, {_Q})) AS BIGINT) AS row,
-         CAST(FLOOR(ROUND((xm / {dlit(R * k)} * 180.0 / pi() - {dlit(x0g)}) / {dlit(cx)}, {_Q})) AS BIGINT) AS col
+         CAST(FLOOR(ROUND(({lat} - {dlit(y0g)}) / {dlit(cy)}, {_Q})) AS BIGINT) AS row,
+         CAST(FLOOR(ROUND(({lon} - {dlit(x0g)}) / {dlit(cx)}, {_Q})) AS BIGINT) AS col
   FROM tgt)"""
 
 
@@ -345,65 +249,15 @@ def wgs84_to_cea_sql(
     src_cellsize: tuple[float, float],
     src_shape: tuple[int, int],
     out_shape: tuple[int, int],
-    phi_s: float = 0.0,
 ) -> str:
-    """DuckDB oracle for wgs84_to_cea_grid: the same closed-form inverse
-    gather over the same pixel CTE, constant-for-constant and
-    association-for-association (incl. the round-4 quantized floor)."""
-    ctes = _cea_tgt_loc_ctes(src_origin, src_cellsize, src_shape,
-                             out_shape, phi_s)
+    """DuckDB oracle for the WGS84 -> CEA nearest warp: the closed-form
+    inverse gather over the same pixel CTE and lattice (incl. the
+    round-4 quantized floor)."""
+    ctes = _cea_tgt_loc_ctes(src_origin, src_cellsize, src_shape, out_shape)
     return f"""WITH {px_cte},
 {ctes}
 SELECT loc.trow, loc.tcol, loc.xm AS xm, loc.ym AS ym, px.value
 FROM loc LEFT JOIN px ON px.row = loc.row AND px.col = loc.col"""
-
-
-def wgs84_to_webmercator_grid(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    lat_clip: float = 85.05112878,
-) -> DataFrame:
-    """Warp onto a Web-Mercator (EPSG:3857) target grid — same
-    inverse-gather shape as CEA with Y = R·ln(tan(π/4 + φ/2)),
-    φ = 2·atan(exp(Y/R)) − π/2. Latitudes clipped to the Mercator
-    square per convention."""
-    spark = px.sparkSession
-    h, w = src_shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    lon0, lon1 = x0g, x0g + w * cx
-    lat_top = min(y0g, lat_clip)
-    lat_bot = max(y0g + h * cy, -lat_clip)
-    X0 = R * math.radians(lon0)
-    X1 = R * math.radians(lon1)
-    Y0 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_top) / 2))
-    Y1 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_bot) / 2))
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th  # negative (north-up)
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y0) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    # explicit ·180/π + quantized floor: see module doc
-    lon = xm / F.lit(R) * F.lit(180.0) / F.lit(math.pi)
-    lat = (F.lit(2.0) * F.atan(F.exp(ym / F.lit(R))) - F.lit(math.pi / 2)) * F.lit(180.0) / F.lit(math.pi)
-    srow = F.floor(F.round((lat - F.lit(y0g)) / F.lit(cy), _Q)).cast("long")
-    scol = F.floor(F.round((lon - F.lit(x0g)) / F.lit(cx), _Q)).cast("long")
-    tgt = target.select(
-        "trow", "tcol", xm.alias("xm"), ym.alias("ym"),
-        srow.alias("row"), scol.alias("col"),
-    )
-    return tgt.join(px.select("row", "col", "value"), ["row", "col"], "left").select(
-        "trow", "tcol", "xm", "ym", "value"
-    )
 
 
 def wgs84_to_webmercator_sql(
@@ -412,28 +266,15 @@ def wgs84_to_webmercator_sql(
     src_cellsize: tuple[float, float],
     src_shape: tuple[int, int],
     out_shape: tuple[int, int],
-    lat_clip: float = 85.05112878,
 ) -> str:
-    """DuckDB oracle for wgs84_to_webmercator_grid (same contract as
-    wgs84_to_cea_sql)."""
-    h, w = src_shape
-    th, tw = out_shape
+    """DuckDB oracle for the WGS84 -> WebMercator nearest warp (same
+    contract as wgs84_to_cea_sql), φ = 2·atan(exp(Y/R)) − π/2."""
     x0g, y0g = src_origin
     cx, cy = src_cellsize
-    lat_top = min(y0g, lat_clip)
-    lat_bot = max(y0g + h * cy, -lat_clip)
-    X0 = R * math.radians(x0g)
-    X1 = R * math.radians(x0g + w * cx)
-    Y0 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_top) / 2))
-    Y1 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_bot) / 2))
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
+    tgt = _wgs84_tgt(3857, src_origin, src_cellsize, src_shape, out_shape)
     return f"""WITH {px_cte},
 tgt AS (
-  SELECT CAST(tr.range AS BIGINT) AS trow, CAST(tc.range AS BIGINT) AS tcol,
-         {dlit(X0)} + (tc.range + 0.5) * {dlit(tcx)} AS xm,
-         {dlit(Y0)} + (tr.range + 0.5) * {dlit(tcy)} AS ym
-  FROM range({th}) tr CROSS JOIN range({tw}) tc),
+  {tgt}),
 loc AS (
   SELECT trow, tcol, xm, ym,
          CAST(FLOOR(ROUND(((2.0 * atan(exp(ym / {dlit(R)})) - {dlit(math.pi / 2)}) * 180.0 / pi() - {dlit(y0g)}) / {dlit(cy)}, {_Q})) AS BIGINT) AS row,
@@ -443,68 +284,44 @@ SELECT loc.trow, loc.tcol, loc.xm AS xm, loc.ym AS ym, px.value
 FROM loc LEFT JOIN px ON px.row = loc.row AND px.col = loc.col"""
 
 
-def webmercator_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
+def wgs84_to_cea_bilinear_sql(
+    px_cte: str,
     src_origin: tuple[float, float],
     src_cellsize: tuple[float, float],
+    src_shape: tuple[int, int],
     out_shape: tuple[int, int],
-    lat_clip: float = 85.05112878,
-) -> np.ndarray:
-    h, w = full.shape
-    th, tw = out_shape
+) -> str:
+    """DuckDB oracle for the WGS84 -> CEA bilinear warp (same quantized
+    fractional index, same weight expressions; the <=4-term weighted
+    sums are rounded to 6dp on both sides)."""
     x0g, y0g = src_origin
     cx, cy = src_cellsize
-    lat_top = min(y0g, lat_clip)
-    lat_bot = max(y0g + h * cy, -lat_clip)
-    X0 = R * math.radians(x0g)
-    X1 = R * math.radians(x0g + w * cx)
-    Y0 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_top) / 2))
-    Y1 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_bot) / 2))
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y0 + (tr + 0.5) * tcy
-    lon = xm / R * 180.0 / np.pi
-    lat = (2.0 * np.arctan(np.exp(ym / R)) - np.pi / 2) * 180.0 / np.pi
-    srow = np.floor(np.round((lat - y0g) / cy, _Q)).astype(np.int64)
-    scol = np.floor(np.round((lon - x0g) / cx, _Q)).astype(np.int64)
-    out = np.full(out_shape, ndv)
-    ok = (srow >= 0) & (srow < h) & (scol >= 0) & (scol < w)
-    out[ok] = full[srow[ok], scol[ok]]
-    return out
-
-
-def warp_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-) -> np.ndarray:
-    """Independent numpy implementation of the same warp (pytest
-    differential oracle, mirroring tests/test_georasters.py:315-397)."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y0 + (tr + 0.5) * tcy
-    lon = xm / (R * k) * 180.0 / np.pi
-    lat = np.arcsin(ym * (k / R)) * 180.0 / np.pi
-    srow = np.floor(np.round((lat - y0g) / cy, _Q)).astype(np.int64)
-    scol = np.floor(np.round((lon - x0g) / cx, _Q)).astype(np.int64)
-    out = np.full(out_shape, ndv)
-    ok = (srow >= 0) & (srow < h) & (scol >= 0) & (scol < w)
-    out[ok] = full[srow[ok], scol[ok]]
-    return out
+    lon, lat = _cea_lonlat_sql("xm", "ym")
+    tgt = _wgs84_tgt("cea", src_origin, src_cellsize, src_shape, out_shape)
+    return f"""WITH {px_cte},
+tgt AS (
+  {tgt}),
+uv AS (
+  SELECT trow, tcol,
+         ROUND(({lat} - {dlit(y0g)}) / {dlit(cy)} - 0.5, {_Q}) AS u,
+         ROUND(({lon} - {dlit(x0g)}) / {dlit(cx)} - 0.5, {_Q}) AS v
+  FROM tgt),
+corners AS (
+  SELECT trow, tcol,
+         CAST(FLOOR(u) AS BIGINT) + o.a AS row,
+         CAST(FLOOR(v) AS BIGINT) + o.b AS col,
+         (CASE WHEN o.a = 1 THEN u - FLOOR(u) ELSE 1.0 - (u - FLOOR(u)) END)
+         * (CASE WHEN o.b = 1 THEN v - FLOOR(v) ELSE 1.0 - (v - FLOOR(v)) END) AS wgt
+  FROM uv CROSS JOIN (VALUES (0, 0), (0, 1), (1, 0), (1, 1)) o(a, b)),
+agg AS (
+  SELECT corners.trow, corners.tcol,
+         CASE WHEN SUM(corners.wgt) > 0
+              THEN ROUND(SUM(corners.wgt * px.value) / SUM(corners.wgt), 6) END AS value,
+         CAST(COUNT(*) AS BIGINT) AS n_contrib
+  FROM corners JOIN px ON px.row = corners.row AND px.col = corners.col
+  GROUP BY 1, 2)
+SELECT tgt.trow, tgt.tcol, agg.value, agg.n_contrib
+FROM tgt LEFT JOIN agg ON agg.trow = tgt.trow AND agg.tcol = tgt.tcol"""
 
 
 # ---------------------------------------------------------------------------
@@ -545,6 +362,17 @@ def _bilinear_corners(
             * F.when(F.col("o.b") == 1, F.col("dv")).otherwise(1.0 - F.col("dv"))
         ).alias("wgt"),
     )
+
+
+def _no_tiles(left):
+    """Zero (num, den, n) partials for a cogroup group no stored tile
+    reaches: every target in it comes back NULL.  Targets whose source
+    coordinate projected to NULL (non-finite) land here too — their
+    block key is NULL, which no tile has."""
+    z = np.zeros(len(left))
+    return pd.DataFrame({"trow": left["trow"].to_numpy(np.int64),
+                         "tcol": left["tcol"].to_numpy(np.int64),
+                         "num": z, "den": z, "n": z.astype(np.int64)})
 
 
 def _bilinear_from_lonlat_tiles(
@@ -626,10 +454,9 @@ def _bilinear_from_lonlat_tiles(
     # review finding r7: the filter returned NULL for those targets
 
     def kernel(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        cols = ["trow", "tcol", "num", "den", "n"]
-        if not len(left):
-            return pd.DataFrame({c: [] for c in cols})
-        if len(right) and right.duplicated(["tile_row", "tile_col"]).any():
+        if not len(right):
+            return _no_tiles(left)
+        if right.duplicated(["tile_row", "tile_col"]).any():
             raise ValueError(
                 "bilinear tiles plan: duplicate image rows share tile keys; "
                 "resolve duplicates (e.g. union_mosaic) first")
@@ -719,142 +546,6 @@ def _bilinear_from_lonlat(
     return target.select("trow", "tcol").join(out, ["trow", "tcol"], "left")
 
 
-def wgs84_to_cea_grid_bilinear(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-    images: DataFrame | None = None,
-) -> DataFrame:
-    """CEA warp with BILINEAR resampling (see _bilinear_from_lonlat for
-    the kernel; this wrapper supplies the CEA inverse).
-
-    When ``images`` is given the gather runs tile-cogrouped
-    (``_bilinear_from_lonlat_tiles`` — no pixel explode); ``px`` may
-    then be None.  Value-identical by construction (shared
-    ``_bilinear_corners`` exprs; pytest-pinned)."""
-    spark = (px if px is not None else images).sparkSession
-    h, w = src_shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y0) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lon = xm / F.lit(R * k) * F.lit(180.0) / F.lit(math.pi)
-    lat = F.asin(ym * F.lit(k / R)) * F.lit(180.0) / F.lit(math.pi)
-    if images is not None:
-        return _bilinear_from_lonlat_tiles(
-            images, target, lon, lat, src_origin, src_cellsize,
-            n_targets=th * tw, src_shape=src_shape)
-    return _bilinear_from_lonlat(px, target, lon, lat, src_origin, src_cellsize)
-
-
-def wgs84_to_webmercator_grid_bilinear(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    lat_clip: float = 85.05112878,
-) -> DataFrame:
-    """Web-Mercator (EPSG:3857) warp with BILINEAR resampling — the
-    same CRS-agnostic kernel as CEA with the Mercator inverse
-    φ = 2·atan(exp(Y/R)) − π/2 supplied as the lon/lat parameter
-    (ref modes dict georasters.py:592-606)."""
-    spark = px.sparkSession
-    h, w = src_shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    lat_top = min(y0g, lat_clip)
-    lat_bot = max(y0g + h * cy, -lat_clip)
-    X0 = R * math.radians(x0g)
-    X1 = R * math.radians(x0g + w * cx)
-    Y0 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_top) / 2))
-    Y1 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_bot) / 2))
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y0) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lon = xm / F.lit(R) * F.lit(180.0) / F.lit(math.pi)
-    lat = (F.lit(2.0) * F.atan(F.exp(ym / F.lit(R))) - F.lit(math.pi / 2)) \
-        * F.lit(180.0) / F.lit(math.pi)
-    return _bilinear_from_lonlat(px, target, lon, lat, src_origin, src_cellsize)
-
-
-def webmercator_bilinear_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    out_shape: tuple[int, int],
-    lat_clip: float = 85.05112878,
-):
-    """Independent numpy Mercator bilinear warp (differential pytest
-    oracle, same contract as cea_bilinear_numpy_oracle)."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    lat_top = min(y0g, lat_clip)
-    lat_bot = max(y0g + h * cy, -lat_clip)
-    X0 = R * math.radians(x0g)
-    X1 = R * math.radians(x0g + w * cx)
-    Y0 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_top) / 2))
-    Y1 = R * math.log(math.tan(math.pi / 4 + math.radians(lat_bot) / 2))
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y0 + (tr + 0.5) * tcy
-    lon = xm / R * 180.0 / np.pi
-    lat = (2.0 * np.arctan(np.exp(ym / R)) - np.pi / 2) * 180.0 / np.pi
-    # HALF_UP on the shortest decimal repr — exactly Spark's F.round
-    # (BigDecimal.valueOf + setScale(HALF_UP)). np.round is HALF_EVEN
-    # and the linear Mercator lon hits exact 4-dp ties (e.g. 34.65625),
-    # where the two rules diverge by a whole quantum.
-    u = _round_half_up((lat - y0g) / cy - 0.5, _Q)
-    v = _round_half_up((lon - x0g) / cx - 0.5, _Q)
-    r0 = np.floor(u).astype(np.int64)
-    c0 = np.floor(v).astype(np.int64)
-    du, dv = u - r0, v - c0
-    num = np.zeros(out_shape)
-    den = np.zeros(out_shape)
-    cnt = np.zeros(out_shape, dtype=np.int64)
-    valid = full != ndv
-    for a in (0, 1):
-        for b in (0, 1):
-            rr, cc = r0 + a, c0 + b
-            ok = (rr >= 0) & (rr < h) & (cc >= 0) & (cc < w)
-            ok &= valid[np.clip(rr, 0, h - 1), np.clip(cc, 0, w - 1)]
-            wgt = (du if a else 1 - du) * (dv if b else 1 - dv)
-            num[ok] += wgt[ok] * full[rr[ok], cc[ok]]
-            den[ok] += wgt[ok]
-            cnt[ok] += 1
-    out = np.full(out_shape, np.nan)
-    nz = den > 0
-    out[nz] = num[nz] / den[nz]
-    return out, cnt
-
-
 def _round_half_up(arr: np.ndarray, q: int) -> np.ndarray:
     """Element-wise decimal round emulating Spark's F.round exactly:
     Java BigDecimal.valueOf(double) parses Double.toString — the
@@ -871,51 +562,13 @@ def _round_half_up(arr: np.ndarray, q: int) -> np.ndarray:
     return np.asarray(flat, dtype=np.float64).reshape(np.shape(arr))
 
 
-def wgs84_to_cea_grid_average(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-    how: str = "mean",
-) -> DataFrame:
-    """CEA warp with AGGREGATE resampling (GDAL 'average' family, plus
-    min/max/sum/count/mode for downsampling): FORWARD-project every
-    valid source cell center, bucket it into its target cell, aggregate
-    per bucket — a scan + one grouped aggregate; map-side partial agg
-    makes it shuffle-light. mode uses a two-level count + max_by with a
-    smallest-value tie-break (deterministic, unlike F.mode)."""
-    h, w = src_shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-
-    xc = F.lit(x0g) + (F.col("col") + F.lit(0.5)) * F.lit(cx)
-    yc = F.lit(y0g) + (F.col("row") + F.lit(0.5)) * F.lit(cy)
-    X = F.lit(R * k) * F.radians(xc)
-    Y = F.lit(R / k) * F.sin(F.radians(yc))
-    trow = F.floor(F.round((Y - F.lit(Y0)) / F.lit(tcy), _Q)).cast("long")
-    tcol = F.floor(F.round((X - F.lit(X0)) / F.lit(tcx), _Q)).cast("long")
-    binned = px.select(trow.alias("trow"), tcol.alias("tcol"), "value").filter(
-        (F.col("trow") >= 0) & (F.col("trow") < th)
-        & (F.col("tcol") >= 0) & (F.col("tcol") < tw)
-    )
-    return _bucket_agg(binned, how)
-
-
 # ---------------------------------------------------------------------------
 # user-facing dispatcher: the reference API accepts EPSG ints, proj4 and
-# WKT strings plus a resampling mode name (georasters.py:559-667). An
-# unwindowed WGS84 source warped to CEA (any mode) or WebMercator
-# (nearest/bilinear) keeps its own plan; every other request is one
-# reproject_any warp. CRSs outside parse_crs, and extents a projection
-# cannot cover, raise NotImplementedError instead of a silent wrong
-# answer.
+# WKT strings plus a resampling mode name (georasters.py:559-667), and
+# every request is one reproject_any warp (``reproject`` is its alias,
+# bound after its definition). CRSs outside parse_crs, and
+# extents a projection cannot cover, raise NotImplementedError instead
+# of a silent wrong answer.
 # ---------------------------------------------------------------------------
 
 _CRS_TOKENS = {
@@ -1003,48 +656,6 @@ def parse_crs(crs) -> str:
     return tok
 
 
-def reproject(
-    px: DataFrame,
-    src_crs,
-    dst_crs,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    resampling: str = "nearest",
-    bbox_lonlat=None,
-) -> DataFrame:
-    """Reference-shaped entry point (georasters.py:559-667):
-    reproject(px, 'EPSG:4326', 'EPSG:3857', ..., resampling='bilinear').
-
-    resampling: nearest | bilinear | cubic | cubicspline | lanczos |
-    average | sum | min | max | count | mode | rms | med | q1 | q3 (the
-    gdalwarp -r enum).  bbox_lonlat = (lon_min, lat_min, lon_max,
-    lat_max) windows the target extent (GDAL -te analog; required for
-    UTM/TM targets of sources reaching past ±40° of the central
-    meridian, and for conic targets of antimeridian-spanning sources).
-    Nearest output is (trow, tcol, xm, ym, value), xm/ym the target
-    cell center in target CRS units."""
-    src = parse_crs(src_crs)
-    dst = parse_crs(dst_crs)
-    if src == dst == "wgs84":
-        raise NotImplementedError("identity reproject: use resize/extract")
-    args = (px, src_origin, src_cellsize, src_shape, out_shape)
-    # the two plans that predate reproject_any: their lattices are not
-    # any_bounds' to the last bit (WebMercator Y0 differs in the last
-    # digits), and the CEA family also has tile-cogrouped variants
-    if src == "wgs84" and bbox_lonlat is None:
-        if dst == "webmerc" and resampling == "nearest":
-            return wgs84_to_webmercator_grid(*args)
-        if dst == "webmerc" and resampling == "bilinear":
-            return wgs84_to_webmercator_grid_bilinear(*args)
-        if dst == "cea":
-            return _wgs84_to_cea(*args, resampling=resampling)
-    return reproject_any(px, src_crs, dst_crs, src_origin, src_cellsize,
-                         src_shape, out_shape, resampling=resampling,
-                         bbox_lonlat=bbox_lonlat)
-
-
 # gdalwarp aggregate mode name -> _bucket_agg ``how``
 _AGG_MODES = {"average": "mean", "sum": "sum", "min": "min", "max": "max",
               "count": "count", "mode": "mode", "rms": "rms", "med": "med",
@@ -1059,154 +670,6 @@ def _unknown_mode(resampling: str) -> NotImplementedError:
         "georasters.py:592-606)")
 
 
-def _wgs84_to_cea(px, src_origin, src_cellsize, src_shape, out_shape,
-                  resampling: str) -> DataFrame:
-    """The WGS84 -> CEA plan for one gdalwarp resampling mode."""
-    args = (px, src_origin, src_cellsize, src_shape, out_shape)
-    if resampling == "nearest":
-        return wgs84_to_cea_grid(*args)
-    if resampling == "bilinear":
-        return wgs84_to_cea_grid_bilinear(*args)
-    if resampling == "cubic":
-        return wgs84_to_cea_grid_cubic(*args)
-    if resampling == "cubicspline":
-        return wgs84_to_cea_grid_cubic(*args, kernel="bspline")
-    if resampling == "lanczos":
-        return wgs84_to_cea_grid_lanczos(*args)
-    agg = _AGG_MODES.get(resampling)
-    if agg is None:
-        raise _unknown_mode(resampling)
-    return wgs84_to_cea_grid_average(*args, how=agg)
-
-
-def cea_bilinear_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-):
-    """Independent numpy bilinear warp (same quantized fractional index
-    + valid-weight renormalization). Returns (value, n_contrib) grids;
-    value nan where no valid neighbor."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y0 + (tr + 0.5) * tcy
-    lon = xm / (R * k) * 180.0 / np.pi
-    lat = np.arcsin(ym * (k / R)) * 180.0 / np.pi
-    u = np.round((lat - y0g) / cy - 0.5, _Q)
-    v = np.round((lon - x0g) / cx - 0.5, _Q)
-    r0 = np.floor(u).astype(np.int64)
-    c0 = np.floor(v).astype(np.int64)
-    du, dv = u - r0, v - c0
-    num = np.zeros(out_shape)
-    den = np.zeros(out_shape)
-    cnt = np.zeros(out_shape, dtype=np.int64)
-    valid = full != ndv
-    for a in (0, 1):
-        for b in (0, 1):
-            rr, cc = r0 + a, c0 + b
-            ok = (rr >= 0) & (rr < h) & (cc >= 0) & (cc < w)
-            ok &= valid[np.clip(rr, 0, h - 1), np.clip(cc, 0, w - 1)]
-            wgt = (du if a else 1 - du) * (dv if b else 1 - dv)
-            num[ok] += wgt[ok] * full[rr[ok], cc[ok]]
-            den[ok] += wgt[ok]
-            cnt[ok] += 1
-    out = np.full(out_shape, np.nan)
-    nz = den > 0
-    out[nz] = num[nz] / den[nz]
-    return out, cnt
-
-
-def cea_average_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-):
-    """Independent numpy forward-bucket average warp. Returns
-    (sum, count) accumulators."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-    rr, cc = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-    valid = full != ndv
-    xc = x0g + (cc + 0.5) * cx
-    yc = y0g + (rr + 0.5) * cy
-    X = (R * k) * np.radians(xc)
-    Y = (R / k) * np.sin(np.radians(yc))
-    trow = np.floor(np.round((Y - Y0) / tcy, _Q)).astype(np.int64)
-    tcol = np.floor(np.round((X - X0) / tcx, _Q)).astype(np.int64)
-    ok = valid & (trow >= 0) & (trow < th) & (tcol >= 0) & (tcol < tw)
-    s = np.zeros(out_shape)
-    n = np.zeros(out_shape, dtype=np.int64)
-    np.add.at(s, (trow[ok], tcol[ok]), full[ok])
-    np.add.at(n, (trow[ok], tcol[ok]), 1)
-    return s, n
-
-
-def wgs84_to_cea_bilinear_sql(
-    px_cte: str,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-) -> str:
-    """DuckDB oracle for wgs84_to_cea_grid_bilinear (same quantized
-    fractional index, same weight expressions; the <=4-term weighted
-    sums are rounded to 6dp on both sides)."""
-    h, w = src_shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-    u = (f"ROUND((asin(({dlit(Y0)} + (tr.range + 0.5) * {dlit(tcy)}) * {dlit(k / R)}) * 180.0 / pi()"
-         f" - {dlit(y0g)}) / {dlit(cy)} - 0.5, {_Q})")
-    v = (f"ROUND((({dlit(X0)} + (tc.range + 0.5) * {dlit(tcx)}) / {dlit(R * k)} * 180.0 / pi()"
-         f" - {dlit(x0g)}) / {dlit(cx)} - 0.5, {_Q})")
-    return f"""WITH {px_cte},
-tgt AS (
-  SELECT CAST(tr.range AS BIGINT) AS trow, CAST(tc.range AS BIGINT) AS tcol,
-         {u} AS u, {v} AS v
-  FROM range({th}) tr CROSS JOIN range({tw}) tc),
-corners AS (
-  SELECT trow, tcol,
-         CAST(FLOOR(u) AS BIGINT) + o.a AS row,
-         CAST(FLOOR(v) AS BIGINT) + o.b AS col,
-         (CASE WHEN o.a = 1 THEN u - FLOOR(u) ELSE 1.0 - (u - FLOOR(u)) END)
-         * (CASE WHEN o.b = 1 THEN v - FLOOR(v) ELSE 1.0 - (v - FLOOR(v)) END) AS wgt
-  FROM tgt CROSS JOIN (VALUES (0, 0), (0, 1), (1, 0), (1, 1)) o(a, b)),
-agg AS (
-  SELECT corners.trow, corners.tcol,
-         CASE WHEN SUM(corners.wgt) > 0
-              THEN ROUND(SUM(corners.wgt * px.value) / SUM(corners.wgt), 6) END AS value,
-         CAST(COUNT(*) AS BIGINT) AS n_contrib
-  FROM corners JOIN px ON px.row = corners.row AND px.col = corners.col
-  GROUP BY 1, 2)
-SELECT tgt.trow, tgt.tcol, agg.value, agg.n_contrib
-FROM tgt LEFT JOIN agg ON agg.trow = tgt.trow AND agg.tcol = tgt.tcol"""
-
-
 def _kernel_wfun_np(kernel: str, a: int = 3):
     """numpy twin of ``_kernel_offsets_wfun``'s weight function, used
     by the fused tile plan (`_kernel_gather_tiles`).  The polynomial
@@ -1217,10 +680,11 @@ def _kernel_wfun_np(kernel: str, a: int = 3):
     same magnitude the 6-dp rounding already absorbs between Spark
     and the DuckDB oracle.
 
-    DELIBERATELY separate from ``_np_kernel_wfun`` (the numpy ORACLE
-    twin further down): this one is production code mirroring the
-    Column expressions term-for-term, that one is the independent
-    check — merging them would make the oracle tautological."""
+    DELIBERATELY separate from the kernel weights of the numpy test
+    oracles (tests/numpy_oracles.py): this one is production code
+    mirroring the Column expressions term-for-term, those are the
+    independent check — merging them would make the oracle
+    tautological."""
     if kernel == "catmull":
 
         def w(t):
@@ -1405,10 +869,9 @@ def _kernel_gather_tiles(images: DataFrame, target: DataFrame, u, v,
     H, Wn = b_h + lead + trail, b_w + lead + trail
 
     def kernel_fn(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        cols = ["trow", "tcol", "num", "den", "n"]
-        if not len(left):
-            return pd.DataFrame({c: [] for c in cols})
-        if len(right) and right.duplicated(["tile_row", "tile_col"]).any():
+        if not len(right):
+            return _no_tiles(left)
+        if right.duplicated(["tile_row", "tile_col"]).any():
             raise ValueError(
                 "kernel tiles plan: duplicate image rows share tile keys; "
                 "resolve duplicates (e.g. union_mosaic) first")
@@ -1728,214 +1191,6 @@ def _bucket_agg(binned: DataFrame, how: str) -> DataFrame:
     )
 
 
-def wgs84_to_cea_grid_cubic(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-    kernel: str = "catmull",
-    images: DataFrame | None = None,
-) -> DataFrame:
-    """CEA warp with CUBIC resampling: 4×4 neighbor gather with
-    piecewise-cubic weights, masked neighbors dropped and the weight
-    mass renormalized. explode(16) + equi-join + groupBy, no UDF.
-    kernel='catmull' (a = -0.5 — the GDAL 'cubic' kernel) or
-    'bspline' (the cubic B-spline basis — GDAL's 'cubicspline'
-    APPROXIMATING kernel: all-positive partition-of-unity weights,
-    smoothing rather than interpolating, hence LOCAL — no global
-    prefilter is involved in GDAL's mode either).
-
-    ``images`` switches to the tile-cogrouped gather
-    (``_kernel_gather_tiles``); ``px`` may then be None."""
-    spark = (px if px is not None else images).sparkSession
-    h, w = src_shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y0) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lon = xm / F.lit(R * k) * F.lit(180.0) / F.lit(math.pi)
-    lat = F.asin(ym * F.lit(k / R)) * F.lit(180.0) / F.lit(math.pi)
-    u = F.round((lat - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
-    v = F.round((lon - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)
-    if images is not None:
-        return _kernel_gather_tiles(images, target, u, v, kernel,
-                                    n_targets=th * tw, src_shape=src_shape)
-    return _kernel_gather(px, target, u, v, kernel)
-
-
-def cea_cubic_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-    kernel: str = "catmull",
-):
-    """Independent numpy cubic warp (same quantized index, same
-    valid-weight renormalization); kernel='catmull' | 'bspline'.
-    Returns (value, n_contrib)."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y0 + (tr + 0.5) * tcy
-    lon = xm / (R * k) * 180.0 / np.pi
-    lat = np.arcsin(ym * (k / R)) * 180.0 / np.pi
-    u = np.round((lat - y0g) / cy - 0.5, _Q)
-    v = np.round((lon - x0g) / cx - 0.5, _Q)
-    r0 = np.floor(u).astype(np.int64)
-    c0 = np.floor(v).astype(np.int64)
-    du, dv = u - r0, v - c0
-
-    def cm_catmull(t):
-        return np.where(t <= 1.0, 1.5 * t**3 - 2.5 * t**2 + 1.0,
-                        -0.5 * t**3 + 2.5 * t**2 - 4.0 * t + 2.0)
-
-    def cm_bspline(t):
-        return np.where(t <= 1.0, (4.0 - 6.0 * t**2 + 3.0 * t**3) / 6.0,
-                        (2.0 - t) ** 3 / 6.0)
-
-    cm = cm_catmull if kernel == "catmull" else cm_bspline
-
-    valid = full != ndv
-    num = np.zeros(out_shape)
-    den = np.zeros(out_shape)
-    cnt = np.zeros(out_shape, dtype=np.int64)
-    for a in (-1, 0, 1, 2):
-        for b in (-1, 0, 1, 2):
-            rr, cc = r0 + a, c0 + b
-            ok = (rr >= 0) & (rr < h) & (cc >= 0) & (cc < w)
-            ok &= valid[np.clip(rr, 0, h - 1), np.clip(cc, 0, w - 1)]
-            wgt = cm(np.abs(a - du)) * cm(np.abs(b - dv))
-            num[ok] += wgt[ok] * full[rr[ok], cc[ok]]
-            den[ok] += wgt[ok]
-            cnt[ok] += 1
-    out = np.full(out_shape, np.nan)
-    nz = np.abs(den) >= 0.05  # same weight-mass guard as the Spark path
-    out[nz] = num[nz] / den[nz]
-    return out, cnt
-
-
-def wgs84_to_cea_grid_lanczos(
-    px: DataFrame,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    src_shape: tuple[int, int],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-    a: int = 3,
-    images: DataFrame | None = None,
-) -> DataFrame:
-    """CEA warp with LANCZOS resampling (GDAL 'lanczos', a=3): 6×6
-    neighbor gather with L(t) = sinc(t)·sinc(t/a) weights, masked
-    neighbors dropped and the (signed) weight mass renormalized with
-    the same |Σw| >= 0.05 guard as cubic. explode(36) + equi-join +
-    groupBy, no UDF.
-
-    ``images`` switches to the tile-cogrouped gather
-    (``_kernel_gather_tiles``); ``px`` may then be None."""
-    spark = (px if px is not None else images).sparkSession
-    h, w = src_shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-
-    target = (
-        spark.range(th)
-        .select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-    )
-    xm = F.lit(X0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)
-    ym = F.lit(Y0) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)
-    lon = xm / F.lit(R * k) * F.lit(180.0) / F.lit(math.pi)
-    lat = F.asin(ym * F.lit(k / R)) * F.lit(180.0) / F.lit(math.pi)
-    u = F.round((lat - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
-    v = F.round((lon - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)
-    if images is not None:
-        return _kernel_gather_tiles(images, target, u, v, "lanczos", a,
-                                    n_targets=th * tw, src_shape=src_shape)
-    return _kernel_gather(px, target, u, v, "lanczos", a)
-
-
-def cea_lanczos_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    out_shape: tuple[int, int],
-    phi_s: float = 0.0,
-    a: int = 3,
-):
-    """Independent numpy Lanczos warp (same quantized index, same
-    weight-mass guard)."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y1, X1, Y0 = cea_bounds(x0g, y0g + h * cy, x0g + w * cx, y0g, phi_s)
-    tcx = (X1 - X0) / tw
-    tcy = (Y1 - Y0) / th
-    k = math.cos(math.radians(phi_s))
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y0 + (tr + 0.5) * tcy
-    lon = xm / (R * k) * 180.0 / np.pi
-    lat = np.arcsin(ym * (k / R)) * 180.0 / np.pi
-    u = np.round((lat - y0g) / cy - 0.5, _Q)
-    v = np.round((lon - x0g) / cx - 0.5, _Q)
-    r0 = np.floor(u).astype(np.int64)
-    c0 = np.floor(v).astype(np.int64)
-    du, dv = u - r0, v - c0
-
-    def lanc(t):
-        with np.errstate(invalid="ignore", divide="ignore"):
-            s = np.where(t == 0.0, 1.0, np.sin(np.pi * t) / (np.pi * t))
-            sa = np.where(t == 0.0, 1.0, np.sin(np.pi * t / a) / (np.pi * t / a))
-        return np.where(t < a, s * sa, 0.0)
-
-    valid = full != ndv
-    num = np.zeros(out_shape)
-    den = np.zeros(out_shape)
-    cnt = np.zeros(out_shape, dtype=np.int64)
-    for i in range(1 - a, a + 1):
-        for j in range(1 - a, a + 1):
-            rr, cc = r0 + i, c0 + j
-            ok = (rr >= 0) & (rr < h) & (cc >= 0) & (cc < w)
-            ok &= valid[np.clip(rr, 0, h - 1), np.clip(cc, 0, w - 1)]
-            wgt = lanc(np.abs(i - du)) * lanc(np.abs(j - dv))
-            num[ok] += wgt[ok] * full[rr[ok], cc[ok]]
-            den[ok] += wgt[ok]
-            cnt[ok] += 1
-    out = np.full(out_shape, np.nan)
-    nz = np.abs(den) >= 0.05
-    out[nz] = num[nz] / den[nz]
-    return out, cnt
-
-
 # ---------------------------------------------------------------------------
 # UTM / transverse Mercator (EPSG:326xx / 327xx, +proj=utm) — the
 # ellipsoidal Krüger series (4th order in the third flattening n; the
@@ -2075,42 +1330,6 @@ loc0 AS (SELECT trow, tcol, em, nm,
                 ({phi_terms}) * 180.0 / pi() AS lat
          FROM t3)"""
     return cte, "lon", "lat"
-
-
-# ---------------------------------------------------------------------------
-# Sinusoidal (the MODIS land-grid projection, +proj=sinu / ESRI:54008):
-# spherical closed forms x = R·λ·cos(φ), y = R·φ; inverse φ = y/R,
-# λ = x/(R·cos φ). Equal-area; warped by reproject_any (crs_funcs
-# 'sinu'), checked by the oracle below, which spells the inverse out
-# on its own.
-# ---------------------------------------------------------------------------
-
-def sinusoidal_numpy_oracle(
-    full: np.ndarray,
-    ndv: float,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    out_shape: tuple[int, int],
-) -> np.ndarray:
-    """Independent numpy sinusoidal nearest warp (pytest oracle)."""
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y0b, X1, Y1b = any_bounds(4326, "+proj=sinu", src_origin, src_cellsize, (h, w))
-    tcx = (X1 - X0) / tw
-    tcy = (Y0b - Y1b) / th
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y1b + (tr + 0.5) * tcy
-    lat = ym / R * 180.0 / np.pi
-    lon = xm / (R * np.cos(ym / R)) * 180.0 / np.pi
-    srow = np.floor(np.round((lat - y0g) / cy, _Q)).astype(np.int64)
-    scol = np.floor(np.round((lon - x0g) / cx, _Q)).astype(np.int64)
-    out = np.full(out_shape, ndv)
-    ok = (srow >= 0) & (srow < h) & (scol >= 0) & (scol < w)
-    out[ok] = full[srow[ok], scol[ok]]
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2357,6 +1576,8 @@ def crs_funcs(token: str) -> dict:
 
         return {"fwd_np": fwd_np, "inv_np": inv_np}
     if token == "sinu":
+        # the MODIS land-grid projection (ESRI:54008), equal-area:
+        # x = R·λ·cos(φ), y = R·φ
 
         def fwd_np(lon, lat):
             phi = np.radians(np.asarray(lat, np.float64))
@@ -2452,36 +1673,11 @@ def _project(df: DataFrame, fn, x: str, y: str,
         *df.columns, F.col("_p.x").alias(out[0]), F.col("_p.y").alias(out[1]))
 
 
-def _lattice(spark, out_shape: tuple[int, int], x0: float, y_top: float,
-             tcx: float, tcy: float, names=("xm", "ym")) -> DataFrame:
-    """The target grid, one row per cell: (trow, tcol) and the cell
-    center in target units; row 0 sits at ``y_top`` (tcy < 0 is
-    north-up)."""
-    th, tw = out_shape
-    return (
-        spark.range(th).select(F.col("id").alias("trow"))
-        .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
-        .select("trow", "tcol",
-                (F.lit(x0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx)).alias(names[0]),
-                (F.lit(y_top) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy)).alias(names[1]))
-    )
-
-
-def _nearest_join(px: DataFrame, tgt: DataFrame, sx: str, sy: str,
-                  src_origin: tuple[float, float],
-                  src_cellsize: tuple[float, float],
-                  carry: tuple[str, str]) -> DataFrame:
-    """Nearest gather of the projected lattice ``tgt`` (source-unit
-    coordinates in columns sx/sy): the quantized floor-stable source
-    index, left-joined against the pixel table."""
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    srow = F.floor(F.round((F.col(sy) - F.lit(y0g)) / F.lit(cy), _Q)).cast("long")
-    scol = F.floor(F.round((F.col(sx) - F.lit(x0g)) / F.lit(cx), _Q)).cast("long")
-    return tgt.select(
-        "trow", "tcol", *carry, srow.alias("row"), scol.alias("col"),
-    ).join(px.select("row", "col", "value"), ["row", "col"], "left").select(
-        "trow", "tcol", *carry, "value")
+def _cell_centers(x0: float, y_top: float, tcx: float, tcy: float):
+    """(xm, ym) Columns: the center of target cell (trow, tcol) in
+    target units; row 0 sits at ``y_top`` (tcy < 0 is north-up)."""
+    return (F.lit(x0) + (F.col("tcol") + F.lit(0.5)) * F.lit(tcx),
+            F.lit(y_top) + (F.col("trow") + F.lit(0.5)) * F.lit(tcy))
 
 
 def _boundary_samples(lon_a: float, lat_a: float, lon_b: float, lat_b: float,
@@ -2537,10 +1733,9 @@ def any_bounds(src_crs, dst_crs, src_origin, src_cellsize, src_shape,
                 "conic target: the extent spans the antimeridian of the "
                 "projection center — pass bbox_lonlat to window the warp")
     if dst_tok == "webmerc":
-        # same ±85.05112878 clip as the specialized webmerc plans, so a
-        # pole-reaching source gives the Mercator square — not
-        # arctanh(±1)=inf bounds — and reproject()'s extent for a
-        # webmerc target is resampling-mode-invariant (ADVICE r5)
+        # the ±85.05112878 Mercator-square convention (the XYZ tiler's),
+        # so a pole-reaching source gives the Mercator square — not
+        # arctanh(±1)=inf bounds
         lat_a = max(lat_a, -85.05112878)
         lat_b = min(lat_b, 85.05112878)
     lons, lats = _boundary_samples(lon_a, lat_a, lon_b, lat_b, n_samples)
@@ -2556,7 +1751,7 @@ def any_bounds(src_crs, dst_crs, src_origin, src_cellsize, src_shape,
 
 
 def reproject_any(
-    px: DataFrame,
+    px: DataFrame | None,
     src_crs,
     dst_crs,
     src_origin: tuple[float, float],
@@ -2565,38 +1760,59 @@ def reproject_any(
     out_shape: tuple[int, int],
     resampling: str = "nearest",
     bbox_lonlat=None,
-    n_samples: int = 64,
+    images: DataFrame | None = None,
 ) -> DataFrame:
-    """General warp between ANY two supported CRSs (wgs84, cea,
-    webmerc, sinu, utm:*, aea:*, lcc:*, merc3395, geog:*, tmd:*): the
-    target lattice is built in dst coordinates, inverse-projected to
-    lon/lat, forward-projected to src coordinates, and gathered with
-    the standard quantized affine join. src_origin/src_cellsize are in
-    SRC CRS units. bbox_lonlat windows the extent (required when
-    either transform's domain is narrower than the source, e.g. UTM).
+    """The warp between ANY two supported CRSs (wgs84, cea, webmerc,
+    sinu, utm:*, aea:*, lcc:*, merc3395, geog:*, tmd:*), reference-
+    shaped (georasters.py:559-667): reproject(px, 'EPSG:4326',
+    'EPSG:3857', ..., resampling='bilinear'); CRSs are anything
+    ``parse_crs`` takes.  The target lattice is built in dst
+    coordinates, inverse-projected to lon/lat, forward-projected to
+    src coordinates, and gathered with the standard quantized affine
+    join. src_origin/src_cellsize are in SRC CRS units.  bbox_lonlat =
+    (lon_min, lat_min, lon_max, lat_max) windows the target extent
+    (GDAL -te analog; required for UTM/TM targets of sources reaching
+    past ±40° of the central meridian, and for conic targets of
+    antimeridian-spanning sources).
 
-    resampling covers the COMPLETE GDAL mode dict for every CRS pair
+    resampling covers the COMPLETE gdalwarp -r enum for every CRS pair
     (reference georasters.py:592-606): nearest | bilinear | cubic
     (Catmull-Rom) | cubicspline (B-spline) | lanczos (a=3) via the
     shared inverse-warp kernel gather, plus the forward-bucket
-    aggregates average | sum | min | max | count | mode (source
-    centers forward-project into target cells; one grouped
-    aggregate — only non-empty cells are emitted, like GDAL)."""
+    aggregates average | sum | min | max | count | mode | rms | med |
+    q1 | q3 (source centers forward-project into target cells; one
+    grouped aggregate — only non-empty cells are emitted, like GDAL).
+    Nearest output is (trow, tcol, xm, ym, value), xm/ym the target
+    cell center in target CRS units; the other modes return (trow,
+    tcol, value, n_contrib).
+
+    ``images`` (the tiles table) switches the inverse gathers to the
+    tile-cogrouped plans — nearest through ``gather_from_tiles``,
+    bilinear through ``_bilinear_from_lonlat_tiles``, the kernels
+    through ``_kernel_gather_tiles`` — which shuffle the target lattice
+    instead of the source pixels and are value-identical to the pixel
+    joins (pytest-pinned); ``px`` may then be None.  The aggregate
+    modes forward-bucket source pixels, so they need ``px``."""
     src = parse_crs(src_crs)
     dst = parse_crs(dst_crs)
+    if src == dst == "wgs84":
+        raise NotImplementedError("identity reproject: use resize/extract")
     sfn = crs_funcs(src)
     dfn = crs_funcs(dst)
     th, tw = out_shape
     x0g, y0g = src_origin
     cx, cy = src_cellsize
     X0, Y0b, X1, Y1b = any_bounds(src_crs, dst_crs, src_origin, src_cellsize,
-                                  src_shape, bbox_lonlat, n_samples)
+                                  src_shape, bbox_lonlat)
     tcx = (X1 - X0) / tw
     tcy = (Y0b - Y1b) / th  # negative: row 0 at max y
     kern = {"cubic": "catmull", "cubicspline": "bspline",
             "lanczos": "lanczos"}.get(resampling)
     agg = _AGG_MODES.get(resampling)
     if agg is not None:
+        if px is None:
+            raise ValueError(f"resampling {resampling!r} forward-buckets "
+                             "source pixels: pass px, not only images")
         # forward-bucket path: every valid SOURCE cell center maps
         # src units -> lon/lat -> dst units and bins into its target
         # cell; scan + one grouped aggregate, map-side partials
@@ -2620,176 +1836,49 @@ def reproject_any(
     if resampling not in ("nearest", "bilinear") and kern is None:
         raise _unknown_mode(resampling)
     # inverse gather: target cell center -> lon/lat -> source units
-    tgt = _project(_lattice(px.sparkSession, out_shape, X0, Y1b, tcx, tcy),
-                   lambda x, y: sfn["fwd_np"](*dfn["inv_np"](x, y)),
+    spark = (px if px is not None else images).sparkSession
+    xm, ym = _cell_centers(X0, Y1b, tcx, tcy)
+    lattice = (spark.range(th).select(F.col("id").alias("trow"))
+               .crossJoin(spark.range(tw).select(F.col("id").alias("tcol")))
+               .select("trow", "tcol", xm.alias("xm"), ym.alias("ym")))
+    tgt = _project(lattice, lambda x, y: sfn["fwd_np"](*dfn["inv_np"](x, y)),
                    "xm", "ym")
+    sx, sy = F.col("_sx"), F.col("_sy")
+    tiled = dict(n_targets=th * tw, src_shape=src_shape)
     if resampling == "bilinear":
-        return _bilinear_from_lonlat(px, tgt, F.col("_sx"), F.col("_sy"),
-                                     src_origin, src_cellsize)
+        if images is not None:
+            return _bilinear_from_lonlat_tiles(images, tgt, sx, sy, src_origin,
+                                               src_cellsize, **tiled)
+        return _bilinear_from_lonlat(px, tgt, sx, sy, src_origin, src_cellsize)
     if kern is not None:
-        u = F.round((F.col("_sy") - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
-        v = F.round((F.col("_sx") - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)
+        u = F.round((sy - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
+        v = F.round((sx - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)
+        if images is not None:
+            return _kernel_gather_tiles(images, tgt, u, v, kern, **tiled)
         return _kernel_gather(px, tgt, u, v, kern)
-    return _nearest_join(px, tgt, "_sx", "_sy", src_origin, src_cellsize,
-                         ("xm", "ym"))
+    # nearest: the quantized floor-stable source index
+    idx = tgt.select(
+        "trow", "tcol", "xm", "ym",
+        F.floor(F.round((sy - F.lit(y0g)) / F.lit(cy), _Q)).cast("long").alias("row"),
+        F.floor(F.round((sx - F.lit(x0g)) / F.lit(cx), _Q)).cast("long").alias("col"))
+    if images is None:
+        # no semi-join prefilter on px: the source rows/cols in use come
+        # from the projected lattice, so deriving them would run the
+        # projection pass twice more, which costs more than the smaller
+        # shuffle saves except at large downsampling ratios; images= is
+        # the path for scale
+        return (idx.join(px.select("row", "col", "value"), ["row", "col"], "left")
+                .select("trow", "tcol", "xm", "ym", "value"))
+    # xm/ym are pure functions of trow/tcol: recompute them AFTER the
+    # gather (same Column expressions, so bit-identical values) instead
+    # of carrying two doubles per row through the shuffle and both
+    # Arrow crossings
+    g = gather_from_tiles(idx.select("trow", "tcol", "row", "col"), images,
+                          carry=(), **tiled)
+    return g.select("trow", "tcol", xm.alias("xm"), ym.alias("ym"), "value")
 
 
-def reproject_any_numpy_oracle(full: np.ndarray, ndv: float, src_crs, dst_crs,
-                               src_origin, src_cellsize, out_shape,
-                               bbox_lonlat=None, n_samples: int = 64):
-    """Independent numpy oracle for reproject_any (nearest)."""
-    src = parse_crs(src_crs)
-    dst = parse_crs(dst_crs)
-    sfn = crs_funcs(src)
-    dfn = crs_funcs(dst)
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y0b, X1, Y1b = any_bounds(src_crs, dst_crs, src_origin, src_cellsize,
-                                  (h, w), bbox_lonlat, n_samples)
-    tcx = (X1 - X0) / tw
-    tcy = (Y0b - Y1b) / th
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y1b + (tr + 0.5) * tcy
-    lon, lat = dfn["inv_np"](xm, ym)
-    sx, sy = sfn["fwd_np"](lon, lat)
-    srow = np.floor(np.round((sy - y0g) / cy, _Q)).astype(np.int64)
-    scol = np.floor(np.round((sx - x0g) / cx, _Q)).astype(np.int64)
-    out = np.full(out_shape, ndv)
-    ok = (srow >= 0) & (srow < h) & (scol >= 0) & (scol < w)
-    out[ok] = full[srow[ok], scol[ok]]
-    return out
-
-
-def _np_kernel_wfun(kernel: str, a: int = 3):
-    """numpy twin of _kernel_offsets_wfun (independent oracle).
-    DELIBERATELY separate from the production `_kernel_wfun_np`:
-    this is the check side — merging them would be tautological."""
-    if kernel == "catmull":
-        return (-1, 0, 1, 2), lambda t: np.where(
-            t <= 1.0, 1.5 * t**3 - 2.5 * t**2 + 1.0,
-            -0.5 * t**3 + 2.5 * t**2 - 4.0 * t + 2.0)
-    if kernel == "bspline":
-        return (-1, 0, 1, 2), lambda t: np.where(
-            t <= 1.0, (4.0 - 6.0 * t**2 + 3.0 * t**3) / 6.0,
-            (2.0 - t) ** 3 / 6.0)
-    if kernel == "lanczos":
-
-        def lanc(t):
-            t = np.asarray(t, np.float64)
-            pit = np.pi * t
-            sinc = np.where(t == 0.0, 1.0, np.sin(pit) / np.where(pit == 0, 1, pit))
-            pita = pit / a
-            sinca = np.where(t == 0.0, 1.0,
-                             np.sin(pita) / np.where(pita == 0, 1, pita))
-            return np.where(t < a, sinc * sinca, 0.0)
-
-        return tuple(range(1 - a, a + 1)), lanc
-    raise ValueError(f"unknown resampling kernel {kernel!r}")
-
-
-def reproject_any_kernel_numpy_oracle(full: np.ndarray, ndv: float, src_crs,
-                                      dst_crs, src_origin, src_cellsize,
-                                      out_shape, kernel: str,
-                                      bbox_lonlat=None, n_samples: int = 64,
-                                      a: int = 3):
-    """Independent numpy oracle for reproject_any with a convolution
-    kernel (cubic/cubicspline/lanczos): same quantized fractional
-    index, same valid-weight renormalization with the |Σw| >= 0.05
-    guard. Returns (value, n_contrib); value nan where no estimate."""
-    sfn = crs_funcs(parse_crs(src_crs))
-    dfn = crs_funcs(parse_crs(dst_crs))
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y0b, X1, Y1b = any_bounds(src_crs, dst_crs, src_origin, src_cellsize,
-                                  (h, w), bbox_lonlat, n_samples)
-    tcx = (X1 - X0) / tw
-    tcy = (Y0b - Y1b) / th
-    tr, tc = np.meshgrid(np.arange(th), np.arange(tw), indexing="ij")
-    xm = X0 + (tc + 0.5) * tcx
-    ym = Y1b + (tr + 0.5) * tcy
-    lon, lat = dfn["inv_np"](xm, ym)
-    sx, sy = sfn["fwd_np"](lon, lat)
-    u = np.round((sy - y0g) / cy - 0.5, _Q)
-    v = np.round((sx - x0g) / cx - 0.5, _Q)
-    r0 = np.floor(u).astype(np.int64)
-    c0 = np.floor(v).astype(np.int64)
-    du, dv = u - r0, v - c0
-    offs, wf = _np_kernel_wfun(kernel, a)
-    valid = full != ndv
-    num = np.zeros(out_shape)
-    den = np.zeros(out_shape)
-    cnt = np.zeros(out_shape, dtype=np.int64)
-    for i in offs:
-        for j in offs:
-            rr, cc = r0 + i, c0 + j
-            ok = (rr >= 0) & (rr < h) & (cc >= 0) & (cc < w)
-            ok &= valid[np.clip(rr, 0, h - 1), np.clip(cc, 0, w - 1)]
-            wgt = wf(np.abs(i - du)) * wf(np.abs(j - dv))
-            num[ok] += wgt[ok] * full[rr[ok], cc[ok]]
-            den[ok] += wgt[ok]
-            cnt[ok] += 1
-    out = np.full(out_shape, np.nan)
-    nz = np.abs(den) >= 0.05
-    out[nz] = num[nz] / den[nz]
-    return out, cnt
-
-
-def reproject_any_average_numpy_oracle(full: np.ndarray, ndv: float, src_crs,
-                                       dst_crs, src_origin, src_cellsize,
-                                       out_shape, how: str = "mean",
-                                       bbox_lonlat=None, n_samples: int = 64):
-    """Independent numpy oracle for reproject_any's forward-bucket
-    aggregates. Returns (value, n_contrib); value nan (and count 0)
-    for empty target cells — the engine emits no row for those."""
-    sfn = crs_funcs(parse_crs(src_crs))
-    dfn = crs_funcs(parse_crs(dst_crs))
-    h, w = full.shape
-    th, tw = out_shape
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    X0, Y0b, X1, Y1b = any_bounds(src_crs, dst_crs, src_origin, src_cellsize,
-                                  (h, w), bbox_lonlat, n_samples)
-    tcx = (X1 - X0) / tw
-    tcy = (Y0b - Y1b) / th
-    rr, cc = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-    xc = x0g + (cc + 0.5) * cx
-    yc = y0g + (rr + 0.5) * cy
-    lon, lat = sfn["inv_np"](xc, yc)
-    X, Y = dfn["fwd_np"](lon, lat)
-    trow = np.floor(np.round((Y - Y1b) / tcy, _Q)).astype(np.int64)
-    tcol = np.floor(np.round((X - X0) / tcx, _Q)).astype(np.int64)
-    ok = (full != ndv) & (trow >= 0) & (trow < th) & (tcol >= 0) & (tcol < tw)
-    val = np.full(out_shape, np.nan)
-    cnt = np.zeros(out_shape, dtype=np.int64)
-    buckets: dict = {}
-    for t_r, t_c, v in zip(trow[ok], tcol[ok], full[ok]):
-        buckets.setdefault((int(t_r), int(t_c)), []).append(float(v))
-    for (t_r, t_c), vs in buckets.items():
-        cnt[t_r, t_c] = len(vs)
-        if how == "mean":
-            val[t_r, t_c] = sum(vs) / len(vs)
-        elif how == "sum":
-            val[t_r, t_c] = sum(vs)
-        elif how == "min":
-            val[t_r, t_c] = min(vs)
-        elif how == "max":
-            val[t_r, t_c] = max(vs)
-        elif how == "count":
-            val[t_r, t_c] = len(vs)
-        elif how == "mode":
-            counts: dict = {}
-            for v in vs:
-                counts[v] = counts.get(v, 0) + 1
-            best = max(counts.items(), key=lambda kv: (kv[1], -kv[0]))
-            val[t_r, t_c] = best[0]
-        else:
-            raise ValueError(f"unknown resampling aggregate {how!r}")
-    return val, cnt
+reproject = reproject_any
 
 
 # ---------------------------------------------------------------------------
@@ -3305,15 +2394,14 @@ def warp_cutline(px: DataFrame | None,
                  src_shape: tuple[int, int],
                  out_shape: tuple[int, int],
                  zones,
-                 phi_s: float = 0.0,
                  images: DataFrame | None = None) -> DataFrame:
-    """gdalwarp -cutline role: warp onto the CEA target grid and keep
-    only target cells whose CENTER falls inside a cutline polygon
-    (cutline given in the source CRS lon/lat, GDAL's default; concave
-    rings and holes via the even-odd kernel).  Returns (trow, tcol,
-    zone_id, xm, ym, value) — cells outside every cutline are dropped,
-    a cell inside k cutlines appears k times (one per zone_id, the
-    multi-cutline analog of running gdalwarp per cutline).
+    """gdalwarp -cutline role: warp a WGS84 source onto the CEA target
+    grid and keep only target cells whose CENTER falls inside a cutline
+    polygon (cutline given in the source CRS lon/lat, GDAL's default;
+    concave rings and holes via the even-odd kernel).  Returns (trow,
+    tcol, zone_id, xm, ym, value) — cells outside every cutline are
+    dropped, a cell inside k cutlines appears k times (one per zone_id,
+    the multi-cutline analog of running gdalwarp per cutline).
 
     Plan: the standard warp (pixel join or tile cogroup) + the target
     centers' closed-form inverse back to lon/lat as pure Columns + the
@@ -3321,11 +2409,10 @@ def warp_cutline(px: DataFrame | None,
     cutline never shuffles pixels, it rides the already-warped rows."""
     from .spatial_join import pip_join
 
-    warped = wgs84_to_cea_grid(px, src_origin, src_cellsize, src_shape,
-                               out_shape, phi_s=phi_s, images=images)
-    k = math.cos(math.radians(phi_s))
-    lon = F.col("xm") / F.lit(R * k) * F.lit(180.0) / F.lit(math.pi)
-    lat = F.asin(F.col("ym") * F.lit(k / R)) * F.lit(180.0) / F.lit(math.pi)
+    warped = reproject_any(px, 4326, "cea", src_origin, src_cellsize,
+                           src_shape, out_shape, images=images)
+    lon = F.col("xm") / F.lit(R) * F.lit(180.0) / F.lit(math.pi)
+    lat = F.asin(F.col("ym") * F.lit(1.0 / R)) * F.lit(180.0) / F.lit(math.pi)
     withc = warped.select("trow", "tcol", "xm", "ym", "value",
                           lon.alias("xc"), lat.alias("yc"))
     hits = pip_join(withc, zones, mode="center")
@@ -3338,23 +2425,19 @@ def warp_cutline_sql(px_cte: str,
                      src_cellsize: tuple[float, float],
                      src_shape: tuple[int, int],
                      out_shape: tuple[int, int],
-                     zones,
-                     phi_s: float = 0.0) -> str:
+                     zones) -> str:
     """DuckDB oracle for warp_cutline: the wgs84_to_cea_sql lattice +
     the even-odd crossing-number predicate per zone over the SAME
     inverse lon/lat expressions."""
     from ..sources.synth import zone_sql_predicate_evenodd
 
-    k = math.cos(math.radians(phi_s))
-    lon = f"(xm / {dlit(R * k)} * 180.0 / pi())"
-    lat = f"(asin(ym * {dlit(k / R)}) * 180.0 / pi())"
+    lon, lat = _cea_lonlat_sql("xm", "ym")
     preds = " UNION ALL ".join(
         f"SELECT trow, tcol, CAST({z.zone_id} AS BIGINT) AS zone_id, xm, ym, "
         f"row, col FROM loc WHERE "
         + zone_sql_predicate_evenodd(z, lon, lat)
         for z in zones)
-    ctes = _cea_tgt_loc_ctes(src_origin, src_cellsize, src_shape,
-                             out_shape, phi_s)
+    ctes = _cea_tgt_loc_ctes(src_origin, src_cellsize, src_shape, out_shape)
     return f"""WITH {px_cte},
 {ctes},
 hits AS ({preds})

@@ -235,50 +235,6 @@ SELECT row, col, value,
 FROM t"""
 
 
-def terrain_numpy_oracle(full: np.ndarray, ndv: float, cellsize: tuple[float, float],
-                         zfactor: float = 1.0, azimuth: float = 315.0,
-                         altitude: float = 45.0):
-    """Independent numpy Horn implementation (array shifts) for pytest:
-    returns (slope_deg, aspect_deg, hillshade) with nan where NULL."""
-    cx, cy = cellsize
-    h, w = full.shape
-    valid = full != ndv
-    sx = np.zeros((h, w))
-    sy = np.zeros((h, w))
-    cnt = np.zeros((h, w), dtype=np.int64)
-    for dr, dc, wx, wy in HORN_OFFSETS:
-        # cell (r, c) gathers neighbor (r+dr, c+dc): dst = the cells,
-        # src = the +offset-shifted slice (direction matters — sx/sy
-        # are SIGNED; a flipped shift negates both and rotates the
-        # aspect by 180°)
-        dst = (slice(max(0, -dr), h - max(0, dr)), slice(max(0, -dc), w - max(0, dc)))
-        src = (slice(max(0, dr), h + min(0, dr) if dr < 0 else h),
-               slice(max(0, dc), w + min(0, dc) if dc < 0 else w))
-        ok = valid[dst] & valid[src]
-        sx[dst] += np.where(ok, wx * full[src], 0.0)
-        sy[dst] += np.where(ok, wy * full[src], 0.0)
-        cnt[dst] += ok
-    full8 = valid & (cnt == 8)
-    dzdx = sx * zfactor / (8.0 * abs(cx))
-    dzdy = sy * zfactor / (8.0 * abs(cy))
-    slope_rad = np.arctan(np.sqrt(dzdx * dzdx + dzdy * dzdy))
-    slope = np.where(full8, np.degrees(slope_rad), np.nan)
-    a = np.degrees(np.arctan2(dzdy, -dzdx))
-    aspect = np.mod(90.0 - a, 360.0)
-    flat = (sx == 0) & (sy == 0)
-    aspect = np.where(full8 & ~flat, aspect, np.nan)
-    zen = math.radians(90.0 - altitude)
-    az = math.radians(azimuth)
-    asp_rad = np.where(flat, 0.0, np.radians(np.mod(90.0 - a, 360.0)))
-    hs = 255.0 * np.maximum(
-        0.0,
-        math.cos(zen) * np.cos(slope_rad)
-        + math.sin(zen) * np.sin(slope_rad) * np.cos(az - asp_rad),
-    )
-    hs = np.where(full8, hs, np.nan)
-    return slope, aspect, hs
-
-
 def hillshade_multidirectional(
     px: DataFrame,
     cellsize: tuple[float, float],

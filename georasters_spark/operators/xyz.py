@@ -9,8 +9,9 @@ Spark-first over the engine's images table:
 
 * ``xyz_base_tiles`` — the base level.  The target lattice is generated
   from two ``spark.range`` calls (no data scan), each global pixel's
-  source index is a pure-Column inverse-Mercator expression (the exact
-  quantized-floor contract of ``reproject.wgs84_to_webmercator_grid``),
+  source index is a pure-Column inverse-Mercator expression on the
+  global Mercator square (the engine-stable quantized floor of the
+  ``reproject`` module docstring),
   the gather runs through ``reproject.gather_from_tiles`` (shuffle =
   M lattice rows + #tiles, each source tile decoded ONCE), and tiles
   assemble + PNG-encode in one grouped-map keyed by (x, y).  Pixels

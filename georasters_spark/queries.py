@@ -1146,8 +1146,8 @@ def q_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = SPEC
     px = _px(spark, SPEC).select("row", "col", F.col("value").cast("long").alias("value"))
-    return RP.wgs84_to_cea_grid(
-        px,
+    return RP.reproject(
+        px, 4326, "cea",
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),
@@ -1166,8 +1166,8 @@ def q_reproject_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import reproject as RP
 
     spec = SPEC
-    return RP.wgs84_to_cea_grid(
-        None,
+    return RP.reproject(
+        None, 4326, "cea",
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),
@@ -1582,12 +1582,13 @@ def q_reproject_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = SPEC
     px = _px(spark, SPEC).select("row", "col", F.col("value").cast("long").alias("value"))
-    return RP.wgs84_to_cea_grid_bilinear(
-        px,
+    return RP.reproject(
+        px, 4326, "cea",
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),
         out_shape=(90, 180),
+        resampling="bilinear",
     )
 
 
@@ -1600,12 +1601,13 @@ def q_reproject_tiles_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import reproject as RP
 
     spec = SPEC
-    return RP.wgs84_to_cea_grid_bilinear(
-        None,
+    return RP.reproject(
+        None, 4326, "cea",
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),
         out_shape=(90, 180),
+        resampling="bilinear",
         images=images_for(spark, spec),
     )
 
@@ -1720,9 +1722,8 @@ def q_reproject_webmerc_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebMercator × cubic through the composed warp, POLE-REACHING
     source and no bbox — the r5 advisor's failure scenario: any_bounds
     must clip the lattice to the ±85.05112878 Mercator square (the
-    same convention as the specialized nearest/bilinear plans, so the
-    extent is resampling-mode-invariant) instead of silently warping
-    an arctanh(±1)=inf lattice to all-NULL."""
+    same extent as reproject_webmerc) instead of silently warping an
+    arctanh(±1)=inf lattice to all-NULL."""
     from .operators import reproject as RP
 
     spec = SPEC
@@ -1924,8 +1925,8 @@ def q_reproject_webmerc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = SPEC
     px = _px(spark, SPEC).select("row", "col", F.col("value").cast("long").alias("value"))
-    return RP.wgs84_to_webmercator_grid(
-        px,
+    return RP.reproject(
+        px, 4326, "webmercator",
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),

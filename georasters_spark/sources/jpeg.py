@@ -1007,31 +1007,6 @@ def encode_gray_progressive(img: np.ndarray, quality: int = 85) -> bytes:
     return out
 
 
-def _enc_dc_first_interleaved(zzs: list, al: int) -> bytes:
-    bw = _BitWriter()
-    prev = [0] * len(zzs)
-    for mi in range(zzs[0].shape[0]):
-        for ci, zz in enumerate(zzs):
-            v = int(zz[mi][0]) >> al
-            s, payload = _magnitude(v - prev[ci])
-            code, ln = _DC_ENC[s]
-            bw.put(code, ln)
-            if s:
-                bw.put(payload, s)
-            prev[ci] = v
-    bw.flush()
-    return bytes(bw.out)
-
-
-def _enc_dc_refine_interleaved(zzs: list, al: int) -> bytes:
-    bw = _BitWriter()
-    for mi in range(zzs[0].shape[0]):
-        for zz in zzs:
-            bw.put((int(zz[mi][0]) >> al) & 1, 1)
-    bw.flush()
-    return bytes(bw.out)
-
-
 def encode_color_progressive(rgb: np.ndarray, quality: int = 85,
                              subsampling: str = "444") -> bytes:
     """PROGRESSIVE color JPEG (SOF2) at 4:4:4 / 4:2:2 / 4:2:0: an

@@ -330,6 +330,8 @@ def test_resize_interp_orders(spark):
     test_reproject.test_resize_cubic_spline_vs_numpy_oracle and the
     resize_cubic_spline gate."""
     import pytest
+
+    import numpy_oracles as NO
     from georasters_spark.operators import reproject as RP
 
     h, w = 12, 15
@@ -355,7 +357,7 @@ def test_resize_interp_orders(spark):
         if kern is None:
             offs, wf = (0, 1), None
         else:
-            offs, wf = RP._np_kernel_wfun(kern)
+            offs, wf = NO._np_kernel_wfun(kern)
         num = np.zeros(out); den = np.zeros(out)
         for i in offs:
             for j in offs:

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import numpy_oracles as NO
 from georasters_spark.operators import pixels as PX
 from georasters_spark.operators import reproject as RP
 from georasters_spark.sources import synth
@@ -15,8 +16,8 @@ def test_wgs84_to_cea_matches_numpy(spark, images_t1):
     spec = synth.T1
     out_shape = (180, 360)
     px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    got = RP.wgs84_to_cea_grid(
-        px,
+    got = RP.reproject(
+        px, 4326, 6933,
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),
@@ -27,7 +28,7 @@ def test_wgs84_to_cea_matches_numpy(spark, images_t1):
     grid[vals.trow.to_numpy(), vals.tcol.to_numpy()] = vals.value.to_numpy()
 
     full = synth.stitched_array(spec).astype(np.float64)
-    exp = RP.warp_numpy_oracle(
+    exp = NO.warp_numpy_oracle(
         full, spec.ndv, (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape
     )
     # masked-source cells land as NULL -> ndv in grid; oracle writes the
@@ -45,8 +46,8 @@ def test_wgs84_to_webmercator_matches_numpy(spark, images_t1):
     spec = synth.T1
     out_shape = (128, 128)
     px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    got = RP.wgs84_to_webmercator_grid(
-        px,
+    got = RP.reproject(
+        px, 4326, 3857,
         src_origin=(spec.x0, spec.y0),
         src_cellsize=(spec.cellx, spec.celly),
         src_shape=(spec.height, spec.width),
@@ -56,7 +57,7 @@ def test_wgs84_to_webmercator_matches_numpy(spark, images_t1):
     vals = got.dropna(subset=["value"])
     grid[vals.trow.to_numpy(), vals.tcol.to_numpy()] = vals.value.to_numpy()
     full = synth.stitched_array(spec).astype(np.float64)
-    exp = RP.webmercator_numpy_oracle(
+    exp = NO.webmercator_numpy_oracle(
         full, spec.ndv, (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape
     )
     mismatch = (grid != exp).sum()
@@ -67,11 +68,11 @@ def test_cea_bilinear_matches_numpy(spark, images_t1):
     spec = synth.T1
     out_shape = (90, 180)
     px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    got = RP.wgs84_to_cea_grid_bilinear(
-        px, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-        (spec.height, spec.width), out_shape,
+    got = RP.reproject(
+        px, 4326, 6933, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        (spec.height, spec.width), out_shape, resampling="bilinear",
     ).toPandas()
-    exp, cnt = RP.cea_bilinear_numpy_oracle(
+    exp, cnt = NO.cea_bilinear_numpy_oracle(
         synth.stitched_array(spec).astype(np.float64), spec.ndv,
         (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape,
     )
@@ -88,11 +89,11 @@ def test_cea_average_matches_numpy(spark, images_t1):
     spec = synth.T1
     out_shape = (45, 90)  # strong downsample: many sources per target
     px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    got = RP.wgs84_to_cea_grid_average(
-        px, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-        (spec.height, spec.width), out_shape,
+    got = RP.reproject(
+        px, 4326, 6933, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        (spec.height, spec.width), out_shape, resampling="average",
     ).toPandas()
-    s, n = RP.cea_average_numpy_oracle(
+    s, n = NO.cea_average_numpy_oracle(
         synth.stitched_array(spec).astype(np.float64), spec.ndv,
         (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape,
     )
@@ -107,13 +108,13 @@ def test_cea_cubic_matches_numpy(spark, images_t1):
     spec = synth.T1
     out_shape = (60, 120)
     px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    got = RP.wgs84_to_cea_grid_cubic(
-        px, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-        (spec.height, spec.width), out_shape,
+    got = RP.reproject(
+        px, 4326, 6933, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        (spec.height, spec.width), out_shape, resampling="cubic",
     ).toPandas()
-    exp, cnt = RP.cea_cubic_numpy_oracle(
+    exp, cnt = NO.cea_kernel_numpy_oracle(
         synth.stitched_array(spec).astype(np.float64), spec.ndv,
-        (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape,
+        (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape, "catmull",
     )
     vals = got.dropna(subset=["value"])
     assert len(vals) == int(np.isfinite(exp).sum())
@@ -139,11 +140,13 @@ def test_reproject_dispatcher_and_agg_modes(spark, images_t1):
     px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
     kw = dict(src_origin=(spec.x0, spec.y0), src_cellsize=(spec.cellx, spec.celly),
               src_shape=(spec.height, spec.width), out_shape=out_shape)
-    # dispatcher equivalences
+    # dispatcher equivalences: EPSG ints, EPSG strings and proj4 name
+    # the same warp
+    key = ["trow", "tcol"]
     a = RP.reproject(px, 4326, "EPSG:6933", resampling="nearest", **kw).toPandas()
-    b = RP.wgs84_to_cea_grid(px, kw["src_origin"], kw["src_cellsize"],
-                             kw["src_shape"], out_shape).toPandas()
-    assert len(a) == len(b)
+    b = RP.reproject(px, "EPSG:4326", "+proj=cea", **kw).toPandas()
+    assert a.sort_values(key).reset_index(drop=True).equals(
+        b.sort_values(key).reset_index(drop=True))
     m = RP.reproject(px, "+proj=longlat +datum=WGS84", "+proj=merc", **kw)
     assert m.count() == out_shape[0] * out_shape[1]
     with pytest.raises(NotImplementedError):
@@ -154,7 +157,7 @@ def test_reproject_dispatcher_and_agg_modes(spark, images_t1):
         RP.reproject(px, 4326, 6933, resampling="nope", **kw)
 
     # aggregate modes vs numpy forward-bucketing
-    s, n = RP.cea_average_numpy_oracle(
+    s, n = NO.cea_average_numpy_oracle(
         synth.stitched_array(spec).astype(np.float64), spec.ndv,
         kw["src_origin"], kw["src_cellsize"], out_shape,
     )
@@ -172,8 +175,8 @@ def test_reproject_dispatcher_and_agg_modes(spark, images_t1):
     h, w = full.shape
     rr, cc = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
     valid = full != spec.ndv
-    X0, Y1, X1, Y0 = RP.cea_bounds(spec.x0, spec.y0 + h * spec.celly,
-                                   spec.x0 + w * spec.cellx, spec.y0)
+    X0, Y1, X1, Y0 = RP.any_bounds(4326, 6933, kw["src_origin"],
+                                   kw["src_cellsize"], (h, w))
     tcx, tcy = (X1 - X0) / out_shape[1], (Y1 - Y0) / out_shape[0]
     X = (RP.R * 1.0) * np.radians(spec.x0 + (cc + 0.5) * spec.cellx)
     Y = (RP.R / 1.0) * np.sin(np.radians(spec.y0 + (rr + 0.5) * spec.celly))
@@ -197,7 +200,8 @@ def test_webmercator_inverse_roundtrip():
 
 
 def test_cea_bounds_monotone():
-    x0, y0, x1, y1 = RP.cea_bounds(-180, -90, 180, 90)
+    x0, y0, x1, y1 = RP.any_bounds(4326, "cea", (-180.0, 90.0), (1.0, -1.0),
+                                   (180, 360))
     assert x0 < x1 and y0 < y1
     assert abs(x1 - RP.R * np.pi) < 1e-6
 
@@ -219,13 +223,13 @@ def test_cea_lanczos_matches_numpy(spark, images_t1):
     spec = synth.T1
     out_shape = (45, 90)
     px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    got = RP.wgs84_to_cea_grid_lanczos(
-        px, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-        (spec.height, spec.width), out_shape,
+    got = RP.reproject(
+        px, 4326, 6933, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        (spec.height, spec.width), out_shape, resampling="lanczos",
     ).toPandas()
-    exp, cnt = RP.cea_lanczos_numpy_oracle(
+    exp, cnt = NO.cea_kernel_numpy_oracle(
         synth.stitched_array(spec).astype(np.float64), spec.ndv,
-        (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape,
+        (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape, "lanczos",
     )
     vals = got.dropna(subset=["value"])
     assert len(vals) == int(np.isfinite(exp).sum())
@@ -255,7 +259,7 @@ def test_webmercator_bilinear_matches_numpy(spark, images_t1):
         (spec.height, spec.width), out_shape,
         resampling="bilinear",
     ).toPandas()
-    exp, cnt = RP.webmercator_bilinear_numpy_oracle(
+    exp, cnt = NO.webmercator_bilinear_numpy_oracle(
         synth.stitched_array(spec).astype(np.float64), spec.ndv,
         (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape,
     )
@@ -328,7 +332,7 @@ def test_utm_warp_matches_numpy(spark, images_t1):
         resampling="nearest", bbox_lonlat=bbox,
     ).toPandas()
     full = synth.stitched_array(spec).astype(np.float64)
-    exp = RP.reproject_any_numpy_oracle(
+    exp = NO.reproject_any_numpy_oracle(
         full, spec.ndv, 4326, 32631, (spec.x0, spec.y0),
         (spec.cellx, spec.celly), out_shape, bbox_lonlat=bbox,
     )
@@ -345,7 +349,7 @@ def test_utm_warp_matches_numpy(spark, images_t1):
         (spec.height, spec.width), (32, 32),
         resampling="nearest", bbox_lonlat=bbox_s,
     ).toPandas()
-    exp_s = RP.reproject_any_numpy_oracle(
+    exp_s = NO.reproject_any_numpy_oracle(
         full, spec.ndv, 4326, "+proj=utm +zone=56 +south", (spec.x0, spec.y0),
         (spec.cellx, spec.celly), (32, 32), bbox_lonlat=bbox_s,
     )
@@ -386,7 +390,7 @@ def test_sinusoidal_matches_numpy(spark, images_t1):
         resampling="nearest",
     ).toPandas()
     full = synth.stitched_array(spec).astype(np.float64)
-    exp = RP.sinusoidal_numpy_oracle(
+    exp = NO.sinusoidal_numpy_oracle(
         full, spec.ndv, (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape
     )
     grid = np.full(out_shape, spec.ndv)
@@ -419,10 +423,9 @@ def test_cea_cubicspline_matches_numpy(spark, images_t1):
         (spec.height, spec.width), out_shape,
         resampling="cubicspline",
     ).toPandas()
-    exp, cnt = RP.cea_cubic_numpy_oracle(
+    exp, cnt = NO.cea_kernel_numpy_oracle(
         synth.stitched_array(spec).astype(np.float64), spec.ndv,
-        (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape,
-        kernel="bspline",
+        (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape, "bspline",
     )
     vals = got.dropna(subset=["value"])
     assert len(vals) == int(np.isfinite(exp).sum())
@@ -432,9 +435,9 @@ def test_cea_cubicspline_matches_numpy(spark, images_t1):
     # all-positive kernel: a convex combination -> inside the data range
     assert vals.value.min() >= 0.0 and vals.value.max() <= 1996.0
     # and it genuinely differs from the interpolating Catmull-Rom
-    exp_cm, _ = RP.cea_cubic_numpy_oracle(
+    exp_cm, _ = NO.cea_kernel_numpy_oracle(
         synth.stitched_array(spec).astype(np.float64), spec.ndv,
-        (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape,
+        (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape, "catmull",
     )
     both = np.isfinite(exp) & np.isfinite(exp_cm)
     assert np.abs(exp[both] - exp_cm[both]).max() > 1.0
@@ -516,7 +519,7 @@ def test_conic_warp_matches_numpy(spark, images_t1):
             (spec.height, spec.width), out_shape,
             resampling="nearest", bbox_lonlat=bbox,
         ).toPandas()
-        exp = RP.reproject_any_numpy_oracle(
+        exp = NO.reproject_any_numpy_oracle(
             full, spec.ndv, 4326, crs, (spec.x0, spec.y0),
             (spec.cellx, spec.celly), out_shape, bbox_lonlat=bbox,
         )
@@ -590,7 +593,7 @@ def test_windowed_request_spans_bbox(spark, images_t1):
         assert got.xm.max() == pytest.approx(X1 - hx), dst
         assert got.ym.min() == pytest.approx(Y0 + hy), dst
         assert got.ym.max() == pytest.approx(Y1 - hy), dst
-        exp = RP.reproject_any_numpy_oracle(full, spec.ndv, 4326, dst, so, sc,
+        exp = NO.reproject_any_numpy_oracle(full, spec.ndv, 4326, dst, so, sc,
                                             out, bbox_lonlat=bbox)
         grid = np.full(out, spec.ndv)
         vals = got.dropna(subset=["value"])
@@ -625,7 +628,7 @@ def test_reproject_any_matches_numpy(spark, images_t1):
             (spec.height, spec.width), out_shape,
             resampling="nearest", bbox_lonlat=bbox,
         ).toPandas()
-        exp = RP.reproject_any_numpy_oracle(
+        exp = NO.reproject_any_numpy_oracle(
             full, spec.ndv, src_crs, dst_crs, so, sc, out_shape, bbox_lonlat=bbox,
         )
         grid = np.full(out_shape, spec.ndv)
@@ -670,11 +673,20 @@ def test_reproject_any_plan_has_one_python_eval(spark, mode):
 
 def test_nonfinite_projection_gathers_null(spark):
     """A target cell whose projected source coordinate is non-finite
-    gets a NULL value (never the pixel at row 0 / col 0), and a source
+    gets a NULL value (never the pixel at row 0 / col 0) — from the
+    pixel join and from the tile-cogrouped gathers alike — and a source
     cell whose projected target coordinate is non-finite lands in no
     bucket (never in target cell (0, 0))."""
+    from georasters_spark.sources import codec
+
     h, w = 20, 30
     px, full = _dense_px(spark, h, w)
+    images = spark.createDataFrame(
+        [(tr, tc, codec.encode_tile(full[tr * 10:tr * 10 + 10,
+                                         tc * 15:tc * 15 + 15], "raw16", -1.0),
+          "raw16", 15, 10, -1.0) for tr in range(2) for tc in range(2)],
+        "tile_row long, tile_col long, bytes binary, fmt string, "
+        "w long, h long, ndv double")
     # inverse gather: the lattice center (lon 93, lat 0) sits 90° off
     # UTM 31N's central meridian, where the forward series is (inf, NaN)
     bbox, out = (83.0, -10.0, 103.0, 10.0), (5, 5)
@@ -685,11 +697,17 @@ def test_nonfinite_projection_gathers_null(spark):
     for mode in ("nearest", "bilinear", "cubic"):
         got = RP.reproject_any(px, 32631, 4326, so, sc, (h, w), out,
                                resampling=mode, bbox_lonlat=bbox).toPandas()
+        tiled = RP.reproject_any(None, 32631, 4326, so, sc, (h, w), out,
+                                 resampling=mode, bbox_lonlat=bbox,
+                                 images=images).toPandas()
+        got = got.sort_values(["trow", "tcol"], ignore_index=True)
+        assert tiled.sort_values(["trow", "tcol"], ignore_index=True).equals(
+            got), mode
         assert len(got) == 25, mode
         centre = got[(got.trow == 2) & (got.tcol == 2)]
         assert centre["value"].isna().all(), (mode, centre)
         if mode == "nearest":
-            exp = RP.reproject_any_numpy_oracle(full, -1.0, 32631, 4326, so,
+            exp = NO.reproject_any_numpy_oracle(full, -1.0, 32631, 4326, so,
                                                 sc, out, bbox_lonlat=bbox)
             grid = np.full(out, -1.0)
             vals = got.dropna(subset=["value"])
@@ -706,7 +724,7 @@ def test_nonfinite_projection_gathers_null(spark):
     px2, full2 = _dense_px(spark, h, 2)
     got = RP.reproject_any(px2, 32631, 4326, src_origin, src_cell, (h, 2), out,
                            resampling="count", bbox_lonlat=bbox).toPandas()
-    _, cnt = RP.reproject_any_average_numpy_oracle(
+    _, cnt = NO.reproject_any_average_numpy_oracle(
         full2, -1.0, 32631, 4326, src_origin, src_cell, out, "count",
         bbox_lonlat=bbox)
     assert cnt[0, 0] == 0 and cnt.sum() == h
@@ -841,7 +859,7 @@ class TestDatumAndWkt:
         org, cell = (-100.0, 40.0), (0.05, -0.05)
         out = (RP.reproject_any(px, 4326, 4267, org, cell, (h, w), (24, 36))
                .toPandas().sort_values(["trow", "tcol"]))
-        exp = RP.reproject_any_numpy_oracle(full, -1, 4326, 4267, org, cell,
+        exp = NO.reproject_any_numpy_oracle(full, -1, 4326, 4267, org, cell,
                                             (24, 36))
         got = out.value.fillna(-1).to_numpy().reshape(24, 36)
         np.testing.assert_array_equal(got, exp)
@@ -947,7 +965,7 @@ def test_dispatcher_routes_new_targets_and_never_falls_through(spark):
         got = (RP.reproject(px, 4326, dst, org, cell, (h, w), (8, 12),
                             bbox_lonlat=(-100.0, 39.4, -99.1, 40.0))
                .toPandas().sort_values(["trow", "tcol"]))
-        exp = RP.reproject_any_numpy_oracle(
+        exp = NO.reproject_any_numpy_oracle(
             full, -1, 4326, dst, org, cell, (8, 12),
             bbox_lonlat=(-100.0, 39.4, -99.1, 40.0))
         np.testing.assert_array_equal(
@@ -989,11 +1007,11 @@ def test_mode_matrix_any_crs(spark):
         if mode in ("cubic", "cubicspline", "lanczos"):
             kern = {"cubic": "catmull", "cubicspline": "bspline",
                     "lanczos": "lanczos"}[mode]
-            exp, _ = RP.reproject_any_kernel_numpy_oracle(
+            exp, _ = NO.reproject_any_kernel_numpy_oracle(
                 full, -1.0, 4326, dst, org, cell, out, kern, bbox_lonlat=bbox)
         else:
             how = {"average": "mean"}.get(mode, mode)
-            exp, _ = RP.reproject_any_average_numpy_oracle(
+            exp, _ = NO.reproject_any_average_numpy_oracle(
                 full, -1.0, 4326, dst, org, cell, out, how, bbox_lonlat=bbox)
         grid = np.full(out, np.nan)
         vals = got.dropna(subset=["value"])
@@ -1022,6 +1040,8 @@ def test_mode_matrix_any_crs(spark):
     check(3395, "average")      # ellipsoidal Mercator
     check(4267, "cubic")        # datum'd geographic (NAD27)
     check(27700, "average")     # TM-on-datum (OSGB)
+    check(6933, "lanczos")      # cylindrical equal-area, windowed
+    check(6933, "mode")
 
 
 def test_any_bounds_webmerc_pole_clip_and_nonfinite_raise():
@@ -1143,49 +1163,78 @@ def test_superblock_bounded_by_tile_span_and_window():
     assert b > 1 and ((b + 2) * 64) ** 2 * 8 <= RP._WINDOW_BYTES
 
 
+# The tile-cogrouped gathers (reproject_any(..., images=)) against the
+# pixel-join plans, on two CRS pairs: the global t1 grid warped to
+# cylindrical equal-area, and the same tiles georeferenced over CONUS
+# (lon -125..-65, lat 23..50) warped to Albers (a conic target).
+_TILE_PAIRS = {
+    6933: ((synth.T1.x0, synth.T1.y0), (synth.T1.cellx, synth.T1.celly)),
+    5070: ((-125.0, 50.0), (60.0 / 540, -27.0 / 270)),
+}
+
+
+def _tile_vs_pixel(images, dst, out_shape, mode):
+    """(pixel-plan, tile-plan) results of one warp as {(trow, tcol):
+    (value, n_contrib)} dicts — (value, xm to 6 dp) for nearest."""
+    so, sc = _TILE_PAIRS[dst]
+    args = (4326, dst, so, sc, (synth.T1.height, synth.T1.width), out_shape)
+    px = PX.pixel_table(images, valid_only=True).select("row", "col", "value")
+
+    def collect(df):
+        return {(r["trow"], r["tcol"]): (
+            r["value"], round(r["xm"], 6) if mode == "nearest" else r["n_contrib"])
+            for r in df.collect()}
+
+    return (collect(RP.reproject_any(px, *args, resampling=mode)),
+            collect(RP.reproject_any(None, *args, resampling=mode, images=images)))
+
+
+def _assert_same(a, b, min_valid):
+    """Equal keys, n_contrib and NULLs, values to 2e-6, and more than
+    ``min_valid`` non-NULL values (so the comparison is not vacuous)."""
+    assert set(a) == set(b)
+    mismatched = [k for k in a
+                  if a[k][1] != b[k][1]
+                  or (a[k][0] is None) != (b[k][0] is None)
+                  or (a[k][0] is not None and b[k][0] is not None
+                      and abs(a[k][0] - b[k][0]) > 2e-6)]
+    assert not mismatched, mismatched[:10]
+    assert sum(1 for v, _ in a.values() if v is not None) > min_valid
+
+
+def _edge_valid(a, dst, out_shape):
+    """Valid targets whose top-left kernel corner index is negative —
+    the upsampling edge case where a target keys to superblock -1."""
+    so, sc = _TILE_PAIRS[dst]
+    sx, sy = NO.reproject_any_source_xy(
+        4326, dst, so, sc, (synth.T1.height, synth.T1.width), out_shape)
+    with np.errstate(invalid="ignore"):
+        neg = ((np.floor((sy - so[1]) / sc[1] - 0.5) < 0)
+               | (np.floor((sx - so[0]) / sc[0] - 0.5) < 0))
+    return sum(1 for (tr, tc), (v, _) in a.items()
+               if neg[tr, tc] and v is not None)
+
+
 def test_gather_from_tiles_matches_pixel_join(spark, images_t1):
-    # the tile-cogrouped gather must be VALUE-IDENTICAL to the pixel
-    # left-join gather (same quantized row/col exprs, same NULL rule),
-    # including int-vs-long cogroup key hashing (a silent empty-group
-    # failure mode pinned here)
-    spec = synth.T1
-    kw = dict(src_origin=(spec.x0, spec.y0),
-              src_cellsize=(spec.cellx, spec.celly),
-              src_shape=(spec.height, spec.width), out_shape=(90, 180))
-    px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    a = {(r["trow"], r["tcol"]): (r["value"], round(r["xm"], 6))
-         for r in RP.wgs84_to_cea_grid(px, **kw).collect()}
-    b = {(r["trow"], r["tcol"]): (r["value"], round(r["xm"], 6))
-         for r in RP.wgs84_to_cea_grid(None, images=images_t1, **kw).collect()}
-    assert a == b
-    assert sum(1 for v, _ in a.values() if v is not None) > 5000
+    # the tile-cogrouped nearest gather must be VALUE-IDENTICAL to the
+    # pixel left-join gather (same quantized row/col exprs, same NULL
+    # rule, xm recomputed after the gather), including int-vs-long
+    # cogroup key hashing (a silent empty-group failure mode pinned here)
+    for dst in _TILE_PAIRS:
+        a, b = _tile_vs_pixel(images_t1, dst, (90, 180), "nearest")
+        assert a == b, dst
+        assert sum(1 for v, _ in a.values() if v is not None) > 5000, dst
 
 
 @pytest.mark.parametrize("mode", ["cubic", "lanczos"])
 def test_kernel_tiles_matches_pixel_join(spark, images_t1, mode):
     # cubic/lanczos tile-cogrouped gathers: corners shared with the
     # join plan (_kernel_corners), signed-weight-mass NULL guard
-    # reproduced over valid corners only
-    spec = synth.T1
-    kw = dict(src_origin=(spec.x0, spec.y0),
-              src_cellsize=(spec.cellx, spec.celly),
-              src_shape=(spec.height, spec.width), out_shape=(60, 120))
-    fn = (RP.wgs84_to_cea_grid_cubic if mode == "cubic"
-          else RP.wgs84_to_cea_grid_lanczos)
-    px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    a = {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
-         for r in fn(px, **kw).collect()}
-    b = {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
-         for r in fn(None, images=images_t1, **kw).collect()}
-    assert set(a) == set(b)
-    for key, (va, na) in a.items():
-        vb, nb = b[key]
-        assert na == nb, key
-        if va is None:
-            assert vb is None, key
-        else:
-            assert vb == pytest.approx(va, abs=2e-6), key
-    assert sum(1 for v, _ in a.values() if v is not None) > 3000
+    # reproduced over valid corners only.  More than 3000 of the 7200
+    # targets are valid on both pairs (measured: 6955/7136 on 6933,
+    # 5442/5431 on 5070 for cubic/lanczos)
+    for dst in _TILE_PAIRS:
+        _assert_same(*_tile_vs_pixel(images_t1, dst, (60, 120), mode), 3000)
 
 
 @pytest.mark.parametrize("mode", ["cubic", "lanczos"])
@@ -1195,27 +1244,10 @@ def test_kernel_tiles_matches_pixel_join_upsampling(spark, images_t1, mode):
     to superblock -1; the edge tiles must reach those tasks as halo
     (the bilinear upsampling review finding, applied to the r7 fused
     kernel plan)."""
-    spec = synth.T1
-    kw = dict(src_origin=(spec.x0, spec.y0),
-              src_cellsize=(spec.cellx, spec.celly),
-              src_shape=(spec.height, spec.width), out_shape=(540, 1080))
-    fn = (RP.wgs84_to_cea_grid_cubic if mode == "cubic"
-          else RP.wgs84_to_cea_grid_lanczos)
-    px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    a = {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
-         for r in fn(px, **kw).collect()}
-    b = {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
-         for r in fn(None, images=images_t1, **kw).collect()}
-    assert set(a) == set(b)
-    mismatched = [k for k in a
-                  if a[k][1] != b[k][1]
-                  or (a[k][0] is None) != (b[k][0] is None)
-                  or (a[k][0] is not None and b[k][0] is not None
-                      and abs(a[k][0] - b[k][0]) > 2e-6)]
-    assert not mismatched, mismatched[:10]
-    edge_valid = sum(1 for (tr, tc), (v, _) in a.items()
-                     if (tr == 0 or tc == 0) and v is not None)
-    assert edge_valid > 100
+    for dst in _TILE_PAIRS:
+        a, b = _tile_vs_pixel(images_t1, dst, (540, 1080), mode)
+        _assert_same(a, b, 175_000)
+        assert _edge_valid(a, dst, (540, 1080)) > 100, dst
 
 
 def test_bilinear_tiles_matches_pixel_join_upsampling(spark, images_t1):
@@ -1224,76 +1256,45 @@ def test_bilinear_tiles_matches_pixel_join_upsampling(spark, images_t1):
     -1 — the row-0/col-0 tiles must still reach those tasks as halo so
     the in-range corners renormalize exactly like the pixel plan
     (r7 review regression: a >=0 key filter NULLed those targets)."""
-    spec = synth.T1
-    kw = dict(src_origin=(spec.x0, spec.y0),
-              src_cellsize=(spec.cellx, spec.celly),
-              src_shape=(spec.height, spec.width), out_shape=(540, 1080))
-    px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    a = {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
-         for r in RP.wgs84_to_cea_grid_bilinear(px, **kw).collect()}
-    b = {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
-         for r in RP.wgs84_to_cea_grid_bilinear(
-             None, images=images_t1, **kw).collect()}
-    assert set(a) == set(b)
-    mismatched = [k for k in a
-                  if a[k][1] != b[k][1]
-                  or (a[k][0] is None) != (b[k][0] is None)
-                  or (a[k][0] is not None and b[k][0] is not None
-                      and abs(a[k][0] - b[k][0]) > 2e-6)]
-    assert not mismatched, mismatched[:10]
-    # the edge rows exist and are non-NULL where the pixel plan says so
-    edge_valid = sum(1 for (tr, tc), (v, _) in a.items()
-                     if (tr == 0 or tc == 0) and v is not None)
-    assert edge_valid > 100
+    for dst in _TILE_PAIRS:
+        a, b = _tile_vs_pixel(images_t1, dst, (540, 1080), "bilinear")
+        _assert_same(a, b, 175_000)
+        assert _edge_valid(a, dst, (540, 1080)) > 100, dst
 
 
 def test_bilinear_tiles_matches_pixel_join(spark, images_t1):
     # tile-cogrouped bilinear: same _bilinear_corners exprs, NULL
     # corners excluded from both the weighted sum and the weight mass
     # — must reproduce the inner-join renormalization (value to 6 dp,
-    # n_contrib exactly, NULL where no corner is valid)
-    spec = synth.T1
-    kw = dict(src_origin=(spec.x0, spec.y0),
-              src_cellsize=(spec.cellx, spec.celly),
-              src_shape=(spec.height, spec.width), out_shape=(90, 180))
-    px = PX.pixel_table(images_t1, valid_only=True).select("row", "col", "value")
-    a = {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
-         for r in RP.wgs84_to_cea_grid_bilinear(px, **kw).collect()}
-    b = {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
-         for r in RP.wgs84_to_cea_grid_bilinear(
-             None, images=images_t1, **kw).collect()}
-    assert set(a) == set(b)
-    for key, (va, na) in a.items():
-        vb, nb = b[key]
-        assert na == nb, key
-        if va is None:
-            assert vb is None, key
-        else:
-            assert vb == pytest.approx(va, abs=2e-6), key
-    assert sum(1 for v, _ in a.values() if v is not None) > 5000
+    # n_contrib exactly, NULL where no corner is valid).  More than 5000
+    # of the 16200 targets are valid on both pairs (measured: 16200 on
+    # 6933, 12521 on 5070)
+    for dst in _TILE_PAIRS:
+        _assert_same(*_tile_vs_pixel(images_t1, dst, (90, 180), "bilinear"),
+                     5000)
 
 
 def test_kernel_tiles_rejects_kernel_wider_than_tile(spark, images_t1):
     """The fused plan's ±1-block halo replication cannot feed a kernel
     whose half-width reaches past one tile — must refuse loudly, not
     drop contributions."""
-    spec = synth.T1
+    target = spark.range(4).select(F.col("id").alias("trow"),
+                                   F.lit(0).cast("long").alias("tcol"))
+    u = F.col("trow").cast("double")
     with pytest.raises(ValueError, match="half-width"):
-        RP.wgs84_to_cea_grid_lanczos(
-            None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-            (spec.height, spec.width), (30, 60), a=70, images=images_t1)
+        RP._kernel_gather_tiles(images_t1, target, u, u, "lanczos", a=70)
 
 
 def test_gather_from_tiles_rejects_duplicate_tile_keys(spark, images_t1):
     """A unioned/mosaic images table with two rows for the same
     (tile_row, tile_col) must raise, not decode an arbitrary one."""
-    spec = synth.T1
-    kw = dict(src_origin=(spec.x0, spec.y0),
-              src_cellsize=(spec.cellx, spec.celly),
-              src_shape=(spec.height, spec.width), out_shape=(30, 60))
     doubled = images_t1.unionByName(images_t1.limit(1))
-    with pytest.raises(Exception, match="image rows share tile"):
-        RP.wgs84_to_cea_grid(None, images=doubled, **kw).collect()
+    for dst in _TILE_PAIRS:
+        so, sc = _TILE_PAIRS[dst]
+        with pytest.raises(Exception, match="image rows share tile"):
+            RP.reproject_any(None, 4326, dst, so, sc,
+                             (synth.T1.height, synth.T1.width), (30, 60),
+                             images=doubled).collect()
 
 
 def test_gather_from_tiles_rejects_mixed_tile_shapes(spark, images_t1):
@@ -1302,10 +1303,6 @@ def test_gather_from_tiles_rejects_mixed_tile_shapes(spark, images_t1):
     misplace that tile's gathers."""
     from georasters_spark.sources import codec
 
-    spec = synth.T1
-    kw = dict(src_origin=(spec.x0, spec.y0),
-              src_cellsize=(spec.cellx, spec.celly),
-              src_shape=(spec.height, spec.width), out_shape=(30, 60))
     is_t = (F.col("tile_row") == 1) & (F.col("tile_col") == 1)
     t = images_t1.filter(is_t).first().asDict()
     arr = codec.decode_tile(bytes(t["bytes"]), t["fmt"], t["w"], t["h"], t["ndv"])
@@ -1313,8 +1310,12 @@ def test_gather_from_tiles_rejects_mixed_tile_shapes(spark, images_t1):
              w=48, h=32)
     mixed = images_t1.filter(~is_t).unionByName(
         spark.createDataFrame([t], images_t1.schema))
-    with pytest.raises(Exception, match="expected uniform"):
-        RP.wgs84_to_cea_grid(None, images=mixed, **kw).collect()
+    for dst in _TILE_PAIRS:
+        so, sc = _TILE_PAIRS[dst]
+        with pytest.raises(Exception, match="expected uniform"):
+            RP.reproject_any(None, 4326, dst, so, sc,
+                             (synth.T1.height, synth.T1.width), (30, 60),
+                             images=mixed).collect()
 
 
 def test_reproject_quartile_aggregates_vs_numpy(spark, images_t1):
@@ -1329,8 +1330,8 @@ def test_reproject_quartile_aggregates_vs_numpy(spark, images_t1):
     h, w = full.shape
     rr, cc = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
     valid = full != spec.ndv
-    X0, Y1, X1, Y0 = RP.cea_bounds(spec.x0, spec.y0 + h * spec.celly,
-                                   spec.x0 + w * spec.cellx, spec.y0)
+    X0, Y1, X1, Y0 = RP.any_bounds(4326, 6933, kw["src_origin"],
+                                   kw["src_cellsize"], (h, w))
     tcx, tcy = (X1 - X0) / out_shape[1], (Y1 - Y0) / out_shape[0]
     X = (RP.R * 1.0) * np.radians(spec.x0 + (cc + 0.5) * spec.cellx)
     Y = (RP.R / 1.0) * np.sin(np.radians(spec.y0 + (rr + 0.5) * spec.celly))
@@ -1370,8 +1371,8 @@ def test_warp_cutline_matches_pip_filter(spark, images_t1):
         None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
         (spec.height, spec.width), (90, 180), zones,
         images=images_t1).collect()
-    full = RP.wgs84_to_cea_grid(
-        None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+    full = RP.reproject(
+        None, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
         (spec.height, spec.width), (90, 180), images=images_t1).collect()
     exp = set()
     for r in full:

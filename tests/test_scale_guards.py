@@ -8,6 +8,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+import numpy_oracles as NO
 from georasters_spark.operators import algebra as AL
 from georasters_spark.operators import pixels as PX
 from georasters_spark.operators import spatial_join as SJ
@@ -173,12 +174,12 @@ def test_t2_tier_round2_operators(spark):
 
         # reproject nearest at T2: warped grid == numpy oracle cell-for-cell
         out_shape = (256, 512)
-        got = RP.wgs84_to_cea_grid(
-            px.select("row", "col", "value"),
+        got = RP.reproject(
+            px.select("row", "col", "value"), 4326, 6933,
             (spec.x0, spec.y0), (spec.cellx, spec.celly),
             (spec.height, spec.width), out_shape,
         ).toPandas()
-        exp = RP.warp_numpy_oracle(
+        exp = NO.warp_numpy_oracle(
             full, spec.ndv, (spec.x0, spec.y0), (spec.cellx, spec.celly), out_shape
         )
         grid = np.full(out_shape, spec.ndv)
@@ -422,7 +423,7 @@ def test_t2_tier_round3_operators(spark):
             (spec.height, spec.width), out_shape, bbox_lonlat=bbox,
         ).toPandas()
         full = synth.stitched_array(spec).astype(np.float64)
-        exp = RP.reproject_any_numpy_oracle(
+        exp = NO.reproject_any_numpy_oracle(
             full, spec.ndv, 4326, 32631, (spec.x0, spec.y0),
             (spec.cellx, spec.celly), out_shape, bbox_lonlat=bbox,
         )

@@ -199,6 +199,37 @@ def test_sieve_threshold_validation(spark):
         AL.sieve(_px_of(spark, np.zeros((2, 2), np.int64)), threshold=0)
 
 
+@pytest.mark.parametrize("budget, forced", [("-1", False), ("10MB", True)])
+def test_sieve_region_broadcast_follows_session_budget(spark, monkeypatch,
+                                                       budget, forced):
+    """The per-round region-metadata joins are force-broadcast only
+    while the counted region table fits the session's
+    spark.sql.autoBroadcastJoinThreshold: with broadcast joins disabled
+    the hint is never placed, and the sieved values are unchanged."""
+    hinted = []
+    real = F.broadcast
+
+    def spy(df):
+        hinted.append(set(df.columns))
+        return real(df)
+
+    monkeypatch.setattr(F, "broadcast", spy)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, budget)
+    try:
+        v = _field(24, 24, 42, 300)
+        exp_v, _, _ = _sieve_numpy(v, 3)
+        got = AL.sieve(_px_of(spark, v), threshold=3).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    gv = np.full(v.shape, -1, np.int64)
+    for t in got.itertuples(index=False):
+        gv[t.row, t.col] = int(t.value)
+    assert (gv == exp_v).all()
+    assert any({"sza"} <= c or {"szb"} <= c for c in hinted) is forced
+
+
 def test_sieve_gate_window_oracle_validity():
     """The sieve GATE's single-round SQL oracle is valid iff, on the
     gate window, (a) the fixpoint is reached in ONE round and (b) every

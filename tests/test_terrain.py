@@ -4,6 +4,7 @@ numpy shift-based implementation."""
 import numpy as np
 from pyspark.sql import functions as F
 
+import numpy_oracles as NO
 from georasters_spark.operators import pixels as PX
 from georasters_spark.operators import terrain as TR
 from georasters_spark.sources import synth
@@ -28,7 +29,7 @@ def test_terrain_matches_numpy(spark, images_t1):
     got = TR.slope_aspect_hillshade(
         dem, cellsize=(spec.cellx, spec.celly), zfactor=0.001
     ).toPandas()
-    slope, aspect, hs = TR.terrain_numpy_oracle(
+    slope, aspect, hs = NO.terrain_numpy_oracle(
         full, -1.0, (spec.cellx, spec.celly), zfactor=0.001
     )
     assert len(got) > 100_000

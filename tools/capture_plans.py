@@ -51,18 +51,18 @@ def build(spark, name):
             base_zoom=3, min_zoom=0, ndv=spec.ndv,
             tile_shape=(spec.tile, spec.tile))
     if name == "reproject_nearest_9M":
-        return RP.wgs84_to_cea_grid(
-            None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        return RP.reproject(
+            None, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
             (spec.height, spec.width), (1024, 2048), images=imgs)
     if name == "reproject_joinplan":
         px = PX.pixel_table(imgs, valid_only=True).select("row", "col", "value")
-        return RP.wgs84_to_cea_grid(
-            px, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+        return RP.reproject(
+            px, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
             (spec.height, spec.width), (1024, 2048))
     if name == "reproject_bilinear_tiles":
-        return RP.wgs84_to_cea_grid_bilinear(
-            None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-            (spec.height, spec.width), (1024, 2048), images=imgs)
+        return RP.reproject(
+            None, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
+            (spec.height, spec.width), (1024, 2048), resampling="bilinear", images=imgs)
     if name == "zonal_skew_salted":
         zskew = [z for z in synth.ZONES_EXTRA if z.name == "skew_half_world"]
         return SJ.zonal_stats(imgs, zskew, salt=32, **kw)
@@ -86,13 +86,13 @@ def build(spark, name):
         return KN.knn_tiles(imgs, synth.points_df(spark, 1000),
                             res=spec.cell_res, k=5, count_res=spec.cell_res)
     if name == "reproject_cubic_tiles":
-        return RP.wgs84_to_cea_grid_cubic(
-            None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-            (spec.height, spec.width), (1024, 2048), images=imgs)
+        return RP.reproject(
+            None, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
+            (spec.height, spec.width), (1024, 2048), resampling="cubic", images=imgs)
     if name == "reproject_lanczos_tiles":
-        return RP.wgs84_to_cea_grid_lanczos(
-            None, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-            (spec.height, spec.width), (1024, 2048), images=imgs)
+        return RP.reproject(
+            None, 4326, "cea", (spec.x0, spec.y0), (spec.cellx, spec.celly),
+            (spec.height, spec.width), (1024, 2048), resampling="lanczos", images=imgs)
     raise SystemExit(f"unknown query {name}")
 
 
