@@ -119,7 +119,7 @@ def run_r02_block(spark, sf_dir: str, times: dict, cal: dict, suffix: str = ""):
            lambda: SJ.zonal_stats(imgs, synth.ZONES_T1, **kw).collect())
     zskew = [zz for zz in synth.ZONES_EXTRA if zz.name == "skew_half_world"]
     _timed(times, cal, "zonal_skew_salted" + suffix,
-           lambda: SJ.zonal_stats(imgs, zskew, salt=32, **kw).collect())
+           lambda: SJ.zonal_stats(imgs, zskew, **kw).collect())
     _timed(times, cal, "decode_scan_agg" + suffix,
            lambda: PX.pixel_table(imgs, valid_only=True)
            .agg(F.count("value"), F.sum("value")).collect())
@@ -185,7 +185,7 @@ def run_heavy_block(spark, sf_dir: str, times: dict, cal: dict, imgs,
 
     _timed(times, cal, "zonal_median_majority" + suffix,
            lambda: SJ.zonal_stats_extended(
-               imgs, synth.ZONES_T1, base_plan="fused", **kw).collect())
+               imgs, synth.ZONES_T1, **kw).collect())
 
     # r6: tile-level pruning before decode (the window is 16x16 of the
     # grid's tiles; decoding the rest just to row-filter them away was

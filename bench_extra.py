@@ -166,8 +166,8 @@ def run_zonal_skew(spark):
     spec, imgs = bench_grid(spark)
     kw = dict(origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly))
     zskew = [zz for zz in synth.ZONES_EXTRA if zz.name == "skew_half_world"]
-    timed(spark, "zskew: full", lambda: SJ.zonal_stats(imgs, zskew, salt=32, **kw).collect())
-    timed(spark, "zskew: warm", lambda: SJ.zonal_stats(imgs, zskew, salt=32, **kw).collect())
+    timed(spark, "zskew: full", lambda: SJ.zonal_stats(imgs, zskew, **kw).collect())
+    timed(spark, "zskew: warm", lambda: SJ.zonal_stats(imgs, zskew, **kw).collect())
     imgs.unpersist()
 
 

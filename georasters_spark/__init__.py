@@ -15,7 +15,8 @@ Design rules (BASELINE.json north_rule):
     pandas UDF / mapInPandas / applyInPandas — no per-row Python.
   * hierarchical spatial cell index (Morton/quadkey, H3/S2 role) built
     from scratch in numpy; kNN = ring expansion over it.
-  * point-in-polygon + zonal stats = broadcast or salted hash joins.
+  * point-in-polygon + zonal stats = broadcast zones, one fused
+    decode+PIP stage with per-task partials (no salted shuffles).
   * checkpoint/resume via per-partition lineage + metrics manifests
     (Iceberg-lite: parquet + JSON snapshots — no Iceberg jar in-sandbox).
 """

@@ -516,9 +516,11 @@ class GeoRasterFrame:
                        fmt="rawf64", dtype="float64")
 
     def stats(self, zones, percentiles=None):
-        """Zonal stats over the exact count-table plan — requires
-        integer-valued cells (fractional data raises in the kernel
-        rather than truncating; round/scale first)."""
+        """Zonal stats (zonal_stats_extended: base moments, median,
+        majority, percentiles) from the exact per-(zone, value) count
+        table — requires integer-valued cells: a fractional value
+        raises a ValueError in the fused kernel rather than truncating
+        (round/scale first)."""
         from .operators import spatial_join as SJ
 
         return SJ.zonal_stats_extended(

@@ -35,71 +35,64 @@ def default_ndv(dtype: str) -> float:
     return float(np.ma.default_fill_value(np.zeros(1, dtype=np.dtype(dtype))))
 
 
+def decode_cells(t, valid_only: bool = True):
+    """Decode one images-table row (a tuple with bytes, fmt, w, h, ndv,
+    tile_row, tile_col [, dtype]) into its cells: global rows, global
+    cols and values in the decode's own dtype (int16 for raw16/png),
+    row-major.  ``valid_only`` drops value == ndv cells, compared in
+    float64.  A row without a nodata value (ndv NaN) follows the
+    reference from_file rule (georasters.py:1553-1562): decode with the
+    numpy default fill and mask NOTHING."""
+    ndv = float(t.ndv)
+    no_ndv = np.isnan(ndv)
+    if no_ndv:
+        ndv = default_ndv(getattr(t, "dtype", "int16"))
+    arr = codec.decode_tile(bytes(t.bytes), t.fmt, int(t.w), int(t.h), ndv)
+    h, w = arr.shape
+    if valid_only and not no_ndv:
+        keep = arr.astype(np.float64, copy=False) != ndv
+        r, c = np.nonzero(keep)
+        val = arr[keep]
+    else:
+        r, c = np.divmod(np.arange(h * w, dtype=np.int64), w)
+        val = arr.ravel()
+    return int(t.tile_row) * h + r, int(t.tile_col) * w + c, val
+
+
+def tile_columns(images: DataFrame) -> list[str]:
+    """The images-table columns decode_cells reads."""
+    cols = ["bytes", "fmt", "w", "h", "ndv", "tile_row", "tile_col"]
+    if "dtype" in images.columns:
+        cols.append("dtype")  # needed for the no-ndv default-fill rule
+    return cols
+
+
 def pixel_table(
     images: DataFrame,
     valid_only: bool = True,
     origin: tuple[float, float] | None = None,
     cellsize: tuple[float, float] | None = None,
     with_coords: bool = True,
-    bboxes: list[tuple[float, float, float, float]] | None = None,
 ) -> DataFrame:
     """Decode + explode the images table into a pixel DataFrame.
 
     Global (row, col) = (tile_row*h + i, tile_col*w + j). When
     ``origin``/``cellsize`` are given, adds corner coords (x, y) and
     center coords (xc, yc) as JVM Column expressions.
-
-    ``bboxes`` (requires origin+cellsize): world-coordinate prefilter
-    applied in numpy *before* the Arrow transfer, padded by one cell so
-    it can never change downstream PIP results — the predicate-pushdown
-    analog for the decode stage.
     """
-    if bboxes is not None and (origin is None or cellsize is None):
-        raise ValueError("bboxes prefilter needs origin and cellsize")
 
     def explode(batches):
         for pdf in batches:
             outs = []
             for t in pdf.itertuples(index=False):
-                ndv = float(t.ndv)
-                no_ndv = np.isnan(ndv)  # table row without a nodata value
-                if no_ndv:
-                    # reference from_file rule (georasters.py:1553-1562):
-                    # synthesize the numpy default fill, mask NOTHING
-                    ndv = default_ndv(getattr(t, "dtype", "int16"))
-                arr = codec.decode_tile(
-                    bytes(t.bytes), t.fmt, int(t.w), int(t.h), ndv
-                ).astype(np.float64)
-                h, w = arr.shape
-                gr = (int(t.tile_row) * h + np.arange(h, dtype=np.int64))[:, None]
-                gc = (int(t.tile_col) * w + np.arange(w, dtype=np.int64))[None, :]
-                gr = np.broadcast_to(gr, (h, w)).ravel()
-                gc = np.broadcast_to(gc, (h, w)).ravel()
-                val = arr.ravel()
-                if valid_only and not no_ndv:
-                    keep = val != ndv
-                    gr, gc, val = gr[keep], gc[keep], val[keep]
-                if bboxes is not None:
-                    x0, y0 = origin
-                    cx, cy = cellsize
-                    xs = x0 + (gc + 0.5) * cx
-                    ys = y0 + (gr + 0.5) * cy
-                    keep = np.zeros(len(gr), dtype=bool)
-                    for bx0, by0, bx1, by1 in bboxes:
-                        keep |= (
-                            (xs >= bx0 - abs(cx))
-                            & (xs <= bx1 + abs(cx))
-                            & (ys >= by0 - abs(cy))
-                            & (ys <= by1 + abs(cy))
-                        )
-                    gr, gc, val = gr[keep], gc[keep], val[keep]
+                gr, gc, val = decode_cells(t, valid_only)
                 outs.append(
                     pd.DataFrame(
                         {
                             "image_id": t.image_id,
                             "row": gr,
                             "col": gc,
-                            "value": val,
+                            "value": val.astype(np.float64),
                         }
                     )
                 )
@@ -110,9 +103,7 @@ def pixel_table(
                  "value": pd.Series(dtype=np.float64)}
             )
 
-    cols = ["image_id", "bytes", "fmt", "w", "h", "ndv", "tile_row", "tile_col"]
-    if "dtype" in images.columns:
-        cols.append("dtype")  # needed for the no-ndv default-fill rule
+    cols = ["image_id"] + tile_columns(images)
     px = images.select(*cols).mapInPandas(explode, schema=PIXEL_SCHEMA)
     if with_coords and origin is not None and cellsize is not None:
         x0, y0 = origin

@@ -79,6 +79,31 @@ def horn_sums(px: DataFrame) -> DataFrame:
     )
 
 
+# Horn's x weights over a (3, 3) window (east − west); y is the transpose
+_HORN_WX = np.array([[-1.0, 0.0, 1.0], [-2.0, 0.0, 2.0], [-1.0, 0.0, 1.0]])
+_HORN_SCHEMA = "row long, col long, value double, sx double, sy double, ncnt double"
+
+
+def _horn_stencil(swv, swm):
+    """focal_apply stencil: per (…, 3, 3) window the center value, the
+    Horn-weighted sums of the valid neighbors and their count."""
+    v = np.where(swm, swv, 0.0)
+    return {
+        "value": swv[:, :, 1, 1],
+        "sx": (v * _HORN_WX).sum(axis=(2, 3)),
+        "sy": (v * _HORN_WX.T).sum(axis=(2, 3)),
+        "ncnt": (swm.sum(axis=(2, 3)) - swm[:, :, 1, 1]).astype(np.float64),
+    }
+
+
+def _horn_longs(raw: DataFrame) -> DataFrame:
+    """The stencil's float64 output back to horn_sums' exact BIGINTs."""
+    return raw.select(
+        "row", "col",
+        *(F.col(c).cast("long").alias(c) for c in ("value", "sx", "sy", "ncnt")),
+    )
+
+
 def horn_sums_halo(px: DataFrame, tile: int = 128) -> DataFrame:
     """The same exact Horn sums via the focal_apply tile+halo stencil —
     the 100-TB fast path: ONE tile-keyed grouped-map instead of an
@@ -86,30 +111,10 @@ def horn_sums_halo(px: DataFrame, tile: int = 128) -> DataFrame:
     float64 (|sx| <= 8·max|z|), bit-equal to horn_sums (tested)."""
     from .focal import focal_apply
 
-    WX = np.array([[-1.0, 0.0, 1.0], [-2.0, 0.0, 2.0], [-1.0, 0.0, 1.0]])
-    WY = WX.T
-
-    def fn(swv, swm):
-        v = np.where(swm, swv, 0.0)
-        return {
-            "value": swv[:, :, 1, 1],
-            "sx": (v * WX).sum(axis=(2, 3)),
-            "sy": (v * WY).sum(axis=(2, 3)),
-            "ncnt": (swm.sum(axis=(2, 3)) - swm[:, :, 1, 1]).astype(np.float64),
-        }
-
-    raw = focal_apply(
+    return _horn_longs(focal_apply(
         px.select("row", "col", F.col("value").cast("long").alias("value")),
-        fn, k=3, tile=tile,
-        out_schema="row long, col long, value double, sx double, sy double, ncnt double",
-    )
-    return raw.select(
-        "row", "col",
-        F.col("value").cast("long").alias("value"),
-        F.col("sx").cast("long").alias("sx"),
-        F.col("sy").cast("long").alias("sy"),
-        F.col("ncnt").cast("long").alias("ncnt"),
-    )
+        _horn_stencil, k=3, tile=tile, out_schema=_HORN_SCHEMA,
+    ))
 
 
 def horn_sums_tiles(images: DataFrame) -> DataFrame:
@@ -118,29 +123,8 @@ def horn_sums_tiles(images: DataFrame) -> DataFrame:
     value-identical to horn_sums(pixel_table(images)) (pytest-pinned)."""
     from .focal import focal_apply_tiles
 
-    WX = np.array([[-1.0, 0.0, 1.0], [-2.0, 0.0, 2.0], [-1.0, 0.0, 1.0]])
-    WY = WX.T
-
-    def fn(swv, swm):
-        v = np.where(swm, swv, 0.0)
-        return {
-            "value": swv[:, :, 1, 1],
-            "sx": (v * WX).sum(axis=(2, 3)),
-            "sy": (v * WY).sum(axis=(2, 3)),
-            "ncnt": (swm.sum(axis=(2, 3)) - swm[:, :, 1, 1]).astype(np.float64),
-        }
-
-    raw = focal_apply_tiles(
-        images, fn, k=3,
-        out_schema="row long, col long, value double, sx double, sy double, ncnt double",
-    )
-    return raw.select(
-        "row", "col",
-        F.col("value").cast("long").alias("value"),
-        F.col("sx").cast("long").alias("sx"),
-        F.col("sy").cast("long").alias("sy"),
-        F.col("ncnt").cast("long").alias("ncnt"),
-    )
+    return _horn_longs(focal_apply_tiles(images, _horn_stencil, k=3,
+                                         out_schema=_HORN_SCHEMA))
 
 
 def slope_aspect_hillshade(

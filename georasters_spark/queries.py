@@ -151,7 +151,6 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth.ZONES_T1,
         origin=(spec.x0, spec.y0),
         cellsize=(spec.cellx, spec.celly),
-        base_plan="fused",
         percentiles=[25, 90],
     )
 

@@ -1,7 +1,9 @@
-"""Independent numpy references for the warp and terrain tests.
+"""Independent numpy references for the warp, terrain and zonal tests.
 
-Check code only: the engine never imports this module.  Two kinds of
-warp reference live here:
+Check code only: the engine never imports this module.  The zonal
+reference tests every cell center of the stitched grid against each
+zone — no tiles, no bbox prefilter, no Spark.  Two kinds of warp
+reference live here:
 
 * closed-form oracles (CEA, WebMercator, sinusoidal) that spell each
   inverse out on their own, sharing only the target lattice
@@ -21,8 +23,12 @@ import math
 
 import numpy as np
 
+import pandas as pd
+
+from georasters_spark.functions import geometry as geom
 from georasters_spark.operators import reproject as RP
 from georasters_spark.operators.terrain import HORN_OFFSETS
+from georasters_spark.sources import synth
 
 R, _Q = RP.R, RP._Q
 
@@ -353,3 +359,47 @@ def terrain_numpy_oracle(full: np.ndarray, ndv: float, cellsize: tuple[float, fl
     )
     hs = np.where(full8, hs, np.nan)
     return slope, aspect, hs
+
+
+def zone_values(spec, zones, mode: str = "center") -> dict:
+    """{zone_id: int64 values of the valid cells the zone hits} on the
+    stitched grid of ``spec``; zones without a hit are absent.
+    mode='center' tests the cell center, 'all_touched' the whole cell."""
+    full = synth.stitched_array(spec)
+    rr, cc = np.nonzero(full != spec.ndv)
+    xc = spec.x0 + (cc + 0.5) * spec.cellx
+    yc = spec.y0 + (rr + 0.5) * spec.celly
+    vals = full[rr, cc].astype(np.int64)
+    out = {}
+    for z in zones:
+        if mode == "center":
+            hit = geom.points_in_rings(xc, yc, z.rings)
+        else:
+            hit = geom.cells_touched(xc, yc, spec.cellx, spec.celly, z.rings)
+        if hit.any():
+            out[int(z.zone_id)] = vals[hit]
+    return out
+
+
+def zonal_numpy_oracle(spec, zones, mode: str = "center") -> pd.DataFrame:
+    """zonal_stats reference, one row per hit zone in zone_id order:
+    exact int64 zcount/zsum/zmin/zmax, unrounded zmean/zstd."""
+    rows = [
+        (zid, v.size, int(v.sum()), int(v.min()), int(v.max()),
+         float(v.mean()), float(v.std()))
+        for zid, v in sorted(zone_values(spec, zones, mode).items())
+    ]
+    return pd.DataFrame(rows, columns=["zone_id", "zcount", "zsum", "zmin",
+                                       "zmax", "zmean", "zstd"])
+
+
+def assert_zonal_matches(got: pd.DataFrame, want: pd.DataFrame) -> None:
+    """Engine zonal frame vs zonal_numpy_oracle: same zones, integer
+    columns exact, zmean/zstd within 1e-6 (the engine rounds to 6 dp)."""
+    got = got.sort_values("zone_id").reset_index(drop=True)
+    assert got["zone_id"].tolist() == want["zone_id"].tolist()
+    for c in ("zcount", "zsum", "zmin", "zmax"):
+        assert got[c].tolist() == want[c].tolist(), c
+    for c in ("zmean", "zstd"):
+        err = np.abs(got[c].to_numpy() - want[c].to_numpy()).max()
+        assert err <= 1e-6, (c, err)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -204,6 +205,41 @@ def test_facade_float_values_survive_images(dense):
     assert len(got) == a.size
     for (r, c), v in got.items():
         assert v == exp[r, c]  # exact, not approx
+
+
+def test_stats_refuse_fractional_values(spark, dense, images_t1):
+    """Fractional cells RAISE in the exact int64 moment and count
+    kernels instead of truncating (0.5 would count as 0); clip still
+    takes them; an integral-valued rawf64 raster gives the same frames
+    as its int16 twin."""
+    from georasters_spark.operators import pixels as PX
+    from georasters_spark.operators import spatial_join as SJ
+
+    gr, a = dense
+    half = gr / 2
+    zone = synth.make_zone(9, "dense_box", [(-179.9, 70.3), (-160.1, 70.3),
+                                            (-160.1, 89.9), (-179.9, 89.9)])
+    kw = dict(origin=half.origin, cellsize=half.cellsize)
+    for run in (lambda: half.stats([zone]),
+                lambda: SJ.zonal_stats(half.images(), [zone], **kw),
+                lambda: SJ.zonal_stats_extended(half.images(), [zone], **kw)):
+        with pytest.raises(Exception, match="integer-valued cells"):
+            run().collect()
+    clipped = PX.pixel_table(half.clip([zone]), valid_only=True).collect()
+    assert len(clipped) > 0
+    assert all(r["value"] == a[r["row"], r["col"]] / 2 for r in clipped)
+
+    spec = synth.T1
+    twin = synth.build_images(spark, spec, fmt="rawf64")
+    kw = dict(origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly))
+    zones = synth.ZONES_T1 + synth.ZONES_EXTRA
+    for mode in ("center", "all_touched"):
+        for op in (SJ.zonal_stats, SJ.zonal_stats_extended):
+            want = op(images_t1, zones, mode=mode, **kw).toPandas()
+            got = op(twin, zones, mode=mode, **kw).toPandas()
+            pd.testing.assert_frame_equal(
+                got.sort_values("zone_id").reset_index(drop=True),
+                want.sort_values("zone_id").reset_index(drop=True))
 
 
 def test_from_file_true_shape_and_argmax(spark, tmp_path):

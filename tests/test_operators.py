@@ -1,8 +1,10 @@
 """Operator-level semantics: decode/explode vs stitched-array oracle,
-zonal stats (center + all_touched + salted + concave/donut zones),
+zonal stats (center + all_touched + repartitioned + concave/donut
+zones, against the numpy zonal oracle),
 union golden test (reference tests/newtest.py:17-51), roundtrips."""
 
 import numpy as np
+import numpy_oracles as NO
 import pandas as pd
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -74,35 +76,39 @@ def test_zonal_concave_and_donut_vs_numpy(spark, images_t1):
 
 
 def test_zonal_fused_equals_unfused(spark, images_t1):
-    """The map-side-combined (fused) pipeline is bit-identical to the
-    explode-then-join pipeline, for center and all_touched modes and
-    for concave/donut zones."""
+    """The one zonal plan (fused decode + PIP + per-task partials)
+    equals the independent numpy oracle, for center and all_touched
+    modes and for convex, concave and donut zones."""
     spec = synth.T1
     kw = dict(origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly))
     zones = synth.ZONES_T1 + [z for z in synth.ZONES_EXTRA if z.name in ("concave_l", "donut")]
+    assert SJ.zonal_stats_fused is SJ.zonal_stats
     for mode in ("center", "all_touched"):
-        a = SJ.zonal_stats(images_t1, zones, mode=mode, **kw).toPandas().sort_values("zone_id").reset_index(drop=True)
-        b = SJ.zonal_stats_fused(images_t1, zones, mode=mode, **kw).toPandas().sort_values("zone_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(a, b)
+        got = SJ.zonal_stats(images_t1, zones, mode=mode, **kw).toPandas()
+        NO.assert_zonal_matches(got, NO.zonal_numpy_oracle(spec, zones, mode))
 
 
 def test_zonal_salted_equals_plain(spark, images_t1):
+    """Per-task partials replace key salting: spreading the tiles over
+    16 partitions (16 partial rows per zone) leaves the result exactly
+    the single-layout one, and both match the numpy oracle."""
     spec = synth.T1
     kw = dict(origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly))
     plain = SJ.zonal_stats(images_t1, synth.ZONES_T1, **kw).toPandas().sort_values("zone_id").reset_index(drop=True)
-    salted = SJ.zonal_stats(images_t1, synth.ZONES_T1, salt=16, **kw).toPandas().sort_values("zone_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(plain, salted)
+    spread = SJ.zonal_stats(images_t1.repartition(16), synth.ZONES_T1, **kw).toPandas().sort_values("zone_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(plain, spread)
+    NO.assert_zonal_matches(plain, NO.zonal_numpy_oracle(spec, synth.ZONES_T1))
 
 
 def test_skew_zone_salted(spark, images_t1):
-    """Continent-sized zone (half the world) through the salted path."""
+    """Continent-sized zone (half the world) spread over 32 partitions'
+    partials, against the numpy oracle."""
     spec = synth.T1
     z = [zz for zz in synth.ZONES_EXTRA if zz.name == "skew_half_world"][0]
     kw = dict(origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly))
-    plain = SJ.zonal_stats(images_t1, [z], **kw).toPandas()
-    salted = SJ.zonal_stats(images_t1, [z], salt=32, **kw).toPandas()
-    pd.testing.assert_frame_equal(plain, salted)
-    assert plain.loc[0, "zcount"] > 40000  # really is skewed-large
+    got = SJ.zonal_stats(images_t1.repartition(32), [z], **kw).toPandas()
+    NO.assert_zonal_matches(got, NO.zonal_numpy_oracle(spec, [z]))
+    assert got.loc[0, "zcount"] > 40000  # really is skewed-large
 
 
 def test_union_golden_newtest(spark):

@@ -17,7 +17,8 @@ from georasters_spark.sources import synth
 
 def test_t2_tier_decode_golden_and_fused_parity(spark):
     """2160x1080 (2.3M px, 578 tiles): distributed decode equals the
-    stitched-array oracle; fused == unfused zonal at 4x smoke scale."""
+    stitched-array oracle; zonal stats equal the numpy zonal oracle at
+    4x smoke scale."""
     spec = synth.T2
     imgs = synth.build_images(spark, spec).cache()
     try:
@@ -30,9 +31,8 @@ def test_t2_tier_decode_golden_and_fused_parity(spark):
         assert row["c"] == int(valid.sum())
         assert row["s"] == int(full[valid].astype(np.int64).sum())
         kw = dict(origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly))
-        a = SJ.zonal_stats(imgs, synth.ZONES_T1, **kw).toPandas().sort_values("zone_id").reset_index(drop=True)
-        b = SJ.zonal_stats_fused(imgs, synth.ZONES_T1, **kw).toPandas().sort_values("zone_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(a, b)
+        got = SJ.zonal_stats(imgs, synth.ZONES_T1, **kw).toPandas()
+        NO.assert_zonal_matches(got, NO.zonal_numpy_oracle(spec, synth.ZONES_T1))
     finally:
         imgs.unpersist()
 
@@ -303,38 +303,29 @@ def test_zonal_stats_custom_bounded_tasks(spark, images_t1):
 def test_zonal_extended_median_majority_vs_numpy(spark, images_t1):
     """zmedian/zmajority vs direct numpy on the stitched grid (exact,
     including the even-count two-middle average and the smallest-value
-    tie-break for majority)."""
-    from georasters_spark.functions import geometry as geom
-
+    tie-break for majority); base moments vs the numpy zonal oracle."""
     spec = synth.T1
     out = SJ.zonal_stats_extended(
         images_t1, synth.ZONES_T1,
         origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly),
-        base_plan="agg", percentiles=[25, 90],
-    ).toPandas().set_index("zone_id")
-    full = synth.stitched_array(spec).astype(np.float64)
-    valid = full != spec.ndv
-    rr, cc = np.meshgrid(np.arange(spec.height), np.arange(spec.width), indexing="ij")
-    xc = spec.x0 + (cc + 0.5) * spec.cellx
-    yc = spec.y0 + (rr + 0.5) * spec.celly
-    for z in synth.ZONES_T1:
-        rings = [np.asarray(r, dtype=np.float64) for r in z.rings]
-        hit = valid & geom.points_in_rings(xc.ravel(), yc.ravel(), rings).reshape(valid.shape)
-        if z.zone_id not in out.index:
-            assert hit.sum() == 0
-            continue
-        v = full[hit].astype(np.int64)
-        assert out.loc[z.zone_id, "zmedian"] == float(np.median(v))
+        percentiles=[25, 90],
+    ).toPandas()
+    NO.assert_zonal_matches(out, NO.zonal_numpy_oracle(spec, synth.ZONES_T1))
+    out = out.set_index("zone_id")
+    want = NO.zone_values(spec, synth.ZONES_T1)
+    assert sorted(out.index) == sorted(want)
+    for zid, v in want.items():
+        assert out.loc[zid, "zmedian"] == float(np.median(v))
         # rasterstats percentile_XX parity: numpy's default linear rule
-        assert abs(out.loc[z.zone_id, "zp25"] - np.percentile(v, 25)) < 1e-9
-        assert abs(out.loc[z.zone_id, "zp90"] - np.percentile(v, 90)) < 1e-9
+        assert abs(out.loc[zid, "zp25"] - np.percentile(v, 25)) < 1e-9
+        assert abs(out.loc[zid, "zp90"] - np.percentile(v, 90)) < 1e-9
         vals, cnts = np.unique(v, return_counts=True)
         want_maj = int(vals[np.lexsort((vals, -cnts))][0])
-        assert out.loc[z.zone_id, "zmajority"] == want_maj
+        assert out.loc[zid, "zmajority"] == want_maj
         want_mnr = int(vals[np.lexsort((vals, cnts))][0])
-        assert out.loc[z.zone_id, "zminority"] == want_mnr
-        assert out.loc[z.zone_id, "zunique"] == len(vals)
-        assert out.loc[z.zone_id, "zrange"] == int(v.max() - v.min())
+        assert out.loc[zid, "zminority"] == want_mnr
+        assert out.loc[zid, "zunique"] == len(vals)
+        assert out.loc[zid, "zrange"] == int(v.max() - v.min())
 
 
 def _persistent_rdd_ids(spark) -> set:

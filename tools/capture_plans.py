@@ -65,7 +65,7 @@ def build(spark, name):
             (spec.height, spec.width), (1024, 2048), resampling="bilinear", images=imgs)
     if name == "zonal_skew_salted":
         zskew = [z for z in synth.ZONES_EXTRA if z.name == "skew_half_world"]
-        return SJ.zonal_stats(imgs, zskew, salt=32, **kw)
+        return SJ.zonal_stats(imgs, zskew, **kw)
     if name == "focal_mean5_9M":
         return FO.focal_sums(_dem(spark, spec.height, spec.width), k=5)
     if name == "terrain_horn_9M_halo":
