@@ -235,7 +235,6 @@ def run_heavy_block(spark, sf_dir: str, times: dict, cal: dict, imgs,
     _timed(times, cal, "terrain_horn_9M_halo" + suffix,
            lambda: TR.slope_aspect_hillshade(
                dem9, cellsize=(spec.cellx, spec.celly), zfactor=0.001,
-               plan="halo",
            ).agg(F.count("slope_deg"), F.sum("hillshade")).collect())
     _timed(times, cal, "focal_mean5_9M" + suffix,
            lambda: FO.focal_sums(dem9, k=5)

@@ -150,12 +150,10 @@ def run_terrain(spark):
     timed(spark, "terrain: full (agg)",
           lambda: TR.slope_aspect_hillshade(
               dem9, cellsize=(spec.cellx, spec.celly), zfactor=0.001,
-              plan="halo",
           ).agg(F.count("slope_deg"), F.sum("hillshade")).collect())
     timed(spark, "terrain: full (agg, warm)",
           lambda: TR.slope_aspect_hillshade(
               dem9, cellsize=(spec.cellx, spec.celly), zfactor=0.001,
-              plan="halo",
           ).agg(F.count("slope_deg"), F.sum("hillshade")).collect())
 
 

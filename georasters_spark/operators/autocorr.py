@@ -1,10 +1,14 @@
 """Spatial autocorrelation over the pixel lattice (SURVEY §2.9).
 
 Re-realizes the reference's esda/libpysal delegates
-(georasters.py:1142-1378, raster_weights :1740-1775): the pysal ``W``
-lattice becomes a *neighbor self-join* of the valid-pixel table on the
-8 (queen) / 4 (rook) offsets — masked cells drop out of the join
-exactly like raster_weights deletes masked nodes.
+(georasters.py:1142-1378, raster_weights :1740-1775) over the 8 (queen)
+/ 4 (rook) lattice neighbors of the valid-pixel table; masked cells
+drop out exactly like raster_weights deletes masked nodes. Two forms:
+  * per-cell neighbor sums (`focal_stats`, the base of every local
+    statistic) are a masked 3×3 stencil through focal.focal_apply;
+  * the global pair sums and the rank-space permutation tests need the
+    pairs themselves: `neighbor_pairs` / `neighbor_pairs_keys`, a
+    neighbor self-join on the offsets.
 
 Two weight flavors:
   * binary (w_ij = 1) — used by the oracle-gated global statistics;
@@ -25,8 +29,11 @@ where n=#valid, S=Σv, Q=Σv², S0=#directed neighbor pairs.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .focal import focal_apply, int_window
 
 QUEEN = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
 ROOK = [(-1, 0), (1, 0), (0, -1), (0, 1)]
@@ -149,26 +156,35 @@ SELECT n, s0,
 FROM calc"""
 
 
+def _window_mask(rook: bool, include_self: bool):
+    """The queen/rook neighborhood (plus the center cell when
+    include_self) as a (3, 3) boolean window mask."""
+    mask = np.zeros((3, 3), dtype=bool)
+    for dr, dc in ROOK if rook else QUEEN:
+        mask[dr + 1, dc + 1] = True
+    mask[1, 1] = include_self
+    return mask
+
+
 def focal_stats(px: DataFrame, rook: bool = False, include_self: bool = False) -> DataFrame:
     """Per-cell neighborhood aggregates (the focal/G*-local building
-    block, georasters.py:1343-1378): (row, col, value, nsum, ncnt) —
-    exact integers."""
-    pairs = neighbor_pairs(px, rook=rook)
-    agg = pairs.groupBy("row", "col").agg(
-        F.sum("vb").alias("nsum_"),
-        F.sum(F.col("vb") * F.col("vb")).alias("nsum2_"),
-        F.count(F.lit(1)).alias("ncnt_"),
+    block, georasters.py:1343-1378): (row, col, value, nsum, nsum2,
+    ncnt) — exact integers, one row per valid cell (ncnt = 0 on an
+    isolated one). A 3×3 stencil through focal.focal_apply."""
+    mask = _window_mask(rook, include_self)
+
+    def fn(swv, swm):
+        v = int_window(swv, swm)
+        nb = v * mask
+        return {"value": v[:, :, 1, 1], "nsum": nb.sum(axis=(2, 3)),
+                "nsum2": (nb * nb).sum(axis=(2, 3)),
+                "ncnt": (swm & mask).sum(axis=(2, 3))}
+
+    return focal_apply(
+        px.select("row", "col", F.col("value").cast("long").alias("value")),
+        fn, k=3,
+        out_schema="row long, col long, value long, nsum long, nsum2 long, ncnt long",
     )
-    v2 = F.col("value") * F.col("value")
-    out = px.join(agg, ["row", "col"], "left").select(
-        "row",
-        "col",
-        F.col("value").cast("long").alias("value"),
-        (F.coalesce(F.col("nsum_"), F.lit(0)) + (F.col("value") if include_self else F.lit(0))).cast("long").alias("nsum"),
-        (F.coalesce(F.col("nsum2_"), F.lit(0)) + (v2 if include_self else F.lit(0))).cast("long").alias("nsum2"),
-        (F.coalesce(F.col("ncnt_"), F.lit(0)) + (1 if include_self else 0)).cast("long").alias("ncnt"),
-    )
-    return out
 
 
 def local_geary(px: DataFrame, rook: bool = False) -> DataFrame:

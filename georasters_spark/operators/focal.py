@@ -10,6 +10,13 @@ task rebuilds its (tile+2m)² window in numpy, applies the kernel with
 numpy sliding windows, and emits only its interior cells — so results
 are exactly what a single giant array would produce, with per-task
 memory (tile+2m)² and a single hash exchange on the tile keys.
+`focal_apply_tiles` is the same stencil straight off the stored tiles.
+
+These two are the engine's only per-cell neighborhood aggregate:
+terrain's Horn sums, TPI/TRI/roughness and D8 direction and
+autocorr.focal_stats are numpy stencils passed to them. Integer
+stencils cast the valid window to int64 before they sum, so their sums
+are exact; values of magnitude 2^53 or more raise (float64 window).
 
 `focal_sums` (sum/count/mean of valid cells in the k×k window,
 self-inclusive) is the exactly-gated instance: integer window sums are
@@ -65,49 +72,99 @@ def _halo_tiled(px: DataFrame, tile: int, m: int) -> DataFrame:
     )
 
 
+# float64 holds every integer of magnitude below 2^53 exactly; integer
+# stencils cast their windows back to int64, so larger values would
+# round silently on the way into the window
+_EXACT_INT = 2 ** 53
+
+
+def _window_values(values: pd.Series) -> np.ndarray:
+    """Pixel values as the float64 the stencil window carries; integer
+    values beyond ±2^53 raise instead of rounding."""
+    v = values.to_numpy()
+    if v.dtype.kind in "iu" and len(v) and (
+            v.max() >= _EXACT_INT or v.min() <= -_EXACT_INT):
+        raise ValueError(
+            "focal stencil: |value| >= 2^53 does not fit the float64 "
+            "window exactly; rescale values")
+    return v.astype(np.float64)
+
+
+def _stencil_rows(val: np.ndarray, fn, k: int, r0: int, c0: int) -> pd.DataFrame:
+    """Run fn over the k×k sliding windows of a padded value array (nan
+    = no data; its m-wide border is halo) and emit the VALID interior
+    cells, whose top-left sits at grid cell (r0, c0)."""
+    m = k // 2
+    valid = ~np.isnan(val)
+    swv = np.lib.stride_tricks.sliding_window_view(val, (k, k))
+    swm = np.lib.stride_tricks.sliding_window_view(valid, (k, k))
+    res = fn(swv, swm)  # (t, t) or dict of (t, t)
+    rr, cc = np.nonzero(valid[m:-m, m:-m])
+    out = {"row": rr.astype(np.int64) + r0, "col": cc.astype(np.int64) + c0}
+    if isinstance(res, dict):
+        for name, arr in res.items():
+            out[name] = arr[rr, cc]
+    else:
+        out["value"] = res[rr, cc]
+    return pd.DataFrame(out)
+
+
 def focal_apply(
     px: DataFrame,
     fn,
     k: int,
     tile: int = 128,
     out_schema: str = "row long, col long, value double",
-    out_builder=None,
 ) -> DataFrame:
     """Run an arbitrary k×k stencil `fn` distributed with exact tile-
     seam semantics. fn(win, valid) receives the k×k sliding-window
     views of the tile's padded value array (shape (t, t, k, k), nan
     outside the data) and the matching validity windows, and returns
-    one array (t, t) — or, with out_builder, a dict of named (t, t)
-    arrays matching out_schema. Only VALID interior cells emit rows."""
+    one array (t, t) — or a dict of named (t, t) arrays matching
+    out_schema. Only VALID interior cells emit rows. Integer values
+    must stay below 2^53 in magnitude (ValueError otherwise)."""
     m = k // 2
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = int(key[0]), int(key[1])
-        r0, c0 = ty * tile - m, tx * tile - m
-        side = tile + 2 * m
-        val = np.full((side, side), np.nan)
-        lr = pdf["row"].to_numpy(np.int64) - r0
-        lc = pdf["col"].to_numpy(np.int64) - c0
-        val[lr, lc] = pdf["value"].to_numpy(np.float64)
-        valid = ~np.isnan(val)
-        swv = np.lib.stride_tricks.sliding_window_view(val, (k, k))
-        swm = np.lib.stride_tricks.sliding_window_view(valid, (k, k))
-        res = fn(swv, swm)  # (t, t) or dict of (t, t)
-        interior_valid = valid[m:-m, m:-m] if m else valid
-        rr, cc = np.nonzero(interior_valid)
-        out = {
-            "row": rr.astype(np.int64) + ty * tile,
-            "col": cc.astype(np.int64) + tx * tile,
-        }
-        if isinstance(res, dict):
-            for name, arr in res.items():
-                out[name] = arr[rr, cc]
-        else:
-            out["value"] = res[rr, cc]
-        return pd.DataFrame(out)
+    def kernel(key, pdf):
+        r0, c0 = int(key[0]) * tile, int(key[1]) * tile
+        val = np.full((tile + 2 * m, tile + 2 * m), np.nan)
+        val[pdf["row"].to_numpy(np.int64) - (r0 - m),
+            pdf["col"].to_numpy(np.int64) - (c0 - m)] = _window_values(pdf["value"])
+        return _stencil_rows(val, fn, k, r0, c0)
 
     return _halo_tiled(px, tile, m).groupBy("trow", "tcol").applyInPandas(
         kernel, schema=out_schema
+    )
+
+
+def int_window(swv, swm):
+    """The valid cells of each window as exact int64 (0 where invalid):
+    what an integer stencil sums, like the BIGINT oracles."""
+    return np.where(swm, swv, 0).astype(np.int64)
+
+
+_SUMS_SCHEMA = "row long, col long, value long, fsum long, fcnt long"
+
+
+def _sums_stencil(k: int):
+    """focal_sums' stencil: the center value, the exact int64 sum of the
+    valid cells of the k×k window and their count."""
+    m = k // 2
+
+    def fn(swv, swm):
+        v = int_window(swv, swm)
+        # the window center IS the cell's own value (valid interior
+        # cells only ever emit), so no join back against px
+        return {"value": v[:, :, m, m], "fsum": v.sum(axis=(2, 3)),
+                "fcnt": swm.sum(axis=(2, 3)).astype(np.int64)}
+
+    return fn
+
+
+def _sums_select(raw: DataFrame, round_dp: int) -> DataFrame:
+    return raw.select(
+        "row", "col", "value", "fsum", "fcnt",
+        F.round(F.col("fsum") / F.col("fcnt"), round_dp).alias("fmean"),
     )
 
 
@@ -115,31 +172,10 @@ def focal_sums(px: DataFrame, k: int, tile: int = 128, round_dp: int = 6) -> Dat
     """Exact k×k focal sum/count/mean of VALID cells (self-inclusive):
     (row, col, value, fsum, fcnt, fmean). Integer inputs stay exact
     BIGINTs through the window sums; fmean = round(double(fsum)/fcnt)."""
-
-    m = k // 2
-
-    def fn(swv, swm):
-        v = np.where(swm, swv, 0.0)
-        fsum = v.sum(axis=(2, 3))
-        fcnt = swm.sum(axis=(2, 3))
-        # the window center IS the cell's own value (valid interior
-        # cells only ever emit), so return it here instead of a second
-        # full-table shuffle join back against px
-        return {"value": swv[:, :, m, m], "fsum": fsum,
-                "fcnt": fcnt.astype(np.float64)}
-
-    raw = focal_apply(
+    return _sums_select(focal_apply(
         px.select("row", "col", F.col("value").cast("long").alias("value")),
-        fn, k, tile=tile,
-        out_schema="row long, col long, value double, fsum double, fcnt double",
-    )
-    return raw.select(
-        "row", "col",
-        F.col("value").cast("long").alias("value"),
-        F.col("fsum").cast("long").alias("fsum"),
-        F.col("fcnt").cast("long").alias("fcnt"),
-        F.round(F.col("fsum") / F.col("fcnt"), round_dp).alias("fmean"),
-    )
+        _sums_stencil(k), k, tile=tile, out_schema=_SUMS_SCHEMA,
+    ), round_dp)
 
 
 def focal_sums_sql(px_cte: str, k: int, round_dp: int = 6) -> str:
@@ -282,8 +318,7 @@ def focal_apply_tiles(
                 "resolve duplicates first")
         by, bx = int(key[0]), int(key[1])
         base_r, base_c = by * block * t_h - m, bx * block * t_w - m
-        side_r, side_c = block * t_h + 2 * m, block * t_w + 2 * m
-        val = np.full((side_r, side_c), np.nan)
+        val = np.full((block * t_h + 2 * m, block * t_w + 2 * m), np.nan)
         for t in right.itertuples(index=False):
             ndv = float(t.ndv)
             arr = _codec.decode_tile(bytes(t.bytes), t.fmt,
@@ -301,25 +336,9 @@ def focal_apply_tiles(
             c0 = int(t.tile_col) * w - base_c
             val[r0:r0 + h, c0:c0 + w] = arr
         if len(left):
-            lr = left["row"].to_numpy(np.int64) - base_r
-            lc = left["col"].to_numpy(np.int64) - base_c
-            val[lr, lc] = left["value"].to_numpy(np.float64)
-        valid = ~np.isnan(val)
-        swv = np.lib.stride_tricks.sliding_window_view(val, (k, k))
-        swm = np.lib.stride_tricks.sliding_window_view(valid, (k, k))
-        res = fn(swv, swm)
-        interior_valid = valid[m:-m, m:-m]
-        rr, cc = np.nonzero(interior_valid)
-        out = {
-            "row": rr.astype(np.int64) + by * block * t_h,
-            "col": cc.astype(np.int64) + bx * block * t_w,
-        }
-        if isinstance(res, dict):
-            for name, a in res.items():
-                out[name] = a[rr, cc]
-        else:
-            out["value"] = res[rr, cc]
-        return pd.DataFrame(out)
+            val[left["row"].to_numpy(np.int64) - base_r,
+                left["col"].to_numpy(np.int64) - base_c] = left["value"].to_numpy(np.float64)
+        return _stencil_rows(val, fn, k, base_r + m, base_c + m)
 
     imgs_keyed = images.select(
         F.col("tile_row").cast("long").alias("tile_row"),
@@ -344,22 +363,7 @@ def focal_sums_tiles(images: DataFrame, k: int,
     """`focal_sums` off the stored tiles table via focal_apply_tiles —
     value-identical to focal_sums(pixel_table(images, valid_only=True))
     (pytest-pinned) with no pixel explode."""
-    m = k // 2
-
-    def fn(swv, swm):
-        v = np.where(swm, swv, 0.0)
-        return {"value": swv[:, :, m, m],
-                "fsum": v.sum(axis=(2, 3)),
-                "fcnt": swm.sum(axis=(2, 3)).astype(np.float64)}
-
-    raw = focal_apply_tiles(
-        images, fn, k, tile_shape=tile_shape,
-        out_schema="row long, col long, value double, fsum double, fcnt double",
-    )
-    return raw.select(
-        "row", "col",
-        F.col("value").cast("long").alias("value"),
-        F.col("fsum").cast("long").alias("fsum"),
-        F.col("fcnt").cast("long").alias("fcnt"),
-        F.round(F.col("fsum") / F.col("fcnt"), round_dp).alias("fmean"),
-    )
+    return _sums_select(focal_apply_tiles(
+        images, _sums_stencil(k), k, tile_shape=tile_shape,
+        out_schema=_SUMS_SCHEMA,
+    ), round_dp)

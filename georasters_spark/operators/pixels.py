@@ -225,7 +225,8 @@ def lookup_points_fused(
     """Fused map_pixel: the point batch is broadcast as per-tile index
     arrays; one decode pass gathers all hits in numpy — no pixel-table
     materialization, no shuffle (scale path for point batches that fit
-    in a broadcast; beyond that, use lookup_points)."""
+    in a broadcast; beyond that, use lookup_points). `tile` must be the
+    table's tile edge: a decoded tile of another w/h raises."""
     import numpy as np
 
     from ..functions import grid as G
@@ -262,6 +263,13 @@ def lookup_points_fused(
                 if hit is None:
                     continue
                 ids, lr, lc = hit
+                # the point index above was cut at `tile`; a table of
+                # another tile edge would gather the wrong cells
+                if int(t.w) != tile or int(t.h) != tile:
+                    raise ValueError(
+                        f"lookup_points_fused: tile={tile} but tile "
+                        f"({key[0]}, {key[1]}) is {int(t.w)}x{int(t.h)}; "
+                        "pass the table's tile edge")
                 arr = codec.decode_tile(
                     bytes(t.bytes), t.fmt, int(t.w), int(t.h), float(t.ndv)
                 ).astype(np.float64)

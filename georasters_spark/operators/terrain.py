@@ -3,18 +3,22 @@ gdaldem algorithm; the reference reaches these through its numpy-array
 escape hatch `gr.raster` + scipy/gdaldem, SURVEY §2.6's free-ufunc
 family, georasters.py README:70-76).
 
-Spark-first plan: Horn's 3×3 weighted differences are LINEAR in the
-neighbors, so both directional sums come from ONE 8-offset neighbor
-equi-join with per-offset integer weights:
+Spark-first plan: every operator here except color-relief is a numpy
+3×3 stencil run through `focal.focal_apply` (pixel table) or
+`focal.focal_apply_tiles` (stored tiles, images=): one tile-keyed
+grouped-map with a 1-cell halo, no neighbor join. Horn's weighted
+differences are LINEAR in the neighbors:
 
     wx(dr, dc) = dc · (2 if dr == 0 else 1)      (east − west)
     wy(dr, dc) = dr · (2 if dc == 0 else 1)      (south − north)
     dz/dx = Σ wx·z_n / (8·xres),   dz/dy = Σ wy·z_n / (8·yres)
 
-The weighted sums are EXACT BIGINTs for integer rasters (the usual
-oracle contract), the derivative/trig chain is pure whole-stage-codegen
-Column math, and the per-cell shuffle is a single hash aggregate on
-(row, col) — the same shape as focal_stats/local_moran.
+The stencils sum the window as int64, so the weighted sums, the TPI/
+TRI sums and the D8 scores are EXACT BIGINTs for integer rasters (the
+usual oracle contract; |value| >= 2^53 raises). The derivative/trig
+chain is whole-stage-codegen Column math over those sums. The DuckDB
+oracles (`*_sql`) recompute the sums with an 8-offset neighbor join
+over HORN_OFFSETS / D8_OFFSETS — independent of the tile/halo path.
 
 Conventions (documented, deterministic):
   * cells missing any of their 8 neighbors (raster edge or adjacent
@@ -37,127 +41,78 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .focal import focal_apply, focal_apply_tiles, int_window
+
 HORN_OFFSETS = [
     (dr, dc, dc * (2 if dr == 0 else 1), dr * (2 if dc == 0 else 1))
     for dr in (-1, 0, 1) for dc in (-1, 0, 1) if (dr, dc) != (0, 0)
 ]
 
+# HORN_OFFSETS' x and y weights laid out over a (3, 3) window
+_HORN_W = np.zeros((2, 3, 3), dtype=np.int64)
+for _dr, _dc, _wx, _wy in HORN_OFFSETS:
+    _HORN_W[:, _dr + 1, _dc + 1] = (_wx, _wy)
 
-def horn_sums(px: DataFrame) -> DataFrame:
-    """(row, col, value, sx, sy, ncnt): exact-integer Horn weighted
-    neighbor sums; ONE neighbor join + one (row, col) aggregate."""
-    spark = px.sparkSession
-    offs = spark.createDataFrame(HORN_OFFSETS, "dr int, dc int, wx int, wy int")
-    a = px.select("row", "col", F.col("value").cast("long").alias("value"))
-    b = px.select(
-        F.col("row").alias("r2"), F.col("col").alias("c2"),
-        F.col("value").cast("long").alias("vb"),
-    )
-    cand = (
-        a.crossJoin(F.broadcast(offs))
-        .select(
-            "row", "col",
-            (F.col("row") + F.col("dr")).alias("r2"),
-            (F.col("col") + F.col("dc")).alias("c2"),
-            "wx", "wy",
-        )
-        .join(b, ["r2", "c2"])
-    )
-    agg = cand.groupBy("row", "col").agg(
-        F.sum(F.col("wx") * F.col("vb")).alias("sx"),
-        F.sum(F.col("wy") * F.col("vb")).alias("sy"),
-        F.count(F.lit(1)).alias("ncnt"),
-    )
-    # LEFT join back onto the cells: an isolated valid cell (zero valid
-    # neighbors) must still emit a row (ncnt = 0, NULL derivatives) —
-    # identical to the halo plan's output, never silently dropped
-    return a.join(agg, ["row", "col"], "left").select(
-        "row", "col", "value",
-        F.coalesce("sx", F.lit(0)).alias("sx"),
-        F.coalesce("sy", F.lit(0)).alias("sy"),
-        F.coalesce("ncnt", F.lit(0)).alias("ncnt"),
+
+def _neighbor_count(swm):
+    return swm.sum(axis=(2, 3)) - swm[:, :, 1, 1]
+
+
+def _stencil(px: DataFrame | None, fn, out_schema: str,
+             images: DataFrame | None = None) -> DataFrame:
+    """Run a 3×3 stencil over the stored tiles when `images` is given,
+    otherwise over the pixel table `px` (values cast to BIGINT). Every
+    valid cell emits a row, an isolated one (ncnt = 0) too."""
+    if images is not None:
+        return focal_apply_tiles(images, fn, k=3, out_schema=out_schema)
+    return focal_apply(
+        px.select("row", "col", F.col("value").cast("long").alias("value")),
+        fn, k=3, out_schema=out_schema,
     )
 
 
-# Horn's x weights over a (3, 3) window (east − west); y is the transpose
-_HORN_WX = np.array([[-1.0, 0.0, 1.0], [-2.0, 0.0, 2.0], [-1.0, 0.0, 1.0]])
-_HORN_SCHEMA = "row long, col long, value double, sx double, sy double, ncnt double"
+_HORN_SCHEMA = "row long, col long, value long, sx long, sy long, ncnt long"
 
 
 def _horn_stencil(swv, swm):
-    """focal_apply stencil: per (…, 3, 3) window the center value, the
-    Horn-weighted sums of the valid neighbors and their count."""
-    v = np.where(swm, swv, 0.0)
+    """Per window: the center value, the Horn-weighted sums of the valid
+    neighbors and their count."""
+    v = int_window(swv, swm)
     return {
-        "value": swv[:, :, 1, 1],
-        "sx": (v * _HORN_WX).sum(axis=(2, 3)),
-        "sy": (v * _HORN_WX.T).sum(axis=(2, 3)),
-        "ncnt": (swm.sum(axis=(2, 3)) - swm[:, :, 1, 1]).astype(np.float64),
+        "value": v[:, :, 1, 1],
+        "sx": (v * _HORN_W[0]).sum(axis=(2, 3)),
+        "sy": (v * _HORN_W[1]).sum(axis=(2, 3)),
+        "ncnt": _neighbor_count(swm),
     }
 
 
-def _horn_longs(raw: DataFrame) -> DataFrame:
-    """The stencil's float64 output back to horn_sums' exact BIGINTs."""
-    return raw.select(
-        "row", "col",
-        *(F.col(c).cast("long").alias(c) for c in ("value", "sx", "sy", "ncnt")),
-    )
-
-
-def horn_sums_halo(px: DataFrame, tile: int = 128) -> DataFrame:
-    """The same exact Horn sums via the focal_apply tile+halo stencil —
-    the 100-TB fast path: ONE tile-keyed grouped-map instead of an
-    8x-replicated neighbor-join shuffle. Integer sums stay exact in
-    float64 (|sx| <= 8·max|z|), bit-equal to horn_sums (tested)."""
-    from .focal import focal_apply
-
-    return _horn_longs(focal_apply(
-        px.select("row", "col", F.col("value").cast("long").alias("value")),
-        _horn_stencil, k=3, tile=tile, out_schema=_HORN_SCHEMA,
-    ))
-
-
-def horn_sums_tiles(images: DataFrame) -> DataFrame:
-    """Horn sums straight off the stored tiles table (focal_apply_tiles:
-    decode-in-place + halo-strip exchange, no pixel explode) —
-    value-identical to horn_sums(pixel_table(images)) (pytest-pinned)."""
-    from .focal import focal_apply_tiles
-
-    return _horn_longs(focal_apply_tiles(images, _horn_stencil, k=3,
-                                         out_schema=_HORN_SCHEMA))
+def _horn_derivatives(cellsize: tuple[float, float], zfactor: float):
+    """Columns over the Horn sums: (full, flat, slope_rad, aspect_deg)."""
+    cx, cy = cellsize
+    dzdx = F.col("sx") * F.lit(float(zfactor)) / F.lit(8.0 * abs(cx))
+    dzdy = F.col("sy") * F.lit(float(zfactor)) / F.lit(8.0 * abs(cy))
+    slope_rad = F.atan(F.sqrt(dzdx * dzdx + dzdy * dzdy))
+    a_deg = F.atan2(dzdy, -dzdx) * F.lit(180.0) / F.lit(math.pi)
+    return (F.col("ncnt") == 8, (F.col("sx") == 0) & (F.col("sy") == 0),
+            slope_rad, F.pmod(F.lit(90.0) - a_deg, F.lit(360.0)))
 
 
 def slope_aspect_hillshade(
-    px: DataFrame,
+    px: DataFrame | None,
     cellsize: tuple[float, float],
     zfactor: float = 1.0,
     azimuth: float = 315.0,
     altitude: float = 45.0,
     round_dp: int = 6,
-    plan: str = "join",
     images: DataFrame | None = None,
 ) -> DataFrame:
     """Per-cell (row, col, value, slope_deg, aspect_deg, hillshade) —
-    NULL derivatives on cells without a full 3×3 window. plan='join'
-    (the gated neighbor-join form), 'halo' (tile+halo grouped-map — no
-    8x row replication through the shuffle), or 'tiles' (pass the
-    stored tiles table via images=; decode-in-place + halo-strip
-    exchange, no pixel explode at all); all value-identical."""
-    if plan == "tiles":
-        if images is None:
-            raise ValueError("plan='tiles' needs images=")
-        sums = horn_sums_tiles(images)
-    else:
-        sums = horn_sums(px) if plan == "join" else horn_sums_halo(px)
-    cx, cy = cellsize
-    full = F.col("ncnt") == 8
-    dzdx = F.col("sx") * F.lit(float(zfactor)) / F.lit(8.0 * abs(cx))
-    dzdy = F.col("sy") * F.lit(float(zfactor)) / F.lit(8.0 * abs(cy))
-    slope_rad = F.atan(F.sqrt(dzdx * dzdx + dzdy * dzdy))
+    NULL derivatives on cells without a full 3×3 window. Pass the
+    stored tiles table as images= (px may then be None) to run the
+    stencil off the tiles: decode-in-place + halo-strip exchange, no
+    pixel explode; the results are identical."""
+    full, flat, slope_rad, aspect = _horn_derivatives(cellsize, zfactor)
     slope_deg = slope_rad * F.lit(180.0) / F.lit(math.pi)
-    flat = (F.col("sx") == 0) & (F.col("sy") == 0)
-    a_deg = F.atan2(dzdy, -dzdx) * F.lit(180.0) / F.lit(math.pi)
-    aspect = F.pmod(F.lit(90.0) - a_deg, F.lit(360.0))
     zen = math.radians(90.0 - altitude)
     az = math.radians(azimuth)
     asp_rad = F.when(flat, F.lit(0.0)).otherwise(aspect * F.lit(math.pi) / F.lit(180.0))
@@ -166,7 +121,7 @@ def slope_aspect_hillshade(
         F.lit(math.cos(zen)) * F.cos(slope_rad)
         + F.lit(math.sin(zen)) * F.sin(slope_rad) * F.cos(F.lit(az) - asp_rad),
     )
-    return sums.select(
+    return _stencil(px, _horn_stencil, _HORN_SCHEMA, images=images).select(
         "row", "col", "value",
         F.when(full, F.round(slope_deg, round_dp)).alias("slope_deg"),
         F.when(full & ~flat, F.round(aspect, round_dp)).alias("aspect_deg"),
@@ -233,21 +188,13 @@ def hillshade_multidirectional(
         md = Σ wᵢ·hsᵢ / Σ wᵢ,   wᵢ = sin²(aspect − azᵢ)
 
     over the same exact-integer Horn sums as slope/aspect/hillshade
-    (one neighbor join + one aggregate; NULL on cells without a full
-    3×3 window). Flat cells (both weighted sums exactly 0) have no
-    aspect: every directional hillshade degenerates to 255·cos(zen),
-    so md is defined as that constant there (the single-azimuth flat
-    rule). Σwᵢ = Σ sin²(aspect − azᵢ) over the four fixed azimuths is
+    (NULL on cells without a full 3×3 window). Flat cells (both
+    weighted sums exactly 0) have no aspect: every directional
+    hillshade degenerates to 255·cos(zen), so md is defined as that
+    constant there (the single-azimuth flat rule). Σwᵢ = Σ sin²(aspect − azᵢ) over the four fixed azimuths is
     2 identically, so the quotient is always defined."""
-    sums = horn_sums(px)
-    cx, cy = cellsize
-    full = F.col("ncnt") == 8
-    dzdx = F.col("sx") * F.lit(float(zfactor)) / F.lit(8.0 * abs(cx))
-    dzdy = F.col("sy") * F.lit(float(zfactor)) / F.lit(8.0 * abs(cy))
-    slope_rad = F.atan(F.sqrt(dzdx * dzdx + dzdy * dzdy))
-    flat = (F.col("sx") == 0) & (F.col("sy") == 0)
-    a_deg = F.atan2(dzdy, -dzdx) * F.lit(180.0) / F.lit(math.pi)
-    asp_rad = F.pmod(F.lit(90.0) - a_deg, F.lit(360.0)) * F.lit(math.pi / 180.0)
+    full, flat, slope_rad, aspect = _horn_derivatives(cellsize, zfactor)
+    asp_rad = aspect * F.lit(math.pi / 180.0)
     zen = math.radians(90.0 - altitude)
     num = F.lit(0.0)
     den = F.lit(0.0)
@@ -263,7 +210,7 @@ def hillshade_multidirectional(
         num = num + w_i * hs_i
         den = den + w_i
     md = F.when(flat, F.lit(255.0 * math.cos(zen))).otherwise(num / den)
-    return sums.select(
+    return _stencil(px, _horn_stencil, _HORN_SCHEMA).select(
         "row", "col", "value",
         F.when(full, F.round(md, round_dp)).alias("hillshade_md"),
     )
@@ -326,43 +273,38 @@ FROM px p LEFT JOIN t ON t.row = p.row AND t.col = p.col"""
 # surface, README.md:70-76).
 # ---------------------------------------------------------------------------
 
+def _tpi_stencil(swv, swm):
+    """Per window: the center value and, over its valid neighbors, Σv,
+    Σ|d|, Σd² (d = neighbor − center), max − min of the whole 3×3
+    (read only where all 8 neighbors are valid) and their count."""
+    v = int_window(swv, swm)
+    z = v[:, :, 1, 1]
+    d = np.where(swm, v - z[:, :, None, None], 0)
+    return {
+        "value": z,
+        "snb": v.sum(axis=(2, 3)) - z,
+        "sabs": np.abs(d).sum(axis=(2, 3)),
+        "ssq": (d * d).sum(axis=(2, 3)),
+        "rough": v.max(axis=(2, 3)) - v.min(axis=(2, 3)),
+        "ncnt": _neighbor_count(swm),
+    }
+
+
 def tpi_tri_roughness(px: DataFrame, round_dp: int = 6) -> DataFrame:
-    """Per-cell gdaldem window statistics from ONE 8-offset neighbor
-    join + one (row, col) aggregate (the horn_sums shape):
+    """Per-cell gdaldem window statistics from one 3×3 stencil:
 
       tpi        = z − mean(8 neighbors)          (Topographic Position)
       tri_wilson = mean(|z − neighbor|)           (gdaldem TRI default)
       tri_riley  = sqrt(Σ (z − neighbor)²)        (gdaldem -alg Riley)
       roughness  = max − min of the full 3×3      (exact BIGINT)
 
-    The neighbor sums (Σv, Σ|d|, Σd², min, max) are EXACT integers for
+    The neighbor sums (Σv, Σ|d|, Σd², max − min) are EXACT integers for
     integer rasters; only the final /8 and sqrt are doubles. Cells
     without a full 3×3 window emit NULLs (the slope/aspect edge
     convention — gdaldem likewise writes nodata there)."""
-    spark = px.sparkSession
-    offs = spark.createDataFrame(
-        [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)
-         if (dr, dc) != (0, 0)], "dr int, dc int")
-    a = px.select("row", "col", F.col("value").cast("long").alias("value"))
-    b = a.select(F.col("row").alias("r2"), F.col("col").alias("c2"),
-                 F.col("value").alias("vb"))
-    cand = (
-        a.crossJoin(F.broadcast(offs))
-        .select("row", "col", "value",
-                (F.col("row") + F.col("dr")).alias("r2"),
-                (F.col("col") + F.col("dc")).alias("c2"))
-        .join(b, ["r2", "c2"])
-    )
-    d = F.col("vb") - F.col("value")
-    agg = cand.groupBy("row", "col").agg(
-        F.sum("vb").alias("snb"),
-        F.sum(F.abs(d)).alias("sabs"),
-        F.sum(d * d).alias("ssq"),
-        F.max("vb").alias("mx"),
-        F.min("vb").alias("mn"),
-        F.count(F.lit(1)).alias("ncnt"),
-    )
-    out = a.join(agg, ["row", "col"], "left")
+    out = _stencil(px, _tpi_stencil,
+                   "row long, col long, value long, snb long, sabs long, "
+                   "ssq long, rough long, ncnt long")
     full = F.col("ncnt") == 8
     return out.select(
         "row", "col", "value",
@@ -372,9 +314,7 @@ def tpi_tri_roughness(px: DataFrame, round_dp: int = 6) -> DataFrame:
             F.col("sabs") / F.lit(8.0), round_dp)).alias("tri_wilson"),
         F.when(full, F.round(
             F.sqrt(F.col("ssq").cast("double")), round_dp)).alias("tri_riley"),
-        F.when(full, (F.greatest(F.col("mx"), F.col("value"))
-                      - F.least(F.col("mn"), F.col("value")))
-               .cast("long")).alias("roughness"),
+        F.when(full, F.col("rough")).alias("roughness"),
     )
 
 
@@ -499,40 +439,29 @@ D8_OFFSETS = [
     (-1, 1, 128, 1),  # NE
 ]
 _D8_STEP = {code: (dr, dc) for dr, dc, code, _ in D8_OFFSETS}
+_D8_CODES = np.array([code for _, _, code, _ in D8_OFFSETS], dtype=np.int64)
+
+
+def _d8_stencil(swv, swm):
+    """Per window: the center value and its D8 code — the 8 scores in
+    D8_OFFSETS (code) order, strict descent only; the first maximum
+    wins, and 0 when no neighbor is lower."""
+    v = int_window(swv, swm)
+    z = v[:, :, 1, 1]
+    score = np.zeros(z.shape + (len(D8_OFFSETS),), dtype=np.int64)
+    for i, (dr, dc, _, wt) in enumerate(D8_OFFSETS):
+        d = z - v[:, :, 1 + dr, 1 + dc]
+        score[:, :, i] = np.where(swm[:, :, 1 + dr, 1 + dc] & (d > 0), d * d * wt, 0)
+    best = score.argmax(axis=2)
+    return {"value": z,
+            "d8": np.where(score.max(axis=2) > 0, _D8_CODES[best], 0)}
 
 
 def d8_flow_direction(px: DataFrame) -> DataFrame:
     """(row, col, value, d8): steepest-descent D8 code (0 = pit/flat —
     no strictly lower neighbor). Unit-grid D8 (standard for square-ish
     cells); STRICT descent only, ties to the smallest code."""
-    spark = px.sparkSession
-    offs = spark.createDataFrame(D8_OFFSETS, "dr int, dc int, code int, wt int")
-    a = px.select("row", "col", F.col("value").cast("long").alias("value"))
-    b = px.select(
-        F.col("row").alias("r2"), F.col("col").alias("c2"),
-        F.col("value").cast("long").alias("vb"),
-    )
-    cand = (
-        a.crossJoin(F.broadcast(offs))
-        .select("row", "col", "value",
-                (F.col("row") + F.col("dr")).alias("r2"),
-                (F.col("col") + F.col("dc")).alias("c2"),
-                "code", "wt")
-        .join(b, ["r2", "c2"])
-        .filter(F.col("vb") < F.col("value"))
-        .withColumn(
-            "score",
-            (F.col("value") - F.col("vb")) * (F.col("value") - F.col("vb")) * F.col("wt"),
-        )
-    )
-    best = cand.groupBy("row", "col").agg(
-        F.max_by("code", F.struct(F.col("score").alias("s"),
-                                  (-F.col("code")).alias("nc"))).alias("d8")
-    )
-    return a.join(best, ["row", "col"], "left").select(
-        "row", "col", "value",
-        F.coalesce(F.col("d8"), F.lit(0)).cast("long").alias("d8"),
-    )
+    return _stencil(px, _d8_stencil, "row long, col long, value long, d8 long")
 
 
 def d8_sql(px_cte: str) -> str:

@@ -3873,7 +3873,7 @@ def sql_focal_tiles() -> str:
 def q_terrain_tpi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The remaining gdaldem window modes next to slope/aspect/
     hillshade: TPI, TRI (Wilson default AND -alg Riley) and roughness
-    from one 8-offset neighbor join + one aggregate
+    from one 3×3 focal_apply stencil
     (terrain.tpi_tri_roughness), over the same dense synthetic DEM as
     the terrain gate. EXACT oracle: integer neighbor sums re-derived
     in SQL, identical double chain (ROUND 6dp), exact BIGINT
@@ -3994,7 +3994,7 @@ def _dem_images(spark: SparkSession, h: int, w: int,
 
 
 def q_terrain_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """slope/aspect/hillshade via plan='tiles' (horn_sums_tiles:
+    """slope/aspect/hillshade off the stored tiles (images=:
     decode-in-place + halo-strip exchange) on the stored-DEM tiles
     table, against the SAME exact expression-chain oracle as `terrain`
     — pinning the strip assembly across tile seams AND the ndv edge
@@ -4004,7 +4004,6 @@ def q_terrain_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = SPEC
     return TR.slope_aspect_hillshade(
         None, cellsize=(spec.cellx, spec.celly), zfactor=0.001,
-        plan="tiles",
         images=_dem_images(spark, spec.height, spec.width),
     )
 

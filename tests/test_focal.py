@@ -77,3 +77,26 @@ def test_focal_apply_tiles_duplicate_tile_raises(spark, images_t1):
     import pytest as _pt
     with _pt.raises(Exception, match="image rows share tile"):
         FO.focal_sums_tiles(doubled, k=3).collect()
+
+
+def test_integer_stencils_refuse_values_beyond_2_53(spark):
+    """The stencil window is float64, exact for integers below 2^53 in
+    magnitude; a 2^53+1 cell must raise instead of rounding to 2^53 in
+    the int64 sums of TPI and focal_stats."""
+    import pytest
+
+    from georasters_spark.operators import autocorr as AC
+    from georasters_spark.operators import terrain as TR
+
+    rows = [(r, c, 5) for r in range(3) for c in range(3)]
+    rows[4] = (1, 1, 2 ** 53 + 1)
+    px = spark.createDataFrame(rows, "row long, col long, value long")
+    for op in (TR.tpi_tri_roughness, AC.focal_stats):
+        with pytest.raises(Exception, match=r"\|value\| >= 2\^53"):
+            op(px).collect()
+    # one below the bound stays exact end to end
+    rows[4] = (1, 1, 2 ** 53 - 1)
+    px = spark.createDataFrame(rows, "row long, col long, value long")
+    t = [t for t in AC.focal_stats(px, include_self=True).collect()
+         if (t.row, t.col) == (0, 0)][0]
+    assert t.nsum == 2 ** 53 - 1 + 15 and t.ncnt == 4

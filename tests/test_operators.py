@@ -272,6 +272,26 @@ def test_lookup_fused_equals_generic(spark, images_t1):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_lookup_fused_refuses_wrong_tile(spark, images_t1):
+    """tile= must be the table's tile edge: on the 64-px T1 tiles,
+    tile=32 raises instead of gathering the wrong cells, and tile=64
+    equals the pixel-table lookup."""
+    import pytest
+
+    spec = synth.T1
+    pts = synth.points_df(spark, 50)
+    kw = dict(origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly))
+    with pytest.raises(Exception, match="tile=32 but tile"):
+        PX.lookup_points_fused(images_t1, pts, tile=32, **kw).collect()
+    cols = ["point_id", "prow", "pcol", "value"]
+    a = (PX.lookup_points(images_t1, pts, **kw).select(*cols).toPandas()
+         .sort_values("point_id").reset_index(drop=True))
+    b = (PX.lookup_points_fused(images_t1, pts, tile=64, **kw).select(*cols)
+         .toPandas().sort_values("point_id").reset_index(drop=True))
+    pd.testing.assert_frame_equal(a, b)
+    assert b.value.notna().sum() > 0
+
+
 def test_extract_equals_map_pixel(spark, images_t1):
     """Reference tests/test_georasters.py:29-36: radius-0 extract at a
     point equals map_pixel there."""

@@ -2,6 +2,7 @@
 numpy shift-based implementation."""
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 import numpy_oracles as NO
@@ -59,8 +60,6 @@ def test_terrain_flat_and_edge_rules(spark):
     """A constant 5x5 patch: interior cells are FLAT (slope 0, aspect
     NULL, hillshade = 255*cos(zen)); edge cells have NULL derivatives."""
     import math
-
-    import pandas as pd
 
     rows = [(r, c, 7) for r in range(5) for c in range(5)]
     px = spark.createDataFrame(pd.DataFrame(rows, columns=["row", "col", "value"]),
@@ -124,42 +123,127 @@ def test_d8_and_flow_accumulation_vs_numpy(spark):
     assert acc["acc"].max() > 5  # real confluence happens
 
 
-def test_terrain_halo_plan_equals_join_plan(spark, images_t1):
-    """horn_sums via the tile+halo stencil is bit-equal to the
-    neighbor-join form on the masked table (seams, edges, nodata)."""
-    import pandas as pd
+def _assert_terrain_matches_numpy(got, full, ndv, **kw) -> int:
+    """One row per valid cell of `full`, its value, and slope / aspect /
+    hillshade equal to the numpy shift oracle (NULL exactly where the
+    oracle has nan); returns the number of full 3x3 windows."""
+    slope, aspect, hs = NO.terrain_numpy_oracle(full, ndv, **kw)
+    valid = full != ndv
+    r, c = got.row.to_numpy(), got.col.to_numpy()
+    assert len(got) == int(valid.sum()) and valid[r, c].all()
+    assert len(set(zip(r.tolist(), c.tolist()))) == len(got)
+    assert (got.value.to_numpy() == full[r, c]).all()
+    for col, exp, tol in (("slope_deg", slope, 1e-5), ("aspect_deg", aspect, 1e-5),
+                          ("hillshade", hs, 1e-4)):
+        g = got[col].to_numpy(dtype=np.float64)
+        e = exp[r, c]
+        assert (np.isnan(g) == np.isnan(e)).all(), col
+        d = np.abs(g - e)[~np.isnan(e)]
+        if col == "aspect_deg":  # compass wrap: 0 == 360
+            d = np.minimum(d % 360.0, 360.0 - d % 360.0)
+        assert (d < tol).all(), col
+    return int((~np.isnan(slope)).sum())
 
+
+def test_terrain_pixel_and_tiles_paths_match_numpy(spark, images_t1):
+    """The pixel halo path and the images= tiles path each equal the
+    numpy oracle cell for cell: on the masked T1 grid (tile seams,
+    grid edges, diagonal nodata stripes) and on a dense DEM with
+    scattered nodata holes re-tiled at 64 px (full windows next to
+    holes and across seams)."""
     spec = synth.T1
-    px = PX.pixel_table(images_t1, valid_only=True).select(
-        "row", "col", F.col("value").cast("long").alias("value")
-    )
     kw = dict(cellsize=(spec.cellx, spec.celly), zfactor=0.001)
-    a = TR.slope_aspect_hillshade(px, plan="join", **kw).toPandas()
-    b = TR.slope_aspect_hillshade(px, plan="halo", **kw).toPandas()
-    a = a.sort_values(["row", "col"]).reset_index(drop=True)
-    b = b.sort_values(["row", "col"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    full = synth.stitched_array(spec).astype(np.int64)
+    px = PX.pixel_table(images_t1, valid_only=True).select(
+        "row", "col", F.col("value").cast("long").alias("value"))
+    for got in (TR.slope_aspect_hillshade(px, **kw),
+                TR.slope_aspect_hillshade(None, images=images_t1, **kw)):
+        _assert_terrain_matches_numpy(got.toPandas(), full, spec.ndv, **kw)
+
+    rr = np.arange(spec.height)[:, None]
+    cc = np.arange(spec.width)[None, :]
+    dem = (rr * 7919 + cc * 104729 + spec.seed) % 1997
+    dem = np.where((rr * 31 + cc * 17) % 41 == 0, int(spec.ndv), dem)
+    r, c = np.nonzero(dem != spec.ndv)
+    holed = spark.createDataFrame(pd.DataFrame(
+        {"row": r, "col": c, "value": dem[r, c]}),
+        "row long, col long, value long")
+    tiles = PX.assemble_tiles(holed, "holed", (spec.x0, spec.y0),
+                              (spec.cellx, spec.celly), tile=64, ndv=spec.ndv)
+    for got in (TR.slope_aspect_hillshade(holed, **kw),
+                TR.slope_aspect_hillshade(None, images=tiles, **kw)):
+        assert _assert_terrain_matches_numpy(
+            got.toPandas(), dem, spec.ndv, **kw) > 100_000
+
+
+def _assert_equals_join_plan(got, px, **kw) -> int:
+    """`got` equals the 8-offset neighbor-join form (terrain_sql, run in
+    DuckDB over the same pixel table) cell for cell; the cells the join
+    form drops (no valid neighbor) carry NULL derivatives. Returns the
+    number of cells compared."""
+    import duckdb
+
+    key = ["row", "col"]
+    con = duckdb.connect()
+    con.register("pxdf", px.toPandas())
+    a = con.sql(TR.terrain_sql("px AS (SELECT row, col, value FROM pxdf)",
+                               **kw)).df()
+    con.close()
+    a = a.sort_values(key).reset_index(drop=True)
+    b = got.toPandas().sort_values(key).reset_index(drop=True)
+    joined = b.set_index(key).index.isin(a.set_index(key).index)
+    assert b.loc[~joined, ["slope_deg", "aspect_deg", "hillshade"]].isna().all().all()
+    pd.testing.assert_frame_equal(a, b[joined].reset_index(drop=True),
+                                  check_dtype=False)
+    return len(a)
+
+
+def test_terrain_halo_plan_equals_join_plan(spark, images_t1):
+    """The tile+halo stencil on the pixel table equals the neighbor-join
+    form on the masked table (seams, edges, nodata)."""
+    spec = synth.T1
+    kw = dict(cellsize=(spec.cellx, spec.celly), zfactor=0.001)
+    px = PX.pixel_table(images_t1, valid_only=True).select(
+        "row", "col", F.col("value").cast("long").alias("value"))
+    _assert_equals_join_plan(TR.slope_aspect_hillshade(px, **kw), px, **kw)
 
 
 def test_terrain_tiles_plan_matches_join(spark, images_t1):
-    """plan='tiles' (decode-in-place + halo strips) must equal the
-    gated neighbor-join plan cell-for-cell."""
-    from georasters_spark.operators import pixels as PX
-    from georasters_spark.operators import terrain as TR
-    from georasters_spark.sources import synth
-
+    """The images= tiles path (decode-in-place + halo strips) equals the
+    neighbor-join form over the exploded pixel table cell for cell."""
     spec = synth.T1
     kw = dict(cellsize=(spec.cellx, spec.celly), zfactor=0.001)
     px = PX.pixel_table(images_t1, valid_only=True).select(
-        "row", "col", "value")
-    a = {(r["row"], r["col"]): (r["value"], r["slope_deg"], r["aspect_deg"],
-                                r["hillshade"])
-         for r in TR.slope_aspect_hillshade(px, plan="join", **kw).collect()}
-    b = {(r["row"], r["col"]): (r["value"], r["slope_deg"], r["aspect_deg"],
-                                r["hillshade"])
-         for r in TR.slope_aspect_hillshade(
-             None, plan="tiles", images=images_t1, **kw).collect()}
-    assert a == b and len(a) > 50000
+        "row", "col", F.col("value").cast("long").alias("value"))
+    got = TR.slope_aspect_hillshade(None, images=images_t1, **kw)
+    assert _assert_equals_join_plan(got, px, **kw) > 50000
+
+
+def test_isolated_cell_emits_a_row(spark):
+    """A valid cell without one valid neighbor still emits its row from
+    every 3x3 stencil: NULL Horn derivatives, NULL TPI/TRI/roughness,
+    d8 = 0 and focal_stats ncnt = 0."""
+    from georasters_spark.operators import autocorr as AC
+
+    rows = [(r, c, 10 * r + c) for r in range(4) for c in range(4)]
+    rows.append((9, 9, 77))
+    px = spark.createDataFrame(rows, "row long, col long, value long")
+
+    def at(df):
+        got = [t for t in df.collect() if (t.row, t.col) == (9, 9)]
+        assert len(got) == 1 and got[0].value == 77
+        return got[0]
+
+    t = at(TR.slope_aspect_hillshade(px, cellsize=(1.0, -1.0)))
+    assert t.slope_deg is None and t.aspect_deg is None and t.hillshade is None
+    t = at(TR.hillshade_multidirectional(px, cellsize=(1.0, -1.0)))
+    assert t.hillshade_md is None
+    t = at(TR.tpi_tri_roughness(px))
+    assert (t.tpi, t.tri_wilson, t.tri_riley, t.roughness) == (None,) * 4
+    assert at(TR.d8_flow_direction(px)).d8 == 0
+    for include_self, want in ((False, (0, 0, 0)), (True, (77, 77 * 77, 1))):
+        t = at(AC.focal_stats(px, include_self=include_self))
+        assert (t.nsum, t.nsum2, t.ncnt) == want
 
 
 def test_tpi_tri_roughness_vs_numpy(spark):

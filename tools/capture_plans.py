@@ -71,7 +71,7 @@ def build(spark, name):
     if name == "terrain_horn_9M_halo":
         return TR.slope_aspect_hillshade(
             _dem(spark, spec.height, spec.width),
-            cellsize=(spec.cellx, spec.celly), zfactor=0.001, plan="halo")
+            cellsize=(spec.cellx, spec.celly), zfactor=0.001)
     if name == "jaccard_dedup":
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         return DD.jaccard_pairs(docs, n=3, threshold=0.5)
