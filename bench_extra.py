@@ -93,15 +93,10 @@ def run_polygonize(spark):
 
 def run_xyz(spark):
     from georasters_spark.operators import xyz as XYZ
-    from georasters_spark.operators.reproject import gather_from_tiles
 
     spec, imgs = bench_grid(spark)
-    kw = dict(src_origin=(spec.x0, spec.y0), src_cellsize=(spec.cellx, spec.celly))
     tgt = XYZ._lattice(spark, 3, 256, (spec.x0, spec.y0), (spec.cellx, spec.celly))
     timed(spark, "xyz: lattice only (noop)", lambda: noop(tgt))
-    gathered = gather_from_tiles(tgt, imgs, carry=(),
-                                 tile_shape=(spec.tile, spec.tile))
-    timed(spark, "xyz: lattice+gather (noop)", lambda: noop(gathered))
     base = XYZ.xyz_base_tiles(imgs, (spec.x0, spec.y0),
                               (spec.cellx, spec.celly), 3,
                               tile_shape=(spec.tile, spec.tile))

@@ -286,9 +286,10 @@ def focal_apply_tiles(
     No pixel explode, no halo replication of the interior.
 
     fn(win, valid) is exactly the `focal_apply` kernel contract.
-    Requires the uniform-tile images layout (same w/h on every row;
-    duplicate tile keys raise, as in reproject.gather_from_tiles)."""
+    Requires the uniform-tile images layout: duplicate tile keys and
+    tiles of another w/h raise (reproject's tiles-table contract)."""
     from ..sources import codec as _codec
+    from .reproject import _check_tiles, _tile_shape
 
     m = k // 2
     if m < 1:
@@ -297,14 +298,7 @@ def focal_apply_tiles(
     # stencil work: one-tile groups drown in per-group Python overhead
     # (the gather_from_tiles measurement), and intra-block seams then
     # resolve in-task so only block-boundary strips ever ship
-    if tile_shape is not None:
-        t_h, t_w = int(tile_shape[0]), int(tile_shape[1])
-    else:
-        # pass tile_shape to skip this one-row probe job
-        dims = images.select("w", "h").first()
-        if dims is None:
-            raise ValueError("focal_apply_tiles: empty images table")
-        t_w, t_h = int(dims["w"]), int(dims["h"])
+    t_h, t_w = _tile_shape(images, tile_shape, "focal_apply_tiles")
     block = max(1, int(round(math.sqrt(65536.0 / max(1, t_w * t_h)))))
 
     def kernel(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -312,10 +306,7 @@ def focal_apply_tiles(
         if not len(right):
             # strips addressed past the grid edge: no home tiles, no rows
             return pd.DataFrame({c: [] for c in cols})
-        if right.duplicated(["tile_row", "tile_col"]).any():
-            raise ValueError(
-                "focal_apply_tiles: duplicate image rows share tile keys; "
-                "resolve duplicates first")
+        _check_tiles(right, t_h, t_w, "focal_apply_tiles")
         by, bx = int(key[0]), int(key[1])
         base_r, base_c = by * block * t_h - m, bx * block * t_w - m
         val = np.full((block * t_h + 2 * m, block * t_w + 2 * m), np.nan)

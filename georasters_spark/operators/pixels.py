@@ -185,36 +185,6 @@ def infer_grid_from_points(df: DataFrame, x_col: str = "x", y_col: str = "y") ->
     }
 
 
-def lookup_points(
-    images: DataFrame,
-    points: DataFrame,
-    origin: tuple[float, float],
-    cellsize: tuple[float, float],
-    tile: int = 64,
-) -> DataFrame:
-    """map_pixel point-batch lookup (georasters.py:990-1014) with tile
-    pruning: only tiles containing >=1 query point are decoded (the
-    partition-pruning analog). points: (point_id, x, y, ...). Returns
-    the points' columns + (prow, pcol, value) with NULL value for
-    masked or out-of-coverage points."""
-    from ..functions import grid as G
-
-    x0, y0 = origin
-    cx, cy = cellsize
-    pts = points.withColumn("prow", G.row_of_y(F.col("y"), y0, cy)).withColumn(
-        "pcol", G.col_of_x(F.col("x"), x0, cx)
-    )
-    keys = pts.select(
-        F.floor(F.col("prow") / tile).cast("int").alias("tile_row"),
-        F.floor(F.col("pcol") / tile).cast("int").alias("tile_col"),
-    ).distinct()
-    pruned = images.join(F.broadcast(keys), ["tile_row", "tile_col"], "left_semi")
-    px = pixel_table(pruned, valid_only=True, with_coords=False).select(
-        F.col("row").alias("prow"), F.col("col").alias("pcol"), "value"
-    )
-    return px.join(F.broadcast(pts), ["prow", "pcol"], "right")
-
-
 def lookup_points_fused(
     images: DataFrame,
     points: DataFrame,
@@ -224,9 +194,9 @@ def lookup_points_fused(
 ) -> DataFrame:
     """Fused map_pixel: the point batch is broadcast as per-tile index
     arrays; one decode pass gathers all hits in numpy — no pixel-table
-    materialization, no shuffle (scale path for point batches that fit
-    in a broadcast; beyond that, use lookup_points). `tile` must be the
-    table's tile edge: a decoded tile of another w/h raises."""
+    materialization, no shuffle (for point batches that fit in a
+    broadcast). `tile` must be the table's tile edge: a decoded tile
+    of another w/h raises."""
     import numpy as np
 
     from ..functions import grid as G

@@ -15,13 +15,18 @@ The warp is an inverse-projection *gather*, exactly like resize: build
 the target grid (spark.range × spark.range) on the ``any_bounds``
 lattice, project each cell center into source units with the numpy
 transforms in one Arrow pass (``_project``), and gather the source
-(row, col).  nearest, bilinear, cubic, cubicspline and lanczos gather
-either by joining the pixel table or, given ``images=``, tile-cogrouped
-from the tiles table (only the target lattice shuffles); the gdalwarp
-aggregate modes forward-bucket source pixels (the reference
-resampling-mode dict, georasters.py:592-606).  The DuckDB SQL twins
-below and the numpy references in the tests are the independent
-checks.
+(row, col).  One gather per resampling rule: nearest takes the
+quantized source cell; bilinear, cubic, cubicspline and lanczos are
+rows of one separable-kernel table (offsets, weight function w(o, d),
+weight-mass NULL guard).  Each rule has two plans over the same
+arithmetic: a join of the pixel table (``_kernel_gather``) or, given
+``images=``, a tile cogroup over the tiles table (``gather_from_tiles``
+/ ``_kernel_gather_tiles``; only the target lattice shuffles, and every
+tile-cogroup kernel enforces one tiles-table contract through
+``_tile_shape`` / ``_check_tiles``).  The gdalwarp aggregate modes
+forward-bucket source pixels (the reference resampling-mode dict,
+georasters.py:592-606).  The DuckDB SQL twins below and the numpy
+references in the tests are the independent checks.
 
 Engine-stable gather rule (the DuckDB-oracle contract): the fractional
 source index u = (lat − y0)/cy is quantized to 1e-4 cell units BEFORE
@@ -66,7 +71,7 @@ def _superblock(n_targets, src_shape, t_h: int, t_w: int) -> int:
     the local core count.  1 when the shapes are unknown.  A block
     never spans more tiles than the source has along its longer side,
     and its dense float64 window stays within ``_WINDOW_BYTES`` (block
-    + 2 tiles a side: the kernel plans' halo is narrower than a tile
+    + 2 tiles a side: the kernel plans' halo is at most a tile
     on each side)."""
     if n_targets is None or src_shape is None:
         return 1
@@ -76,6 +81,74 @@ def _superblock(n_targets, src_shape, t_h: int, t_w: int) -> int:
                                / max(1, int(n_targets))))
     fit = math.isqrt(_WINDOW_BYTES // (8 * t_h * t_w)) - 2
     return max(1, min(want, max(n_tr, n_tc), fit))
+
+
+# ---------------------------------------------------------------------------
+# the tiles-table contract of every tile-cogroup kernel (gather_from_tiles,
+# _kernel_gather_tiles, focal.focal_apply_tiles, xyz._fused_base_tiles):
+# one row per (tile_row, tile_col), every tile the same h x w
+# ---------------------------------------------------------------------------
+
+def _tile_shape(images: DataFrame, tile_shape, who: str) -> tuple[int, int]:
+    """(t_h, t_w) of a uniform tiles table.  The tile side keys the
+    shuffle, so it must be known while planning: ``tile_shape`` when
+    given, else a one-row probe job (pass tile_shape to skip it)."""
+    if tile_shape is not None:
+        return int(tile_shape[0]), int(tile_shape[1])
+    dims = images.select("w", "h").first()
+    if dims is None:
+        raise ValueError(f"{who}: empty images table "
+                         "(pass tile_shape to plan over it anyway)")
+    return int(dims["h"]), int(dims["w"])
+
+
+def _check_tiles(right: pd.DataFrame, t_h: int, t_w: int, who: str) -> None:
+    """In-kernel half of the contract, on the tile rows a task already
+    holds: a duplicate key would mix grids nondeterministically (e.g.
+    an unresolved mosaic union), and a tile of another shape would
+    place its cells by its own w/h while targets were keyed by
+    (t_h, t_w) — refuse both instead of gathering wrong cells."""
+    if right.duplicated(["tile_row", "tile_col"]).any():
+        raise ValueError(
+            f"{who}: duplicate image rows share tile keys; resolve "
+            "duplicates (e.g. union_mosaic) first")
+    odd = (right["h"] != t_h) | (right["w"] != t_w)
+    if odd.any():
+        bad = right[odd].iloc[0]
+        raise ValueError(
+            f"{who}: tile ({bad.tile_row}, {bad.tile_col}) is "
+            f"{bad.h}x{bad.w}, expected uniform {t_h}x{t_w} tiles")
+
+
+def _gather_values(rows: np.ndarray, cols: np.ndarray, right: pd.DataFrame,
+                   t_h: int, t_w: int) -> np.ndarray:
+    """float64 values at the global source cells (rows, cols) from the
+    stored tiles in ``right`` (checked by ``_check_tiles``); NaN where
+    no tile covers the cell or the cell is masked (ndv).  One sort by
+    composite tile key, then a contiguous slice per tile (r7): per-tile
+    full-length masks cost O(#tiles·M), the sort is O(M log M) once.
+    Floor division matches the tile keying, so out-of-range cells fall
+    in gaps no tile key hits."""
+    from ..sources import codec as _codec
+
+    vals = np.full(len(rows), np.nan)
+    tkey = (rows // t_h) * (np.int64(1) << 32) + (cols // t_w)
+    order = np.argsort(tkey, kind="stable")
+    ks = tkey[order]
+    for t in right.itertuples(index=False):
+        tk = (np.int64(t.tile_row) << 32) + np.int64(t.tile_col)
+        lo = int(np.searchsorted(ks, tk, "left"))
+        hi = int(np.searchsorted(ks, tk, "right"))
+        if lo == hi:
+            continue
+        idx = order[lo:hi]
+        ndv = float(t.ndv)
+        arr = _codec.decode_tile(bytes(t.bytes), t.fmt, t_w, t_h, ndv)
+        v = arr[rows[idx] - int(t.tile_row) * t_h,
+                cols[idx] - int(t.tile_col) * t_w].astype(np.float64)
+        v[v == ndv] = np.nan
+        vals[idx] = v
+    return vals
 
 
 def gather_from_tiles(tgt: DataFrame, images: DataFrame,
@@ -109,24 +182,11 @@ def gather_from_tiles(tgt: DataFrame, images: DataFrame,
     from the measured work per group — target count over tile count —
     not from the local core count, so it adapts from the 45-tile gate
     grids to a cluster-scale lattice."""
-    import pandas as pd
-
-    from ..sources import codec as _codec
-
-    # floor division via floor(): SQL DIV truncates toward zero, which
-    # would fold negative (out-of-range) indices into tile 0
-    if tile_shape is not None:
-        t_h, t_w = int(tile_shape[0]), int(tile_shape[1])
-    else:
-        # the tile side keys the shuffle, so it must be known up front;
-        # pass tile_shape to skip this one-row probe job
-        dims = images.select("w", "h").first()
-        if dims is None:
-            raise ValueError("gather_from_tiles: empty images table "
-                             "(pass tile_shape to gather over it anyway)")
-        t_w, t_h = int(dims["w"]), int(dims["h"])
+    t_h, t_w = _tile_shape(images, tile_shape, "gather_from_tiles")
     block = _superblock(n_targets, src_shape, t_h, t_w)
     b_h, b_w = block * t_h, block * t_w
+    # floor division via floor(): SQL DIV truncates toward zero, which
+    # would fold negative (out-of-range) indices into tile 0
     keyed = tgt.select(
         "trow", "tcol", "row", "col", *carry,
         F.floor(F.col("row") / F.lit(b_h)).cast("long").alias("_tr"),
@@ -140,51 +200,14 @@ def gather_from_tiles(tgt: DataFrame, images: DataFrame,
 
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         out = left[["trow", "tcol", *carry]].copy()
-        vals = np.full(len(left), np.nan)
         if not len(right):
             # no tile reaches this block (NULL-keyed targets, whose
             # source index is NULL, included): every gather is NULL
-            out["value"] = pd.array(vals, dtype="Float64")
+            out["value"] = pd.array(np.full(len(left), np.nan), dtype="Float64")
             return out
-        if right.duplicated(["tile_row", "tile_col"]).any():
-            # one row per (tile_row, tile_col) is the tiles-table
-            # contract; silently decoding one of them on a mosaic /
-            # unioned images table would mix grids nondeterministically
-            raise ValueError(
-                "gather_from_tiles: duplicate image rows share tile keys; "
-                "resolve duplicates (e.g. union_mosaic) first")
-        odd = (right["h"] != t_h) | (right["w"] != t_w)
-        if odd.any():
-            # targets are keyed to tiles by the probed (t_h, t_w); a tile
-            # of another shape would silently miss or misplace gathers
-            bad = right[odd].iloc[0]
-            raise ValueError(
-                f"gather_from_tiles: tile ({bad.tile_row}, {bad.tile_col}) "
-                f"is {bad.h}x{bad.w}, expected uniform {t_h}x{t_w} tiles")
-        rows = left["row"].to_numpy(np.int64)
-        colsv = left["col"].to_numpy(np.int64)
-        # one sort by composite tile key, then a contiguous slice per
-        # tile (r7): the per-tile full-length masks cost O(B²·M) over a
-        # B×B superblock — the sort is O(M log M) once.  Floor division
-        # matches the block keying, so out-of-range rows fall in gaps
-        # no tile key hits, and every row in a tile's slice lies inside
-        # that (uniform) tile.
-        tkey = (rows // t_h) * (np.int64(1) << 32) + (colsv // t_w)
-        order = np.argsort(tkey, kind="stable")
-        ks = tkey[order]
-        for t in right.itertuples(index=False):
-            tk = (np.int64(t.tile_row) << 32) + np.int64(t.tile_col)
-            lo = int(np.searchsorted(ks, tk, "left"))
-            hi = int(np.searchsorted(ks, tk, "right"))
-            if lo == hi:
-                continue
-            idx = order[lo:hi]
-            ndv = float(t.ndv)
-            arr = _codec.decode_tile(bytes(t.bytes), t.fmt, t_w, t_h, ndv)
-            v = arr[rows[idx] - int(t.tile_row) * t_h,
-                    colsv[idx] - int(t.tile_col) * t_w].astype(np.float64)
-            v[v == ndv] = np.nan
-            vals[idx] = v
+        _check_tiles(right, t_h, t_w, "gather_from_tiles")
+        vals = _gather_values(left["row"].to_numpy(np.int64),
+                              left["col"].to_numpy(np.int64), right, t_h, t_w)
         out["value"] = pd.array(vals, dtype="Float64")  # NaN -> NULL
         return out
 
@@ -324,228 +347,6 @@ SELECT tgt.trow, tgt.tcol, agg.value, agg.n_contrib
 FROM tgt LEFT JOIN agg ON agg.trow = tgt.trow AND agg.tcol = tgt.tcol"""
 
 
-# ---------------------------------------------------------------------------
-# resampling modes beyond nearest (reference modes dict georasters.py:592-606)
-# ---------------------------------------------------------------------------
-
-def _bilinear_corners(
-    target: DataFrame,
-    lon,
-    lat,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-) -> DataFrame:
-    """Target lattice → the 4 surrounding source cell centers with
-    bilinear weights: (trow, tcol, row, col, wgt), 4 rows per target
-    cell.  Shared by the pixel-join and tile-cogrouped bilinear plans
-    so their row/col/wgt expressions are identical by construction."""
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    # fractional CENTER-based source index (cell r center at y0+(r+.5)cy)
-    u = F.round((lat - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
-    v = F.round((lon - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)
-    tgt = target.select(
-        "trow", "tcol",
-        F.floor(u).cast("long").alias("r0"), (u - F.floor(u)).alias("du"),
-        F.floor(v).cast("long").alias("c0"), (v - F.floor(v)).alias("dv"),
-    )
-    return tgt.select(
-        "trow", "tcol", "r0", "c0", "du", "dv",
-        F.explode(F.array(*[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                            for a in (0, 1) for b in (0, 1)])).alias("o"),
-    ).select(
-        "trow", "tcol",
-        (F.col("r0") + F.col("o.a")).alias("row"),
-        (F.col("c0") + F.col("o.b")).alias("col"),
-        (
-            F.when(F.col("o.a") == 1, F.col("du")).otherwise(1.0 - F.col("du"))
-            * F.when(F.col("o.b") == 1, F.col("dv")).otherwise(1.0 - F.col("dv"))
-        ).alias("wgt"),
-    )
-
-
-def _no_tiles(left):
-    """Zero (num, den, n) partials for a cogroup group no stored tile
-    reaches: every target in it comes back NULL.  Targets whose source
-    coordinate projected to NULL (non-finite) land here too — their
-    block key is NULL, which no tile has."""
-    z = np.zeros(len(left))
-    return pd.DataFrame({"trow": left["trow"].to_numpy(np.int64),
-                         "tcol": left["tcol"].to_numpy(np.int64),
-                         "num": z, "den": z, "n": z.astype(np.int64)})
-
-
-def _bilinear_from_lonlat_tiles(
-    images: DataFrame,
-    target: DataFrame,
-    lon,
-    lat,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-    n_targets: int | None = None,
-    src_shape: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Tile-cogrouped bilinear (the 100-TB path, r6): same corner
-    lattice as ``_bilinear_from_lonlat`` but the 4M corner rows gather
-    through ``gather_from_tiles`` — each task decodes its tile once
-    and indexes every corner that falls in it — instead of
-    shuffle-joining an N-row exploded pixel table.  Shuffle volume is
-    4·M corners + one (trow, tcol) aggregate exchange, independent of
-    source pixel count N.  Masked / out-of-range corners come back
-    NULL and are excluded from BOTH the weighted sum and the weight
-    mass, reproducing the inner-join renormalization exactly
-    (pytest-pinned equivalence)."""
-    import pandas as pd
-
-    from ..sources import codec as _codec
-
-    # r7 fused plan: do NOT explode 4 corner rows per target before the
-    # exchange.  The un-exploded target frame (r0, c0, du, dv) shuffles
-    # ONCE keyed by the tile of its top-left corner; each task assembles
-    # its tile plus a one-cell right/bottom halo from the <=4 replicated
-    # neighbor tiles (tile BYTES move, not pixel rows) and resolves all
-    # 4 corners in numpy.  The 4·M corner shuffle, both of its Arrow
-    # crossings and the (trow, tcol) re-aggregation exchange disappear;
-    # the weighted-sum/weight-mass/round arithmetic stays in the JVM on
-    # the kernel's (num, den, n) partials, so the NULL guards and 6-dp
-    # rounding are the same expressions as before (pytest-pinned
-    # equivalence with the pixel-join plan).
-    spark = images.sparkSession
-    dims = images.select("w", "h").first()
-    if dims is None:
-        raise ValueError("bilinear tiles plan: empty images table")
-    t_w, t_h = int(dims["w"]), int(dims["h"])
-    # tile SUPERBLOCKS sized for ~32k targets per task (shared rule)
-    block = _superblock(n_targets, src_shape, t_h, t_w)
-    b_h, b_w = block * t_h, block * t_w
-    x0g, y0g = src_origin
-    cx, cy = src_cellsize
-    u = F.round((lat - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
-    v = F.round((lon - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)
-    frac = target.select(
-        "trow", "tcol",
-        F.floor(u).cast("long").alias("r0"), (u - F.floor(u)).alias("du"),
-        F.floor(v).cast("long").alias("c0"), (v - F.floor(v)).alias("dv"),
-    ).select(
-        "*",
-        F.floor(F.col("r0") / F.lit(b_h)).cast("long").alias("_tr"),
-        F.floor(F.col("c0") / F.lit(b_w)).cast("long").alias("_tc"),
-    )
-    # each stored tile feeds its own superblock task, plus the up/left/
-    # up-left tasks whose one-cell halo it supplies when it sits on its
-    # block's top/left edge
-    rep = (images
-           .select(F.col("tile_row").cast("long").alias("tile_row"),
-                   F.col("tile_col").cast("long").alias("tile_col"),
-                   "bytes", "fmt", "w", "h", "ndv")
-           .withColumn("_da", F.explode(F.array(F.lit(0), F.lit(-1))))
-           .withColumn("_db", F.explode(F.array(F.lit(0), F.lit(-1))))
-           .filter(((F.col("_da") == 0) | (F.col("tile_row") % block == 0))
-                   & ((F.col("_db") == 0) | (F.col("tile_col") % block == 0)))
-           .select((F.floor(F.col("tile_row") / block).cast("long")
-                    + F.col("_da")).alias("_tr"),
-                   (F.floor(F.col("tile_col") / block).cast("long")
-                    + F.col("_db")).alias("_tc"),
-                   "tile_row", "tile_col", "bytes", "fmt", "w", "h", "ndv"))
-    # NO _tr/_tc >= 0 filter: a target whose top-left corner index is
-    # negative (upsampling at the grid's top/left edge) keys to block
-    # -1, and the row-0/col-0 tiles must reach that task as its halo so
-    # the in-range corners renormalize exactly like the pixel plan —
-    # review finding r7: the filter returned NULL for those targets
-
-    def kernel(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(right):
-            return _no_tiles(left)
-        if right.duplicated(["tile_row", "tile_col"]).any():
-            raise ValueError(
-                "bilinear tiles plan: duplicate image rows share tile keys; "
-                "resolve duplicates (e.g. union_mosaic) first")
-        base_r, base_c = int(key[0]) * b_h, int(key[1]) * b_w
-        win = np.full((b_h + 1, b_w + 1), np.nan)
-        for t in right.itertuples(index=False):
-            t_ndv = float(t.ndv)
-            arr = _codec.decode_tile(bytes(t.bytes), t.fmt,
-                                     int(t.w), int(t.h), t_ndv)
-            h, w = arr.shape
-            gr0 = int(t.tile_row) * h
-            gc0 = int(t.tile_col) * w
-            r_lo, r_hi = max(gr0, base_r), min(gr0 + h, base_r + b_h + 1)
-            c_lo, c_hi = max(gc0, base_c), min(gc0 + w, base_c + b_w + 1)
-            if r_lo < r_hi and c_lo < c_hi:
-                sub = arr[r_lo - gr0:r_hi - gr0,
-                          c_lo - gc0:c_hi - gc0].astype(np.float64)
-                sub = np.where(sub == t_ndv, np.nan, sub)
-                win[r_lo - base_r:r_hi - base_r,
-                    c_lo - base_c:c_hi - base_c] = sub
-        r0l = left["r0"].to_numpy(np.int64) - base_r
-        c0l = left["c0"].to_numpy(np.int64) - base_c
-        du = left["du"].to_numpy(np.float64)
-        dv = left["dv"].to_numpy(np.float64)
-        num = np.zeros(len(left))
-        den = np.zeros(len(left))
-        n = np.zeros(len(left), np.int64)
-        for a in (0, 1):
-            wa = du if a == 1 else 1.0 - du
-            for b in (0, 1):
-                wb = dv if b == 1 else 1.0 - dv
-                vv = win[r0l + a, c0l + b]
-                ok = ~np.isnan(vv)
-                wgt = wa * wb
-                num[ok] += wgt[ok] * vv[ok]
-                den[ok] += wgt[ok]
-                n[ok] += 1
-        return pd.DataFrame({
-            "trow": left["trow"].to_numpy(np.int64),
-            "tcol": left["tcol"].to_numpy(np.int64),
-            "num": num, "den": den, "n": n,
-        })
-
-    g = (frac.groupBy("_tr", "_tc")
-         .cogroup(rep.groupBy("_tr", "_tc"))
-         .applyInPandas(kernel, schema="trow long, tcol long, num double, "
-                                       "den double, n long"))
-    return g.select(
-        "trow", "tcol",
-        F.when(F.col("den") > 0,
-               F.round(F.col("num") / F.col("den"), 6)).alias("value"),
-        # NULL (not 0) when no corner was valid — matches the pixel
-        # plan's left join against the inner-join aggregate
-        F.when(F.col("n") > 0, F.col("n")).cast("long").alias("n_contrib"),
-    )
-
-
-def _bilinear_from_lonlat(
-    px: DataFrame,
-    target: DataFrame,
-    lon,
-    lat,
-    src_origin: tuple[float, float],
-    src_cellsize: tuple[float, float],
-):
-    """Shared nodata-aware bilinear gather, target-CRS-AGNOSTIC: the
-    caller supplies the target lattice (trow, tcol) and the inverse-
-    projected lon/lat Column expressions; everything from the
-    fractional source index on is identical across target CRSs. Each
-    target cell center maps to fractional source coordinates; the 4
-    surrounding cell centers join in with (1−du)(1−dv)-style weights;
-    masked neighbors drop out of the join and the weight mass
-    renormalizes over the valid ones (GDAL nodata-aware bilinear).
-    Pure DataFrame ops: one explode(4) + equi-join + groupBy — no UDF."""
-    corners = _bilinear_corners(target, lon, lat, src_origin, src_cellsize)
-    j = corners.join(px.select("row", "col", "value"), ["row", "col"])
-    # explicit zero-weight-mass guard (a valid corner can carry weight
-    # exactly 0 after quantization): NULL, matching the numpy oracle's
-    # den > 0 rule and DuckDB's NULL-on-/0
-    out = j.groupBy("trow", "tcol").agg(
-        F.when(
-            F.sum("wgt") > 0,
-            F.round(F.sum(F.col("wgt") * F.col("value")) / F.sum("wgt"), 6),
-        ).alias("value"),
-        F.count(F.lit(1)).cast("long").alias("n_contrib"),
-    )
-    return target.select("trow", "tcol").join(out, ["trow", "tcol"], "left")
-
-
 def _round_half_up(arr: np.ndarray, q: int) -> np.ndarray:
     """Element-wise decimal round emulating Spark's F.round exactly:
     Java BigDecimal.valueOf(double) parses Double.toString — the
@@ -670,24 +471,32 @@ def _unknown_mode(resampling: str) -> NotImplementedError:
         "georasters.py:592-606)")
 
 
+# ---------------------------------------------------------------------------
+# resampling modes beyond nearest (reference modes dict georasters.py:592-606):
+# bilinear, cubic, cubicspline and lanczos are one separable-kernel gather
+# ---------------------------------------------------------------------------
+
 def _kernel_wfun_np(kernel: str, a: int = 3):
-    """numpy twin of ``_kernel_offsets_wfun``'s weight function, used
-    by the fused tile plan (`_kernel_gather_tiles`).  The polynomial
-    kernels follow the SAME operation order as the Column expressions
-    (IEEE +,-,*,/ are exactly specified, so catmull/bspline weights
-    are bit-identical to the JVM's); lanczos shares the constants and
-    structure but libm sin may differ from Math.sin by 1 ulp — the
-    same magnitude the 6-dp rounding already absorbs between Spark
-    and the DuckDB oracle.
+    """numpy twin of ``_kernel_offsets_wfun``'s weight function w(o, d)
+    (offset o, fractional index d), used by the fused tile plan
+    (`_kernel_gather_tiles`).  Every kernel follows the SAME operation
+    order as the Column expressions (IEEE +,-,*,/ are exactly
+    specified, so bilinear/catmull/bspline weights are bit-identical
+    to the JVM's); lanczos shares the constants and structure but libm
+    sin may differ from Math.sin by 1 ulp — the same magnitude the
+    6-dp rounding already absorbs between Spark and the DuckDB oracle.
 
     DELIBERATELY separate from the kernel weights of the numpy test
     oracles (tests/numpy_oracles.py): this one is production code
     mirroring the Column expressions term-for-term, those are the
     independent check — merging them would make the oracle
     tautological."""
+    if kernel == "bilinear":
+        return lambda o, d: d if o == 1 else 1.0 - d
     if kernel == "catmull":
 
-        def w(t):
+        def w(o, d):
+            t = np.abs(o - d)
             t2, t3 = t * t, t * t * t
             return np.where(t <= 1.0, 1.5 * t3 - 2.5 * t2 + 1.0,
                             -0.5 * t3 + 2.5 * t2 - 4.0 * t + 2.0)
@@ -695,7 +504,8 @@ def _kernel_wfun_np(kernel: str, a: int = 3):
         return w
     if kernel == "bspline":
 
-        def w(t):
+        def w(o, d):
+            t = np.abs(o - d)
             t2, t3 = t * t, t * t * t
             two_t = 2.0 - t
             return np.where(t <= 1.0, (4.0 - 6.0 * t2 + 3.0 * t3) / 6.0,
@@ -704,7 +514,8 @@ def _kernel_wfun_np(kernel: str, a: int = 3):
         return w
     if kernel == "lanczos":
 
-        def w(t):
+        def w(o, d):
+            t = np.abs(o - d)
             pit = math.pi * t
             pita = pit / float(a)
             with np.errstate(invalid="ignore", divide="ignore"):
@@ -717,14 +528,20 @@ def _kernel_wfun_np(kernel: str, a: int = 3):
 
 
 def _kernel_offsets_wfun(kernel: str, a: int = 3):
-    """(neighbor offsets, weight-Column function) for a named
-    convolution kernel. catmull = GDAL 'cubic' (a = -0.5 Catmull-Rom,
-    4x4); bspline = GDAL 'cubicspline' (approximating cubic B-spline
-    basis, 4x4); lanczos = GDAL 'lanczos' (a=3 windowed sinc, 6x6).
-    The weight function takes a |offset - frac| distance Column."""
+    """(neighbor offsets, weight-Column function w(o, d)) for a named
+    separable kernel, o the offset and d the fractional index Column.
+    bilinear = GDAL 'bilinear' (2x2: d at offset 1, 1 - d at offset 0
+    — not 1 - |o - d|, which rounds differently); catmull = GDAL
+    'cubic' (a = -0.5 Catmull-Rom, 4x4); bspline = GDAL 'cubicspline'
+    (approximating cubic B-spline basis, 4x4); lanczos = GDAL
+    'lanczos' (a=3 windowed sinc, 6x6).  The last three weigh the
+    distance |o - d|."""
+    if kernel == "bilinear":
+        return (0, 1), lambda o, d: F.when(o == 1, d).otherwise(1.0 - d)
     if kernel in ("catmull", "bspline"):
 
-        def catmull(t):
+        def catmull(o, d):
+            t = F.abs(o - d)
             t2, t3 = t * t, t * t * t
             return (
                 F.when(t <= 1.0, F.lit(1.5) * t3 - F.lit(2.5) * t2 + F.lit(1.0))
@@ -732,7 +549,8 @@ def _kernel_offsets_wfun(kernel: str, a: int = 3):
                            + F.lit(2.0))
             )
 
-        def bspline(t):
+        def bspline(o, d):
+            t = F.abs(o - d)
             t2, t3 = t * t, t * t * t
             two_t = F.lit(2.0) - t
             return (
@@ -744,7 +562,8 @@ def _kernel_offsets_wfun(kernel: str, a: int = 3):
         return (-1, 0, 1, 2), (catmull if kernel == "catmull" else bspline)
     if kernel == "lanczos":
 
-        def lanc(t):
+        def lanc(o, d):
+            t = F.abs(o - d)
             pit = F.lit(math.pi) * t
             sinc = F.when(t == 0.0, F.lit(1.0)).otherwise(F.sin(pit) / pit)
             pita = pit / F.lit(float(a))
@@ -755,13 +574,24 @@ def _kernel_offsets_wfun(kernel: str, a: int = 3):
     raise ValueError(f"unknown resampling kernel {kernel!r}")
 
 
+def _mass_ok(kernel: str, den):
+    """The NULL guard on the weight mass Σw of a target's valid
+    corners.  Bilinear weights are non-negative, so any positive mass
+    renormalizes (a valid corner can carry weight exactly 0 after
+    quantization: NULL, as the numpy oracle's den > 0 rule and
+    DuckDB's NULL-on-/0).  Catmull-Rom and Lanczos have NEGATIVE lobes:
+    when nodata strips the positive mass the renormalized value blows
+    up, so |Σw| < 0.05 emits NULL (no reliable estimate)."""
+    return den > 0 if kernel == "bilinear" else F.abs(den) >= 0.05
+
+
 def _kernel_corners(target: DataFrame, u, v, kernel: str,
                     a: int = 3) -> DataFrame:
     """Target lattice → the k×k kernel neighborhood with separable
     convolution weights: (trow, tcol, row, col, wgt), k² rows per
-    target cell.  Shared by the pixel-join (`_kernel_gather`) and
-    tile-cogrouped (`_kernel_gather_tiles`) plans so their
-    row/col/wgt expressions are identical by construction."""
+    target cell.  The corner lattice of the pixel-join plan
+    (`_kernel_gather`); the tile plan (`_kernel_gather_tiles`) spells
+    the same row/col/wgt arithmetic in numpy."""
     offs, wfun = _kernel_offsets_wfun(kernel, a)
     tgt = target.select(
         "trow", "tcol",
@@ -776,9 +606,20 @@ def _kernel_corners(target: DataFrame, u, v, kernel: str,
         "trow", "tcol",
         (F.col("r0") + F.col("o.a")).alias("row"),
         (F.col("c0") + F.col("o.b")).alias("col"),
-        (wfun(F.abs(F.col("o.a") - F.col("du")))
-         * wfun(F.abs(F.col("o.b") - F.col("dv")))).alias("wgt"),
+        (wfun(F.col("o.a"), F.col("du"))
+         * wfun(F.col("o.b"), F.col("dv"))).alias("wgt"),
     )
+
+
+def _no_tiles(left):
+    """Zero (num, den, n) partials for a cogroup group no stored tile
+    reaches: every target in it comes back NULL.  Targets whose source
+    coordinate projected to NULL (non-finite) land here too — their
+    block key is NULL, which no tile has."""
+    z = np.zeros(len(left))
+    return pd.DataFrame({"trow": left["trow"].to_numpy(np.int64),
+                         "tcol": left["tcol"].to_numpy(np.int64),
+                         "num": z, "den": z, "n": z.astype(np.int64)})
 
 
 def _kernel_gather_tiles(images: DataFrame, target: DataFrame, u, v,
@@ -786,45 +627,39 @@ def _kernel_gather_tiles(images: DataFrame, target: DataFrame, u, v,
                          n_targets: int | None = None,
                          src_shape: tuple[int, int] | None = None
                          ) -> DataFrame:
-    """Tile-cogrouped cubic/lanczos gather with the signed-weight-mass
-    NULL guard of ``_kernel_gather`` (|Σw over valid| < 0.05 ⇒ NULL;
-    negative lobes can strip the mass).  Pytest-pinned equivalence
-    with the pixel-join plan.
+    """Tile-cogrouped separable-kernel gather (bilinear, cubic,
+    cubicspline, lanczos) with the weight-mass NULL guard of
+    ``_kernel_gather``; masked / out-of-range corners are excluded from
+    both the weighted sum and the weight mass, reproducing the
+    pixel-join renormalization exactly (pytest-pinned equivalence).
 
-    r7 fused plan (the ``_bilinear_from_lonlat_tiles`` treatment
-    generalized to any separable kernel): the k²-corner explode no
-    longer happens BEFORE the exchange.  The un-exploded target frame
-    (r0, c0, du, dv) shuffles once keyed by tile superblock; each task
-    assembles its block window plus a (lead, trail)-cell halo from the
-    replicated edge-neighbor tiles (tile BYTES move, not corner rows)
-    and resolves all k² corners in numpy with the numpy twin of the
-    kernel weight function (`_kernel_wfun_np` — bit-identical
-    polynomials).  The k²·M corner shuffle, both of its Arrow
-    crossings and the (trow, tcol) re-aggregation exchange disappear;
-    the |Σw| >= 0.05 signed-mass guard and 6-dp rounding stay in the
-    JVM on the kernel's (num, den, n) partials.  ``n_targets`` /
-    ``src_shape`` size the superblocks (scaled by k²/4 so per-task
-    gather work matches the bilinear plan's)."""
-    import pandas as pd
-
+    r7 fused plan: the k²-corner explode does not happen BEFORE the
+    exchange.  The un-exploded target frame (r0, c0, du, dv) shuffles
+    once keyed by tile superblock; each task assembles its block
+    window plus a (lead, trail)-cell halo from the replicated
+    edge-neighbor tiles (tile BYTES move, not corner rows) and
+    resolves all k² corners in numpy with the numpy twin of the kernel
+    weight function (`_kernel_wfun_np`).  The k²·M corner shuffle, both
+    of its Arrow crossings and the (trow, tcol) re-aggregation
+    exchange disappear; the mass guard (``_mass_ok``) and 6-dp rounding
+    stay in the JVM on the kernel's (num, den, n) partials.
+    ``n_targets`` / ``src_shape`` size the superblocks (scaled by k²/4,
+    so per-task gather work matches a 2x2 bilinear block's)."""
     from ..sources import codec as _codec
 
     offs, _ = _kernel_offsets_wfun(kernel, a)
     wfun = _kernel_wfun_np(kernel, a)
     lead, trail = -min(offs), max(offs)
     k2 = len(offs) * len(offs)
-    dims = images.select("w", "h").first()
-    if dims is None:
-        raise ValueError("kernel tiles plan: empty images table")
-    t_w, t_h = int(dims["w"]), int(dims["h"])
-    if lead >= min(t_h, t_w) or trail >= min(t_h, t_w):
+    t_h, t_w = _tile_shape(images, None, "kernel tiles plan")
+    if lead > min(t_h, t_w) or trail > min(t_h, t_w):
         # the ±1-block halo replication only reaches one tile past a
         # block edge; a kernel wider than a tile would silently drop
         # contributions — refuse loudly (use the px-join plan instead)
         raise ValueError(
             f"kernel tiles plan: kernel half-width ({lead}/{trail}) must "
-            f"be smaller than the tile side ({t_h}x{t_w}); pass px= "
-            "instead of images= for kernels this wide")
+            f"not exceed the tile side ({t_h}x{t_w}); pass px= instead "
+            "of images= for kernels this wide")
     block = _superblock(
         None if n_targets is None else n_targets * k2 // 4,
         src_shape, t_h, t_w)
@@ -838,13 +673,18 @@ def _kernel_gather_tiles(images: DataFrame, target: DataFrame, u, v,
         F.floor(F.col("r0") / F.lit(b_h)).cast("long").alias("_tr"),
         F.floor(F.col("c0") / F.lit(b_w)).cast("long").alias("_tc"),
     )
-    # a stored tile feeds its own block, the NEXT block (whose lead
-    # halo it supplies when it sits on its block's bottom/right edge)
-    # and the PREVIOUS block (whose trail halo it supplies from the
-    # top/left edge); lead/trail < tile side, so ±1 block suffices.
-    # No _tr/_tc >= 0 filter — out-of-range targets key to block -1
-    # and must still see the row-0/col-0 tiles as halo (the bilinear
-    # upsampling review finding applies here identically).
+    # a stored tile feeds its own block, the PREVIOUS block when it
+    # sits on its block's top/left edge and the kernel has a trailing
+    # halo (which it supplies), and the NEXT block when it sits on the
+    # bottom/right edge and the kernel has a leading halo; lead/trail
+    # <= tile side, so ±1 block suffices (bilinear, lead 0, ships no
+    # tile forward).  No _tr/_tc >= 0 filter — a target whose top-left
+    # corner index is negative (upsampling at the grid's top/left edge)
+    # keys to block -1, and the row-0/col-0 tiles must reach that task
+    # as halo so the in-range corners renormalize like the pixel plan.
+    shifts = F.array(*[F.lit(d) for d in
+                       (0, *((-1,) if trail else ()), *((1,) if lead else ()))])
+
     def _edge(axis_col, d):
         return ((d == 0)
                 | ((d == -1) & (F.col(axis_col) % block == 0))
@@ -854,10 +694,8 @@ def _kernel_gather_tiles(images: DataFrame, target: DataFrame, u, v,
            .select(F.col("tile_row").cast("long").alias("tile_row"),
                    F.col("tile_col").cast("long").alias("tile_col"),
                    "bytes", "fmt", "w", "h", "ndv")
-           .withColumn("_da", F.explode(F.array(
-               F.lit(0), F.lit(-1), F.lit(1))))
-           .withColumn("_db", F.explode(F.array(
-               F.lit(0), F.lit(-1), F.lit(1))))
+           .withColumn("_da", F.explode(shifts))
+           .withColumn("_db", F.explode(shifts))
            .filter(_edge("tile_row", F.col("_da"))
                    & _edge("tile_col", F.col("_db")))
            .select((F.floor(F.col("tile_row") / block).cast("long")
@@ -871,22 +709,17 @@ def _kernel_gather_tiles(images: DataFrame, target: DataFrame, u, v,
     def kernel_fn(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(right):
             return _no_tiles(left)
-        if right.duplicated(["tile_row", "tile_col"]).any():
-            raise ValueError(
-                "kernel tiles plan: duplicate image rows share tile keys; "
-                "resolve duplicates (e.g. union_mosaic) first")
+        _check_tiles(right, t_h, t_w, "kernel tiles plan")
         base_r = int(key[0]) * b_h - lead
         base_c = int(key[1]) * b_w - lead
         win = np.full((H, Wn), np.nan)
         for t in right.itertuples(index=False):
             t_ndv = float(t.ndv)
-            arr = _codec.decode_tile(bytes(t.bytes), t.fmt,
-                                     int(t.w), int(t.h), t_ndv)
-            h, w = arr.shape
-            gr0 = int(t.tile_row) * h
-            gc0 = int(t.tile_col) * w
-            r_lo, r_hi = max(gr0, base_r), min(gr0 + h, base_r + H)
-            c_lo, c_hi = max(gc0, base_c), min(gc0 + w, base_c + Wn)
+            arr = _codec.decode_tile(bytes(t.bytes), t.fmt, t_w, t_h, t_ndv)
+            gr0 = int(t.tile_row) * t_h
+            gc0 = int(t.tile_col) * t_w
+            r_lo, r_hi = max(gr0, base_r), min(gr0 + t_h, base_r + H)
+            c_lo, c_hi = max(gc0, base_c), min(gc0 + t_w, base_c + Wn)
             if r_lo < r_hi and c_lo < c_hi:
                 sub = arr[r_lo - gr0:r_hi - gr0,
                           c_lo - gc0:c_hi - gc0].astype(np.float64)
@@ -897,12 +730,12 @@ def _kernel_gather_tiles(images: DataFrame, target: DataFrame, u, v,
         c0l = left["c0"].to_numpy(np.int64) - base_c
         du = left["du"].to_numpy(np.float64)
         dv = left["dv"].to_numpy(np.float64)
-        wb_by_off = {ob: wfun(np.abs(ob - dv)) for ob in offs}
+        wb_by_off = {ob: wfun(ob, dv) for ob in offs}
         num = np.zeros(len(left))
         den = np.zeros(len(left))
         n = np.zeros(len(left), np.int64)
         for oa in offs:
-            wa = wfun(np.abs(oa - du))
+            wa = wfun(oa, du)
             for ob in offs:
                 vv = win[r0l + oa, c0l + ob]
                 ok = ~np.isnan(vv)
@@ -922,29 +755,30 @@ def _kernel_gather_tiles(images: DataFrame, target: DataFrame, u, v,
                                           "den double, n long"))
     return g.select(
         "trow", "tcol",
-        F.when(F.abs(F.col("den")) >= 0.05,
+        F.when(_mass_ok(kernel, F.col("den")),
                F.round(F.col("num") / F.col("den"), 6)).alias("value"),
+        # NULL (not 0) when no corner was valid — matches the pixel
+        # plan's left join against the inner-join aggregate
         F.when(F.col("n") > 0, F.col("n")).cast("long").alias("n_contrib"),
     )
 
 
 def _kernel_gather(px: DataFrame, target: DataFrame, u, v,
                    kernel: str, a: int = 3) -> DataFrame:
-    """Shared nodata-aware convolution gather, target-CRS-AGNOSTIC
-    (the cubic/lanczos analog of _bilinear_from_lonlat): the caller
-    supplies the target lattice (trow, tcol) plus fractional source
-    index Columns u (row) and v (col); the kernel's neighborhood
-    explodes out, equi-joins the pixel table, and the (signed) weight
-    mass renormalizes over valid neighbors. Catmull-Rom and Lanczos
-    have NEGATIVE lobes: when nodata strips the positive mass, the
-    renormalized value blows up — cells with |Σw| < 0.05 emit NULL
-    (no reliable estimate), mirrored in the numpy oracles. Pure
-    DataFrame ops: explode(k²) + equi-join + groupBy — no UDF."""
+    """Shared nodata-aware separable-kernel gather (bilinear, cubic,
+    cubicspline, lanczos), target-CRS-AGNOSTIC: the caller supplies
+    the target lattice (trow, tcol) plus fractional CENTER-based
+    source index Columns u (row) and v (col); the kernel's
+    neighborhood explodes out, equi-joins the pixel table, masked
+    neighbors drop out of the join and the weight mass renormalizes
+    over the valid ones (GDAL nodata-aware resampling), NULL where
+    ``_mass_ok`` fails.  Pure DataFrame ops: explode(k²) + equi-join +
+    groupBy — no UDF."""
     corners = _kernel_corners(target, u, v, kernel, a)
     j = corners.join(px.select("row", "col", "value"), ["row", "col"])
     out = j.groupBy("trow", "tcol").agg(
         F.when(
-            F.abs(F.sum("wgt")) >= 0.05,
+            _mass_ok(kernel, F.sum("wgt")),
             F.round(F.sum(F.col("wgt") * F.col("value")) / F.sum("wgt"), 6),
         ).alias("value"),
         F.count(F.lit(1)).cast("long").alias("n_contrib"),
@@ -1102,11 +936,11 @@ def resize_grid(px: DataFrame, src_shape: tuple[int, int],
                         ["row", "col"], "left").select("trow", "tcol", "value")
     lat = (F.col("trow") + F.lit(0.5)) * F.lit(h / th)
     lon = (F.col("tcol") + F.lit(0.5)) * F.lit(w / tw)
+    u = F.round((lat - F.lit(0.0)) / F.lit(1.0) - F.lit(0.5), _Q)
+    v = F.round((lon - F.lit(0.0)) / F.lit(1.0) - F.lit(0.5), _Q)
     if order == 1:
-        return _bilinear_from_lonlat(px, target, lon, lat, (0.0, 0.0), (1.0, 1.0))
+        return _kernel_gather(px, target, u, v, "bilinear")
     if order == 3:
-        u = F.round((lat - F.lit(0.0)) / F.lit(1.0) - F.lit(0.5), _Q)
-        v = F.round((lon - F.lit(0.0)) / F.lit(1.0) - F.lit(0.5), _Q)
         if prefilter:
             coef = spline_prefilter_px(px, src_shape)
             out = _kernel_gather_spline(coef, target, u, v, h, w)
@@ -1786,13 +1620,16 @@ def reproject_any(
     cell center in target CRS units; the other modes return (trow,
     tcol, value, n_contrib).
 
-    ``images`` (the tiles table) switches the inverse gathers to the
-    tile-cogrouped plans — nearest through ``gather_from_tiles``,
-    bilinear through ``_bilinear_from_lonlat_tiles``, the kernels
-    through ``_kernel_gather_tiles`` — which shuffle the target lattice
-    instead of the source pixels and are value-identical to the pixel
-    joins (pytest-pinned); ``px`` may then be None.  The aggregate
-    modes forward-bucket source pixels, so they need ``px``."""
+    One gather per resampling rule: nearest joins the pixel table on
+    the quantized source index; bilinear, cubic, cubicspline and
+    lanczos are rows of one separable-kernel table (offsets + weight
+    function + weight-mass guard) through ``_kernel_gather``.
+    ``images`` (the tiles table) switches both to their tile-cogrouped
+    twins — ``gather_from_tiles`` and ``_kernel_gather_tiles`` — which
+    shuffle the target lattice instead of the source pixels and are
+    value-identical to the pixel joins (pytest-pinned); ``px`` may then
+    be None.  The aggregate modes forward-bucket source pixels, so they
+    need ``px``."""
     src = parse_crs(src_crs)
     dst = parse_crs(dst_crs)
     if src == dst == "wgs84":
@@ -1806,8 +1643,8 @@ def reproject_any(
                                   src_shape, bbox_lonlat)
     tcx = (X1 - X0) / tw
     tcy = (Y0b - Y1b) / th  # negative: row 0 at max y
-    kern = {"cubic": "catmull", "cubicspline": "bspline",
-            "lanczos": "lanczos"}.get(resampling)
+    kern = {"bilinear": "bilinear", "cubic": "catmull",
+            "cubicspline": "bspline", "lanczos": "lanczos"}.get(resampling)
     agg = _AGG_MODES.get(resampling)
     if agg is not None:
         if px is None:
@@ -1833,7 +1670,7 @@ def reproject_any(
             & (F.col("tcol") >= 0) & (F.col("tcol") < tw)
         )
         return _bucket_agg(binned, agg)
-    if resampling not in ("nearest", "bilinear") and kern is None:
+    if resampling != "nearest" and kern is None:
         raise _unknown_mode(resampling)
     # inverse gather: target cell center -> lon/lat -> source units
     spark = (px if px is not None else images).sparkSession
@@ -1845,11 +1682,6 @@ def reproject_any(
                    "xm", "ym")
     sx, sy = F.col("_sx"), F.col("_sy")
     tiled = dict(n_targets=th * tw, src_shape=src_shape)
-    if resampling == "bilinear":
-        if images is not None:
-            return _bilinear_from_lonlat_tiles(images, tgt, sx, sy, src_origin,
-                                               src_cellsize, **tiled)
-        return _bilinear_from_lonlat(px, tgt, sx, sy, src_origin, src_cellsize)
     if kern is not None:
         u = F.round((sy - F.lit(y0g)) / F.lit(cy) - F.lit(0.5), _Q)
         v = F.round((sx - F.lit(x0g)) / F.lit(cx) - F.lit(0.5), _Q)

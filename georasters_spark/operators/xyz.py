@@ -7,20 +7,24 @@ zoom by 2x2 average-downsampling the level below (GDAL's default
 ``--resampling=average``).  This module re-expresses that pipeline
 Spark-first over the engine's images table:
 
-* ``xyz_base_tiles`` — the base level.  The target lattice is generated
-  from two ``spark.range`` calls (no data scan), each global pixel's
-  source index is a pure-Column inverse-Mercator expression on the
-  global Mercator square (the engine-stable quantized floor of the
-  ``reproject`` module docstring),
-  the gather runs through ``reproject.gather_from_tiles`` (shuffle =
-  M lattice rows + #tiles, each source tile decoded ONCE), and tiles
-  assemble + PNG-encode in one grouped-map keyed by (x, y).  Pixels
-  cross exactly two exchanges: lattice->source-tile, gather->target-tile.
+* ``xyz_base_tiles`` — the base level, one plan (``_fused_base_tiles``).
+  The target lattice is generated from two ``spark.range`` calls (no
+  data scan), each global pixel's source index is a pure-Column
+  inverse-Mercator expression on the global Mercator square (the
+  engine-stable quantized floor of the ``reproject`` module
+  docstring).  ONE cogroup keyed by target tile (x, y) does the rest:
+  lattice rows shuffle once (narrow ints), each source tile's encoded
+  bytes ship to every target tile its Mercator bbox can feed, and each
+  task gathers through the shared tile gather core
+  (``reproject._gather_values``), assembles and PNG-encodes its tile.
+  ``xyz_update`` rebuilds changed tiles through the same plan over a
+  key-restricted lattice, so rebuilt tiles are byte-identical to a
+  from-scratch pyramid.
 * ``xyz_overview`` — level z-1 from level z: one grouped-map over
   (x//2, y//2) decoding <=4 children and 2x2 valid-aware block-mean
-  averaging (round half up, GDAL average semantics for integer bands).
-  Cost per level is #tiles rows — the pyramid above the base is
-  metadata-scale, never a pixel-table shuffle.
+  averaging (``_average_2x2``: round half up, GDAL average semantics
+  for integer bands).  Cost per level is #tiles rows — the pyramid
+  above the base is metadata-scale, never a pixel-table shuffle.
 
 Tiles are int16 grayscale PNGs through the gated ``sources.codec`` 'png'
 fmt, which encodes and decodes with ``sources/png.py`` (16-bit gray,
@@ -44,17 +48,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources import codec as _codec
-from .reproject import R, _Q, dlit, gather_from_tiles
+from .reproject import R, _Q, _check_tiles, _gather_values, _tile_shape, dlit
 
 # half-extent of the Web-Mercator square (EPSG:3857 valid domain)
 M_HALF = math.pi * R
 
 
 def _check_int16_tile_values(vv: np.ndarray, indv: int) -> None:
-    """int16 grayscale PNG tile contract (shared by the fused and the
-    assemble paths): casting would silently truncate fractions / wrap
-    |v| > 32767 (and a wrap onto ndv would even flip data to nodata)
-    — refuse loudly."""
+    """int16 grayscale PNG tile contract: casting would silently
+    truncate fractions / wrap |v| > 32767 (and a wrap onto ndv would
+    even flip data to nodata) — refuse loudly."""
     if len(vv) and ((vv != np.floor(vv)).any()
                     or (vv < -32768).any() or (vv > 32767).any()
                     or (vv == indv).any()):
@@ -135,49 +138,17 @@ def xyz_base_tiles(images: DataFrame,
                    tile_px: int = 256,
                    ndv: float = -9999.0,
                    bbox_tiles: tuple[int, int, int, int] | None = None,
-                   tile_shape: tuple[int, int] | None = None,
-                   plan: str = "tiles",
-                   px: DataFrame | None = None) -> DataFrame:
-    """Base zoom level: (z, x, y, n_valid, bytes) PNG tile rows.
-
-    ``plan='tiles'`` (default) gathers through the tile-cogroup kernel
-    — the downsampling-publish shape (few targets per source tile, each
-    tile decoded once, shuffle = M + #tiles).  ``plan='join'`` explodes
-    the source to a pixel table and equi-joins it onto the lattice in
-    pure JVM — the documented reproject crossover: when the base zoom
-    UPSAMPLES (M ≳ N, targets outnumber source pixels) the Arrow
-    transfer of M rows through the cogroup dominates and the
-    whole-stage-codegen join wins (same rule as
-    reproject_tiles_bilinear, BENCH/PLANS.md).  Both plans share the
-    same lattice expressions, so they are value-identical
-    (pytest-pinned)."""
-    spark = images.sparkSession
-    tgt = _lattice(spark, zoom, tile_px, src_origin, src_cellsize,
-                   bbox_tiles=bbox_tiles)
-    if plan == "join":
-        if px is None:
-            from .pixels import pixel_table
-
-            px = pixel_table(images, valid_only=True,
-                             origin=src_origin, cellsize=src_cellsize)
-        gathered = tgt.join(px.select("row", "col", "value"),
-                            ["row", "col"], "left") \
-                      .select("trow", "tcol", "value")
-    elif plan == "tiles":
-        # fused gather+assemble (r7): key the lattice by TARGET tile and
-        # replicate each source tile's encoded BYTES to the target tiles
-        # its Mercator bbox can feed (the affected_base_tiles margin
-        # math as Column exprs).  One exchange of M narrow lattice rows
-        # + #tiles byte rows, ONE Arrow crossing whose output is a
-        # handful of PNG rows — the r6 plan shuffled the gathered M-row
-        # pixel frame a second time and crossed Arrow twice more just to
-        # regroup it by target tile.  Same indices, same assembly, same
-        # encoder => bit-identical tiles (gate-checked by checksum).
-        return _fused_base_tiles(tgt, images, zoom, tile_px, ndv,
-                                 src_origin, src_cellsize, tile_shape)
-    else:
-        raise ValueError(f"xyz_base_tiles: unknown plan {plan!r}")
-    return _assemble_tiles(gathered, zoom, tile_px, ndv)
+                   tile_shape: tuple[int, int] | None = None) -> DataFrame:
+    """Base zoom level: (z, x, y, n_valid, bytes) PNG tile rows, through
+    ``_fused_base_tiles`` — one exchange of M narrow lattice rows +
+    the replicated source-tile bytes, one Arrow crossing whose output
+    is a handful of PNG rows.  ``images`` must be a uniform tiles
+    table (one row per tile key, every tile ``tile_shape``; probed by
+    one job when not given)."""
+    tgt = _lattice(images.sparkSession, zoom, tile_px, src_origin,
+                   src_cellsize, bbox_tiles=bbox_tiles)
+    return _fused_base_tiles(tgt, images, zoom, tile_px, ndv,
+                             src_origin, src_cellsize, tile_shape)
 
 
 def _fused_base_tiles(tgt: DataFrame, images: DataFrame, zoom: int,
@@ -185,22 +156,18 @@ def _fused_base_tiles(tgt: DataFrame, images: DataFrame, zoom: int,
                       src_origin: tuple[float, float],
                       src_cellsize: tuple[float, float],
                       tile_shape: tuple[int, int] | None,
+                      keys: DataFrame | None = None,
                       lat_clip: float = 85.05112878) -> DataFrame:
-    """plan='tiles' base level as ONE target-tile-keyed cogroup: lattice
-    rows shuffle once (narrow ints), source tiles ship as compact
-    encoded bytes to every target tile they can feed, and each task
-    decodes + indexes + assembles + PNG-encodes in numpy."""
+    """The base level as ONE target-tile-keyed cogroup: lattice rows
+    (``tgt``: trow, tcol, row, col) shuffle once, source tiles ship as
+    compact encoded bytes to every target tile they can feed, and each
+    task gathers + assembles + PNG-encodes in numpy.  ``keys`` (x, y),
+    when given, is the set of target tiles ``tgt`` covers: replicated
+    source rows semi-join to it (broadcast), so only tiles that feed a
+    rebuilt target cross the exchange."""
     import pandas as pd
 
-    spark = images.sparkSession
-    if tile_shape is not None:
-        t_h, t_w = int(tile_shape[0]), int(tile_shape[1])
-    else:
-        dims = images.select("w", "h").first()
-        if dims is None:
-            raise ValueError("xyz_base_tiles: empty images table "
-                             "(pass tile_shape)")
-        t_w, t_h = int(dims["w"]), int(dims["h"])
+    t_h, t_w = _tile_shape(images, tile_shape, "xyz_base_tiles")
     side = (1 << zoom) * tile_px
     n = 1 << zoom
     x0g, y0g = src_origin
@@ -252,33 +219,21 @@ def _fused_base_tiles(tgt: DataFrame, images: DataFrame, zoom: int,
            .withColumn("_x", F.explode(F.sequence("_bx0", "_bx1")))
            .withColumn("_y", F.explode(F.sequence("_by0", "_by1")))
            .drop("_bx0", "_bx1", "_by0", "_by1"))
+    if keys is not None:
+        rep = rep.join(F.broadcast(keys.select(F.col("x").alias("_x"),
+                                               F.col("y").alias("_y"))),
+                       ["_x", "_y"], "left_semi")
 
     def kernel(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         cols = ["z", "x", "y", "n_valid", "bytes"]
+        if len(right):
+            _check_tiles(right, t_h, t_w, "xyz_base_tiles")
         if not len(left):
             # lattice restricted by bbox_tiles: a replicated source tile
             # addressed outside the published window emits nothing
             return pd.DataFrame({c: [] for c in cols})
-        if len(right) and right.duplicated(["tile_row", "tile_col"]).any():
-            raise ValueError(
-                "xyz_base_tiles: duplicate source tiles; resolve "
-                "(e.g. union_mosaic) first")
-        rows = left["row"].to_numpy(np.int64)
-        colsv = left["col"].to_numpy(np.int64)
-        vals = np.full(len(left), np.nan)
-        for t in right.itertuples(index=False):
-            t_ndv = float(t.ndv)
-            tr, tc = int(t.tile_row), int(t.tile_col)
-            arr = _codec.decode_tile(bytes(t.bytes), t.fmt,
-                                     int(t.w), int(t.h), t_ndv)
-            h, w = arr.shape
-            sel = ((rows >= tr * h) & (rows < (tr + 1) * h)
-                   & (colsv >= tc * w) & (colsv < (tc + 1) * w))
-            if sel.any():
-                v = arr[rows[sel] - tr * h, colsv[sel] - tc * w].astype(
-                    np.float64)
-                v[v == t_ndv] = np.nan
-                vals[sel] = v
+        vals = _gather_values(left["row"].to_numpy(np.int64),
+                              left["col"].to_numpy(np.int64), right, t_h, t_w)
         arr_out = np.full((tile_px, tile_px), indv, dtype=np.int16)
         i = (left["trow"].to_numpy(np.int64) % tile_px)
         j = (left["tcol"].to_numpy(np.int64) % tile_px)
@@ -299,35 +254,24 @@ def _fused_base_tiles(tgt: DataFrame, images: DataFrame, zoom: int,
                                   "bytes binary"))
 
 
-def _assemble_tiles(gathered: DataFrame, zoom: int, tile_px: int,
-                    ndv: float) -> DataFrame:
-    """(trow, tcol, value) -> one PNG-encoded (z, x, y, n_valid, bytes)
-    row per target tile (one grouped-map exchange)."""
-    import pandas as pd
-
-    indv = int(ndv)
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = np.full((tile_px, tile_px), indv, dtype=np.int16)
-        i = (pdf["trow"].to_numpy() % tile_px).astype(np.int64)
-        j = (pdf["tcol"].to_numpy() % tile_px).astype(np.int64)
-        v = pdf["value"].to_numpy(dtype=np.float64, na_value=np.nan)
-        ok = ~np.isnan(v)
-        vv = v[ok]
-        _check_int16_tile_values(vv, indv)
-        arr[i[ok], j[ok]] = vv.astype(np.int16)
-        x = int(pdf["tcol"].iloc[0]) // tile_px
-        y = int(pdf["trow"].iloc[0]) // tile_px
-        return pd.DataFrame({
-            "z": [zoom], "x": [x], "y": [y],
-            "n_valid": [int(ok.sum())],
-            "bytes": [_codec.encode_tile(arr, "png", ndv)],
-        })
-
-    keyed = gathered.withColumn("_x", F.floor(F.col("tcol") / tile_px)) \
-                    .withColumn("_y", F.floor(F.col("trow") / tile_px))
-    return keyed.groupBy("_x", "_y").applyInPandas(
-        assemble, schema="z long, x long, y long, n_valid long, bytes binary")
+def _average_2x2(children, tile_px: int, indv: int) -> tuple[np.ndarray, int]:
+    """One parent tile from its <= 4 decoded children, an iterable of
+    ((x, y), int16 array): 2x2 valid-aware block mean, round half up
+    (GDAL integer-band average semantics); absent children are
+    all-nodata.  Returns (int16 tile, n_valid)."""
+    big = np.full((2 * tile_px, 2 * tile_px), np.nan)
+    for (x, y), a in children:
+        af = a.astype(np.float64)
+        af[af == indv] = np.nan
+        oy, ox = (y % 2) * tile_px, (x % 2) * tile_px
+        big[oy:oy + tile_px, ox:ox + tile_px] = af
+    q = big.reshape(tile_px, 2, tile_px, 2)
+    cnt = (~np.isnan(q)).sum(axis=(1, 3))
+    s = np.nansum(q, axis=(1, 3))
+    out = np.full((tile_px, tile_px), indv, dtype=np.int16)
+    ok = cnt > 0
+    out[ok] = np.floor(s[ok] / cnt[ok] + 0.5).astype(np.int16)
+    return out, int(ok.sum())
 
 
 def xyz_overview(tiles: DataFrame, tile_px: int = 256,
@@ -340,25 +284,15 @@ def xyz_overview(tiles: DataFrame, tile_px: int = 256,
     indv = int(ndv)
 
     def reduce4(pdf: pd.DataFrame) -> pd.DataFrame:
-        big = np.full((2 * tile_px, 2 * tile_px), np.nan)
-        z = int(pdf["z"].iloc[0])
-        for t in pdf.itertuples(index=False):
-            a = _codec.decode_tile(bytes(t.bytes), "png",
-                                   tile_px, tile_px, ndv).astype(np.float64)
-            a[a == indv] = np.nan
-            oy, ox = (int(t.y) % 2) * tile_px, (int(t.x) % 2) * tile_px
-            big[oy:oy + tile_px, ox:ox + tile_px] = a
-        q = big.reshape(tile_px, 2, tile_px, 2)
-        cnt = (~np.isnan(q)).sum(axis=(1, 3))
-        s = np.nansum(q, axis=(1, 3))
-        out = np.full((tile_px, tile_px), indv, dtype=np.int16)
-        ok = cnt > 0
-        out[ok] = np.floor(s[ok] / cnt[ok] + 0.5).astype(np.int16)
+        out, n_valid = _average_2x2(
+            (((int(t.x), int(t.y)),
+              _codec.decode_tile(bytes(t.bytes), "png", tile_px, tile_px, ndv))
+             for t in pdf.itertuples(index=False)), tile_px, indv)
         return pd.DataFrame({
-            "z": [z - 1],
+            "z": [int(pdf["z"].iloc[0]) - 1],
             "x": [int(pdf["x"].iloc[0]) // 2],
             "y": [int(pdf["y"].iloc[0]) // 2],
-            "n_valid": [int(ok.sum())],
+            "n_valid": [n_valid],
             "bytes": [_codec.encode_tile(out, "png", ndv)],
         })
 
@@ -375,8 +309,7 @@ def xyz_pyramid(images: DataFrame,
                 min_zoom: int = 0,
                 tile_px: int = 256,
                 ndv: float = -9999.0,
-                tile_shape: tuple[int, int] | None = None,
-                plan: str = "tiles") -> DataFrame:
+                tile_shape: tuple[int, int] | None = None) -> DataFrame:
     """Full pyramid base_zoom..min_zoom as one unioned tile frame.
 
     Each level is localCheckpoint-ed (eager) before deriving the next:
@@ -385,8 +318,7 @@ def xyz_pyramid(images: DataFrame,
     would run (base_zoom - min_zoom + 1) times (measured 53 s -> ~18 s
     at the zoom-3 bench)."""
     level = xyz_base_tiles(images, src_origin, src_cellsize, base_zoom,
-                           tile_px=tile_px, ndv=ndv, tile_shape=tile_shape,
-                           plan=plan)
+                           tile_px=tile_px, ndv=ndv, tile_shape=tile_shape)
     if base_zoom > min_zoom:
         level = level.localCheckpoint(eager=True)
     out = level
@@ -411,9 +343,9 @@ def _overview_tail(tiles: DataFrame, zoom: int, min_zoom: int,
                    tile_px: int = 256, ndv: float = -9999.0) -> DataFrame:
     """Levels zoom-1 .. min_zoom from the zoom-level tiles in one
     single-task pass (use only when 4^zoom is small).  Per level the
-    reduction is exactly ``xyz_overview``'s: decode children (the 'png'
-    tile fmt is lossless, so the freshly built int16 array IS its decode), 2x2
-    valid-aware mean with round-half-up, absent children all-nodata."""
+    reduction is ``xyz_overview``'s ``_average_2x2`` over the children
+    (the 'png' tile fmt is lossless, so the freshly built int16 array
+    IS its decode)."""
     import pandas as pd
 
     indv = int(ndv)
@@ -430,23 +362,13 @@ def _overview_tail(tiles: DataFrame, zoom: int, min_zoom: int,
             nxt: dict[tuple[int, int], np.ndarray] = {}
             parents = sorted({(x // 2, y // 2) for x, y in cur})
             for px_, py in parents:
-                big = np.full((2 * tile_px, 2 * tile_px), np.nan)
-                for (x, y), a in cur.items():
-                    if x // 2 == px_ and y // 2 == py:
-                        af = a.astype(np.float64)
-                        af[af == indv] = np.nan
-                        oy, ox = (y % 2) * tile_px, (x % 2) * tile_px
-                        big[oy:oy + tile_px, ox:ox + tile_px] = af
-                q = big.reshape(tile_px, 2, tile_px, 2)
-                cnt = (~np.isnan(q)).sum(axis=(1, 3))
-                s = np.nansum(q, axis=(1, 3))
-                outa = np.full((tile_px, tile_px), indv, dtype=np.int16)
-                ok = cnt > 0
-                outa[ok] = np.floor(s[ok] / cnt[ok] + 0.5).astype(np.int16)
+                outa, n_valid = _average_2x2(
+                    (((x, y), a) for (x, y), a in cur.items()
+                     if x // 2 == px_ and y // 2 == py), tile_px, indv)
                 nxt[(px_, py)] = outa
                 rows.append({
                     "z": z - 1, "x": px_, "y": py,
-                    "n_valid": int(ok.sum()),
+                    "n_valid": n_valid,
                     "bytes": _codec.encode_tile(outa, "png", ndv),
                 })
             cur = nxt
@@ -532,9 +454,9 @@ def xyz_update(images: DataFrame,
     keys_df = spark.createDataFrame(keys, "x long, y long")
     tgt = _lattice_for_keys(keys_df, base_zoom, tile_px,
                             src_origin, src_cellsize)
-    rebuilt = _assemble_tiles(
-        gather_from_tiles(tgt, images, carry=(), tile_shape=tile_shape),
-        base_zoom, tile_px, ndv)
+    rebuilt = _fused_base_tiles(tgt, images, base_zoom, tile_px, ndv,
+                                src_origin, src_cellsize, tile_shape,
+                                keys=keys_df)
     merged = prior_lvl[base_zoom].join(
         F.broadcast(keys_df), ["x", "y"], "left_anti"
     ).unionByName(rebuilt).localCheckpoint(eager=True)

@@ -1592,10 +1592,10 @@ def q_reproject_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_reproject_tiles_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile-cogrouped BILINEAR gather (r6): shares _bilinear_corners
-    with the pixel-join plan, gathers the 4 corner rows per target
-    through gather_from_tiles, and renormalizes over valid corners in
-    the aggregate — so it shares sql_reproject_bilinear verbatim.
+    """Tile-cogrouped BILINEAR gather: the 2-tap row of the
+    separable-kernel table through _kernel_gather_tiles (the weight
+    arithmetic of the pixel-join _kernel_gather, renormalized over
+    valid corners), so it shares sql_reproject_bilinear verbatim.
     Pins the no-pixel-explode bilinear plan against DuckDB."""
     from .operators import reproject as RP
 

@@ -1,4 +1,5 @@
-"""Independent numpy references for the warp, terrain and zonal tests.
+"""Independent numpy references for the warp, terrain, zonal and
+point-lookup tests.
 
 Check code only: the engine never imports this module.  The zonal
 reference tests every cell center of the stitched grid against each
@@ -359,6 +360,23 @@ def terrain_numpy_oracle(full: np.ndarray, ndv: float, cellsize: tuple[float, fl
     )
     hs = np.where(full8, hs, np.nan)
     return slope, aspect, hs
+
+
+def lookup_numpy_oracle(spec, points: pd.DataFrame) -> pd.DataFrame:
+    """map_pixel over a point batch (point_id, x, y): the HALF_EVEN
+    nearest cell (``grid.row_of_y`` / ``grid.col_of_x``) of the
+    stitched grid as (point_id, prow, pcol, value), value NaN (NULL)
+    for masked or off-grid points."""
+    full = synth.stitched_array(spec)
+    prow = np.round((points["y"].to_numpy() - spec.y0) / spec.celly).astype(np.int64)
+    pcol = np.round((points["x"].to_numpy() - spec.x0) / spec.cellx).astype(np.int64)
+    on = (prow >= 0) & (prow < spec.height) & (pcol >= 0) & (pcol < spec.width)
+    v = full[prow[on], pcol[on]].astype(np.float64)
+    v[v == spec.ndv] = np.nan
+    value = np.full(len(points), np.nan)
+    value[on] = v
+    return pd.DataFrame({"point_id": points["point_id"].to_numpy(np.int64),
+                         "prow": prow, "pcol": pcol, "value": value})
 
 
 def zone_values(spec, zones, mode: str = "center") -> dict:

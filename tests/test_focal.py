@@ -79,6 +79,15 @@ def test_focal_apply_tiles_duplicate_tile_raises(spark, images_t1):
         FO.focal_sums_tiles(doubled, k=3).collect()
 
 
+def test_focal_tiles_reject_mixed_tile_shapes(spark, images_t1_mixed):
+    """Stencil blocks place tiles by the uniform tile shape: a table
+    with one tile of another shape must raise instead of writing that
+    tile's cells at the wrong window offset."""
+    import pytest as _pt
+    with _pt.raises(Exception, match="expected uniform"):
+        FO.focal_sums_tiles(images_t1_mixed, k=3).collect()
+
+
 def test_integer_stencils_refuse_values_beyond_2_53(spark):
     """The stencil window is float64, exact for integers below 2^53 in
     magnitude; a 2^53+1 cell must raise instead of rounding to 2^53 in

@@ -1263,7 +1263,7 @@ def test_bilinear_tiles_matches_pixel_join_upsampling(spark, images_t1):
 
 
 def test_bilinear_tiles_matches_pixel_join(spark, images_t1):
-    # tile-cogrouped bilinear: same _bilinear_corners exprs, NULL
+    # tile-cogrouped bilinear: the 2-tap row of the kernel table, NULL
     # corners excluded from both the weighted sum and the weight mass
     # — must reproduce the inner-join renormalization (value to 6 dp,
     # n_contrib exactly, NULL where no corner is valid).  More than 5000
@@ -1283,6 +1283,23 @@ def test_kernel_tiles_rejects_kernel_wider_than_tile(spark, images_t1):
     u = F.col("trow").cast("double")
     with pytest.raises(ValueError, match="half-width"):
         RP._kernel_gather_tiles(images_t1, target, u, u, "lanczos", a=70)
+    # a half-width EQUAL to the tile side is still served: cubic's
+    # 2-cell trailing halo over 2-px tiles is exactly one neighbor tile
+    spec = synth.T1
+    px = PX.pixel_table(images_t1, valid_only=True).select(
+        "row", "col", "value").filter((F.col("row") < 20) & (F.col("col") < 40))
+    tiny = PX.assemble_tiles(px, "t2px", (spec.x0, spec.y0),
+                             (spec.cellx, spec.celly), tile=2, ndv=spec.ndv)
+    args = (4326, 6933, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+            (20, 40), (15, 30))
+
+    def collect(df):
+        return {(r["trow"], r["tcol"]): (r["value"], r["n_contrib"])
+                for r in df.collect()}
+
+    _assert_same(collect(RP.reproject_any(px, *args, resampling="cubic")),
+                 collect(RP.reproject_any(None, *args, resampling="cubic",
+                                          images=tiny)), 100)
 
 
 def test_gather_from_tiles_rejects_duplicate_tile_keys(spark, images_t1):
@@ -1297,25 +1314,19 @@ def test_gather_from_tiles_rejects_duplicate_tile_keys(spark, images_t1):
                              images=doubled).collect()
 
 
-def test_gather_from_tiles_rejects_mixed_tile_shapes(spark, images_t1):
+def test_gather_from_tiles_rejects_mixed_tile_shapes(spark, images_t1_mixed):
     """Targets key to tiles by the probed tile shape, so an images table
     with a tile of another shape must raise, not silently miss or
-    misplace that tile's gathers."""
-    from georasters_spark.sources import codec
-
-    is_t = (F.col("tile_row") == 1) & (F.col("tile_col") == 1)
-    t = images_t1.filter(is_t).first().asDict()
-    arr = codec.decode_tile(bytes(t["bytes"]), t["fmt"], t["w"], t["h"], t["ndv"])
-    t.update(bytes=codec.encode_tile(arr[:32, :48], t["fmt"], t["ndv"]),
-             w=48, h=32)
-    mixed = images_t1.filter(~is_t).unionByName(
-        spark.createDataFrame([t], images_t1.schema))
+    misplace that tile's gathers — in the nearest gather and in the
+    kernel plan (bilinear, cubic) alike."""
     for dst in _TILE_PAIRS:
         so, sc = _TILE_PAIRS[dst]
-        with pytest.raises(Exception, match="expected uniform"):
-            RP.reproject_any(None, 4326, dst, so, sc,
-                             (synth.T1.height, synth.T1.width), (30, 60),
-                             images=mixed).collect()
+        for mode in ("nearest", "bilinear", "cubic"):
+            with pytest.raises(Exception, match="expected uniform"):
+                RP.reproject_any(None, 4326, dst, so, sc,
+                                 (synth.T1.height, synth.T1.width), (30, 60),
+                                 resampling=mode,
+                                 images=images_t1_mixed).collect()
 
 
 def test_reproject_quartile_aggregates_vs_numpy(spark, images_t1):

@@ -125,40 +125,50 @@ def test_pyramid_union_shape(spark, images_t1):
 
 
 def test_incremental_update_equals_full_recompute(spark, images_t1):
-    """xyz_update over one changed source tile == from-scratch pyramid
-    at the new state; untouched tiles stay BIT-identical to the prior
-    snapshot (never re-encoded)."""
+    """xyz_update over changed source tiles == from-scratch pyramid at
+    the new state, byte for byte (rebuilt base and overview tiles
+    included); untouched base tiles stay BIT-identical to the prior
+    snapshot (never re-encoded).  Zoom 1 with one changed tile, and
+    zoom 2 with two changed tiles on the lon-0 target-tile seam (source
+    tile column 4 spans lon -9.3..33.3; row 2 also spans the equator)."""
     spec = SPEC
-    changed = [(1, 2)]
-    v2 = synth.build_images(spark, synth.GridSpec(seed=91)).filter(
-        (F.col("tile_row") == 1) & (F.col("tile_col") == 2)
-    ).unionByName(images_t1.filter(
-        ~((F.col("tile_row") == 1) & (F.col("tile_col") == 2))))
     kw = dict(tile_px=T, ndv=spec.ndv, tile_shape=(spec.tile, spec.tile))
-    prior = XYZ.xyz_pyramid(images_t1, (spec.x0, spec.y0),
-                            (spec.cellx, spec.celly), base_zoom=1,
-                            min_zoom=0, **kw)
-    got = XYZ.xyz_update(v2, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-                         changed, prior, base_zoom=1, min_zoom=0,
-                         src_tile=spec.tile, **{k: v for k, v in kw.items()
-                                                if k != "tile_shape"},
-                         tile_shape=(spec.tile, spec.tile))
-    full = XYZ.xyz_pyramid(v2, (spec.x0, spec.y0), (spec.cellx, spec.celly),
-                           base_zoom=1, min_zoom=0, **kw)
-    g = {(r["z"], r["x"], r["y"]): bytes(r["bytes"]) for r in got.collect()}
-    f = {(r["z"], r["x"], r["y"]): bytes(r["bytes"]) for r in full.collect()}
-    p = {(r["z"], r["x"], r["y"]): bytes(r["bytes"]) for r in prior.collect()}
-    assert set(g) == set(f)
-    affected = XYZ.affected_base_tiles(changed, (spec.x0, spec.y0),
-                                       (spec.cellx, spec.celly),
-                                       spec.tile, 1, tile_px=T)
-    for k, b in g.items():
-        # decoded content must equal the full recompute everywhere
-        av = XYZ._codec.decode_tile(b, "png", T, T, spec.ndv)
-        fv = XYZ._codec.decode_tile(f[k], "png", T, T, spec.ndv)
-        assert (av == fv).all(), f"content mismatch at {k}"
-        if k[0] == 1 and (k[1], k[2]) not in affected:
-            assert b == p[k], f"untouched base tile {k} was re-encoded"
+    for zoom, changed, seed in ((1, [(1, 2)], 91), (2, [(1, 4), (2, 4)], 92)):
+        hit = F.lit(False)
+        for tr, tc in changed:
+            hit = hit | ((F.col("tile_row") == tr) & (F.col("tile_col") == tc))
+        v2 = synth.build_images(spark, synth.GridSpec(seed=seed)).filter(
+            hit).unionByName(images_t1.filter(~hit))
+        prior = XYZ.xyz_pyramid(images_t1, (spec.x0, spec.y0),
+                                (spec.cellx, spec.celly), base_zoom=zoom,
+                                min_zoom=0, **kw)
+        got = XYZ.xyz_update(v2, (spec.x0, spec.y0), (spec.cellx, spec.celly),
+                             changed, prior, base_zoom=zoom, min_zoom=0,
+                             src_tile=spec.tile, **kw)
+        full = XYZ.xyz_pyramid(v2, (spec.x0, spec.y0),
+                               (spec.cellx, spec.celly), base_zoom=zoom,
+                               min_zoom=0, **kw)
+        g = {(r["z"], r["x"], r["y"]): bytes(r["bytes"]) for r in got.collect()}
+        f = {(r["z"], r["x"], r["y"]): bytes(r["bytes"]) for r in full.collect()}
+        p = {(r["z"], r["x"], r["y"]): bytes(r["bytes"])
+             for r in prior.collect()}
+        assert len(g) == sum(4 ** z for z in range(zoom + 1))
+        assert set(g) == set(f)
+        affected = XYZ.affected_base_tiles(changed, (spec.x0, spec.y0),
+                                           (spec.cellx, spec.celly),
+                                           spec.tile, zoom, tile_px=T)
+        if zoom == 2:
+            # the changed tiles straddle the seam of target columns 1|2
+            assert {x for x, _ in affected} >= {1, 2}, affected
+        rebuilt = {k for k in g if g[k] != p[k]}
+        assert rebuilt, "the update changed no tile"
+        for k, b in g.items():
+            assert b == f[k], f"tile {k} differs from the full recompute"
+            if k[0] == zoom and (k[1], k[2]) not in affected:
+                assert b == p[k], f"untouched base tile {k} was re-encoded"
+        # the change reaches every level: rebuilt tiles on the base and
+        # on each overview level
+        assert {k[0] for k in rebuilt} == set(range(zoom + 1)), rebuilt
 
 
 def test_affected_base_tiles_covers_changed_extent(spark):
@@ -226,6 +236,16 @@ def test_pyramid_catalog_snapshots_and_time_travel(spark, images_t1, tmp_path):
         av = codec.decode_tile(cur[k], "png", T, T, spec.ndv)
         fv = codec.decode_tile(full2[k], "png", T, T, spec.ndv)
         assert (av == fv).all()
+
+
+def test_base_tiles_reject_mixed_tile_shapes(spark, images_t1_mixed):
+    """The base-tile plan keys source tiles by the uniform tile shape:
+    a table with one tile of another shape must raise instead of
+    placing that tile's cells by its own w/h."""
+    with pytest.raises(Exception, match="expected uniform"):
+        XYZ.xyz_base_tiles(images_t1_mixed, (SPEC.x0, SPEC.y0),
+                           (SPEC.cellx, SPEC.celly), zoom=1, ndv=SPEC.ndv,
+                           tile_shape=(SPEC.tile, SPEC.tile)).collect()
 
 
 def test_assemble_refuses_non_int16_values(spark, images_t1):
