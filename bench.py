@@ -297,7 +297,7 @@ def run_heavy_block(spark, sf_dir: str, times: dict, cal: dict, imgs,
     # equivalence to the gated pixel plan is pytest-pinned
     pan_half = dem9.filter(F.col("row") < spec.height // 2)
     _timed(times, cal, "pansharpen_4p7M" + suffix,
-           lambda: PSH.brovey_pansharpen_blocks(
+           lambda: PSH.brovey_pansharpen(
                pan_half, ms9, (mh, mw), 2, 3, block=128)
            .agg(F.count("value"), F.sum("value")).collect())
 

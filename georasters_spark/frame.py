@@ -465,24 +465,17 @@ class GeoRasterFrame:
             tile_px=tile_px, ndv=self.ndv)
 
     def pansharpen(self, ms: DataFrame, ms_shape: tuple[int, int],
-                   ratio: int, n_bands: int, weights=None,
-                   plan: str = "pixels"):
+                   ratio: int, n_bands: int, weights=None):
         """Weighted-Brovey fuse of this frame (pan band) with a
         ratio-coarser MS band table (gdal_pansharpen role); returns the
-        (row, col, band, value) sharpened table.  plan='blocks' runs
-        the block-cogroup kernel (the fast path; NULL rows where no MS
-        is in reach instead of dropped rows)."""
+        (row, col, band, value) sharpened table from the block-cogroup
+        kernel (value NULL where the pseudo-pan is 0, a bilinear corner
+        is missing or no MS cell is in reach)."""
         from .operators import pansharpen as PS
 
         w = PS.DEFAULT_WEIGHTS if weights is None else weights
-        pan = self.px.select("row", "col", "value")
-        if plan == "blocks":
-            return PS.brovey_pansharpen_blocks(pan, ms, ms_shape, ratio,
-                                               n_bands, weights=w)
-        if plan != "pixels":
-            raise ValueError(f"pansharpen: unknown plan {plan!r}")
-        return PS.brovey_pansharpen(pan, ms, ms_shape, ratio, n_bands,
-                                    weights=w)
+        return PS.brovey_pansharpen(self.px.select("row", "col", "value"),
+                                    ms, ms_shape, ratio, n_bands, weights=w)
 
     @classmethod
     def from_points(cls, points: DataFrame, origin, cellsize,

@@ -24,7 +24,9 @@ Global statistics (binary weights, directed pair sums):
   Getis   G = Σ_pairs v_i v_j / (S² − Q);  Gamma = Σ_pairs v_i v_j
           (pysal_Gamma, cross-product similarity, georasters.py:1190-1209)
   Join counts (b_i = v_i ≥ threshold): BB/WW/BW undirected pair counts
-where n=#valid, S=Σv, Q=Σv², S0=#directed neighbor pairs.
+where n=#valid, S=Σv, Q=Σv², S0=#directed neighbor pairs.  Every
+exact plan takes n, S, Q (and max|v| for its overflow budgets) from one
+`_moments` job, which refuses fractional values.
 """
 
 from __future__ import annotations
@@ -39,22 +41,67 @@ QUEEN = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
 ROOK = [(-1, 0), (1, 0), (0, -1), (0, 1)]
 
 
-def neighbor_pairs(px: DataFrame, rook: bool = False) -> DataFrame:
-    """Directed neighbor pairs (row, col, va, vb) via an 8/4-offset
-    equi-join — the distributed lattice-weights generator."""
-    spark = px.sparkSession
-    offsets = spark.createDataFrame(ROOK if rook else QUEEN, "dr int, dc int")
-    a = px.select("row", "col", F.col("value").alias("va"))
-    b = px.select(
-        F.col("row").alias("row2"), F.col("col").alias("col2"), F.col("value").alias("vb")
+def _offset_join(df: DataFrame, col: str, a_name: str, b_name: str,
+                 rook: bool) -> DataFrame:
+    """Directed lattice-neighbor pairs of df's cells via an 8/4-offset
+    equi-join: (row, col, <a_name>, <b_name>, ...) with ``col`` of the
+    home cell as a_name and of its neighbor as b_name."""
+    offsets = df.sparkSession.createDataFrame(
+        ROOK if rook else QUEEN, "dr int, dc int")
+    a = df.select("row", "col", F.col(col).alias(a_name))
+    b = df.select(
+        F.col("row").alias("row2"), F.col("col").alias("col2"), F.col(col).alias(b_name)
     )
     return (
         a.crossJoin(F.broadcast(offsets))
         .withColumn("row2", F.col("row") + F.col("dr"))
         .withColumn("col2", F.col("col") + F.col("dc"))
         .join(b, ["row2", "col2"])
-        .select("row", "col", "va", "vb")
     )
+
+
+def neighbor_pairs(px: DataFrame, rook: bool = False) -> DataFrame:
+    """Directed neighbor pairs (row, col, va, vb) — the distributed
+    lattice-weights generator."""
+    return _offset_join(px, "value", "va", "vb", rook).select("row", "col", "va", "vb")
+
+
+def _moments(px: DataFrame) -> tuple[int, int, int, int]:
+    """(n, S = Σv, Q = Σv², max|v|) of the valid cells as exact
+    integers, in one job.  The exact plans need whole-number values: a
+    fractional (or non-finite) value raises instead of being silently
+    truncated by the int64 neighbor sums."""
+    v = F.col("value")
+    lv = v.cast("long")
+    row = px.agg(
+        F.count(v).alias("n"),
+        F.sum(lv).alias("s"),
+        F.sum(lv * lv).alias("q"),
+        F.max(F.abs(lv)).alias("vmax"),
+        F.count(F.when(v != F.floor(v), 1)).alias("frac"),
+    ).collect()[0]
+    if row["frac"]:
+        raise ValueError(
+            f"autocorrelation needs integer-valued cells: {row['frac']} "
+            "value(s) are fractional or non-finite, and the exact integer "
+            "plans would silently truncate them; round/scale the raster first")
+    return int(row["n"]), int(row["s"]), int(row["q"]), int(row["vmax"])
+
+
+def _check_840_budget(n: int, vmax: int) -> None:
+    """Refuse inputs whose 840-scaled decimal terms could overflow."""
+    if n * vmax > 6 * 10**16:
+        raise ValueError(
+            f"n*max|value| = {n * vmax:.3g} exceeds the exact-integer "
+            "budget (6e16) of the 840-scaled decimal plan; rescale values")
+
+
+def _check_geary_budget(vmax: int) -> None:
+    """Refuse inputs whose per-row Geary numerator could overflow int64."""
+    if vmax > 4 * 10**8:
+        raise ValueError(
+            f"max|value| = {vmax:.3g} exceeds the per-row int64 budget of "
+            "the Geary numerator (|c_num| <= 32·vmax² must fit a BIGINT)")
 
 
 def global_autocorr(px: DataFrame, bin_threshold: int, rook: bool = False) -> DataFrame:
@@ -71,13 +118,7 @@ def global_autocorr(px: DataFrame, bin_threshold: int, rook: bool = False) -> Da
     so no 128-bit row-wise math is needed anywhere, and the final
     double expressions are written op-for-op like the DuckDB oracle.
     """
-    scal = px.agg(
-        F.count("value").alias("n"),
-        F.sum("value").alias("s"),
-        F.sum(F.col("value") * F.col("value")).alias("q"),
-    ).collect()[0]
-    n, s, q = int(scal["n"]), int(scal["s"]), int(scal["q"])
-
+    n, s, q, _ = _moments(px)
     pairs = neighbor_pairs(px, rook=rook)
     bi = (F.col("va") >= bin_threshold).cast("long")
     bj = (F.col("vb") >= bin_threshold).cast("long")
@@ -191,6 +232,7 @@ def local_geary(px: DataFrame, rook: bool = False) -> DataFrame:
     """Per-cell local Geary c_i with binary weights, integer-exact:
         c_num(i) = Σ_{j∈N(i)} (v_i − v_j)² = ncnt·v_i² − 2·v_i·nsum + nsum2
     computed from the focal sums (no second pair join)."""
+    _moments(px)  # refuses fractional values
     foc = focal_stats(px, rook=rook, include_self=False)
     c_num = (
         F.col("ncnt") * F.col("value") * F.col("value")
@@ -225,9 +267,7 @@ def local_moran(px: DataFrame, rook: bool = False) -> DataFrame:
     computed entirely from the focal sums — no second pair join. The
     normalized double li = n·li_num / den_i is rounded to 6 dp.
     """
-    scal = px.agg(F.count("value").alias("n"), F.sum("value").alias("s"),
-                  F.sum(F.col("value") * F.col("value")).alias("q")).collect()[0]
-    n, s, q = int(scal["n"]), int(scal["s"]), int(scal["q"])
+    n, s, q, _ = _moments(px)
     den_i = n * n * q - n * s * s
     foc = focal_stats(px, rook=rook, include_self=False)
     zi = F.col("value") * n - s            # sign(z_i), integer-exact
@@ -266,15 +306,8 @@ def local_moran_rowstd(px: DataFrame, rook: bool = False) -> DataFrame:
     (deg = 0) have no row-standardized lag and are filtered, like
     global_autocorr_rowstd.  Returns (row, col, li_num840, li,
     quadrant)."""
-    scal = px.agg(F.count("value").alias("n"), F.sum("value").alias("s"),
-                  F.sum(F.col("value") * F.col("value")).alias("q"),
-                  F.max(F.abs("value")).alias("vmax")).collect()[0]
-    n, s, q = int(scal["n"]), int(scal["s"]), int(scal["q"])
-    vmax = int(scal["vmax"])
-    if n * vmax > 6 * 10**16:
-        raise ValueError(
-            f"n*max|value| = {n * vmax:.3g} exceeds the exact-integer "
-            "budget (6e16) of the 840-scaled decimal plan; rescale values")
+    n, s, q, vmax = _moments(px)
+    _check_840_budget(n, vmax)
     den = n * q - s * s
     foc = focal_stats(px, rook=rook, include_self=False).filter(F.col("ncnt") > 0)
     wfac = F.expr(f"CAST({_LCM8} DIV ncnt AS DECIMAL(4,0))")
@@ -360,13 +393,13 @@ FROM j"""
 
 
 def _permutation_pair_frame(
-    px, n_perm: int, seed: int, rook: bool, rowstd: bool = False
+    px, n: int, n_perm: int, seed: int, rook: bool, rowstd: bool = False
 ):
     """Shared scaffolding for the GLOBAL permutation tests (Moran,
-    Geary): invariant scalars (n, s=Σv, q=Σv²), the seeded modular
-    permutation params, and the joined frame j with one row per
-    (permutation p, neighbor pair) carrying the permuted endpoint
-    values (p, va, vb).  With rowstd=True, j also carries the home
+    Geary, Gamma): given the valid-cell count n (from _moments), the
+    seeded modular permutation params and the joined frame j with one
+    row per (permutation p, neighbor pair) carrying the permuted
+    endpoint values (p, va, vb).  With rowstd=True, j also carries the home
     cell's permutation-INVARIANT row-standardized weight numerator
     w840 = 840 div deg(i) (weights attach to the fixed graph; values
     permute over it — esda's conditional permutation); the deg window
@@ -379,9 +412,6 @@ def _permutation_pair_frame(
     from .algebra import c_order_index
 
     spark = px.sparkSession
-    scal = px.agg(F.count("value").alias("n"), F.sum("value").alias("s"),
-                  F.sum(F.col("value") * F.col("value")).alias("q")).collect()[0]
-    n, s, q = int(scal["n"]), int(scal["s"]), int(scal["q"])
     perms = permutation_params(n, n_perm, seed)  # [(p, a_mul, b_add)], p=0 identity
 
     ranked = c_order_index(px).withColumnRenamed("i", "k").join(
@@ -408,7 +438,7 @@ def _permutation_pair_frame(
         pp.join(vals.withColumnRenamed("k", "pka").withColumnRenamed("v", "va"), "pka")
         .join(vals.withColumnRenamed("k", "pkb").withColumnRenamed("v", "vb"), "pkb")
     )
-    return spark, n, s, q, j
+    return spark, j
 
 
 def moran_permutation_test(
@@ -433,15 +463,10 @@ def moran_permutation_test(
     p_sim = (n_ge + 1) / (n_perm + 1), n_ge = #{perm: num_perm >= num_obs}.
     """
     rowstd = transform.lower().startswith("r")
+    n, s, q, vmax = _moments(px)
     if rowstd:
-        g = px.agg(F.max(F.abs("value")).alias("vmax"),
-                   F.count("value").alias("n")).collect()[0]
-        if int(g["n"]) * int(g["vmax"]) > 6 * 10**16:
-            raise ValueError(
-                f"n*max|value| = {int(g['n']) * int(g['vmax']):.3g} exceeds "
-                "the exact-integer budget (6e16) of the 840-scaled decimal "
-                "plan; rescale values")
-    spark, n, s, q, j = _permutation_pair_frame(px, n_perm, seed, rook, rowstd=rowstd)
+        _check_840_budget(n, vmax)
+    spark, j = _permutation_pair_frame(px, n, n_perm, seed, rook, rowstd=rowstd)
     den_i = n * n * q - n * s * s
     if rowstd:
         term = (
@@ -513,13 +538,10 @@ def geary_permutation_test(
     Returns one row: (c_obs double, n_perm, n_ge, p_sim) with
     p_sim = (n_ge + 1) / (n_perm + 1)."""
     rowstd = transform.lower().startswith("r")
+    n, s, q, vmax = _moments(px)
     if rowstd:
-        vmax = int(px.agg(F.max(F.abs("value"))).collect()[0][0])
-        if vmax > 4 * 10**8:
-            raise ValueError(
-                f"max|value| = {vmax:.3g} exceeds the per-pair int64 budget "
-                "of the Geary numerator ((va-vb)² must fit a BIGINT)")
-    spark, n, s, q, j = _permutation_pair_frame(px, n_perm, seed, rook, rowstd=rowstd)
+        _check_geary_budget(vmax)
+    spark, j = _permutation_pair_frame(px, n, n_perm, seed, rook, rowstd=rowstd)
     den = n * q - s * s  # n · Σ(v − mean)²
     if rowstd:
         d = F.col("va") - F.col("vb")
@@ -582,7 +604,7 @@ def gamma_joincount_permutation_test(
 
     Returns one row: (gamma_obs, gamma_n_ge, gamma_p_sim, bb_obs,
     bb_n_ge, bb_p_sim, n_perm)."""
-    spark, n, s, q, j = _permutation_pair_frame(px, n_perm, seed, rook)
+    spark, j = _permutation_pair_frame(px, _moments(px)[0], n_perm, seed, rook)
     bi = (F.col("va") >= bin_threshold).cast("long")
     bj = (F.col("vb") >= bin_threshold).cast("long")
     agg = (
@@ -627,19 +649,7 @@ def math_gcd(a: int, b: int) -> int:
 
 def neighbor_pairs_keys(ranked: DataFrame, rook: bool = False) -> DataFrame:
     """Neighbor pairs in rank space: (ka, kb) for the fixed lattice."""
-    spark = ranked.sparkSession
-    offsets = spark.createDataFrame(ROOK if rook else QUEEN, "dr int, dc int")
-    a = ranked.select("row", "col", F.col("k").alias("ka"))
-    b = ranked.select(
-        F.col("row").alias("row2"), F.col("col").alias("col2"), F.col("k").alias("kb")
-    )
-    return (
-        a.crossJoin(F.broadcast(offsets))
-        .withColumn("row2", F.col("row") + F.col("dr"))
-        .withColumn("col2", F.col("col") + F.col("dc"))
-        .join(b, ["row2", "col2"])
-        .select("ka", "kb")
-    )
+    return _offset_join(ranked, "k", "ka", "kb", rook).select("ka", "kb")
 
 
 _LCM8 = 840  # lcm(1..8): exact rational 1/deg weights as integers
@@ -664,11 +674,7 @@ def global_autocorr_rowstd(px: DataFrame, rook: bool = False) -> DataFrame:
     Doubles are produced from the exact integers with the same
     operation order as the SQL oracle — bit-identical, shipped
     unrounded. Returns one row (n, nw, moran_r, geary_r)."""
-    scal = px.agg(F.count("value").alias("n"), F.sum("value").alias("s"),
-                  F.sum(F.col("value") * F.col("value")).alias("q"),
-                  F.max(F.abs("value")).alias("vmax")).collect()[0]
-    n, s, q = int(scal["n"]), int(scal["s"]), int(scal["q"])
-    vmax = int(scal["vmax"])
+    n, s, q, vmax = _moments(px)
     # decimal(19/20) widths hold |N| <= 2·n·vmax and |M| <= 16·n·vmax,
     # and the per-row product |N·M·840| <= 26880·(n·vmax)² must fit the
     # 38-digit product cap: with ANSI off an overflowing cast/multiply
@@ -678,16 +684,8 @@ def global_autocorr_rowstd(px: DataFrame, rook: bool = False) -> DataFrame:
     # final SUM can still overflow decimal(38) on adversarial inputs,
     # but sum-overflow NULLs the whole aggregate -> int(None) raises —
     # a crash, never a silently wrong value.
-    if n * vmax > 6 * 10**16:
-        raise ValueError(
-            f"n*max|value| = {n * vmax:.3g} exceeds the exact-integer "
-            "budget (6e16) of the 840-scaled decimal plan; rescale values"
-        )
-    if vmax > 4 * 10**8:
-        raise ValueError(
-            f"max|value| = {vmax:.3g} exceeds the per-row int64 budget of "
-            "the Geary numerator (|c_num| <= 32·vmax² must fit a BIGINT)"
-        )
+    _check_840_budget(n, vmax)
+    _check_geary_budget(vmax)
     foc = focal_stats(px, rook=rook, include_self=False).filter(F.col("ncnt") > 0)
     wfac = F.expr(f"CAST({_LCM8} DIV ncnt AS DECIMAL(4,0))")
     N = (F.col("value") * n - s).cast("decimal(19,0)")
@@ -761,9 +759,7 @@ def gstar_local(px: DataFrame, rook: bool = False) -> DataFrame:
     Returns (row, col, gnum, wi, z_gstar) — gnum = exact focal sum."""
     import math
 
-    scal = px.agg(F.count("value").alias("n"), F.sum("value").alias("s"),
-                  F.sum(F.col("value") * F.col("value")).alias("q")).collect()[0]
-    n, s, q = int(scal["n"]), int(scal["s"]), int(scal["q"])
+    n, s, q, _ = _moments(px)
     mean = float(s) / n
     s_h = math.sqrt((float(q) / n) - mean * mean)
     foc = focal_stats(px, rook=rook, include_self=True)
@@ -815,9 +811,7 @@ def g_local(px: DataFrame, rook: bool = False) -> DataFrame:
     expression is written op-for-op like the SQL oracle.  Isolated
     cells (W_i = 0) have no G_i and are filtered, like the rowstd
     plan.  Returns (row, col, gnum, wi, z_g)."""
-    scal = px.agg(F.count("value").alias("n"), F.sum("value").alias("s"),
-                  F.sum(F.col("value") * F.col("value")).alias("q")).collect()[0]
-    n, s, q = int(scal["n"]), int(scal["s"]), int(scal["q"])
+    n, s, q, _ = _moments(px)
     if n < 3:
         raise ValueError("g_local needs n >= 3 (n-2 in the variance)")
     foc = focal_stats(px, rook=rook, include_self=False).filter(F.col("ncnt") > 0)
@@ -853,26 +847,6 @@ SELECT base.row, base.col, base.gnum, base.wi,
        (base.gnum - {xb} * base.wi)
          / (sqrt({s2}) * sqrt((base.wi * (scal.n - 1) - base.wi * base.wi) / (scal.n - 2.0))) AS z_g
 FROM base, scal"""
-
-
-def moran_rowstd(px: DataFrame, rook: bool = False) -> float:
-    """Row-standardized Moran's I (reference default transform='r'):
-    I = (n/S0)·Σ_i (1/deg_i)·Σ_j z_i z_j / Σ z² with S0 = Σ 1/deg_i·deg_i
-    = #cells-with-neighbors. Returns a float (pytest parity path)."""
-    scal = px.agg(F.count("value").alias("n"), F.avg("value").alias("m")).collect()[0]
-    n, mean = int(scal["n"]), float(scal["m"])
-    pairs = neighbor_pairs(px, rook=rook)
-    per_i = pairs.groupBy("row", "col").agg(
-        F.first("va").alias("va"),
-        F.avg(F.col("vb") - mean).alias("lag_z"),
-        F.count(F.lit(1)).alias("deg"),
-    )
-    row = per_i.agg(
-        F.sum((F.col("va") - mean) * F.col("lag_z")).alias("num"),
-        F.count(F.lit(1)).alias("nw"),
-    ).collect()[0]
-    den = px.agg(F.sum((F.col("value") - mean) * (F.col("value") - mean))).collect()[0][0]
-    return (n / float(row["nw"])) * float(row["num"]) / float(den)
 
 
 def local_permutation_test(
@@ -919,8 +893,7 @@ def local_permutation_test(
     if stat not in ("moran", "gstar"):
         raise ValueError(f"unknown local stat {stat!r}")
     spark = px.sparkSession
-    scal = px.agg(F.count("value").alias("n"), F.sum("value").alias("s")).collect()[0]
-    n, s = int(scal["n"]), int(scal["s"])
+    n, s, _, _ = _moments(px)
     perms = permutation_params(n, n_perm, seed)[1:]  # skip the identity
 
     ranked = c_order_index(px).withColumnRenamed("i", "k").join(

@@ -2,9 +2,8 @@
 
 The reference builds skimage.graph.MCP_Geometric over the raster as a
 cost surface and loops over sources in Python (its scalability cliff,
-SURVEY §3.3). Here the *per-source* loop is distributed: sources are
-grouped and shipped to executors via applyInPandas; each task runs a
-numpy/heapq Dijkstra against the broadcast cost surface.
+SURVEY §3.3). Here one numpy/heapq Dijkstra (``_dijkstra_seeded``;
+``dijkstra_grid`` is its single-seed call) runs inside Spark tasks.
 
 Semantics matched to the reference:
   * MCP_Geometric edge cost: (cost[a] + cost[b]) / 2 * step_len,
@@ -16,8 +15,9 @@ Semantics matched to the reference:
     / (7*24) (georasters.py:1438-1442).
   * masked cells are impassable (cost surface has no value there).
 
-Three execution strategies, all proven equal to the numpy Dijkstra in
-pytest:
+Two plans run that Dijkstra, both pytest-proven bit-equal to
+``dijkstra_grid``, and both route over the same clipped surface and
+point cells (``_routing_inputs``):
 
 * ``block_sssp``       — THE scale path and the gated plan: the grid is
   partitioned into B×B blocks (+1-cell halo); each round runs a full
@@ -27,9 +27,6 @@ pytest:
   round count is bounded by the number of block-boundary crossings of
   the optimal paths (label-correcting block Dijkstra), not the grid
   diameter.
-* ``cost_distance_relaxation`` — cell-granular frontier Bellman-Ford
-  (one join per wavefront step); simplest fully-distributed form,
-  O(grid diameter) rounds.
 * ``cost_distance_broadcast``  — the small-grid fast path: collect the
   surface once, broadcast, per-source Dijkstra in executors. Driver
   memory-bound; kept for routes=True tracebacks and tiny grids.
@@ -48,117 +45,17 @@ from pyspark.sql import functions as F
 HOURS_PER_WEEK = 7 * 24
 
 
-def dijkstra_grid(cost: np.ndarray, valid: np.ndarray, r0: int, c0: int) -> np.ndarray:
-    """Full cumulative-cost surface from one source (MCP_Geometric edge
-    rule). Returns float64 grid, inf = unreachable, nan on invalid."""
-    h, w = cost.shape
-    dist = np.full((h, w), np.inf)
-    if not (0 <= r0 < h and 0 <= c0 < w) or not valid[r0, c0]:
-        return dist
-    dist[r0, c0] = 0.0
-    pq = [(0.0, r0, c0)]
-    steps = [
-        (-1, -1, math.sqrt(2)), (-1, 0, 1.0), (-1, 1, math.sqrt(2)),
-        (0, -1, 1.0), (0, 1, 1.0),
-        (1, -1, math.sqrt(2)), (1, 0, 1.0), (1, 1, math.sqrt(2)),
-    ]
-    while pq:
-        d, r, c = heapq.heappop(pq)
-        if d > dist[r, c]:
-            continue
-        base = cost[r, c]
-        for dr, dc, sl in steps:
-            nr, nc = r + dr, c + dc
-            if 0 <= nr < h and 0 <= nc < w and valid[nr, nc]:
-                nd = d + (base + cost[nr, nc]) / 2.0 * sl
-                if nd < dist[nr, nc]:
-                    dist[nr, nc] = nd
-                    heapq.heappush(pq, (nd, nr, nc))
-    return dist
-
-
-def cost_distance_relaxation(
-    px: DataFrame,
-    source_row: int,
-    source_col: int,
-    checkpoint_every: int = 20,
-    max_iters: int = 10000,
-) -> DataFrame:
-    """Fully distributed single-source cost distance: frontier-based
-    Bellman-Ford relaxation over the 8-neighbor edge set — the scale
-    path when the cost surface exceeds single-task memory (the
-    broadcast-array path in cost_distance is the small/fast case).
-
-    Each round relaxes only edges leaving the cells improved in the
-    previous round (Dijkstra-like wavefront ⇒ ~grid-diameter rounds);
-    lineage is truncated with localCheckpoint every `checkpoint_every`
-    rounds. Returns (row, col, dist) in raw cost units (not /168).
-    """
-    spark = px.sparkSession
-
-    # static edge set with MCP_Geometric weights, built once
-    offsets = spark.createDataFrame(
-        [(-1, -1, math.sqrt(2)), (-1, 0, 1.0), (-1, 1, math.sqrt(2)),
-         (0, -1, 1.0), (0, 1, 1.0),
-         (1, -1, math.sqrt(2)), (1, 0, 1.0), (1, 1, math.sqrt(2))],
-        "dr int, dc int, sl double",
-    )
-    a = px.select("row", "col", F.col("value").alias("va"))
-    b = px.select(
-        F.col("row").alias("row2"), F.col("col").alias("col2"), F.col("value").alias("vb")
-    )
-    edges = (
-        a.crossJoin(F.broadcast(offsets))
-        .withColumn("row2", F.col("row") + F.col("dr"))
-        .withColumn("col2", F.col("col") + F.col("dc"))
-        .join(b, ["row2", "col2"])
-        .select("row", "col", "row2", "col2",
-                ((F.col("va") + F.col("vb")) / 2.0 * F.col("sl")).alias("w"))
-        .persist()
-    )
-    edges.count()
-
-    dist = spark.createDataFrame(
-        [(int(source_row), int(source_col), 0.0)], "row long, col long, dist double"
-    )
-    frontier = dist
-    it = 0
-    while it < max_iters:
-        it += 1
-        cand = (
-            edges.join(frontier, ["row", "col"])
-            .select(
-                F.col("row2").alias("row"),
-                F.col("col2").alias("col"),
-                (F.col("dist") + F.col("w")).alias("nd"),
-            )
-            .groupBy("row", "col")
-            .agg(F.min("nd").alias("nd"))
-        )
-        joined = cand.join(dist, ["row", "col"], "left")
-        improved = joined.filter(
-            F.col("dist").isNull() | (F.col("nd") < F.col("dist") - 1e-12)
-        ).select("row", "col", F.col("nd").alias("dist"))
-        improved = improved.localCheckpoint(eager=True)
-        if improved.isEmpty():
-            break
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("row", "col")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if it % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
-        frontier = improved
-    edges.unpersist()
-    return dist
+# the MCP_Geometric 8-neighbour steps (dr, dc, step length)
+_STEPS = tuple((dr, dc, math.sqrt(2) if dr and dc else 1.0)
+               for dr in (-1, 0, 1) for dc in (-1, 0, 1) if (dr, dc) != (0, 0))
 
 
 def _dijkstra_seeded(
     cost: np.ndarray, valid: np.ndarray, seeds: list[tuple[int, int, float]]
 ) -> np.ndarray:
     """Multi-seed Dijkstra over a local window (MCP_Geometric edge
-    rule). seeds: (r, c, dist0) already in window coordinates."""
+    rule). seeds: (r, c, dist0) already in window coordinates. Returns
+    float64 grid, inf = unreachable."""
     h, w = cost.shape
     dist = np.full((h, w), np.inf)
     pq = []
@@ -166,17 +63,12 @@ def _dijkstra_seeded(
         if 0 <= r < h and 0 <= c < w and valid[r, c] and d < dist[r, c]:
             dist[r, c] = d
             heapq.heappush(pq, (d, r, c))
-    steps = [
-        (-1, -1, math.sqrt(2)), (-1, 0, 1.0), (-1, 1, math.sqrt(2)),
-        (0, -1, 1.0), (0, 1, 1.0),
-        (1, -1, math.sqrt(2)), (1, 0, 1.0), (1, 1, math.sqrt(2)),
-    ]
     while pq:
         d, r, c = heapq.heappop(pq)
         if d > dist[r, c]:
             continue
         base = cost[r, c]
-        for dr, dc, sl in steps:
+        for dr, dc, sl in _STEPS:
             nr, nc = r + dr, c + dc
             if 0 <= nr < h and 0 <= nc < w and valid[nr, nc]:
                 nd = d + (base + cost[nr, nc]) / 2.0 * sl
@@ -184,6 +76,12 @@ def _dijkstra_seeded(
                     dist[nr, nc] = nd
                     heapq.heappush(pq, (nd, nr, nc))
     return dist
+
+
+def dijkstra_grid(cost: np.ndarray, valid: np.ndarray, r0: int, c0: int) -> np.ndarray:
+    """Full cumulative-cost surface from one source (MCP_Geometric edge
+    rule). Returns float64 grid, inf = unreachable or invalid."""
+    return _dijkstra_seeded(cost, valid, [(r0, c0, 0.0)])
 
 
 def _halo_offsets(spark, b: int, include_center: bool):
@@ -360,19 +258,47 @@ def trace_route(dist: np.ndarray, valid: np.ndarray, r1: int, c1: int) -> list[t
         if dist[r, c] == 0.0:
             break
         best = None
-        for dr in (-1, 0, 1):
-            for dc in (-1, 0, 1):
-                if dr == dc == 0:
-                    continue
-                nr, nc = r + dr, c + dc
-                if 0 <= nr < h and 0 <= nc < w and valid[nr, nc]:
-                    if best is None or dist[nr, nc] < best[0]:
-                        best = (dist[nr, nc], nr, nc)
+        for dr, dc, _ in _STEPS:
+            nr, nc = r + dr, c + dc
+            if 0 <= nr < h and 0 <= nc < w and valid[nr, nc]:
+                if best is None or dist[nr, nc] < best[0]:
+                    best = (dist[nr, nc], nr, nc)
         if best is None or best[0] >= dist[r, c]:
             break
         _, r, c = best
         path.append((r, c))
     return list(reversed(path))
+
+
+def _routing_inputs(images, sources, destinations, origin, cellsize, bbox):
+    """The cost surface as valid (row, col, value) cells, clipped first
+    to bbox = (r0, r1, c0, c1), a half-open pixel window, when given
+    (clip-then-route: cells outside are impassable), and the sources'
+    and destinations' (point_id, row, col) cells as int64 (n, 3)
+    arrays, a point's cell being (round((y − y0)/cy), round((x − x0)/cx))."""
+    from ..operators import pixels as PX
+
+    x0, y0 = origin
+    cx, cy = cellsize
+    px = PX.pixel_table(images, valid_only=True, with_coords=False).select(
+        "row", "col", "value"
+    )
+    if bbox is not None:
+        r0, r1, c0, c1 = bbox
+        px = px.filter(
+            (F.col("row") >= r0) & (F.col("row") < r1)
+            & (F.col("col") >= c0) & (F.col("col") < c1)
+        )
+
+    def cells(points: DataFrame) -> np.ndarray:
+        pdf = points.select("point_id", "x", "y").toPandas()
+        return np.column_stack([
+            pdf["point_id"].to_numpy(np.int64),
+            np.round((pdf["y"].to_numpy() - y0) / cy).astype(np.int64),
+            np.round((pdf["x"].to_numpy() - x0) / cx).astype(np.int64),
+        ]).reshape(-1, 3)
+
+    return px, cells(sources), cells(destinations)
 
 
 def cost_distance(
@@ -393,7 +319,8 @@ def cost_distance(
     georasters.py:1438-1442).
 
     bbox = (r0, r1, c0, c1) half-open pixel window clips the cost
-    surface first (clip-then-route; masked/outside cells impassable).
+    surface first (clip-then-route; masked/outside cells impassable),
+    with or without routes.
 
     The isolation mean is DETERMINISTIC by design: per-cell dists are
     quantized to exact micro-units (round(dist·1e6) as BIGINT) and
@@ -408,37 +335,13 @@ def cost_distance(
     full per-source surface for the greedy traceback and delegates to
     the small-grid broadcast path.
     """
+    px, src_cells, dst_cells = _routing_inputs(
+        images, sources, destinations, origin, cellsize, bbox)
     if routes:
-        return cost_distance_broadcast(
-            images, sources, destinations, origin, cellsize, routes=True
-        )
-    from ..operators import pixels as PX
-
+        return _broadcast_dijkstra(px, src_cells, dst_cells, routes=True)
     spark = images.sparkSession
-    x0, y0 = origin
-    cx, cy = cellsize
-    px = PX.pixel_table(images, valid_only=True, with_coords=False).select(
-        "row", "col", "value"
-    )
-    if bbox is not None:
-        r0, r1, c0, c1 = bbox
-        px = px.filter(
-            (F.col("row") >= r0) & (F.col("row") < r1)
-            & (F.col("col") >= c0) & (F.col("col") < c1)
-        )
-    src_pdf = sources.select("point_id", "x", "y").toPandas()
-    sources_rc = [
-        (int(p.point_id), int(np.round((p.y - y0) / cy)), int(np.round((p.x - x0) / cx)))
-        for p in src_pdf.itertuples(index=False)
-    ]
-    dist = block_sssp(px, sources_rc, block=block)
-
-    dst_pdf = destinations.select("point_id", "x", "y").toPandas()
-    dst_rows = [
-        (int(p.point_id), int(np.round((p.y - y0) / cy)), int(np.round((p.x - x0) / cx)))
-        for p in dst_pdf.itertuples(index=False)
-    ]
-    dstdf = spark.createDataFrame(dst_rows or [(-(1 << 40), -1, -1)],
+    dist = block_sssp(px, src_cells.tolist(), block=block)
+    dstdf = spark.createDataFrame(dst_cells.tolist() or [(-(1 << 40), -1, -1)],
                                   "id2 long, row long, col long")
     pairs = dist.join(F.broadcast(dstdf), ["row", "col"]).select(
         F.col("src").alias("id1"), "id2",
@@ -470,14 +373,16 @@ def cost_distance_broadcast(
     the surface doesn't comfortably fit one machine. Only this path
     supports routes=True (greedy traceback needs the full surface).
     """
-    from ..operators import pixels as PX
+    return _broadcast_dijkstra(
+        *_routing_inputs(images, sources, destinations, origin, cellsize, None),
+        routes=routes)
 
-    x0, y0 = origin
-    cx, cy = cellsize
 
-    px = PX.pixel_table(images, valid_only=True, with_coords=False).select(
-        "row", "col", "value"
-    )
+def _broadcast_dijkstra(px: DataFrame, src_cells: np.ndarray,
+                        dst_cells: np.ndarray, routes: bool) -> DataFrame:
+    """cost_distance_broadcast over _routing_inputs' cost cells and
+    point cells."""
+    spark = px.sparkSession
     pdf = px.toPandas()
     h = int(pdf["row"].max()) + 1
     w = int(pdf["col"].max()) + 1
@@ -485,22 +390,15 @@ def cost_distance_broadcast(
     valid = np.zeros((h, w), dtype=bool)
     cost[pdf["row"], pdf["col"]] = pdf["value"]
     valid[pdf["row"], pdf["col"]] = True
-
-    spark = images.sparkSession
     bc = spark.sparkContext.broadcast((cost, valid))
 
-    dst_pdf = destinations.select("point_id", "x", "y").toPandas()
-    drows = np.round((dst_pdf["y"].to_numpy() - y0) / cy).astype(np.int64)
-    dcols = np.round((dst_pdf["x"].to_numpy() - x0) / cx).astype(np.int64)
-    dids = dst_pdf["point_id"].to_numpy(dtype=np.int64)
+    dids, drows, dcols = dst_cells.T
 
     def per_source(pdf_src: pd.DataFrame) -> pd.DataFrame:
         cost_, valid_ = bc.value
         out = []
         for s in pdf_src.itertuples(index=False):
-            r0 = int(np.round((s.y - y0) / cy))
-            c0 = int(np.round((s.x - x0) / cx))
-            dist = dijkstra_grid(cost_, valid_, r0, c0)
+            dist = dijkstra_grid(cost_, valid_, int(s.row), int(s.col))
             inb = (drows >= 0) & (drows < dist.shape[0]) & (dcols >= 0) & (dcols < dist.shape[1])
             dd = np.full(len(dids), np.inf)
             dd[inb] = dist[drows[inb], dcols[inb]]
@@ -525,8 +423,10 @@ def cost_distance_broadcast(
     schema = "id1 long, id2 long, dist_weeks double" + (
         ", route array<array<long>>" if routes else ""
     )
-    src = sources.select("point_id", "x", "y").repartition(
-        max(1, min(sources.count(), spark.sparkContext.defaultParallelism)),
+    src = spark.createDataFrame(
+        src_cells.tolist(), "point_id long, row long, col long"
+    ).repartition(
+        max(1, min(len(src_cells), spark.sparkContext.defaultParallelism)),
         "point_id",
     )
     return src.groupBy("point_id").applyInPandas(

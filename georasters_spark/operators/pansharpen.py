@@ -8,35 +8,27 @@ of the upsampled bands, and every output sample is
     out_b = ms_up_b * pan / pseudo_pan        (weighted Brovey)
 
 The reference ecosystem reaches this through ``gdal_pansharpen.py``;
-this module re-expresses it Spark-first over the engine's pixel tables:
+this module re-expresses it Spark-first over the engine's pixel tables
+as one block-cogroup plan (the focal/tiles stencil shape): pan pixels
+key by (row//block, col//block), each MS cell goes to every pan block
+whose pixels reference it (<= 2 candidate blocks per axis, a small
+boundary duplication), and one cogrouped numpy kernel does the
+bilinear upsample (the four corners clamped to the MS grid), the
+pseudo-pan and the ratio for every band at once.  Pixels cross ONE
+exchange each side: no exploded-corner join, no per-pixel aggregate.
 
-* MS upsampling is a target-driven bilinear gather, exactly the
-  ``resize``/reproject shape: the pan table provides the target
-  lattice, each pan pixel computes its four clamped MS corner keys and
-  dyadic-rational weights as pure Columns, ``explode(4)`` + one
-  equi-join against the long-format MS table (band, row, col, value),
-  then ONE (row, col) hash aggregate builds every upsampled band AND
-  the pseudo-pan together via conditional sums — no per-band pass, no
-  pivot join.
-* The Brovey ratio itself is a codegen expression; zero UDFs anywhere.
-
-Shuffle budget: explode-join exchange + one aggregate exchange + the
-pan join — three exchanges of O(N) rows total, independent of band
-count.  At 100-TB scale the same kernel runs per aligned (pan tile,
-MS tile) pair via the tile-cogroup pattern (reproject.gather_from_tiles
-precedent) if the pixel tables are never materialized; the pixel plan
-here is the gated semantics.
-
-Exactness contract (DuckDB oracle): with integer synthetic fields,
-ratio-2 bilinear weights are dyadic rationals (1/16..9/16) and the
-default band weights are dyadic (1/4, 3/8, 3/8), so every intermediate
-up to the final division is EXACT in float64 and order-free; the final
-``ms_up · pan / pseudo`` is one double divide, rounded to 6 dp on both
-engines.
+Exactness contract (DuckDB oracle ``brovey_sql``): with integer
+synthetic fields, ratio-2 bilinear weights are dyadic rationals
+(1/16..9/16) and the default band weights are dyadic (1/4, 3/8, 3/8),
+so every intermediate up to the final division is EXACT in float64 and
+order-free; the final ``ms_up · pan / pseudo`` is one double divide,
+rounded to 6 dp by ``F.round`` on the engine and ``ROUND`` in DuckDB.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,137 +37,17 @@ from .reproject import dlit
 DEFAULT_WEIGHTS = (0.25, 0.375, 0.375)
 
 
-def _corner_cols(ratio: int, axis_col: str):
-    """(base index, frac) for the bilinear source coordinate
-    u = (i + 0.5)/ratio - 0.5 along one axis (clamping is the caller's
-    _clamp)."""
-    u = (F.col(axis_col) + F.lit(0.5)) / F.lit(float(ratio)) - F.lit(0.5)
-    i0 = F.floor(u)
-    fr = u - i0
-    return i0.cast("long"), fr
-
-
-def _clamp(c, n: int):
-    return F.least(F.greatest(c, F.lit(0)), F.lit(n - 1))
-
-
 def brovey_pansharpen(pan: DataFrame, ms: DataFrame,
                       ms_shape: tuple[int, int], ratio: int,
                       n_bands: int,
                       weights: tuple[float, ...] = DEFAULT_WEIGHTS,
-                      round_dp: int = 6) -> DataFrame:
+                      block: int = 512) -> DataFrame:
     """Weighted-Brovey fuse of ``pan`` (row, col, value) with ``ms``
     (band, row, col, value) at ``ratio``-coarser resolution.  Returns
-    (row, col, band, value) on the pan grid; pseudo-pan of 0 (or a pan
-    pixel whose corner gather found no MS rows) yields NULL."""
-    if len(weights) != n_bands:
-        raise ValueError(f"pansharpen: {n_bands} bands but "
-                         f"{len(weights)} weights")
-    mh, mw = ms_shape
-    r0, fr = _corner_cols(ratio, "row")
-    c0, fc = _corner_cols(ratio, "col")
-
-    corners = pan.select(
-        "row", "col", F.col("value").alias("pan"),
-        r0.alias("_r0"), c0.alias("_c0"),
-        fr.alias("_fr"), fc.alias("_fc"),
-    ).select(
-        "row", "col", "pan", "_r0", "_c0", "_fr", "_fc",
-        F.explode(F.array(*[F.struct(F.lit(dr).alias("dr"),
-                                     F.lit(dc).alias("dc"))
-                            for dr in (0, 1) for dc in (0, 1)])).alias("_d"),
-    ).select(
-        "row", "col", "pan",
-        _clamp(F.col("_r0") + F.col("_d.dr"), mh).alias("mrow"),
-        _clamp(F.col("_c0") + F.col("_d.dc"), mw).alias("mcol"),
-        (F.when(F.col("_d.dr") == 0, F.lit(1.0) - F.col("_fr"))
-          .otherwise(F.col("_fr"))
-         * F.when(F.col("_d.dc") == 0, F.lit(1.0) - F.col("_fc"))
-            .otherwise(F.col("_fc"))).alias("wgt"),
-    )
-
-    # pivot MS wide FIRST (one domain-bounded aggregate): joining the
-    # LONG band table would multiply the corner rows x n_bands before
-    # the upsample aggregate — measured 3x slower at 4.7M pan px.
-    # Weighted corner sums are exact dyadics, so the regrouping is
-    # value-identical (the gate's oracle is unchanged).
-    ms_wide = ms.select(
-        F.col("band").cast("long").alias("band"),
-        F.col("row").alias("mrow"), F.col("col").alias("mcol"),
-        F.col("value").alias("mv"),
-    ).groupBy("mrow", "mcol").agg(*[
-        F.max(F.when(F.col("band") == b, F.col("mv"))).alias(f"_mv{b}")
-        for b in range(n_bands)
-    ])
-    joined = corners.join(ms_wide, ["mrow", "mcol"])
-    up_cols = [
-        F.sum(F.col("wgt") * F.col(f"_mv{b}")).alias(f"_ms{b}")
-        for b in range(n_bands)
-    ]
-    # per-band corner-weight totals: a missing MS cell or band entry
-    # leaves wsum < 1 (exact dyadics, so the == 1.0 test is exact) —
-    # a partial bilinear sum must surface as NULL, not a plausible
-    # wrong value (matches the blocks plan's NaN-slab rule)
-    ws_cols = [
-        F.sum(F.when(F.col(f"_mv{b}").isNotNull(), F.col("wgt")))
-         .alias(f"_ws{b}")
-        for b in range(n_bands)
-    ]
-    # pan is functionally dependent on (row, col) — grouping on it too
-    # avoids a first() aggregate
-    wide = joined.groupBy("row", "col", "pan").agg(*up_cols, *ws_cols)
-    for b in range(n_bands):
-        wide = wide.withColumn(
-            f"_ms{b}",
-            F.when(F.col(f"_ws{b}") == 1.0, F.col(f"_ms{b}")))
-
-    pseudo = None
-    for b, w in enumerate(weights):
-        term = F.lit(w) * F.col(f"_ms{b}")
-        pseudo = term if pseudo is None else pseudo + term
-    wide = wide.withColumn("_pseudo", pseudo)
-
-    # one explode back to long form — a union of n_bands selects would
-    # recompute the whole upsample aggregate once per band
-    bands = F.explode(F.array(*[
-        F.struct(
-            F.lit(b).cast("long").alias("band"),
-            F.when(F.col("_pseudo") != 0,
-                   F.round(F.col(f"_ms{b}") * F.col("pan")
-                           / F.col("_pseudo"), round_dp)).alias("value"))
-        for b in range(n_bands)
-    ])).alias("_b")
-    return wide.select("row", "col", bands).select(
-        "row", "col", F.col("_b.band").alias("band"),
-        F.col("_b.value").alias("value"))
-
-
-def brovey_pansharpen_blocks(pan: DataFrame, ms: DataFrame,
-                             ms_shape: tuple[int, int], ratio: int,
-                             n_bands: int,
-                             weights: tuple[float, ...] = DEFAULT_WEIGHTS,
-                             block: int = 512,
-                             round_dp: int | None = None) -> DataFrame:
-    """Block-cogroup Brovey — the focal/tiles stencil shape: pan pixels
-    key by (row//block, col//block), each MS cell is assigned to every
-    pan block whose pixels reference it (<= 2 candidate blocks per
-    axis, small boundary duplication), and one cogrouped kernel does
-    the bilinear + ratio in numpy.  Pixels cross ONE exchange each
-    side — no exploded-corner join, no per-pixel aggregate.  Measured
-    4.7M pan px: 45.5 s (pixel plan) -> ~6 s.  Value-identical to
-    brovey_pansharpen for integer-ratio grids (exact dyadic corner
-    sums; pytest-pinned), which remains the hash-gated semantics.
-
-    Differences from the pixel plan: a pan pixel with NO MS cell in
-    reach emits value NULL (the join plan drops the row), and
-    ``round_dp`` defaults to None — the Spark-F.round-exact
-    ``_round_half_up`` is a per-element Decimal loop (test-oracle
-    code), so rounding in this kernel is for parity tests only."""
-    import numpy as np
-    import pandas as pd
-
-    from .reproject import _round_half_up
-
+    one (row, col, band, value) row per pan pixel and band, the value
+    rounded to 6 dp.  The value is NULL where the pseudo-pan is 0,
+    where a bilinear corner is missing in some band, and where the
+    pixel lies more than one MS cell outside the MS grid."""
     if len(weights) != n_bands:
         raise ValueError(f"pansharpen: {n_bands} bands but "
                          f"{len(weights)} weights")
@@ -270,8 +142,6 @@ def brovey_pansharpen_blocks(pan: DataFrame, ms: DataFrame,
                      & np.isfinite(pv) & (pseudo != 0))
             den = np.where(valid, pseudo, 1.0)
             x = np.where(valid, up[b], 0.0) * pv / den
-            if round_dp is not None:
-                x = _round_half_up(x, round_dp)
             band_vals.append(np.where(valid, x, np.nan))
         vals = np.concatenate(band_vals)
         return pd.DataFrame({
@@ -283,6 +153,7 @@ def brovey_pansharpen_blocks(pan: DataFrame, ms: DataFrame,
         pb.groupBy("_br", "_bc")
         .cogroup(mb.groupBy("_br", "_bc"))
         .applyInPandas(kernel, out_schema)
+        .withColumn("value", F.round("value", 6))
     )
 
 
@@ -290,7 +161,9 @@ def brovey_sql(pan_cte: str, ms_value_expr: str,
                ms_shape: tuple[int, int], ratio: int, n_bands: int,
                weights: tuple[float, ...] = DEFAULT_WEIGHTS,
                round_dp: int = 6) -> str:
-    """DuckDB oracle mirroring brovey_pansharpen term for term.
+    """DuckDB oracle: an exploded-corner join that mirrors
+    brovey_pansharpen inside the MS footprint (a pixel more than one MS
+    cell outside it is NULL in the plan and clamped here).
 
     ``pan_cte`` must define ``pan(row, col, value)``; ``ms_value_expr``
     is a SQL expression in (band, mrow, mcol) for the MS field value.

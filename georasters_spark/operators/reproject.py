@@ -347,22 +347,6 @@ SELECT tgt.trow, tgt.tcol, agg.value, agg.n_contrib
 FROM tgt LEFT JOIN agg ON agg.trow = tgt.trow AND agg.tcol = tgt.tcol"""
 
 
-def _round_half_up(arr: np.ndarray, q: int) -> np.ndarray:
-    """Element-wise decimal round emulating Spark's F.round exactly:
-    Java BigDecimal.valueOf(double) parses Double.toString — the
-    SHORTEST uniquely-identifying decimal repr (== Python repr) — then
-    setScale(q, HALF_UP). Test-oracle code (per-element Decimal), not a
-    hot path."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    quantum = Decimal(1).scaleb(-q)
-    flat = [
-        float(Decimal(repr(float(x))).quantize(quantum, ROUND_HALF_UP))
-        for x in np.asarray(arr, dtype=np.float64).ravel()
-    ]
-    return np.asarray(flat, dtype=np.float64).reshape(np.shape(arr))
-
-
 # ---------------------------------------------------------------------------
 # user-facing dispatcher: the reference API accepts EPSG ints, proj4 and
 # WKT strings plus a resampling mode name (georasters.py:559-667), and

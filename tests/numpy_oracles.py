@@ -167,6 +167,21 @@ def sinusoidal_numpy_oracle(full, ndv, src_origin, src_cellsize, out_shape):
     return _nearest(full, ndv, lon, lat, src_origin, src_cellsize, out_shape)
 
 
+def _round_half_up(arr: np.ndarray, q: int) -> np.ndarray:
+    """Element-wise decimal round emulating Spark's F.round exactly:
+    Java BigDecimal.valueOf(double) parses Double.toString — the
+    SHORTEST uniquely-identifying decimal repr (== Python repr) — then
+    setScale(q, HALF_UP)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    quantum = Decimal(1).scaleb(-q)
+    flat = [
+        float(Decimal(repr(float(x))).quantize(quantum, ROUND_HALF_UP))
+        for x in np.asarray(arr, dtype=np.float64).ravel()
+    ]
+    return np.asarray(flat, dtype=np.float64).reshape(np.shape(arr))
+
+
 def _center_uv(lon, lat, src_origin, src_cellsize, rnd=np.round):
     x0g, y0g = src_origin
     cx, cy = src_cellsize
@@ -188,7 +203,7 @@ def webmercator_bilinear_numpy_oracle(full, ndv, src_origin, src_cellsize,
     linear Mercator lon hits exact 4-dp ties (e.g. 34.65625), where the
     two rules diverge by a whole quantum."""
     lon, lat = _webmerc_lonlat(full, src_origin, src_cellsize, out_shape)
-    u, v = _center_uv(lon, lat, src_origin, src_cellsize, RP._round_half_up)
+    u, v = _center_uv(lon, lat, src_origin, src_cellsize, _round_half_up)
     return _renormalized(full, ndv, u, v, (0, 1), _bilinear_wf, _positive)
 
 

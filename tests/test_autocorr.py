@@ -52,10 +52,56 @@ def _px_df(spark, a):
 
 
 def test_moran_rowstd_matches_numpy(spark):
-    px = _px_df(spark, GRAD)
-    got = AC.moran_rowstd(px)
+    """The facade's default Moran (row-standardized weights, the exact
+    840-scaled plan) on the float gradient fixture."""
+    from georasters_spark.frame import GeoRasterFrame
+
+    frame = GeoRasterFrame(_px_df(spark, GRAD), origin=(0.0, 0.0),
+                           cellsize=(1.0, -1.0), shape=GRAD.shape)
+    got = frame.pysal_Moran().collect()[0]["moran_r"]
     exp = _moran_numpy_rowstd(GRAD)
     assert abs(got - exp) < 1e-9, (got, exp)
+
+
+def test_exact_plans_refuse_fractional_values(spark):
+    """The exact integer plans cast values to int64; a fractional value
+    must raise rather than be truncated (Moran's I is scale-invariant,
+    a truncated GRAD/2 is not), while whole-number doubles give the
+    same rows as the int64 table in the non-permutation plans."""
+    import pytest
+
+    thr = 30
+    entry_points = {
+        "global": lambda px: AC.global_autocorr(px, thr).collect(),
+        "rowstd": lambda px: AC.global_autocorr_rowstd(px).collect(),
+        "local_moran": lambda px: AC.local_moran(px).collect(),
+        "local_moran_rowstd": lambda px: AC.local_moran_rowstd(px).collect(),
+        "local_geary": lambda px: AC.local_geary(px).collect(),
+        "gstar_local": lambda px: AC.gstar_local(px).collect(),
+        "g_local": lambda px: AC.g_local(px).collect(),
+        "moran_perm": lambda px: AC.moran_permutation_test(px, n_perm=3).collect(),
+        "moran_perm_r": lambda px: AC.moran_permutation_test(
+            px, n_perm=3, transform="r").collect(),
+        "geary_perm": lambda px: AC.geary_permutation_test(px, n_perm=3).collect(),
+        "geary_perm_r": lambda px: AC.geary_permutation_test(
+            px, n_perm=3, transform="r").collect(),
+        "gamma_perm": lambda px: AC.gamma_joincount_permutation_test(
+            px, thr, n_perm=3).collect(),
+        "local_perm": lambda px: AC.local_permutation_test(px, n_perm=3).collect(),
+    }
+    half = _px_df(spark, GRAD / 2)
+    as_float = _px_df(spark, GRAD)
+    as_long = as_float.select("row", "col", F.col("value").cast("long").alias("value"))
+    for name, run in entry_points.items():
+        with pytest.raises(ValueError, match="integer-valued"):
+            run(half)
+        # the permutation tests cast values like the plans below; their
+        # pair frames are the slow part of this test, so they skip it
+        if "perm" not in name:
+            assert sorted(run(as_float)) == sorted(run(as_long)), name
+    moran_r = AC.global_autocorr_rowstd(as_float).collect()[0]["moran_r"]
+    moran_i = AC.global_autocorr(as_float, thr).collect()[0]["moran_i"]
+    assert round(moran_r, 6) == 0.742703 and round(moran_i, 6) == 0.633186
 
 
 def test_global_autocorr_rowstd_matches_numpy(spark):

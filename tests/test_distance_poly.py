@@ -190,8 +190,9 @@ def test_cost_window_oracle_K_is_sufficient():
 
 
 def test_relaxation_matches_dijkstra(spark):
-    """Distributed frontier relaxation == in-memory Dijkstra on a
-    small cost surface (the scale-path equivalence proof)."""
+    """Distributed block SSSP over 4×4 blocks (many block-boundary
+    crossings) == in-memory Dijkstra exactly, on a small cost surface
+    with obstacles."""
     rng = np.random.default_rng(9)
     h, w = 18, 22
     cost = rng.uniform(1, 9, (h, w))
@@ -204,14 +205,41 @@ def test_relaxation_matches_dijkstra(spark):
         if valid[r, c]
     ]
     px = spark.createDataFrame(rows, "row long, col long, value double")
-    got = DI.cost_distance_relaxation(px, 2, 3).toPandas()
+    got = DI.block_sssp(px, [(0, 2, 3)], block=4).toPandas()
     exp = DI.dijkstra_grid(cost, valid, 2, 3)
-    assert len(got) > 0
+    assert len(got) > 0 and (got.src == 0).all()
     for r in got.itertuples():
-        assert abs(r.dist - exp[r.row, r.col]) < 1e-9
-    # relaxation reaches exactly the reachable set
+        assert r.dist == exp[r.row, r.col]
+    # block SSSP reaches exactly the reachable set
     reach = int(np.isfinite(exp[valid]).sum())
     assert len(got) == reach
+
+
+def test_routes_respect_bbox(spark, images_t1):
+    """routes=True clips the cost surface to bbox like routes=False:
+    every route step lies inside the window and the pairs (ids and
+    travel times) equal the routes=False result.  On this 5-row T1
+    strip the unclipped least-cost routes leave the window."""
+    from georasters_spark.queries import _window_points
+    from georasters_spark.sources import synth
+
+    spec = synth.T1
+    r0, r1, c0, c1 = bbox = (99, 104, 195, 240)
+    kw = dict(origin=(spec.x0, spec.y0), cellsize=(spec.cellx, spec.celly),
+              bbox=bbox)
+    srcs = _window_points(spark, [(0, 101, 200)])
+    dsts = _window_points(spark, [(10, 101, 235), (11, 103, 215),
+                                  (12, 100, 225), (13, 102, 239)])
+    plain = DI.cost_distance(images_t1, srcs, dsts, **kw).toPandas()
+    routed = DI.cost_distance(images_t1, srcs, dsts, routes=True, **kw).toPandas()
+    key = ["id1", "id2"]
+    a = plain[plain.id2 >= 0].sort_values(key).reset_index(drop=True)
+    b = routed[routed.id2 >= 0].sort_values(key).reset_index(drop=True)
+    assert list(a.id2) == [10, 11, 12, 13]
+    pd.testing.assert_frame_equal(a[key + ["dist_weeks"]], b[key + ["dist_weeks"]])
+    for route in b.route:
+        assert len(route) > 0
+        assert all(r0 <= r < r1 and c0 <= c < c1 for r, c in route)
 
 
 def test_route_traceback(spark):

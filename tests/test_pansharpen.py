@@ -1,8 +1,10 @@
 """Weighted-Brovey pansharpen (operators/pansharpen.py) vs a numpy
-mirror, plus the pseudo-pan-zero NULL contract."""
+mirror and the DuckDB oracle, plus the NULL contract (pseudo-pan 0,
+missing corner, out of reach)."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from georasters_spark.operators import pansharpen as PS
 from georasters_spark.sources import synth
@@ -45,8 +47,6 @@ def _numpy_brovey(pan: np.ndarray) -> np.ndarray:
 
 
 def _frames(spark, pan_arr):
-    from pyspark.sql import functions as F
-
     pan = spark.createDataFrame(
         [(int(r), int(c), float(pan_arr[r, c]))
          for r in range(H) for c in range(W)], "row long, col long, value double")
@@ -99,8 +99,11 @@ def test_gate_window_sizes():
 
 
 def test_blocks_plan_matches_pixel_plan(spark):
-    """brovey_pansharpen_blocks ≡ brovey_pansharpen on aligned grids
-    (exact dyadic corner sums; blocks rounds via _round_half_up)."""
+    """brovey_pansharpen ≡ the brovey_sql corner-join oracle run in
+    DuckDB, exactly, on an aligned grid (exact dyadic corner sums, one
+    double divide, 6-dp round on both engines)."""
+    import duckdb
+
     pan = spark.createDataFrame(
         [(r, c, float((r * 7 + c * 13) % 97)) for r in range(H) for c in range(W)],
         "row long, col long, value double")
@@ -108,34 +111,61 @@ def test_blocks_plan_matches_pixel_plan(spark):
         [(b, r, c, float(_ms_field(b)[r, c]))
          for b in range(NB) for r in range(MH) for c in range(MW)],
         "band long, row long, col long, value double")
-    a = {(r["row"], r["col"], r["band"]): r["value"]
-         for r in PS.brovey_pansharpen(pan, ms, (MH, MW), RATIO, NB).collect()}
-    b = {(r["row"], r["col"], r["band"]): r["value"]
-         for r in PS.brovey_pansharpen_blocks(
-             pan, ms, (MH, MW), RATIO, NB, block=8, round_dp=6).collect()
-         if r["value"] is not None}
-    assert a == b
+    got = {(r["row"], r["col"], r["band"]): r["value"]
+           for r in PS.brovey_pansharpen(pan, ms, (MH, MW), RATIO, NB,
+                                         block=8).collect()}
+    pan_cte = (
+        "WITH pan AS (SELECT r.range AS row, c.range AS col,\n"
+        "  CAST((r.range * 7 + c.range * 13) % 97 AS DOUBLE) AS value\n"
+        f"  FROM range({H}) r CROSS JOIN range({W}) c)")
+    sql = PS.brovey_sql(
+        pan_cte,
+        f"(r.range * 7919 + c.range * 104729 + ({SEED0} + b.range)) % 1997",
+        (MH, MW), RATIO, NB)
+    exp = {(int(r), int(c), int(b)): None if v is None else float(v)
+           for r, c, b, v in duckdb.connect().execute(sql).fetchall()}
+    assert len(got) == NB * H * W
+    assert got == exp
+
+
+def test_non_dyadic_ratio_has_no_spurious_null(spark):
+    """At ratio 5 the four float bilinear weights need not sum to
+    exactly 1.0; a dense MS grid that covers the pan must still give a
+    value for every (pixel, band)."""
+    mh, mw, ratio = 24, 30, 5
+    h, w = mh * ratio, mw * ratio
+    pan = spark.createDataFrame(
+        [(r, c, float(1 + (r * 31 + c * 17) % 251))
+         for r in range(h) for c in range(w)],
+        "row long, col long, value double")
+    ms = spark.createDataFrame(
+        [(b, r, c, float(1 + (r * 7919 + c * 104729 + SEED0 + b) % 1997))
+         for b in range(NB) for r in range(mh) for c in range(mw)],
+        "band long, row long, col long, value double")
+    out = PS.brovey_pansharpen(pan, ms, (mh, mw), ratio, NB)
+    assert out.count() == NB * h * w
+    assert out.filter(F.col("value").isNull()).count() == 0
 
 
 def test_blocks_plan_out_of_reach_is_null(spark):
     """A pan pixel farther than one MS cell past the MS domain emits
-    NULL in the blocks plan (the pixel plan would clamp-extrapolate —
-    documented divergence outside the aligned domain)."""
+    NULL (the brovey_sql oracle would clamp-extrapolate — the oracle
+    mirrors the plan only inside the MS footprint)."""
     pan = spark.createDataFrame([(50, 50, 5.0)],
                                 "row long, col long, value double")
     ms = spark.createDataFrame(
         [(b, r, c, 1.0) for b in range(NB) for r in range(2) for c in range(2)],
         "band long, row long, col long, value double")
-    rows = PS.brovey_pansharpen_blocks(pan, ms, (2, 2), RATIO, NB,
-                                       block=16).collect()
+    rows = PS.brovey_pansharpen(pan, ms, (2, 2), RATIO, NB,
+                                block=16).collect()
     assert rows and all(r["value"] is None for r in rows)
 
 
 def test_blocks_plan_block_validation(spark):
     pan = spark.createDataFrame([(0, 0, 1.0)], "row long, col long, value double")
     with pytest.raises(ValueError, match="block"):
-        PS.brovey_pansharpen_blocks(pan, pan, (1, 1), 8, 1, weights=(1.0,),
-                                    block=16)
+        PS.brovey_pansharpen(pan, pan, (1, 1), 8, 1, weights=(1.0,),
+                             block=16)
 
 
 def test_pixel_plan_partial_ms_is_null(spark):
