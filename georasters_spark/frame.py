@@ -51,7 +51,10 @@ class GeoRasterFrame:
     the tiles/images table is attached when known (constructors from
     tiles) or assembled on demand for the operators that consume tiles
     (clip/stats/distance), mirroring how the reference keeps one
-    ``raster`` array for everything.
+    ``raster`` array for everything.  Tiles attached at construction
+    also carry ``reproject``'s gathers and ``apply``'s stencils; tiles
+    assembled on demand do not (assembly costs more than the pixel
+    joins it would replace for nearest and focal).
     """
 
     def __init__(self, px: DataFrame, origin: tuple[float, float],
@@ -65,6 +68,9 @@ class GeoRasterFrame:
         self.ndv = float(ndv)
         self.projection = projection
         self._images = images
+        # the tiles the pixel table was decoded from, None when images()
+        # would have to assemble them
+        self._stored = images
 
     # -- georef accessors (reference .geot, georasters.py:317-354) ----
     @property
@@ -114,8 +120,13 @@ class GeoRasterFrame:
 
         px = PX.pixel_table(images, valid_only=valid_only).select(
             "row", "col", "value")
-        return cls(px, origin, cellsize, shape, ndv=ndv,
-                   projection=projection, images=images)
+        gr = cls(px, origin, cellsize, shape, ndv=ndv,
+                 projection=projection, images=images)
+        if not valid_only:
+            # px keeps the nodata cells as values, which the tile
+            # kernels mask
+            gr._stored = None
+        return gr
 
     @classmethod
     def from_file(cls, spark, path: str, tile: int = 256) -> "GeoRasterFrame":
@@ -524,14 +535,16 @@ class GeoRasterFrame:
     def reproject(self, dst_crs, out_shape: tuple[int, int],
                   resampling: str = "nearest"):
         """Any→any warp (complete GDAL mode dict) — the frame's CRS is
-        its projection (wgs84 when unset, the reference default)."""
+        its projection (wgs84 when unset, the reference default).
+        Nearest and the kernel modes gather from the stored tiles when
+        the frame holds them; the aggregate modes read the pixels."""
         from .operators import reproject as RP
 
         return RP.reproject_any(
             self.px, src_crs=self.projection or "wgs84", dst_crs=dst_crs,
             src_origin=self.origin, src_cellsize=self.cellsize,
             src_shape=self.shape, out_shape=out_shape,
-            resampling=resampling)
+            resampling=resampling, images=self._stored)
 
     # -- spatial statistics (georasters.py:1166-1378, :1740-1775) -----
     def pysal_Moran(self, transform: str = "r", permutations: int = 0,
@@ -641,9 +654,10 @@ class GeoRasterFrame:
     # -- apply (georasters.py:978-988, distributed contract) ----------
     def apply(self, column_fn=None, stencil_fn=None, k: int = 3):
         """Elementwise Column fn (stays JVM-side) or a numpy k×k
-        stencil via focal_apply.  The reference's whole-raster
-        callables cannot exist at 10^12 px — callers pick one of the
-        two distributed shapes instead."""
+        stencil via focal_apply (focal_apply_tiles over the stored
+        tiles).  The reference's whole-raster callables cannot exist at
+        10^12 px — callers pick one of the two distributed shapes
+        instead."""
         if (column_fn is None) == (stencil_fn is None):
             raise ValueError("apply: exactly one of column_fn/stencil_fn")
         if column_fn is not None:
@@ -651,6 +665,8 @@ class GeoRasterFrame:
                 "row", "col", column_fn(F.col("value")).alias("value")))
         from .operators import focal as FO
 
+        if self._stored is not None:
+            return self._like(FO.focal_apply_tiles(self._stored, stencil_fn, k=k))
         return self._like(FO.focal_apply(self.px, stencil_fn, k=k))
 
     # -- exports (georasters.py:535-557, :1702-1738) ------------------

@@ -352,3 +352,44 @@ def test_facade_to_xyz_and_pansharpen(frame, spark):
     by = {(r["row"], r["col"], r["band"]): r["value"] for r in rows}
     assert by[(0, 0, 0)] == pytest.approx(round(1 * 6.0 / 2.125, 6))
     assert by[(1, 1, 2)] == pytest.approx(round(3 * 12.0 / 2.125, 6))
+
+
+@pytest.mark.parametrize("mode", ["nearest", "bilinear", "cubic", "cubicspline", "lanczos"])
+def test_facade_reproject_gathers_stored_tiles(frame, mode):
+    """A frame built from tiles warps through the tile-cogrouped gather,
+    with the pixel-join warp's values (kernel modes to 2e-6, the
+    tolerance the tile-vs-pixel reproject tests use)."""
+    from georasters_spark.operators import reproject as RP
+
+    out = frame.reproject("cea", out_shape=(45, 90), resampling=mode)
+    assert "FlatMapCoGroupsInPandas" in out._jdf.queryExecution().toString()
+    ref = RP.reproject_any(
+        frame.px, src_crs="wgs84", dst_crs="cea", src_origin=frame.origin,
+        src_cellsize=frame.cellsize, src_shape=frame.shape,
+        out_shape=(45, 90), resampling=mode)
+    a, b = (df.toPandas().sort_values(["trow", "tcol"]).reset_index(drop=True)
+            for df in (out, ref))
+    assert a.drop(columns="value").equals(b.drop(columns="value"))
+    assert a["value"].isna().equals(b["value"].isna())
+    assert a["value"].notna().sum() > 1000
+    np.testing.assert_allclose(a["value"], b["value"], rtol=0,
+                               atol=0 if mode == "nearest" else 2e-6)
+
+
+def test_facade_apply_stencil_uses_stored_tiles(frame):
+    """apply(stencil_fn=) on a frame built from tiles runs
+    focal_apply_tiles and equals focal_apply over its pixel table; a
+    derived frame (no stored tiles) keeps the pixel path."""
+    from georasters_spark.operators import focal as FO
+
+    def fn(swv, swm):
+        return np.where(swm, swv, 0.0).sum(axis=(2, 3))
+
+    out = frame.apply(stencil_fn=fn, k=3).px
+    assert "FlatMapCoGroupsInPandas" in out._jdf.queryExecution().toString()
+    derived = (frame + 0).apply(stencil_fn=fn, k=3).px
+    assert "FlatMapCoGroupsInPandas" not in derived._jdf.queryExecution().toString()
+    a, b = (df.toPandas().sort_values(["row", "col"]).reset_index(drop=True)
+            for df in (out, FO.focal_apply(frame.px, fn, k=3)))
+    assert len(a) > 50_000
+    pd.testing.assert_frame_equal(a, b)

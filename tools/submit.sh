@@ -9,10 +9,15 @@ ZIP=/tmp/georasters_spark_pkg.zip
 rm -f "$ZIP"
 zip -qr "$ZIP" georasters_spark
 
-MASTER="${MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}"
+# the session factory's sizing rule (SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM
+# override it there)
+SIZING=$(python3 -c 'from georasters_spark.session import \
+default_cores as c, default_driver_mem as m; n = c(); print(n, m(n))')
+read -r CORES DRIVER_MEM <<< "$SIZING"
+MASTER="${MASTER:-local[$CORES]}"
 exec spark-submit \
   --master "$MASTER" \
-  --driver-memory "${SPARK_DRIVER_MEM:-48g}" \
+  --driver-memory "$DRIVER_MEM" \
   --py-files "$ZIP" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
